@@ -12,14 +12,13 @@ auto-center from referenced objects' bboxes when ``:center`` is
 missing, radius auto-expand (triple up to 10×) until the rule circle's
 bbox contains every referenced object, radius floor/clamp
 (spec.normalizeRadius, runtime.go:81-86), and an 8-step polygonized
-geofence circle whose covering cells become the prune key
-(rule.go:85-99).
+geofence circle whose bbox becomes the prune key (rule.go:85-99).
 """
 
 from __future__ import annotations
 
 import itertools
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -45,21 +44,34 @@ from spinix_spark.geo.geodesy import (
 from spinix_spark.geo.rings import RULE_CIRCLE_STEPS, circle_ring, ring_bbox
 
 
-def _rule_geofence_bbox(ring, center_lat: float, radius_m: float):
-    """Geofence bbox from the rule's 8-gon ring, pole-aware: a circle
-    that crosses a pole covers [near-side min lat .. 90] at ALL
+def _rule_geofence(props) -> tuple[np.ndarray, np.ndarray]:
+    """The rule's 8-gon geofence ring and its bbox, pole-aware: a
+    circle that crosses a pole covers [near-side min lat .. 90] at ALL
     longitudes, which the planar min/max of the ring's vertices cannot
     express (no vertex lies near the pole — bearing-0 vertices land on
     the FAR side at reflected latitude). Plain ring_bbox elsewhere."""
     import math
 
+    lat, radius_m = props.center_lat, props.radius_m
+    ring = circle_ring(lat, props.center_lon, radius_m, RULE_CIRCLE_STEPS)
     b = ring_bbox(ring)
     deg_r = math.degrees(radius_m / EARTH_RADIUS_M)
-    if center_lat + deg_r >= 90.0:
-        return np.array([float(b[0]), -180.0, 90.0, 180.0])
-    if center_lat - deg_r <= -90.0:
-        return np.array([-90.0, -180.0, float(b[2]), 180.0])
-    return b
+    if lat + deg_r >= 90.0:
+        b = np.array([float(b[0]), -180.0, 90.0, 180.0])
+    elif lat - deg_r <= -90.0:
+        b = np.array([-90.0, -180.0, float(b[2]), 180.0])
+    return ring, b
+
+
+def rule_gate_mask(bbox, lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
+    """Rules.Walk for one rule (rule.go:229-249): mask of the points
+    inside the rule's geofence bbox. Point lons are framed (±360°) to
+    the box center, so a rule centered near ±180° — whose box has
+    UNNORMALIZED lons — admits the far-side points; a bitwise no-op
+    for mid-lon rules. The SQL form is spark_pipeline._bbox_pred."""
+    lon_f = lon_to_frame(lon, (float(bbox[1]) + float(bbox[3])) / 2.0)
+    return (lat >= bbox[0]) & (lat <= bbox[2]) & (lon_f >= bbox[1]) & (lon_f <= bbox[3])
+
 
 _rule_seq = itertools.count(1)
 
@@ -77,7 +89,6 @@ class Rule:
     rule_id: str
     spec: CompiledSpec
     bbox: np.ndarray | None = None  # geofence circle bbox
-    cells: list[int] = field(default_factory=list)
     ring: np.ndarray | None = None
 
     def to_json(self) -> str:
@@ -105,17 +116,7 @@ class Rule:
         rule = engine.add_rule(d["spec"], rule_id=d["rule_id"])
         if rule.spec.props.radius_m < 1000.0:
             rule.spec.props.radius_m = 1000.0
-            ring = circle_ring(
-                rule.spec.props.center_lat,
-                rule.spec.props.center_lon,
-                rule.spec.props.radius_m,
-                RULE_CIRCLE_STEPS,
-            )
-            rule.ring = ring
-            rule.bbox = _rule_geofence_bbox(
-                ring, rule.spec.props.center_lat, rule.spec.props.radius_m
-            )
-            rule.cells = engine.scheme.cover_bbox(*[float(x) for x in rule.bbox])
+            rule.ring, rule.bbox = _rule_geofence(rule.spec.props)
         return rule
 
 
@@ -220,7 +221,7 @@ class Engine:
         # the rule center's frame (no-op mid-longitude): the rule ring
         # around ±180° has UNNORMALIZED lons, so a raw comparison
         # against a far-side zone never succeeds and the radius would
-        # triple to planet scale (and its cell cover to the full grid)
+        # triple to planet scale
         def _framed(b):
             mid = (float(b[1]) + float(b[3])) / 2.0
             d = float(lon_to_frame(mid, float(props.center_lon))) - mid
@@ -243,14 +244,10 @@ class Engine:
             ):
                 break
             props.radius_m *= 3.0
-        ring = circle_ring(
-            props.center_lat, props.center_lon, props.radius_m, RULE_CIRCLE_STEPS
-        )
-        bbox = _rule_geofence_bbox(ring, props.center_lat, props.radius_m)
-        cells = self.scheme.cover_bbox(bbox[0], bbox[1], bbox[2], bbox[3])
+        ring, bbox = _rule_geofence(props)
 
         rid = rule_id or _new_rule_id()
-        rule = Rule(rule_id=rid, spec=spec, bbox=bbox, cells=cells, ring=ring)
+        rule = Rule(rule_id=rid, spec=spec, bbox=bbox, ring=ring)
         self.rules[rid] = rule
         return rule
 
@@ -260,20 +257,6 @@ class Engine:
 
     # --- detection ------------------------------------------------------
 
-    def walk_rules(self, lat: np.ndarray, lon: np.ndarray) -> dict[str, np.ndarray]:
-        """Rules.Walk, batch form: per rule, mask of devices whose point
-        falls inside the rule's geofence bbox (rule.go:229-249 —
-        cell lookup then R-tree bbox point query)."""
-        out = {}
-        for rid, rule in self.rules.items():
-            b = rule.bbox
-            # frame point lons to the (possibly unnormalized) box
-            # center — wrap-correct for rules centered near ±180°;
-            # bitwise no-op for mid-lon rules
-            lon_f = lon_to_frame(lon, (float(b[1]) + float(b[3])) / 2.0)
-            out[rid] = (lat >= b[0]) & (lat <= b[2]) & (lon_f >= b[1]) & (lon_f <= b[3])
-        return out
-
     def detect_batch(self, batch: pd.DataFrame) -> pd.DataFrame:
         """Evaluate a batch against the previous snapshot, emit events,
         then merge the batch into the snapshot."""
@@ -282,9 +265,8 @@ class Engine:
         if len(batch):
             lat = batch["lat"].to_numpy(dtype=np.float64)
             lon = batch["lon"].to_numpy(dtype=np.float64)
-            pruned = self.walk_rules(lat, lon)
             for rid, rule in self.rules.items():
-                mask = pruned[rid]
+                mask = rule_gate_mask(rule.bbox, lat, lon)
                 if self.before_detect is not None:
                     gate = np.array(
                         [

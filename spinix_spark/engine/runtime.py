@@ -27,8 +27,7 @@ operator-for-operator (file:line cited per class below), including:
 Determinism note: the reference stamps state time with the wall clock
 (``State.SetTime(time.Now())``, runtime.go:153) but evaluates trigger
 windows against *device* time (``mapper.dateTime``). For reproducible
-distributed runs this engine uses device event-time for both by
-default; pass ``clock=`` to override.
+distributed runs this engine uses device event-time for both.
 """
 
 from __future__ import annotations
@@ -1329,11 +1328,6 @@ def _apply_dwell(
             visits = st.get("visits")
             if not isinstance(visits, dict):
                 visits = st["visits"] = {}
-            # dwell timing is ALWAYS event time: a caller-supplied
-            # trigger clock (e.g. wall clock) gives every row of a
-            # batch the same `now`, so visits would never accumulate
-            # event-time within a batch (ADVICE r6); the trigger gate
-            # keeps its own clock semantics (fold below)
             now = int(batch.datetime[i])
             hit_keys = {prefix + o: o for o in (refs[i] if refs is not None else ())}
             # a miss clears the visit — only keys this node owns
@@ -1368,7 +1362,6 @@ def eval_spec_full(
     batch_pdf: pd.DataFrame,
     ref: Reference,
     rule_id: str,
-    clock=None,
     eval_dwell: bool = False,
 ):
     """Low-level evaluation: returns
@@ -1385,35 +1378,11 @@ def eval_spec_full(
 
     layer_ok = batch.layer_id == spec.props.layer
 
-    # trigger gate (stateful) — SEQUENTIAL per row, exactly the
-    # reference's per-event ordering (Engine.Detect evaluates one
-    # update at a time: checkTrigger then changeState,
-    # runtime.go:103-163 + engine.go:190-225). Row i+1 of the same
-    # device sees the state as updated by row i, so the outcome is a
-    # deterministic fold over the batch's row order and — given
-    # event-time-sorted input (detect_batch_spark sorts stateful
-    # partitions by (device_id, datetime)) — independent of Arrow
-    # batch boundaries and partition count.
-    trigger_ok = np.ones(n, dtype=bool)
+    gate = layer_ok
     if spec.is_stateful:
-        for i in range(n):
-            if not layer_ok[i]:
-                continue
-            st = ref.states.lookup_or_make(str(batch.device_id[i]), rule_id)
-            now = int(clock(batch, i)) if clock else int(batch.datetime[i])
-            if now > 0:
-                st["now"] = now
-            if state_need_reset(st, spec.props.reset_interval_s):
-                state_reset(st)
-                st["last_reset"] = st["now"]  # UpdateLastResetTime
-            trigger_ok[i] = _check_trigger(spec, st)
-            if trigger_ok[i]:
-                # changeState (runtime.go:133-163) — immediately, so
-                # the next event of this device sees it
-                st["last_seen"] = st["now"]
-                if spec.props.repeat in (ast.REPEAT_TIMES, ast.REPEAT_ONCE):
-                    st["hits"] += 1
-                ref.states.update(st)
+        gate = fold_trigger(
+            ref.states, spec, rule_id, batch.device_id, batch.datetime, layer_ok
+        )
 
     node_results = [eval_node(node, batch, ref, spec.props.layer) for node in spec.nodes]
 
@@ -1433,9 +1402,7 @@ def eval_spec_full(
             recorded.append(np.ones(n, dtype=bool))
             acc = acc | node_results[i].ok
 
-    final_ok = acc & layer_ok & trigger_ok
-
-    return final_ok, node_results, recorded, layer_ok & trigger_ok
+    return acc & gate, node_results, recorded, gate
 
 
 def eval_spec(
@@ -1443,7 +1410,6 @@ def eval_spec(
     batch_pdf: pd.DataFrame,
     ref: Reference,
     rule_id: str,
-    clock=None,
     eval_dwell: bool = False,
 ) -> tuple[np.ndarray, list[list[dict]]]:
     """Evaluate one compiled rule against a batch.
@@ -1454,7 +1420,7 @@ def eval_spec(
     (runtime_test.go:196-237).
     """
     final_ok, node_results, recorded, gate = eval_spec_full(
-        spec, batch_pdf, ref, rule_id, clock=clock, eval_dwell=eval_dwell
+        spec, batch_pdf, ref, rule_id, eval_dwell=eval_dwell
     )
     n = final_ok.shape[0]
     matches: list[list[dict]] = [[] for _ in range(n)]
@@ -1483,6 +1449,48 @@ def eval_spec(
                     }
                 )
     return final_ok, matches
+
+
+def fold_trigger(
+    states: StateStore,
+    spec: CompiledSpec,
+    rule_id: str,
+    device_ids: np.ndarray,
+    nows: np.ndarray,
+    gate: np.ndarray,
+) -> np.ndarray:
+    """The trigger state machine, one fold for every detect surface:
+    per gated row, maybe-reset (State.NeedReset, state.go:199-211),
+    checkTrigger, then changeState (runtime.go:103-163). Returns the
+    fired mask (False on ungated rows).
+
+    SEQUENTIAL per row, exactly the reference's per-event ordering
+    (Engine.Detect evaluates one update at a time, engine.go:190-225):
+    row i+1 of a device sees the state as updated by row i, so callers
+    feed rows in (device_id, datetime, url) order and the outcome is
+    independent of Arrow batch boundaries and partition count. A spec
+    at repeat NONE always fires, so the fold then only advances
+    ``last_seen`` (the trigger-less stateful case)."""
+    reset_s = spec.props.reset_interval_s
+    always = spec.props.repeat == ast.REPEAT_NONE
+    counts_hits = spec.props.repeat in (ast.REPEAT_TIMES, ast.REPEAT_ONCE)
+    fired = np.zeros(len(nows), dtype=bool)
+    for i in np.flatnonzero(gate).tolist():
+        # the store's own dict, already marked dirty: mutated in place
+        st = states.lookup_or_make(str(device_ids[i]), rule_id)
+        now = int(nows[i])
+        if now > 0:
+            st["now"] = now
+        if state_need_reset(st, reset_s):
+            state_reset(st)
+            st["last_reset"] = st["now"]  # UpdateLastResetTime
+        if always or _check_trigger(spec, st):
+            # changeState — immediately, so the device's next row sees it
+            fired[i] = True
+            st["last_seen"] = st["now"]
+            if counts_hits:
+                st["hits"] += 1
+    return fired
 
 
 def _check_trigger(spec: CompiledSpec, st: dict) -> bool:

@@ -1,27 +1,32 @@
 """Distributed detection: the Spark expression of Engine.Detect.
 
-Plan shape (SURVEY.md §3.2 Spark equivalent):
+``detect_batch_spark`` evaluates every registered rule over a points
+DataFrame and returns one OUT_SCHEMA frame of ``row_type = 'event'``
+and ``row_type = 'state'`` rows. Each rule first passes its geofence
+prune (``_bbox_pred`` ≙ Rules.Walk, rule.go:229-249, pushed into the
+scan; tightened to zone proximity where that is event-sound), then
+takes one of three strategies:
 
-    pages ──geoparse (codegen)──► points
-    points ──cell col (codegen)──► rule-bbox prune (Catalyst filter,
-        pushed to the scan) ──► mapInPandas(refine) ──► event rows
+- devices(@) rules of the all-AND pair-join shape, when the snapshot
+  is given as a DataFrame: the fact-scale pair join
+  (engine/devices_at.py); with a real ``:trigger`` the slim joined
+  rows then run the trigger fold in mapInPandas;
+- rules that compile to Catalyst expressions (engine/sql_compile.py):
+  entirely JVM-side;
+- everything else: the vectorized kernel (engine/runtime.py) in
+  mapInPandas, with zones, rules and the device snapshot broadcast.
 
-- The rule registry, zone store, and device-position snapshot are
-  *broadcast* (dimension-sized, like the reference's in-memory
-  indexes); the fact side (points) streams through in Arrow batches.
-- The refinement stage calls the same vectorized kernel the golden
-  tests exercise (engine/runtime.py:eval_spec) — NumPy over Arrow
-  batches, no per-row Python.
-- Rule pruning is a plain boolean column (OR of per-rule bbox
-  predicates ≙ Rules.Walk, rule.go:229-249), so Catalyst pushes it
-  into the parquet scan and partitions that intersect no rule's
-  geofence are never refined.
-- Stateful rules: points are hash-partitioned by device_id
-  (repartition) so each (device, rule) state is owned by exactly one
-  task; per-task StateStores are seeded from the previous batch's
-  state rows and updated states are emitted alongside events
-  (row_type = 'state'). This is the batch form; the streaming form
-  (applyInPandasWithState) lives in spinix_spark/streaming/.
+Every Python strategy calls the same helpers: ``rule_gate_mask``
+(engine/detect.py) for the in-task bbox gate, ``fold_trigger``
+(engine/runtime.py) for the sequential per-row trigger fold, and
+``_state_rows_frame`` for the state rows. Stateful rows are
+hash-partitioned by device_id and sorted by (device_id, datetime,
+url), so each (device, rule) state is owned by one task and folds in
+event-time order. Prior states arrive either as a DataFrame joined
+onto the rows (``state_df``, the fact-scale carry) or broadcast from
+a driver list (``state_rows``); each task emits only the states it
+touched. The streaming forms built on this (foreachBatch) and the
+keyed applyInPandasWithState form live in spinix_spark/streaming/.
 """
 
 from __future__ import annotations
@@ -43,10 +48,14 @@ from pyspark.sql.types import (
 )
 
 from spinix_spark.dsl.tokens import Token
-from spinix_spark.engine.detect import Engine
-from spinix_spark.engine.runtime import Reference, eval_spec_full, spec_has_dwell
+from spinix_spark.engine.detect import Engine, rule_gate_mask
+from spinix_spark.engine.runtime import (
+    Reference,
+    eval_spec_full,
+    fold_trigger,
+    spec_has_dwell,
+)
 from spinix_spark.engine.stores import DeviceSnapshot, StateStore
-from spinix_spark.geo.geodesy import lon_to_frame
 
 OUT_SCHEMA = StructType(
     [
@@ -70,6 +79,11 @@ OUT_SCHEMA = StructType(
         StructField("visits", StringType()),
     ]
 )
+
+# one (device, rule) trigger-state row, as every surface carries it:
+# the 'state' rows of OUT_SCHEMA, the per-device ``_states`` shuffle
+# carry, the bucketed state table and keyed_detect's GroupState
+STATE_COLS = ["device_id", "rule_id", "last_seen", "last_reset", "hits", "now", "visits"]
 
 
 def _bbox_pred(b, pad_lat: float = 0.0, pad_lon: float = 0.0) -> str:
@@ -178,14 +192,39 @@ def rules_prune_expr(engine: Engine) -> str:
     return " OR ".join(parts) if parts else "false"
 
 
+def _event_cols_sql(rule, kws: tuple, refs_sql: str, columns) -> list[str]:
+    """SQL select list of ``row_type = 'event'`` rows (OUT_SCHEMA) for
+    one node of a JVM-side strategy; ``kws`` = (left_kw, right_kw, op)."""
+    left_kw, right_kw, op = kws
+    url_sql = "url" if "url" in columns else "''"
+    dt_sql = "CAST(datetime AS BIGINT)" if "datetime" in columns else "CAST(0 AS BIGINT)"
+    spec_lit = rule.spec.source.replace("'", "''")
+    return [
+        "'event' AS row_type",
+        f"{url_sql} AS url",
+        "device_id",
+        f"'{rule.rule_id}' AS rule_id",
+        f"'{spec_lit}' AS spec",
+        "true AS ok",
+        f"'{left_kw}' AS left_kw",
+        f"'{right_kw}' AS right_kw",
+        f"'{op}' AS op",
+        f"{refs_sql} AS right_refs",
+        f"{dt_sql} AS datetime",
+        "CAST(0 AS BIGINT) AS last_seen",
+        "CAST(0 AS BIGINT) AS last_reset",
+        "CAST(0 AS BIGINT) AS hits",
+        "CAST(0 AS BIGINT) AS now",
+        "CAST('' AS STRING) AS visits",
+    ]
+
+
 def _sql_rule_events(points: DataFrame, engine: Engine, rule, plan) -> DataFrame:
     """All-Catalyst event rows for one compiled-to-SQL rule: prune →
     predicate/fold/refs columns → per-node filtered projections,
     unioned. Whole-stage codegen end to end."""
     points.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
     cols = set(points.columns)
-    url_sql = "url" if "url" in cols else "''"
-    dt_sql = "CAST(datetime AS BIGINT)" if "datetime" in cols else "CAST(0 AS BIGINT)"
     pruned = points.where(F.expr(_rule_prune_expr_for(engine, rule)))
     if plan.prep:
         # buffered-device ring vertices etc. as named columns, so the
@@ -199,27 +238,13 @@ def _sql_rule_events(points: DataFrame, engine: Engine, rule, plan) -> DataFrame
         sel.append(f"{plan.recorded_sql[j]} AS _rec{j}")
         sel.append(f"{ns.refs_sql} AS _refs{j}")
     base = pruned.selectExpr(*sel)
-    spec_lit = rule.spec.source.replace("'", "''")
     outs = []
     for j, ns in enumerate(plan.nodes):
         outs.append(
             base.where(F.expr(f"_final AND _rec{j} AND _ok{j}")).selectExpr(
-                "'event' AS row_type",
-                f"{url_sql} AS url",
-                "device_id",
-                f"'{rule.rule_id}' AS rule_id",
-                f"'{spec_lit}' AS spec",
-                "true AS ok",
-                f"'{ns.left_kw}' AS left_kw",
-                f"'{ns.right_kw}' AS right_kw",
-                f"'{ns.op}' AS op",
-                f"_refs{j} AS right_refs",
-                f"{dt_sql} AS datetime",
-                "CAST(0 AS BIGINT) AS last_seen",
-                "CAST(0 AS BIGINT) AS last_reset",
-                "CAST(0 AS BIGINT) AS hits",
-                "CAST(0 AS BIGINT) AS now",
-                "CAST('' AS STRING) AS visits",
+                *_event_cols_sql(
+                    rule, (ns.left_kw, ns.right_kw, ns.op), f"_refs{j}", cols
+                )
             )
         )
     out = outs[0]
@@ -286,7 +311,6 @@ def _at_rule_events(
     if res is None:
         return None
     joined, node_sqls = res
-    spec = rule.spec
     columns = set(points.columns)
 
     ok_sqls = ["true" if ns is None else ns.ok_sql for ns in node_sqls]
@@ -296,38 +320,15 @@ def _at_rule_events(
         recorded.append(acc)
         acc = f"({acc} AND {ok_sqls[j]})"
 
-    url_sql = "url" if "url" in columns else "''"
-    dt_sql = "CAST(datetime AS BIGINT)" if "datetime" in columns else "CAST(0 AS BIGINT)"
-    spec_lit = spec.source.replace("'", "''")
     outs = []
-    for j, n in enumerate(spec.nodes):
-        ns = node_sqls[j]
+    for j, ns in enumerate(node_sqls):
         if ns is None:
-            left_kw, right_kw, op_s, refs_sql = (
-                "device", "devices", str(at_node.op), "_at_refs",
-            )
+            kws, refs_sql = ("device", "devices", str(at_node.op)), "_at_refs"
         else:
-            left_kw, right_kw, op_s, refs_sql = (
-                ns.left_kw, ns.right_kw, ns.op, ns.refs_sql,
-            )
+            kws, refs_sql = (ns.left_kw, ns.right_kw, ns.op), ns.refs_sql
         outs.append(
             joined.where(F.expr(f"({acc}) AND {recorded[j]} AND {ok_sqls[j]}")).selectExpr(
-                "'event' AS row_type",
-                f"{url_sql} AS url",
-                "device_id",
-                f"'{rule.rule_id}' AS rule_id",
-                f"'{spec_lit}' AS spec",
-                "true AS ok",
-                f"'{left_kw}' AS left_kw",
-                f"'{right_kw}' AS right_kw",
-                f"'{op_s}' AS op",
-                f"{refs_sql} AS right_refs",
-                f"{dt_sql} AS datetime",
-                "CAST(0 AS BIGINT) AS last_seen",
-                "CAST(0 AS BIGINT) AS last_reset",
-                "CAST(0 AS BIGINT) AS hits",
-                "CAST(0 AS BIGINT) AS now",
-                "CAST('' AS STRING) AS visits",
+                *_event_cols_sql(rule, kws, refs_sql, columns)
             )
         )
     out = outs[0]
@@ -344,6 +345,76 @@ def _visits_json(st: dict) -> str:
     return json.dumps(v, separators=(",", ":"), sort_keys=True) if v else ""
 
 
+def _state_rows_frame(snap: list[dict]) -> pd.DataFrame:
+    """``row_type = 'state'`` output rows (OUT_SCHEMA) for the state
+    dicts a task touched."""
+    return pd.DataFrame(
+        {
+            "row_type": "state",
+            "url": "",
+            "device_id": [s["device_id"] for s in snap],
+            "rule_id": [s["rule_id"] for s in snap],
+            "spec": "",
+            "ok": True,
+            "left_kw": "",
+            "right_kw": "",
+            "op": "",
+            "right_refs": [[] for _ in snap],
+            "datetime": 0,
+            "last_seen": [int(s["last_seen"]) for s in snap],
+            "last_reset": [int(s["last_reset"]) for s in snap],
+            "hits": [int(s["hits"]) for s in snap],
+            "now": [int(s["now"]) for s in snap],
+            "visits": [_visits_json(s) for s in snap],
+        }
+    )
+
+
+def _event_rows_frame(
+    rule_id: str, spec_src: str, kws: tuple, urls, dids, dts, refs: list
+) -> pd.DataFrame:
+    """``row_type = 'event'`` output rows (OUT_SCHEMA) for one node's
+    matches: ``kws`` = (left_kw, right_kw, op), the rest per row."""
+    left_kw, right_kw, op = kws
+    return pd.DataFrame(
+        {
+            "row_type": "event",
+            "url": urls,
+            "device_id": dids,
+            "rule_id": rule_id,
+            "spec": spec_src,
+            "ok": True,
+            "left_kw": left_kw,
+            "right_kw": right_kw,
+            "op": op,
+            "right_refs": refs,
+            "datetime": dts,
+            "last_seen": 0,
+            "last_reset": 0,
+            "hits": 0,
+            "now": 0,
+            "visits": "",
+        }
+    )
+
+
+def _state_seed_rows(device_id: str, st_list) -> list[dict]:
+    """One device's carried state structs (STATE_COLS minus device_id)
+    as StateStore rows."""
+    return [
+        {
+            "device_id": str(device_id),
+            "rule_id": str(st["rule_id"]),
+            "last_seen": int(st["last_seen"]),
+            "last_reset": int(st["last_reset"]),
+            "hits": int(st["hits"]),
+            "now": int(st["now"]),
+            "visits": st["visits"],
+        }
+        for st in st_list
+    ]
+
+
 def _seed_states_from_column(states: StateStore, pdf: pd.DataFrame) -> None:
     """Seed prior states that arrived attached to this batch's rows via
     the per-device ``_states`` struct array (the fact-scale state
@@ -351,23 +422,14 @@ def _seed_states_from_column(states: StateStore, pdf: pd.DataFrame) -> None:
     in-task mutations."""
     if "_states" not in pdf.columns:
         return
-    seed: list[dict] = []
-    for did, st_list in zip(pdf["device_id"], pdf["_states"]):
-        if st_list is None or len(st_list) == 0:
-            continue
-        for st in st_list:
-            seed.append(
-                {
-                    "device_id": str(did),
-                    "rule_id": str(st["rule_id"]),
-                    "last_seen": int(st["last_seen"]),
-                    "last_reset": int(st["last_reset"]),
-                    "hits": int(st["hits"]),
-                    "now": int(st["now"]),
-                    "visits": st["visits"] if "visits" in st else "",
-                }
-            )
-    states.load_if_absent(seed)
+    states.load_if_absent(
+        [
+            row
+            for did, st_list in zip(pdf["device_id"], pdf["_states"])
+            if st_list is not None
+            for row in _state_seed_rows(did, st_list)
+        ]
+    )
 
 
 def _join_state_carry(df: DataFrame, state_df: DataFrame) -> DataFrame:
@@ -377,9 +439,7 @@ def _join_state_carry(df: DataFrame, state_df: DataFrame) -> DataFrame:
     if "visits" not in state_df.columns:
         state_df = state_df.withColumn("visits", F.lit(""))
     sdf = state_df.groupBy("device_id").agg(
-        F.collect_list(
-            F.struct("rule_id", "last_seen", "last_reset", "hits", "now", "visits")
-        ).alias("_states")
+        F.collect_list(F.struct(*STATE_COLS[1:])).alias("_states")
     )
     return df.join(sdf, "device_id", "left")
 
@@ -415,10 +475,6 @@ def _at_rule_events_stateful(
     one shuffle beats two evaluations.
 
     Returns None when a companion node is not Catalyst-compilable."""
-    from spinix_spark.dsl import ast_nodes as ast
-    from spinix_spark.engine.runtime import _check_trigger
-    from spinix_spark.engine.stores import state_need_reset, state_reset
-
     res = _at_base_rows(points, engine, rule, at_node, devices_df, n_salt, "left")
     if res is None:
         return None
@@ -461,9 +517,6 @@ def _at_rule_events_stateful(
     rule_id = rule.rule_id
     spec_src = spec.source
     seed_rows = [dict(r) for r in (state_rows or [])]
-    repeat = spec.props.repeat
-    reset_interval_s = spec.props.reset_interval_s
-    counts_hits = repeat in (ast.REPEAT_TIMES, ast.REPEAT_ONCE)
 
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         states = StateStore()
@@ -473,82 +526,31 @@ def _at_rule_events_stateful(
             if pdf.empty:
                 continue
             _seed_states_from_column(states, pdf)
-            n = len(pdf)
             dts = pdf["_dt"].to_numpy(dtype=np.int64)
             dids = pdf["device_id"].to_numpy(dtype=object)
             finals = (
                 pdf["_final"].astype("boolean").fillna(False).to_numpy(dtype=bool)
             )
-            emit = np.zeros(n, dtype=bool)
-            for i in range(n):
-                st = states.lookup_or_make(str(dids[i]), rule_id)
-                now = int(dts[i])
-                if now > 0:
-                    st["now"] = now
-                if state_need_reset(st, reset_interval_s):
-                    state_reset(st)
-                    st["last_reset"] = st["now"]
-                trig = _check_trigger(spec, st)
-                if trig:
-                    st["last_seen"] = st["now"]
-                    if counts_hits:
-                        st["hits"] += 1
-                    states.update(st)
-                emit[i] = trig and finals[i]
-            idx = np.nonzero(emit)[0]
+            fired = fold_trigger(
+                states, spec, rule_id, dids, dts, np.ones(len(pdf), dtype=bool)
+            )
+            idx = np.nonzero(fired & finals)[0]
             if idx.size == 0:
                 continue
             urls = pdf["url"].to_numpy(dtype=object)
             frames = []
-            for j, (left_kw, right_kw, op_s) in enumerate(node_meta):
-                refs_series = pdf[f"_refs{j}"]
+            for j, kws in enumerate(node_meta):
+                refs = pdf[f"_refs{j}"].to_numpy(dtype=object)
                 frames.append(
-                    pd.DataFrame(
-                        {
-                            "row_type": "event",
-                            "url": urls[idx],
-                            "device_id": dids[idx],
-                            "rule_id": rule_id,
-                            "spec": spec_src,
-                            "ok": True,
-                            "left_kw": left_kw,
-                            "right_kw": right_kw,
-                            "op": op_s,
-                            "right_refs": [
-                                list(refs_series.iloc[i]) for i in idx
-                            ],
-                            "datetime": dts[idx],
-                            "last_seen": 0,
-                            "last_reset": 0,
-                            "hits": 0,
-                            "now": 0,
-                            "visits": "",
-                        }
+                    _event_rows_frame(
+                        rule_id, spec_src, kws, urls[idx], dids[idx], dts[idx],
+                        [list(refs[i]) for i in idx],
                     )
                 )
             yield pd.concat(frames, ignore_index=True)
         snap = states.dirty_snapshot()
         if snap:
-            yield pd.DataFrame(
-                {
-                    "row_type": "state",
-                    "url": "",
-                    "device_id": [s["device_id"] for s in snap],
-                    "rule_id": [s["rule_id"] for s in snap],
-                    "spec": "",
-                    "ok": True,
-                    "left_kw": "",
-                    "right_kw": "",
-                    "op": "",
-                    "right_refs": [[] for _ in snap],
-                    "datetime": 0,
-                    "last_seen": [int(s["last_seen"]) for s in snap],
-                    "last_reset": [int(s["last_reset"]) for s in snap],
-                    "hits": [int(s["hits"]) for s in snap],
-                    "now": [int(s["now"]) for s in snap],
-                    "visits": [_visits_json(s) for s in snap],
-                }
-            )
+            yield _state_rows_frame(snap)
 
     return slim.mapInPandas(fold, schema=OUT_SCHEMA)
 
@@ -566,11 +568,9 @@ def _triggerless_state_rows(
     match the kernel path. The fold is sequential per device, so it
     runs as applyInPandas over a two-column (device_id, datetime)
     projection — nothing else crosses Arrow."""
-    from spinix_spark.engine.stores import state_need_reset, state_reset
-
     rule_id = rule.rule_id
-    reset_interval_s = rule.spec.props.reset_interval_s
-    layer = rule.spec.props.layer
+    spec = rule.spec
+    layer = spec.props.layer
     gated = points.where(F.expr(_bbox_pred(rule.bbox))).where(
         F.col("layer_id") == layer
     )
@@ -590,40 +590,15 @@ def _triggerless_state_rows(
             if pdf.empty:
                 continue
             _seed_states_from_column(states, pdf)
-            dts = pdf["_dt"].to_numpy(dtype=np.int64)
-            dids = pdf["device_id"].to_numpy(dtype=object)
-            for i in range(len(pdf)):
-                st = states.lookup_or_make(str(dids[i]), rule_id)
-                now = int(dts[i])
-                if now > 0:
-                    st["now"] = now
-                if state_need_reset(st, reset_interval_s):
-                    state_reset(st)
-                    st["last_reset"] = st["now"]
-                st["last_seen"] = st["now"]
-                states.update(st)
+            fold_trigger(
+                states, spec, rule_id,
+                pdf["device_id"].to_numpy(dtype=object),
+                pdf["_dt"].to_numpy(dtype=np.int64),
+                np.ones(len(pdf), dtype=bool),
+            )
         snap = states.dirty_snapshot()
         if snap:
-            yield pd.DataFrame(
-                {
-                    "row_type": "state",
-                    "url": "",
-                    "device_id": [s["device_id"] for s in snap],
-                    "rule_id": [s["rule_id"] for s in snap],
-                    "spec": "",
-                    "ok": True,
-                    "left_kw": "",
-                    "right_kw": "",
-                    "op": "",
-                    "right_refs": [[] for _ in snap],
-                    "datetime": 0,
-                    "last_seen": [int(s["last_seen"]) for s in snap],
-                    "last_reset": [int(s["last_reset"]) for s in snap],
-                    "hits": [int(s["hits"]) for s in snap],
-                    "now": [int(s["now"]) for s in snap],
-                    "visits": [_visits_json(s) for s in snap],
-                }
-            )
+            yield _state_rows_frame(snap)
 
     slim = slim.repartition("device_id").sortWithinPartitions("device_id", "_dt")
     return slim.mapInPandas(fold, schema=OUT_SCHEMA)
@@ -799,20 +774,9 @@ def detect_batch_spark(
     )
     if any(r.spec.is_stateful for r in kernel_rules):
         if state_df is not None:
-            # FACT-SCALE state carry: prior (device, rule) states ride
-            # the shuffle as a per-device struct array joined onto the
-            # rows — no broadcast, no driver round-trip; the join and
-            # the repartition below share the device_id partitioning
-            if "visits" not in state_df.columns:
-                state_df = state_df.withColumn("visits", F.lit(""))
-            sdf = state_df.groupBy("device_id").agg(
-                F.collect_list(
-                    F.struct(
-                        "rule_id", "last_seen", "last_reset", "hits", "now", "visits"
-                    )
-                ).alias("_states")
-            )
-            pruned = pruned.join(sdf, "device_id", "left")
+            # the join and the repartition below share the device_id
+            # partitioning
+            pruned = _join_state_carry(pruned, state_df)
         # one owner task per device + deterministic per-device event
         # order: trigger state folds sequentially over (device_id,
         # datetime) regardless of Arrow batch boundaries or partition
@@ -829,43 +793,12 @@ def detect_batch_spark(
         for pdf in batches:
             if pdf.empty:
                 continue
-            if "_states" in pdf.columns:
-                # distributed state carry: seed prior states attached
-                # to this batch's rows (first sighting wins — later
-                # Arrow batches must not clobber in-task mutations)
-                seed: list[dict] = []
-                for did, st_list in zip(pdf["device_id"], pdf["_states"]):
-                    if st_list is None or len(st_list) == 0:
-                        continue
-                    for st in st_list:
-                        seed.append(
-                            {
-                                "device_id": str(did),
-                                "rule_id": str(st["rule_id"]),
-                                "last_seen": int(st["last_seen"]),
-                                "last_reset": int(st["last_reset"]),
-                                "hits": int(st["hits"]),
-                                "now": int(st["now"]),
-                                "visits": st["visits"] if "visits" in st else "",
-                            }
-                        )
-                states.load_if_absent(seed)
+            _seed_states_from_column(states, pdf)
             out_frames: list[pd.DataFrame] = []
             lat = pdf["lat"].to_numpy(dtype=np.float64)
             lon = pdf["lon"].to_numpy(dtype=np.float64)
             for rule_id, spec, bbox in p["rules"]:
-                # frame lons to the (possibly unnormalized) box center
-                # — wrap-correct for rules centered near ±180°, exact
-                # no-op elsewhere (mirrors Engine.walk_rules)
-                lon_f = lon_to_frame(
-                    lon, (float(bbox[1]) + float(bbox[3])) / 2.0
-                )
-                mask = (
-                    (lat >= bbox[0])
-                    & (lat <= bbox[2])
-                    & (lon_f >= bbox[1])
-                    & (lon_f <= bbox[3])
-                )
+                mask = rule_gate_mask(bbox, lat, lon)
                 if not mask.any():
                     continue
                 sub = pdf.loc[mask].reset_index(drop=True)
@@ -896,26 +829,11 @@ def detect_batch_spark(
                         if res.right_refs is not None
                         else [[] for _ in range(idx.size)]
                     )
+                    kws = (str(res.left_kw), str(res.right_kw), str(res.op))
                     out_frames.append(
-                        pd.DataFrame(
-                            {
-                                "row_type": "event",
-                                "url": urls[idx],
-                                "device_id": dids[idx],
-                                "rule_id": rule_id,
-                                "spec": spec.source,
-                                "ok": True,
-                                "left_kw": str(res.left_kw),
-                                "right_kw": str(res.right_kw),
-                                "op": str(res.op),
-                                "right_refs": refs_col,
-                                "datetime": dts[idx],
-                                "last_seen": 0,
-                                "last_reset": 0,
-                                "hits": 0,
-                                "now": 0,
-                                "visits": "",
-                            }
+                        _event_rows_frame(
+                            rule_id, spec.source, kws,
+                            urls[idx], dids[idx], dts[idx], refs_col,
                         )
                     )
             if out_frames:
@@ -929,26 +847,7 @@ def detect_batch_spark(
         # the caller side).
         snap = states.dirty_snapshot()
         if snap:
-            yield pd.DataFrame(
-                {
-                    "row_type": "state",
-                    "url": "",
-                    "device_id": [s["device_id"] for s in snap],
-                    "rule_id": [s["rule_id"] for s in snap],
-                    "spec": "",
-                    "ok": True,
-                    "left_kw": "",
-                    "right_kw": "",
-                    "op": "",
-                    "right_refs": [[] for _ in snap],
-                    "datetime": 0,
-                    "last_seen": [int(s["last_seen"]) for s in snap],
-                    "last_reset": [int(s["last_reset"]) for s in snap],
-                    "hits": [int(s["hits"]) for s in snap],
-                    "now": [int(s["now"]) for s in snap],
-                    "visits": [_visits_json(s) for s in snap],
-                }
-            )
+            yield _state_rows_frame(snap)
 
     out = pruned.mapInPandas(process, schema=OUT_SCHEMA)
     for o in sql_outs:
@@ -962,13 +861,12 @@ def merge_state_df(prior: DataFrame, updated: DataFrame) -> DataFrame:
     (device_id, rule_id). One shuffle; nothing touches the driver."""
     from pyspark.sql.window import Window
 
-    cols = ["device_id", "rule_id", "last_seen", "last_reset", "hits", "now", "visits"]
     if "visits" not in prior.columns:
         prior = prior.withColumn("visits", F.lit(""))
     if "visits" not in updated.columns:
         updated = updated.withColumn("visits", F.lit(""))
-    allr = prior.select(*cols).withColumn("_prio", F.lit(0)).unionByName(
-        updated.select(*cols).withColumn("_prio", F.lit(1))
+    allr = prior.select(*STATE_COLS).withColumn("_prio", F.lit(0)).unionByName(
+        updated.select(*STATE_COLS).withColumn("_prio", F.lit(1))
     )
     w = Window.partitionBy("device_id", "rule_id").orderBy(F.col("_prio").desc())
     return (
@@ -990,12 +888,8 @@ def merge_state_rows(prior: list[dict], updated: list[dict]) -> list[dict]:
 
 
 def split_output(out: DataFrame) -> tuple[DataFrame, DataFrame]:
-    events = out.where(F.col("row_type") == "event").drop(
-        "row_type", "last_seen", "last_reset", "hits", "now", "visits"
-    )
-    states = out.where(F.col("row_type") == "state").select(
-        "device_id", "rule_id", "last_seen", "last_reset", "hits", "now", "visits"
-    )
+    events = out.where(F.col("row_type") == "event").drop("row_type", *STATE_COLS[2:])
+    states = out.where(F.col("row_type") == "state").select(*STATE_COLS)
     return events, states
 
 

@@ -414,15 +414,10 @@ class StateStore:
         if st is None:
             st = self._blank(device_id, rule_id)
             self._states[key] = st
-        # the returned dict is mutated in place by eval_spec_full
-        # (now/reset fields), so handing it out marks it dirty
+        # the returned dict is mutated in place (runtime.fold_trigger,
+        # runtime._apply_dwell), so handing it out marks it dirty
         self._dirty.add(key)
         return st
-
-    def update(self, st: dict) -> None:
-        key = (st["device_id"], st["rule_id"])
-        self._states[key] = st
-        self._dirty.add(key)
 
     def remove_by_rule(self, rule_id: str) -> None:
         for k in [k for k in self._states if k[1] == rule_id]:

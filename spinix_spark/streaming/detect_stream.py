@@ -4,15 +4,20 @@ The reference's hot path is one-device-at-a-time ``Engine.Detect``
 (engine.go:190-225); its natural streaming form is a micro-batch
 pipeline: each micro-batch is evaluated against the device-position
 snapshot as of the previous batch (the evaluate-then-insert ordering,
-engine.go:218-221), then merged into it. Two implementations:
+engine.go:218-221), then merged into it. Both forms here run
+``writeStream.foreachBatch`` over detect_batch_spark, so they share its
+rule gate, trigger fold and state rows:
 
-- ``stream_detect``: ``writeStream.foreachBatch`` over the batch
-  pipeline — exact batch semantics, carries the snapshot and trigger
-  state across micro-batches on the driver (zones/rules stay
-  broadcast). Checkpointing via the stream's checkpointLocation.
-- ``stateful_trigger_stream``: a keyed ``applyInPandasWithState``
-  stage for per-(device, rule) trigger state at scale — state lives in
-  the state store, sharded by key, no driver round-trip.
+- ``stream_detect``: the dimension-scale form — carries the snapshot
+  and trigger state across micro-batches on the driver (zones/rules
+  stay broadcast). Checkpointing via the stream's checkpointLocation.
+- ``stream_detect_scalable``: the fact-scale form — snapshot and
+  trigger state live in bucketed, versioned parquet tables; nothing
+  fact-sized reaches the driver.
+
+``streaming_tile_rollup`` is the windowed tile raster with a
+watermark. The keyed ``applyInPandasWithState`` form, with per-device
+state in Spark's state store, is keyed_detect.keyed_stream_detect.
 """
 
 from __future__ import annotations
@@ -20,15 +25,7 @@ from __future__ import annotations
 import posixpath
 from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from spinix_spark.engine.detect import Engine
 from spinix_spark.engine.spark_pipeline import (
@@ -157,13 +154,15 @@ def stream_detect_scalable(
     through the pair-join strategy (engine/devices_at.py) against that
     snapshot DataFrame; zones/rules stay broadcast (dimension-sized).
 
-    Trigger state rides the same mechanism: per-(device, rule) trigger
-    states live in a second bucketed table (bucketed on device_id) and
-    join the shuffle co-partitioned with their rows
-    (detect_batch_spark(state_df=...)) — dirty emissions merge back
-    into only their buckets (merge_state_df over the dirty subset).
-    The keyed applyInPandasWithState form (keyed_detect) remains for
-    low-latency per-key streaming.
+    Trigger and dwell state ride the same mechanism: the
+    per-(device, rule) state rows (spark_pipeline.STATE_COLS) live in a
+    second bucketed table (bucketed on device_id) and join the shuffle
+    co-partitioned with their rows (detect_batch_spark(state_df=...));
+    dirty emissions merge back into only their buckets (merge_state_df
+    over the dirty subset). Trigger-less stateful specs emit no state
+    rows on the SQL/pair-join fast paths (a warning names them; events
+    are unaffected). The keyed applyInPandasWithState form
+    (keyed_detect) keeps the same state rows in Spark's state store.
 
     ``retain_versions`` bounds the on-disk history PER BUCKET: each
     bucket keeps its newest ``retain_versions + 1`` versions. The
@@ -252,76 +251,6 @@ def stream_detect_scalable(
     return writer.start()
 
 
-TRIGGER_STATE_SCHEMA = StructType(
-    [
-        StructField("last_seen", LongType()),
-        StructField("last_reset", LongType()),
-        StructField("hits", LongType()),
-    ]
-)
-
-TRIGGER_OUT_SCHEMA = StructType(
-    [
-        StructField("device_id", StringType()),
-        StructField("rule_id", StringType()),
-        StructField("datetime", LongType()),
-        StructField("fired", LongType()),
-        StructField("hits", LongType()),
-    ]
-)
-
-
-def make_trigger_fn(repeat: int, delay_s: float, interval_s: float, times: int, reset_interval_s: float):
-    """Build the applyInPandasWithState update function implementing
-    checkTrigger/changeState (runtime.go:103-163) for one rule's
-    params. Keyed by (device_id, rule_id); event-time driven."""
-    from spinix_spark.dsl import ast_nodes as ast
-
-    def update(key, pdfs, state: GroupState):
-        device_id, rule_id = key
-        if state.exists:
-            last_seen, last_reset, hits = state.get
-        else:
-            last_seen, last_reset, hits = 0, 0, 0
-        rows = []
-        for pdf in pdfs:
-            for ts in sorted(int(t) for t in pdf["datetime"]):
-                now = ts
-                need = (
-                    reset_interval_s == 0
-                    or last_reset == 0
-                    or (now - last_reset) >= int(reset_interval_s)
-                )
-                if need:
-                    last_seen, hits = 0, 0
-                    last_reset = now
-                if repeat == ast.REPEAT_EVERY:
-                    fire = last_seen == 0 or (now - last_reset) > int(delay_s)
-                elif repeat == ast.REPEAT_TIMES:
-                    fire = (now - last_seen) >= int(interval_s) and hits < times
-                elif repeat == ast.REPEAT_ONCE:
-                    fire = hits == 0
-                else:
-                    fire = True
-                if fire:
-                    last_seen = now
-                    if repeat in (ast.REPEAT_TIMES, ast.REPEAT_ONCE):
-                        hits += 1
-                rows.append(
-                    {
-                        "device_id": device_id,
-                        "rule_id": rule_id,
-                        "datetime": now,
-                        "fired": 1 if fire else 0,
-                        "hits": hits,
-                    }
-                )
-        state.update((last_seen, last_reset, hits))
-        yield pd.DataFrame(rows)
-
-    return update
-
-
 def streaming_tile_rollup(
     points_stream: DataFrame,
     window_duration: str = "1 minute",
@@ -342,16 +271,4 @@ def streaming_tile_rollup(
             F.count("*").alias("n_points"),
             F.approx_count_distinct("device_id").alias("n_devices"),
         )
-    )
-
-
-def stateful_trigger_stream(matches_stream: DataFrame, trigger_fn) -> DataFrame:
-    """Keyed trigger gating over a stream of per-(device, rule) match
-    rows — state sharded by the grouping key in Spark's state store."""
-    return matches_stream.groupBy("device_id", "rule_id").applyInPandasWithState(
-        trigger_fn,
-        outputStructType=TRIGGER_OUT_SCHEMA,
-        stateStructType=TRIGGER_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )

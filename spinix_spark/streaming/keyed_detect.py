@@ -5,15 +5,20 @@ the driver between micro-batches — fine for dimension-scale state.
 This module is the fact-scale form: the stream is keyed by device_id
 and evaluated in ``applyInPandasWithState``, so
 
-- each device's last position and per-rule trigger state live in the
-  state store, sharded by the grouping key (RocksDB/HDFS-backed on a
-  real cluster, checkpointed with the query),
-- updates for one device are processed in event-time order within the
-  group, reproducing the reference's sequential evaluate-then-insert
-  ordering per device (engine.go:218-221),
+- each device's per-rule trigger and dwell state lives in the state
+  store, sharded by the grouping key (RocksDB/HDFS-backed on a real
+  cluster, checkpointed with the query), as the same state rows
+  detect_batch_spark emits (``spark_pipeline.STATE_COLS``);
+- all of a device's rows in a micro-batch are concatenated and sorted
+  once by (datetime, url), then every rule runs the shared bbox gate
+  (``rule_gate_mask``) and kernel (``eval_spec``, whose trigger fold is
+  ``fold_trigger``) — the reference's sequential evaluate-then-insert
+  order per device (engine.go:218-221), independent of Arrow batch
+  boundaries;
 - zones + compiled rules ride a broadcast variable.
 
-Scope (documented): zone rules, attribute rules, and trigger state.
+Scope (documented): zone rules, attribute rules, trigger state, and
+dwell (``:time duration|after``) under ``Engine(eval_dwell=True)``.
 Device-vs-device ``@`` verbs need a cross-device snapshot and route
 through the micro-batch form or the pair-join operators instead
 (engine/joins.py) — a keyed stream cannot see other keys by design.
@@ -35,9 +40,15 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from spinix_spark.engine.detect import Engine
+from spinix_spark.engine.detect import Engine, rule_gate_mask
 from spinix_spark.engine.runtime import Reference, eval_spec
-from spinix_spark.engine.stores import DeviceSnapshot, StateStore, ZoneStore
+from spinix_spark.engine.spark_pipeline import (
+    OUT_SCHEMA,
+    STATE_COLS,
+    _state_rows_frame,
+    _state_seed_rows,
+)
+from spinix_spark.engine.stores import DeviceSnapshot, StateStore
 
 EVENT_SCHEMA = StructType(
     [
@@ -52,114 +63,75 @@ EVENT_SCHEMA = StructType(
     ]
 )
 
-# state: packed trigger counters per rule (aligned to the broadcast
-# rule order) — last_seen[i], last_reset[i], hits[i]
+# state: the device's (rule) state rows — STATE_COLS minus the
+# grouping key
 STATE_SCHEMA = StructType(
     [
-        StructField("last_seen", ArrayType(LongType())),
-        StructField("last_reset", ArrayType(LongType())),
-        StructField("hits", ArrayType(LongType())),
+        StructField(
+            "states", ArrayType(StructType([OUT_SCHEMA[c] for c in STATE_COLS[1:]]))
+        )
     ]
 )
 
 
 def make_keyed_detect_fn(payload_broadcast):
     """Build the applyInPandasWithState update function. ``payload``:
-    {"zones": ZoneStore, "rules": [(rule_id, CompiledSpec, bbox)]}."""
+    {"zones": ZoneStore, "rules": [(rule_id, CompiledSpec, bbox)],
+    "eval_dwell": bool}."""
 
     def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
         (device_id,) = key
         p = payload_broadcast.value
-        rules = p["rules"]
-        n_rules = len(rules)
+        chunks = [c for c in pdfs if not c.empty]
+        if not chunks:
+            return
+        pdf = pd.concat(chunks, ignore_index=True)
+        pdf = pdf.sort_values(
+            [c for c in ("datetime", "url") if c in pdf.columns]
+        ).reset_index(drop=True)
+        states = StateStore()
         if state.exists:
-            last_seen, last_reset, hits = state.get
-            last_seen, last_reset, hits = (
-                list(last_seen),
-                list(last_reset),
-                list(hits),
-            )
-        else:
-            last_seen = [0] * n_rules
-            last_reset = [0] * n_rules
-            hits = [0] * n_rules
-
-        zones: ZoneStore = p["zones"]
-        out_frames = []
-        for pdf in pdfs:
-            if pdf.empty:
+            states.load(_state_seed_rows(device_id, state.get[0]))
+        ref = Reference(zones=p["zones"], devices=DeviceSnapshot(), states=states)
+        lat = pdf["lat"].to_numpy(np.float64)
+        lon = pdf["lon"].to_numpy(np.float64)
+        out_rows = []
+        for rule_id, spec, bbox in p["rules"]:
+            mask = rule_gate_mask(bbox, lat, lon)
+            if not mask.any():
                 continue
-            pdf = pdf.sort_values("datetime").reset_index(drop=True)
-            for k, (rule_id, spec, bbox) in enumerate(rules):
-                lat = pdf["lat"].to_numpy(np.float64)
-                lon = pdf["lon"].to_numpy(np.float64)
-                mask = (
-                    (lat >= bbox[0])
-                    & (lat <= bbox[2])
-                    & (lon >= bbox[1])
-                    & (lon <= bbox[3])
-                )
-                if not mask.any():
-                    continue
-                sub = pdf.loc[mask].reset_index(drop=True)
-                # per-key state store seeded from the packed arrays
-                states = StateStore()
-                if spec.is_stateful:
-                    states.load(
-                        [
-                            {
-                                "device_id": device_id,
-                                "rule_id": rule_id,
-                                "now": 0,
-                                "last_seen": last_seen[k],
-                                "last_reset": last_reset[k],
-                                "hits": hits[k],
-                            }
-                        ]
+            sub = pdf.loc[mask].reset_index(drop=True)
+            ok, matches = eval_spec(
+                spec, sub, ref, rule_id, eval_dwell=p["eval_dwell"]
+            )
+            urls = sub["url"].astype(str) if "url" in sub else [""] * len(sub)
+            for i in np.nonzero(ok)[0]:
+                for m in matches[i]:
+                    out_rows.append(
+                        {
+                            "device_id": device_id,
+                            "url": urls[i],
+                            "rule_id": rule_id,
+                            "left_kw": m["left_kw"],
+                            "right_kw": m["right_kw"],
+                            "op": m["op"],
+                            "right_refs": m["right_refs"],
+                            "datetime": int(sub.at[i, "datetime"]),
+                        }
                     )
-                ref = Reference(
-                    zones=zones, devices=DeviceSnapshot(), states=states
-                )
-                # ONE vectorized evaluation: node predicates run as
-                # NumPy over the whole sorted batch while the trigger
-                # fold inside eval_spec_full is sequential per row in
-                # this (event-time) order — identical to per-update
-                # evaluation, without the per-row Python loop
-                ok, matches = eval_spec(spec, sub, ref, rule_id)
-                urls = (
-                    sub["url"].astype(str)
-                    if "url" in sub
-                    else pd.Series([""] * len(sub))
-                )
-                for i in np.nonzero(ok)[0]:
-                    for m in matches[i]:
-                        out_frames.append(
-                            {
-                                "device_id": device_id,
-                                "url": urls.iloc[i],
-                                "rule_id": rule_id,
-                                "left_kw": m["left_kw"],
-                                "right_kw": m["right_kw"],
-                                "op": m["op"],
-                                "right_refs": m["right_refs"],
-                                "datetime": int(sub.at[i, "datetime"]),
-                            }
-                        )
-                if spec.is_stateful:
-                    st = states.lookup_or_make(device_id, rule_id)
-                    last_seen[k] = int(st["last_seen"])
-                    last_reset[k] = int(st["last_reset"])
-                    hits[k] = int(st["hits"])
-        state.update((last_seen, last_reset, hits))
-        if out_frames:
-            yield pd.DataFrame(out_frames)
+        snap = states.snapshot()
+        if snap:
+            rows = _state_rows_frame(snap)[STATE_COLS[1:]].to_dict("records")
+            state.update((rows,))
+        if out_rows:
+            yield pd.DataFrame(out_rows)
 
     return update
 
 
 def keyed_stream_detect(points_stream: DataFrame, engine: Engine) -> DataFrame:
     """points stream → per-device keyed detection with store-backed
-    trigger state. Returns the streaming events DataFrame; attach a
+    trigger and dwell state. Returns the streaming events DataFrame; attach a
     writeStream sink + checkpointLocation to run.
 
     Raises on rules with device-vs-device nodes: a keyed stream cannot
@@ -188,6 +160,7 @@ def keyed_stream_detect(points_stream: DataFrame, engine: Engine) -> DataFrame:
     payload = {
         "zones": engine.zones,
         "rules": [(r.rule_id, r.spec, r.bbox) for r in engine.rules.values()],
+        "eval_dwell": engine.eval_dwell,
     }
     b = sc.broadcast(payload)
     fn = make_keyed_detect_fn(b)

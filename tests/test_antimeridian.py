@@ -11,9 +11,10 @@ circle agree on every fixture pair.
 Covers: GridScheme wrap/reflect (cells.py), the kernel's framed rect +
 polar widening + geodesic polar verb (runtime.py), the pair-join path
 (devices_at.py: wrapped k-ring + polar-cap keys), near_pairs /
-near_pairs_salted (joins.py), and the rule bbox prune
-(spark_pipeline._bbox_pred / detect.walk_rules) for rules centered at
-±180°.
+near_pairs_salted (joins.py), and the rule bbox gate for rules
+centered at ±180° in both forms — SQL (spark_pipeline._bbox_pred) and
+NumPy (detect.rule_gate_mask, on the kernel and keyed-stream
+surfaces).
 
 Reference invariant: devices.go:166-199 (index pruning must admit
 every true candidate).
@@ -227,14 +228,16 @@ ZRAD = 200.0
 ZAMBIG_LO, ZAMBIG_HI = ZRAD * 0.8660, ZRAD
 
 
-def test_zone_rule_dateline_sql_vs_kernel_vs_oracle(spark):
+def test_zone_rule_dateline_sql_vs_kernel_vs_oracle(spark, tmp_path):
     """spObjectOp point-vs-polygon across ±180°: the kernel's framed
-    zone PIP (zone_intersects_point + framed _zone_prefilter) and the
-    compiled-SQL zone path (_zone_point_pred with lon_frame_sql) must
-    both match the true-disc oracle; matches must straddle the line in
-    both directions."""
+    zone PIP (zone_intersects_point + framed _zone_prefilter), the
+    compiled-SQL zone path (_zone_point_pred with lon_frame_sql) and
+    the keyed stream (framed rule_gate_mask) must all match the
+    true-disc oracle; matches must straddle the line in both
+    directions."""
     from spinix_spark.engine.stores import zone_from_ring
     from spinix_spark.geo.rings import circle_ring
+    from spinix_spark.streaming.keyed_detect import keyed_stream_detect
 
     zones = {
         "a1" + "0" * 18: (10.0, -179.9995),  # west-side zone
@@ -267,7 +270,7 @@ def test_zone_rule_dateline_sql_vs_kernel_vs_oracle(spark):
         " { :center 10.01 179.9995 :radius 50km }"
     )
     results = {}
-    for prefer_sql in (False, True):
+    for surface in ("kernel", "sql", "keyed"):
         eng = Engine()
         for zid, (zlat, zlon) in zones.items():
             eng.zones.add(
@@ -275,18 +278,34 @@ def test_zone_rule_dateline_sql_vs_kernel_vs_oracle(spark):
                                layer_id=LAYER)
             )
         r = eng.add_rule(rule, rule_id="r" + "7" * 19)
-        if prefer_sql:
+        if surface == "keyed":
+            src = str(tmp_path / "keyed_src")
+            pts_df.write.parquet(src)
+            stream = spark.readStream.schema(pts_df.schema).parquet(src)
+            rows = []
+            q = (
+                keyed_stream_detect(stream, eng)
+                .writeStream.foreachBatch(lambda df, _id: rows.extend(df.collect()))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(120)
+            results[surface] = {
+                x.url: tuple(sorted(x.right_refs or [])) for x in rows
+            }
+            continue
+        if surface == "sql":
             from spinix_spark.engine.sql_compile import try_compile_rule_sql
 
             assert try_compile_rule_sql(eng, r) is not None, rule
         ev, _ = split_output(
-            detect_batch_spark(pts_df, eng, prefer_sql=prefer_sql)
+            detect_batch_spark(pts_df, eng, prefer_sql=surface == "sql")
         )
-        results[prefer_sql] = _events_sets(ev)
+        results[surface] = _events_sets(ev)
 
     expected = {u: refs for u, refs in oracle.items() if refs}
-    assert results[False] == expected, f"kernel {results[False]} != {expected}"
-    assert results[True] == expected, f"sql {results[True]} != {expected}"
+    for surface, got in results.items():
+        assert got == expected, f"{surface} {got} != {expected}"
 
 
 def test_zone_rule_polar_sql_vs_kernel(spark):

@@ -87,3 +87,80 @@ def test_keyed_stream_rejects_device_vs_device(spark):
     )
     with pytest.raises(ValueError, match="stream_detect_scalable"):
         keyed_stream_detect(stream, eng)
+
+
+def _run_keyed(spark, engine, batches, tmp_path):
+    """Feed each pandas batch to keyed_stream_detect as its own
+    micro-batch (one availableNow run per batch over a growing parquet
+    source, one checkpoint); returns the event rows of each run."""
+    src = str(tmp_path / "src")
+    runs = []
+    for pdf in batches:
+        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(src)
+        stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+        got = []
+        q = (
+            keyed_stream_detect(stream, engine)
+            .writeStream.foreachBatch(lambda df, _id: got.extend(df.collect()))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        runs.append(got)
+    return runs
+
+
+def test_keyed_trigger_once_across_arrow_chunks(spark, tmp_path):
+    """A group's rows arrive in several Arrow chunks and out of event
+    order: the fold must see the whole group sorted by (datetime, url),
+    so ``:trigger once`` fires at the earliest update, 1000."""
+    times = [1005, 1004, 1003, 1002, 1001, 1000]
+    pdf = pd.DataFrame(
+        {
+            "device_id": K0,
+            "url": [f"u{t}" for t in times],
+            "layer_id": "0" * 20,
+            "lat": 42.9236075,
+            "lon": -72.2792333,
+            "datetime": times,
+            "speed": 0.0,
+            "status": 0,
+        }
+    )
+    engine = Engine()
+    engine.zones.add(zone_from_ring(AULG, G3_RING))
+    engine.add_rule(
+        f"device INTERSECTS polygon({AULG})"
+        " { :center 42.9236 -72.2795 :radius 5km :trigger once }",
+        rule_id="r" + "0" * 19,
+    )
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    try:
+        (rows,) = _run_keyed(spark, engine, [pdf], tmp_path)
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    assert [r.datetime for r in rows] == [1000]
+
+
+def test_keyed_dwell_matches_simulator(spark, tmp_path):
+    """One dwell-fuzz world (tests/test_dwell_fuzz.py) through the keyed
+    surface with ``Engine(eval_dwell=True)``: two micro-batches, visit
+    state carried in the state store, events equal the independent
+    simulator's."""
+    from test_dwell_fuzz import _engine, _rows, _simulate
+
+    batches = [_rows(42 + i, n=120, n_dev=5) for i in range(2)]
+    want = _simulate(batches, "after", 25)
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "13")
+    try:
+        runs = _run_keyed(
+            spark,
+            _engine("after", 25),
+            [b.drop(columns=["_hit"]) for b in batches],
+            tmp_path,
+        )
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    got = [(bno, r.device_id, r.datetime) for bno, rows in enumerate(runs) for r in rows]
+    assert sorted(got) == want and len(want) > 0

@@ -130,43 +130,3 @@ def test_stream_detect_available_now(spark, tmp_path):
     assert all(e.op == "INTERSECTS" for e in collected)
     # snapshot advanced after the batch
     assert engine.devices.lookup(K0) is not None
-
-
-def test_stateful_trigger_stream(spark, tmp_path):
-    from spinix_spark.dsl import ast_nodes as ast
-    from spinix_spark.streaming.detect_stream import (
-        make_trigger_fn,
-        stateful_trigger_stream,
-    )
-
-    src = str(tmp_path / "trig_src")
-    pdf = pd.DataFrame(
-        {
-            "device_id": [K0] * 4,
-            "rule_id": ["r1"] * 4,
-            "datetime": [1000, 1005, 1011, 1030],
-        }
-    )
-    spark.createDataFrame(pdf).write.parquet(src)
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    fn = make_trigger_fn(
-        repeat=ast.REPEAT_EVERY, delay_s=10.0, interval_s=0.0, times=0,
-        reset_interval_s=24 * 3600.0,
-    )
-    out = stateful_trigger_stream(stream, fn)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("trig_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {r.datetime: r.fired for r in spark.sql("SELECT * FROM trig_out").collect()}
-    # event-time ordered: fire at 1000 (first), suppress 1005/1011?? —
-    # every-10s: 1005-1000=5 no; 1011-1000=11 > 10 fire; 1030-1000=30>10
-    # but last_reset stays 1000 (reset interval 24h) so both fire
-    assert rows[1000] == 1
-    assert rows[1005] == 0
-    assert rows[1011] == 1
-    assert rows[1030] == 1

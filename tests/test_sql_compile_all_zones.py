@@ -32,7 +32,7 @@ def _mk_engine(spec: str) -> Engine:
     s = compile_spec(spec)
     s.props.center_lat, s.props.center_lon, s.props.radius_m = 42.93, -72.26, 50_000.0
     ring = circle_ring(42.93, -72.26, 50_000.0, RULE_CIRCLE_STEPS)
-    r = Rule(rule_id="r" + "0" * 19, spec=s, bbox=ring_bbox(ring), cells=[], ring=ring)
+    r = Rule(rule_id="r" + "0" * 19, spec=s, bbox=ring_bbox(ring), ring=ring)
     e.rules[r.rule_id] = r
     return e
 

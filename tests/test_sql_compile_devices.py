@@ -106,7 +106,6 @@ def test_devices_rule_sql_vs_kernel(spark, spec, expect_sql):
             rule_id="r" + "0" * 19,
             spec=s,
             bbox=ring_bbox(ring),
-            cells=[],
             ring=ring,
         )
         e.rules[r.rule_id] = r

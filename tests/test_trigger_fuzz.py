@@ -5,7 +5,8 @@ A pure-Python simulator replays checkTrigger/changeState
 (device_id, datetime, url) order; detect_batch_spark — run
 multi-partition with tiny Arrow batches and the DataFrame state
 carry — must produce the same fired events and final state values for
-random datasets and random trigger props, across consecutive batches.
+random datasets and random trigger props, across consecutive batches,
+and for one fixed ``every`` sequence with hand-checked events.
 """
 
 from __future__ import annotations
@@ -116,39 +117,68 @@ def _simulate(batches: list[pd.DataFrame], props: str):
     return fired_per_batch, states
 
 
-@pytest.mark.parametrize("props", PROPS)
-@pytest.mark.parametrize("seed", [2, 19])
-def test_trigger_fold_matches_sequential_simulator(spark, props, seed):
+def _assert_matches_simulator(spark, props: str, batches: list[pd.DataFrame]):
+    """Run ``batches`` through detect_batch_spark (6 partitions, 16-row
+    Arrow batches, DataFrame state carry) and assert fired urls and
+    final states equal the simulator's; returns the fired url sets."""
     rule = f"status eq 1 {{ :center 42.92 -72.27 :radius 5km {props} }}"
-    b0, b1 = _rows(seed), _rows(seed + 1000)
-    exp_fired, exp_states = _simulate([b0, b1], props)
+    exp_fired, exp_states = _simulate(batches, props)
 
     engine = Engine()
     engine.add_rule(rule, rule_id=RULE_ID)
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
     try:
-        p0 = spark.createDataFrame(b0).repartition(6)
-        ev0, st0 = split_output(detect_batch_spark(p0, engine))
-        st0 = st0.cache()
-        got0 = {r.url for r in ev0.collect()}
-        p1 = spark.createDataFrame(b1).repartition(6)
-        ev1, st1 = split_output(detect_batch_spark(p1, engine, state_df=st0))
-        got1 = {r.url for r in ev1.collect()}
-        final = merge_state_df(st0, st1)
+        got_fired, state_df = [], None
+        for pdf in batches:
+            p = spark.createDataFrame(pdf).repartition(6)
+            ev, st = split_output(detect_batch_spark(p, engine, state_df=state_df))
+            st = st.cache()
+            got_fired.append({r.url for r in ev.collect()})
+            state_df = st if state_df is None else merge_state_df(state_df, st)
         got_states = {
             r.device_id: (r.last_seen, r.last_reset, r.hits)
-            for r in final.collect()
+            for r in state_df.collect()
         }
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
 
-    assert got0 == exp_fired[0], f"batch0 {props} seed={seed}"
-    assert got1 == exp_fired[1], f"batch1 {props} seed={seed}"
+    assert got_fired == exp_fired, props
     for did, st in exp_states.items():
         assert got_states[did] == (
             st["last_seen"],
             st["last_reset"],
             st["hits"],
-        ), f"state {did} {props} seed={seed}"
+        ), f"state {did} {props}"
+    return exp_fired
+
+
+@pytest.mark.parametrize("props", PROPS)
+@pytest.mark.parametrize("seed", [2, 19])
+def test_trigger_fold_matches_sequential_simulator(spark, props, seed):
+    fired = _assert_matches_simulator(
+        spark, props, [_rows(seed), _rows(seed + 1000)]
+    )
     # the fold actually fired something — otherwise the test is vacuous
-    assert exp_fired[0]
+    assert fired[0]
+
+
+def test_trigger_every_fixed_sequence(spark):
+    """``every 10s`` for one device at 1000, 1005, 1011, 1030: the first
+    update fires, 1005 is inside the delay, and 1011/1030 are more than
+    10 s past the last reset (the 24 h reset interval keeps it at
+    1000), so both fire."""
+    times = [1000, 1005, 1011, 1030]
+    pdf = pd.DataFrame(
+        {
+            "url": [f"t{t}" for t in times],
+            "device_id": "d" + "0" * 19,
+            "layer_id": LAYER,
+            "lat": 42.92,
+            "lon": -72.27,
+            "datetime": times,
+            "speed": 0.0,
+            "status": 1,
+        }
+    )
+    fired = _assert_matches_simulator(spark, ":trigger every 10s", [pdf])
+    assert fired == [{"t1000", "t1011", "t1030"}]
