@@ -105,11 +105,16 @@ Q_MH_SIM_DUCK = _mh_sim_from(f"({Q_MINHASH_DUCK})", _lsh_pairs_sql(Q_MINHASH_DUC
 
 def spark_mh_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verify stage over cached signatures (Spark inlines CTEs per
-    reference; the cache avoids recomputing the shingle pipeline 4×)."""
-    from spinix_spark.queries_text import _cached_signatures, _lsh_pairs_from
+    reference; the cache avoids recomputing the shingle pipeline for
+    each of the two signature references).
+    Candidates are the cached salted pair set ``mh_pairs`` — the pair
+    set the ``minhash_lsh_pairs`` gate pins against the same oracle
+    pairs this query's oracle uses."""
+    from spinix_spark.queries_text import _cached_pairs, _cached_signatures
 
     _cached_signatures(spark, sf_dir)
-    return spark.sql(_mh_sim_from("mh_sig", _lsh_pairs_from("mh_sig")))
+    _cached_pairs(spark, sf_dir)
+    return spark.sql(_mh_sim_from("mh_sig", "SELECT a_id, b_id FROM mh_pairs"))
 
 
 # hypertable-style time-bucket rollup (continuous-aggregate shape):

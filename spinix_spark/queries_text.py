@@ -267,7 +267,6 @@ def _lsh_pairs_sql(minhash_sql: str) -> str:
     return _lsh_pairs_from(f"({minhash_sql})")
 
 
-Q_LSH_SPARK = _lsh_pairs_sql(Q_MINHASH_SPARK)
 Q_LSH_DUCK = _lsh_pairs_sql(Q_MINHASH_DUCK)
 
 
@@ -289,10 +288,10 @@ def _cached_df(spark: SparkSession, sf_dir: str, tag: str, sql: str, view: str) 
 
 
 def _cached_signatures(spark: SparkSession, sf_dir: str, view: str = "mh_sig"):
-    """Minhash signatures, computed + cached ONCE per session/sf —
-    Spark inlines (re-computes) CTEs per reference, so the LSH
-    self-join and the downstream verify queries would otherwise
-    evaluate the shingle pipeline repeatedly. Built from the
+    """LONG minhash signatures (doc_id, j, mh), computed + cached ONCE
+    per session/sf — Spark inlines (re-computes) CTEs per reference, so
+    the minhash-similarity verify's two signature references would
+    otherwise evaluate the shingle pipeline twice. Built from the
     no-DISTINCT shingle stream directly (round 7): the dedup shuffle
     the exact-Jaccard queries need is pure cost for MIN aggregation,
     and the codegen explode form made shingle recompute cheaper than
@@ -307,8 +306,8 @@ def _cached_signatures_wide(
     """WIDE md5 minhash signatures (one row per doc), cached once per
     session/sf — the shape every Spark-side band-bucket construction
     consumes since round 7 (1/16th the cached rows of the long form;
-    the long ``mh_sig`` view remains for the gate query that OUTPUTS
-    the long shape and for tests)."""
+    the long ``mh_sig`` view remains for minhash_similarity, which
+    compares signatures component by component)."""
     sig_sql = _minhash_sql_wide_noexplode(spark_shingles_all(), _SPARK_X)
     return _cached_df(spark, sf_dir, "sig_w", sig_sql, view)
 
@@ -328,46 +327,10 @@ def _cached_shingle_arrays(
     return _cached_df(spark, sf_dir, "shingle_arr", sql, view)
 
 
-LSH_SALT = 8
-
-# min-label propagation converges in ≤ eccentricity(component) rounds;
-# exceeding this means a pathological near-dup chain — fail loudly
-# rather than return unconverged cluster ids
-CC_MAX_ITERATIONS = 20
-
-
-def _lsh_pairs_from_salted(mh_source: str, n_salt: int = LSH_SALT) -> str:
-    """Salted Spark form of the band-bucket pair join: a hot LSH bucket
-    with H members is a single join key whose pair work is H² in ONE
-    task (AQE splits partitions, not keys). Salting the left side by
-    hash(doc_id) % S and exploding the right side over all S salts
-    splits that key into S sub-keys of H·H/S work each — same result
-    set (values asserted against the unsalted DuckDB oracle)."""
-    rows_per_band = N_HASHES // BANDS
-    bucket_cols = ", ".join(
-        f"CAST(MIN(CASE WHEN j % {rows_per_band} = {r} THEN mh END) AS STRING)"
-        for r in range(rows_per_band)
-    )
-    bk = (
-        f"SELECT doc_id, CAST(FLOOR(j / {float(rows_per_band)!r}) AS BIGINT) AS band, "
-        f"CONCAT_WS(',', {bucket_cols}) AS bucket FROM {mh_source} "
-        f"GROUP BY doc_id, CAST(FLOOR(j / {float(rows_per_band)!r}) AS BIGINT)"
-    )
-    return (
-        f"WITH bk AS ({bk}), "
-        f"ba AS (SELECT *, pmod(xxhash64(doc_id), {n_salt}) AS sb FROM bk), "
-        f"bb AS (SELECT bk.*, s AS sb FROM bk "
-        f"LATERAL VIEW explode(sequence(0, {n_salt - 1})) t AS s) "
-        "SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id FROM ba a "
-        "JOIN bb b ON a.band = b.band AND a.bucket = b.bucket "
-        "AND a.sb = b.sb AND a.doc_id < b.doc_id"
-    )
-
-
 def _cached_pairs(spark: SparkSession, sf_dir: str, view: str = "mh_pairs"):
     """The salted LSH candidate-pair set, cached once per session/sf —
-    tiny (one row per candidate pair) and consumed by both the pair
-    gate and the exact-Jaccard verify (round 7)."""
+    tiny (one row per candidate pair) and consumed by the pair gate,
+    the exact-Jaccard verify and the minhash-similarity verify."""
     _cached_signatures_wide(spark, sf_dir)
     return _cached_df(
         spark, sf_dir, "pairs", _lsh_pairs_from_salted_wide("mh_sig_w"), view
@@ -380,7 +343,7 @@ def spark_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def spark_lsh_pairs_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs over the FUSED hash-domain signatures
-    (xxhash64 3-token windows, :func:`_fast_shingle_sig_sql`) — the
+    (xxhash64 3-token windows, :func:`_fast_shingle_sig_wide_sql`) — the
     deployment-default fast path, benchmarked beside the md5 gate form
     (bench.py ``minhash_lsh_pairs_fused``). NOT oracle-gated, by
     necessity: DuckDB computes no xxhash64-compatible hash, and LSH
@@ -388,7 +351,7 @@ def spark_lsh_pairs_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical docs collide family-independently), so no DuckDB SQL can
     replay this pair set. Correctness rides (a) the md5 gate — the
     identical banding construction over the portable hash family —
-    and (b) the structural tests that run BOTH families
+    and (b) the structural tests over the xxhash64 family
     (tests/test_neardup_removal.py). See PLANS.md round-6 note."""
     load_tables(spark, sf_dir, ["documents"])
     spark.sql("SELECT doc_id, text FROM documents").createOrReplaceTempView(
@@ -449,22 +412,43 @@ Q_JACCARD_LSH_DUCK = _jaccard_verify_sql(
 )
 
 
+def _ranked_cluster_members(wide_source: str, docs: DataFrame) -> DataFrame:
+    """The near-dup lineage from signatures to the keep/drop decision:
+    star edges over the WIDE signature source ``wide_source`` →
+    :func:`cc_two_phase` → every cluster member (node, label, n_chars)
+    ranked by the keep-longest rule in ``_rn`` (max n_chars, min
+    doc_id tie-break: when near-duplicates differ, the longest version
+    usually carries the superset of content). ``_rn == 1`` is the
+    member kept, the rest are dropped. ``docs`` supplies (doc_id,
+    n_chars); docs outside any cluster never appear (singletons never
+    enter the LSH edge graph)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    edges = docs.sparkSession.sql(_lsh_star_edges_wide_window(wide_source))
+    labels = cc_two_phase(edges)
+    member = labels.join(
+        docs.select(F.col("doc_id").alias("node"), "n_chars"), "node"
+    )
+    wo = Window.partitionBy("label").orderBy(
+        F.col("n_chars").desc(), F.col("node").asc()
+    )
+    return member.withColumn("_rn", F.row_number().over(wo))
+
+
 def spark_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster formation: connected components over the LSH
-    candidate graph via alternating Large-Star/Small-Star
-    (cc_two_phase) — O(log) rounds instead of O(component diameter),
-    so pathological near-duplicate chains converge at corpus scale.
-    Returns (doc_id, cluster_id = min doc id reachable); value-checked
-    against the recursive-CTE oracle by the gate. min_label_propagation
-    remains as the simpler diameter-bounded variant (cross-checked in
-    tests/test_cc_algorithms.py)."""
+    star edges (the shipped removal lineage's edge builder) via
+    alternating Large-Star/Small-Star (cc_two_phase) — O(log) rounds
+    instead of O(component diameter), so pathological near-duplicate
+    chains converge at corpus scale. Returns (doc_id, cluster_id = min
+    doc id reachable); value-checked against the recursive-CTE oracle
+    over the pairwise band join by the gate (a star spans the same
+    component as the bucket clique)."""
     from pyspark.sql import functions as F
 
     _cached_signatures_wide(spark, sf_dir)
-    # localCheckpoint instead of .cache(): caching the CTE plan trips a
-    # Spark 4.x InlineCTE re-resolution bug, and the checkpoint also
-    # truncates lineage for the iteration below
-    edges = spark.sql(_lsh_pairs_from_salted_wide("mh_sig_w"))
+    edges = spark.sql(_lsh_star_edges_wide_window("mh_sig_w"))
     labels = cc_two_phase(edges)
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
@@ -474,35 +458,26 @@ def spark_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def spark_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical-document selection per duplicate cluster — the step
     that turns cluster labels into an actionable keep/drop decision
-    for the corpus: keep the RICHEST member (max n_chars, min doc_id
-    tie-break: when near-duplicates differ, the longest version
-    usually carries the superset of content), drop the rest.
+    for the corpus: keep the RICHEST member, drop the rest (the rule
+    of :func:`_ranked_cluster_members`).
 
-    Chains the full near-dup lineage: cached shingles → minhash →
-    salted LSH band join → Large-Star/Small-Star connected components
-    → per-cluster window top-1. Returns (cluster_id, kept_doc_id,
-    kept_n_chars, n_members) per multi-member cluster; docs outside
-    any cluster are implicitly kept (singletons never enter the LSH
-    pair graph). At 100 TB every stage is a bounded shuffle: the
-    window partitions by cluster label (cluster sizes are near-dup
-    group sizes — small by construction after LSH thresholding)."""
+    Chains the shipped near-dup lineage over the md5 signatures:
+    cached shingles → minhash → LSH star edges → Large-Star/Small-Star
+    connected components → per-cluster window top-1. Returns
+    (cluster_id, kept_doc_id, kept_n_chars, n_members) per
+    multi-member cluster; docs outside any cluster are implicitly
+    kept. At 100 TB every stage is a bounded shuffle: the window
+    partitions by cluster label (cluster sizes are near-dup group
+    sizes — small by construction after LSH thresholding)."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     _cached_signatures_wide(spark, sf_dir)
-    edges = spark.sql(_lsh_pairs_from_salted_wide("mh_sig_w"))
-    labels = cc_two_phase(edges)
-    docs = spark.table("documents").select(
-        F.col("doc_id").alias("node"), "n_chars"
-    )
-    j = labels.join(docs, "node")
-    w = Window.partitionBy("label")
-    wo = Window.partitionBy("label").orderBy(
-        F.col("n_chars").desc(), F.col("node").asc()
-    )
+    ranked = _ranked_cluster_members("mh_sig_w", spark.table("documents"))
     return (
-        j.withColumn("n_members", F.count(F.lit(1)).over(w))
-        .withColumn("_rn", F.row_number().over(wo))
+        ranked.withColumn(
+            "n_members", F.count(F.lit(1)).over(Window.partitionBy("label"))
+        )
         .where(F.col("_rn") == 1)
         .select(
             F.col("label").alias("cluster_id"),
@@ -542,23 +517,16 @@ def dedup_filtered_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REMOVAL form of the near-dup lineage: the documents table
     minus non-canonical duplicate-cluster members — i.e. an anti-join
     of the corpus against (cluster members \\ keep list). This is the
-    DataFrame a downstream training-data pipeline consumes; used by
-    bench.py's composed e2e near-dup lineage."""
+    DataFrame a downstream training-data pipeline consumes. Runs the
+    lineage of :func:`neardup_drop_ids` over the md5 signatures (the
+    one hash both engines compute), so the gate value-checks the
+    shipped edge builder, CC and keep rule."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     _cached_signatures_wide(spark, sf_dir)
-    edges = spark.sql(_lsh_pairs_from_salted_wide("mh_sig_w"))
-    labels = cc_two_phase(edges)
     docs = spark.table("documents")
-    member = labels.join(
-        docs.select(F.col("doc_id").alias("node"), "n_chars"), "node"
-    )
-    wo = Window.partitionBy("label").orderBy(
-        F.col("n_chars").desc(), F.col("node").asc()
-    )
     drop = (
-        member.withColumn("_rn", F.row_number().over(wo))
+        _ranked_cluster_members("mh_sig_w", docs)
         .where(F.col("_rn") > 1)
         .select(F.col("node").alias("doc_id"))
     )
@@ -598,59 +566,6 @@ def _dedup_filtered_oracle() -> str:
     )
 
 
-def _lsh_star_edges(mh_source: str) -> str:
-    """STAR edges per LSH band-bucket: every member connects to the
-    bucket's MINIMUM doc id — O(bucket size) edges instead of the
-    pairwise join's O(bucket size²), with IDENTICAL connected
-    components (a star spans exactly the same vertex set as the
-    clique). This is the edge construction the REMOVAL pipeline wants
-    at 100 TB: a hot bucket of H near-identical docs costs H rows
-    through a grouped MIN + one equi-join (AQE skew-splittable)
-    instead of H² join output. The pairwise form
-    (_lsh_pairs_from_salted) remains for queries whose OUTPUT is the
-    candidate-pair set itself (minhash_lsh_pairs, jaccard verify)."""
-    rows_per_band = N_HASHES // BANDS
-    bucket_cols = ", ".join(
-        f"CAST(MIN(CASE WHEN j % {rows_per_band} = {r} THEN mh END) AS STRING)"
-        for r in range(rows_per_band)
-    )
-    bk = (
-        f"SELECT doc_id, CAST(FLOOR(j / {float(rows_per_band)!r}) AS BIGINT) AS band, "
-        f"CONCAT_WS(',', {bucket_cols}) AS bucket FROM {mh_source} "
-        f"GROUP BY doc_id, CAST(FLOOR(j / {float(rows_per_band)!r}) AS BIGINT)"
-    )
-    return (
-        f"WITH bk AS ({bk}), "
-        "mn AS (SELECT band, bucket, MIN(doc_id) AS a_id FROM bk "
-        "GROUP BY band, bucket) "
-        "SELECT DISTINCT mn.a_id, bk.doc_id AS b_id FROM bk "
-        "JOIN mn ON bk.band = mn.band AND bk.bucket = mn.bucket "
-        "WHERE bk.doc_id <> mn.a_id"
-    )
-
-
-def _fast_shingle_sig_sql(table: str) -> str:
-    """Minhash signature for the NO-ORACLE removal lineage with
-    shingles fused into the HASH DOMAIN: the 3-token window hashes
-    directly via ``xxhash64(w0, w1, w2)`` — no concatenated shingle
-    STRING is ever materialized, no ``array_distinct`` runs (MIN is
-    duplicate-insensitive), and the exploded stream carries int64
-    instead of ~60-byte strings. Same (a·x+b) mod P family over the
-    window hash; different tokens→ints map than the md5 form, so
-    cluster boundaries can differ on borderline pairs (like any hash
-    family swap — the structural guarantees are unchanged). The
-    gate-checked signature queries keep the string+md5 form: md5 is
-    the only hash both engines compute identically."""
-    stack_args = ", ".join(
-        f"CAST({j} AS BIGINT), mh{j}" for j in range(N_HASHES)
-    )
-    return (
-        f"WITH w AS ({_fast_shingle_sig_wide_sql(table)}) "
-        f"SELECT doc_id, j, mh FROM w "
-        f"LATERAL VIEW stack({N_HASHES}, {stack_args}) t2 AS j, mh"
-    )
-
-
 def _fast_shingle_sig_wide_sql(table: str) -> str:
     """WIDE form of the fused hash-domain signature: one row per doc
     with columns ``mh0..mh15`` — the natural shape for band-bucket
@@ -680,7 +595,8 @@ def _wide_band_rows(wide_source: str) -> str:
     4-tuple of BIGINTs (numeric join/group keys) instead of a
     concatenated string. Tuple equality ≡ the string form's equality
     (',' is unambiguous between integers), so every pair/edge set is
-    identical to the long-form construction."""
+    identical to the string-bucket construction of the DuckDB oracles
+    (:func:`_lsh_pairs_from`)."""
     rows_per_band = N_HASHES // BANDS
     stack_args = ", ".join(
         f"CAST({b} AS BIGINT), "
@@ -694,34 +610,22 @@ def _wide_band_rows(wide_source: str) -> str:
     )
 
 
-def _lsh_star_edges_wide(wide_source: str) -> str:
-    """STAR edges per LSH band-bucket over a WIDE signature source —
-    same edge set as :func:`_lsh_star_edges` (value-equal buckets, see
-    :func:`_wide_band_rows`), minus the 16x long-form re-aggregation
-    shuffle."""
-    rows_per_band = N_HASHES // BANDS
-    mcols = [f"m{r}" for r in range(rows_per_band)]
-    on = " AND ".join(f"bk.{c} = mn.{c}" for c in ["band", *mcols])
-    # NO DISTINCT here: this form feeds cc_two_phase, whose own initial
-    # ``.distinct()`` dedups in the same checkpoint job — a DISTINCT
-    # here would be a second full exchange over the edge stream
-    return (
-        f"WITH bk AS ({_wide_band_rows(wide_source)}), "
-        f"mn AS (SELECT band, {', '.join(mcols)}, MIN(doc_id) AS a_id "
-        f"FROM bk GROUP BY band, {', '.join(mcols)}) "
-        f"SELECT mn.a_id, bk.doc_id AS b_id FROM bk "
-        f"JOIN mn ON {on} WHERE bk.doc_id <> mn.a_id"
-    )
-
-
 def _lsh_star_edges_wide_window(wide_source: str) -> str:
-    """STAR edges via a WINDOW min per band-bucket instead of the
-    groupBy + self-join of :func:`_lsh_star_edges_wide`: the signature
-    source is referenced ONCE, so the whole sig → band rows → bucket
-    min → edges chain runs as a single lineage with one exchange —
-    no signature cache materialization, no join (round 7; used by the
-    removal pipeline where the signature has no other consumer).
-    Identical edge set: MIN over the same bucket grouping."""
+    """STAR edges per LSH band-bucket: every member connects to the
+    bucket's MINIMUM doc id — O(bucket size) edges instead of the
+    pairwise join's O(bucket size²), with IDENTICAL connected
+    components (a star spans exactly the vertex set of the clique).
+    The CC input of every near-dup cluster query; the pairwise form
+    (:func:`_lsh_pairs_from_salted_wide`) serves only the queries whose
+    OUTPUT is the candidate-pair set.
+
+    The bucket minimum is a WINDOW min, so the signature source is
+    referenced ONCE and the sig → band rows → bucket min → edges chain
+    runs as a single lineage with one exchange and no join. No
+    DISTINCT: cc_two_phase's first round-pair dedups (the same pair
+    via two bands is harmless). Trade-off: a hot band-bucket (many
+    identical docs) lands whole in ONE window task — linear work, so
+    a straggler risk rather than a blow-up (ROADMAP 4(b))."""
     rows_per_band = N_HASHES // BANDS
     mcols = ", ".join(f"m{r}" for r in range(rows_per_band))
     return (
@@ -732,18 +636,25 @@ def _lsh_star_edges_wide_window(wide_source: str) -> str:
     )
 
 
-def _lsh_pairs_from_salted_wide(wide_source: str, n_salt: int = LSH_SALT) -> str:
-    """Salted band-bucket pair join over a WIDE signature source —
-    same pair set as :func:`_lsh_pairs_from_salted` (numeric-tuple
-    buckets, see :func:`_wide_band_rows`)."""
+LSH_SALT = 8
+
+
+def _lsh_pairs_from_salted_wide(wide_source: str) -> str:
+    """Salted band-bucket pair join over a WIDE signature source: a hot
+    LSH bucket with H members is a single join key whose pair work is
+    H² in ONE task (AQE splits partitions, not keys). Salting the left
+    side by hash(doc_id) % S and exploding the right side over all S
+    salts splits that key into S sub-keys of H·H/S work each — same
+    pair set as the unsalted DuckDB oracle (:func:`_lsh_pairs_from`,
+    value-gated by ``minhash_lsh_pairs``)."""
     rows_per_band = N_HASHES // BANDS
     mcols = [f"m{r}" for r in range(rows_per_band)]
     on = " AND ".join(f"a.{c} = b.{c}" for c in ["band", *mcols, "sb"])
     return (
         f"WITH bk AS ({_wide_band_rows(wide_source)}), "
-        f"ba AS (SELECT *, pmod(xxhash64(doc_id), {n_salt}) AS sb FROM bk), "
+        f"ba AS (SELECT *, pmod(xxhash64(doc_id), {LSH_SALT}) AS sb FROM bk), "
         f"bb AS (SELECT bk.*, s AS sb FROM bk "
-        f"LATERAL VIEW explode(sequence(0, {n_salt - 1})) t AS s) "
+        f"LATERAL VIEW explode(sequence(0, {LSH_SALT - 1})) t AS s) "
         "SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id FROM ba a "
         f"JOIN bb b ON {on} AND a.doc_id < b.doc_id"
     )
@@ -751,72 +662,44 @@ def _lsh_pairs_from_salted_wide(wide_source: str, n_salt: int = LSH_SALT) -> str
 
 # Version tag for the near-dup REMOVAL lineage's persisted artifacts
 # (drop sets, filtered corpora). v1 = md5+string shingle family
-# (rounds ≤ 4, fast_hash=False); v2 = xxhash64 hash-domain fused
-# shingles (round 5+ DEFAULT). The two universal-hash families draw
-# different cluster boundaries on borderline pairs (6364 vs 6370
-# drops on a 20 k-doc corpus), so drop sets produced under different
-# versions must not be mixed — stamp this tag on any persisted drop
-# set and refuse cross-version anti-joins.
+# (rounds ≤ 4); v2 = xxhash64 hash-domain fused shingles (round 5+,
+# the only family neardup_drop_ids runs). The two universal-hash
+# families draw different cluster boundaries on borderline pairs
+# (6364 vs 6370 drops on a 20 k-doc corpus), so drop sets produced
+# under different versions must not be mixed — stamp this tag on any
+# persisted drop set and refuse cross-version anti-joins.
 NEARDUP_LINEAGE_VERSION = 2
 
 
-def neardup_drop_ids(corpus: DataFrame, fast_hash: bool = True) -> DataFrame:
+def neardup_drop_ids(corpus: DataFrame) -> DataFrame:
     """DROP set — the doc_id of every NON-canonical duplicate-cluster
     member — for an arbitrary corpus DataFrame with columns
     (doc_id, text, n_chars): the reusable near-dup REMOVAL stage for
     composed pipelines (bench.py's e2e near-dup lineage over
-    synthesized pages). Shingles → one-pass 16-MIN minhash → per-band
-    STAR edges (linear in bucket size, see :func:`_lsh_star_edges`) →
-    Large-Star/Small-Star connected components → keep the longest
-    member per cluster (max n_chars, min doc_id tie-break), drop the
-    rest. The minhash signature is cached only until cc_two_phase's
-    eager checkpoint materialises the edge set, then released.
+    synthesized pages). Fused xxhash64 minhash signature
+    (:func:`_fast_shingle_sig_wide_sql`) → per-band STAR edges
+    (:func:`_lsh_star_edges_wide_window`) → Large-Star/Small-Star
+    connected components → keep the longest member per cluster
+    (:func:`_ranked_cluster_members`), drop the rest. The signature is
+    consumed once and never cached: sig → edges runs as one job
+    straight into cc_two_phase's first checkpoint.
 
-    ``fast_hash`` (DEFAULT since round 5) selects the hash-domain
-    FUSED signature (:func:`_fast_shingle_sig_sql`): the 3-token
-    window hashes directly via xxhash64, with no concatenated shingle
-    string, no array_distinct, and an int64 exploded stream. Measured
-    59.1 s → 4.07 s (14.5×) on a 20 k-doc × 300-token corpus and
-    ~11 % on the 600 k-page e2e lineage (tools/bench_hash_longdoc.py,
-    warmed interleaved best-of-3; PLANS.md round 5 — an earlier
-    token-family-only swap measured just ~8 %, the fusion is the
-    win). The oracle-checked signature queries (minhash_signatures,
-    LSH pairs, dedup_clusters) keep the md5 + string form: md5 is the
-    only hash both engines compute identically. Both are (a·x+b)
-    mod P universal families — same statistics, different
-    tokens→ints map, so cluster boundaries can differ on borderline
-    pairs (20 k-doc corpus: 6364 vs 6370 drops)."""
+    The hash-domain signature hashes each 3-token window directly via
+    xxhash64 — no concatenated shingle string, no array_distinct, an
+    int64 exploded stream: 59.1 s → 4.07 s (14.5×) on a 20 k-doc ×
+    300-token corpus against the md5 + string form (PLANS.md round 5).
+    The gate form :func:`dedup_filtered_corpus` runs this same lineage
+    over md5 signatures, the only hash both engines compute
+    identically. Both are (a·x+b) mod P universal families — same
+    statistics, different tokens→ints map, so cluster boundaries can
+    differ on borderline pairs (20 k-doc corpus: 6364 vs 6370
+    drops)."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
-    spark = corpus.sparkSession
     corpus.select("doc_id", "text").createOrReplaceTempView("_nd_corpus")
-    # WIDE signatures (one row per doc, mh0..mh15) consumed ONCE by a
-    # window-min star-edge construction: the long form's stack-explode
-    # + band-bucket re-aggregation shuffled 16x the rows, and the
-    # groupBy+join form needed the signature cached (two references).
-    # The fused sig → band rows → window-min lineage runs as one job
-    # straight into cc_two_phase's dedup checkpoint (round 7).
-    if fast_hash:
-        edges = spark.sql(
-            _lsh_star_edges_wide_window(
-                "(" + _fast_shingle_sig_wide_sql("_nd_corpus") + ")"
-            )
-        )
-    else:
-        sig_sql = _minhash_sql_wide_noexplode(
-            spark_shingles_all(table="_nd_corpus"), _SPARK_X
-        )
-        edges = spark.sql(_lsh_star_edges_wide_window("(" + sig_sql + ")"))
-    labels = cc_two_phase(edges)
-    member = labels.join(
-        corpus.select(F.col("doc_id").alias("node"), "n_chars"), "node"
-    )
-    wo = Window.partitionBy("label").orderBy(
-        F.col("n_chars").desc(), F.col("node").asc()
-    )
+    wide_sig = "(" + _fast_shingle_sig_wide_sql("_nd_corpus") + ")"
     return (
-        member.withColumn("_rn", F.row_number().over(wo))
+        _ranked_cluster_members(wide_sig, corpus)
         .where(F.col("_rn") > 1)
         .select(F.col("node").alias("doc_id"))
     )
@@ -887,10 +770,7 @@ def cc_two_phase(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
     to confirm a set it had already produced, which was most of the
     loop's fixed cost at small inputs (BENCH/BASELINE.md F ≈ 20 s
     analysis; the final label set is identical — both stop at the same
-    deterministic fixpoint). The input edge set is also checked before
-    round 1: LSH star edges are frequently already min-rooted stars
-    (exact-duplicate clusters collapse every band to one bucket), and
-    then the loop body never runs. Exhaustion raises loudly."""
+    deterministic fixpoint). Exhaustion raises loudly."""
     from pyspark.sql import functions as F
 
     def one_round(df, dedup: bool = True):
@@ -984,69 +864,6 @@ def cc_two_phase(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
     # distinct — over ~n_clusters rows, not the whole label set
     roots = cur.selectExpr("v AS node", "v AS label").distinct()
     return cur.selectExpr("u AS node", "v AS label").unionAll(roots)
-
-
-def min_label_propagation(
-    edges: DataFrame, max_iterations: int | None = None
-) -> DataFrame:
-    """Connected components over an (a_id, b_id) edge DataFrame by
-    iterative min-label propagation. Returns (node, label = min node id
-    reachable). Each iteration is one shuffle on the edge key; the
-    label count shrinks monotonically, so convergence is bounded by the
-    max component eccentricity, not the graph size. Raises loudly if
-    the iteration cap is hit before convergence — silently returning
-    unconverged labels would be wrong cluster ids with no signal."""
-    from pyspark.sql import functions as F
-
-    if max_iterations is None:
-        max_iterations = CC_MAX_ITERATIONS
-    und = (
-        edges.selectExpr("a_id AS u", "b_id AS v")
-        .unionAll(edges.selectExpr("b_id AS u", "a_id AS v"))
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        und.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    for _ in range(max_iterations):
-        neigh = (
-            und.join(labels, und.v == labels.node)
-            .groupBy("u")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        new_labels = (
-            labels.join(neigh, labels.node == neigh.u, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nlabel", F.col("label"))
-                ).alias("label"),
-            )
-            # truncate the lineage per iteration — iterative plans grow
-            # exponentially otherwise
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"min_label_propagation did not converge in {max_iterations} "
-            "iterations (a connected component has eccentricity > "
-            f"{max_iterations}); raise the cap or pre-split the component"
-        )
-    return labels
 
 
 def _dedup_clusters_oracle() -> str:

@@ -522,17 +522,3 @@ def test_at_stateful_random_worlds(spark):
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
 
-
-def test_min_label_propagation_cap_is_loud(spark):
-    """A chain component whose eccentricity exceeds the iteration cap
-    must raise, not silently return unconverged labels — and converge
-    fine when the cap covers it."""
-    from spinix_spark.queries_text import min_label_propagation
-
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(10)], "a_id long, b_id long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        min_label_propagation(edges, max_iterations=4)
-    labels = min_label_propagation(edges, max_iterations=15)
-    assert {r.label for r in labels.collect()} == {0}
