@@ -1300,8 +1300,12 @@ def _apply_dwell(
     index is prefixed so two dwell nodes over the same object cannot
     alias). An ``after`` node that fired stores -(first_visit + 1) —
     sign-safe for visits opened at unix ts 0, where a bare -first
-    would alias 0 and lose the mark (ADVICE r6). Dwell
-    state updates on every gated event regardless of the other nodes'
+    would alias 0 and lose the mark (ADVICE r6). A fired mark saved
+    in the old bare ``-first`` format decodes 1 s early; that cannot
+    be observed: a fired ``after`` node stays suppressed while its mark
+    is negative (the decoded first visit decides nothing until a miss
+    clears the visit), and ``duration`` nodes never store negatives.
+    Dwell state updates on every gated event regardless of the other nodes'
     outcomes (presence tracking is per node, not per rule result).
     The fold is sequential in the batch's row order — identical
     ordering contract to the trigger gate (callers feed (device_id,

@@ -226,12 +226,6 @@ def _sql_rule_events(points: DataFrame, engine: Engine, rule, plan) -> DataFrame
     points.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
     cols = set(points.columns)
     pruned = points.where(F.expr(_rule_prune_expr_for(engine, rule)))
-    if plan.prep:
-        # buffered-device ring vertices etc. as named columns, so the
-        # predicate expressions below stay codegen-sized
-        pruned = pruned.selectExpr(
-            "*", *[f"{sql} AS {name}" for name, sql in plan.prep]
-        )
     sel = ["*", f"{plan.final_sql} AS _final"]
     for j, ns in enumerate(plan.nodes):
         sel.append(f"{ns.ok_sql} AS _ok{j}")
@@ -258,12 +252,11 @@ def _at_base_rows(
     n_salt: int, join_how: str,
 ):
     """Shared front half of the devices(@) pair-join strategies:
-    pruned + layer-filtered rows carrying ``_rowkey``, the companion
-    nodes' prep columns, and the @ verdict joined on as ``_at_refs``
-    (null ⇔ no candidate satisfied the verb). ``join_how='inner'``
-    keeps only @-matching rows (stateless all-AND: non-matching rows
-    can never emit); ``'left'`` keeps every gated row (stateful: the
-    trigger fold must see non-matching rows too). Returns
+    pruned + layer-filtered rows carrying ``_rowkey`` and the @ verdict
+    joined on as ``_at_refs`` (null ⇔ no candidate satisfied the verb).
+    ``join_how='inner'`` keeps only @-matching rows (stateless all-AND:
+    non-matching rows can never emit); ``'left'`` keeps every gated row
+    (stateful: the trigger fold must see non-matching rows too). Returns
     ``(joined, node_sqls)`` or None when a companion node is not
     Catalyst-compilable."""
     from spinix_spark.engine.devices_at import at_candidate_pairs, at_row_matches
@@ -290,9 +283,6 @@ def _at_base_rows(
         c for c in ("url", "device_id", "datetime", "lat", "lon") if c in columns
     ]
     base = base.withColumn("_rowkey", F.xxhash64(*key_cols))
-    prep = [p for ns in node_sqls if ns is not None for p in ns.prep]
-    if prep:
-        base = base.selectExpr("*", *[f"{sql} AS {name}" for name, sql in prep])
     pairs = at_candidate_pairs(base, devices_df, at_node, engine.scheme, n_salt=n_salt)
     joined = base.join(at_row_matches(pairs), "_rowkey", join_how)
     return joined, node_sqls

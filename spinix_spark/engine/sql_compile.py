@@ -18,16 +18,17 @@ otherwise, chosen per rule):
   PIP (identical arithmetic to geo/predicates.py, including the
   on-edge clause), exact haversine for circle zones, equality for
   point zones, per-segment on-edge terms for lines
-- BUFFERED devices (``:radius`` 12-gon / ``:bbox`` rect) versus
-  polygon/rect/point/line zones whose edge count stays under
-  BUFFER_EDGE_CAP: the per-row ring vertices are destination-point
-  expressions of (lat, lon) projected as prep columns, and the
-  ring-ring / line-ring predicates replicate geo/predicates.py
-  term-for-term. Circle zones (64-gon) stay on the kernel path
 - distance comparators (EqualObjectOp) with their 50 m rounding and
   the reference's last-candidate-wins Ok (runtime.go:1795-1825)
 - every attribute op (int/float/string/time/datetime views of the
   device row, runtime.go:2126-2224)
+
+Buffered devices (``:radius`` 12-gon / ``:bbox`` rect) always take
+the kernel path: their ring is built per row, and the Catalyst form of
+the ring-ring predicates needs higher-order-function lambdas, which
+measured ~250× slower than the vectorized Arrow+NumPy kernel on
+local[8] at 200k rows (115 s vs 0.45 s steady-state) — the lambdas sit
+outside whole-stage codegen and allocate a struct per element.
 
 Output rows are bit-identical to the kernel path (asserted by the
 randomized cross-path parity test).
@@ -35,8 +36,7 @@ randomized cross-path parity test).
 
 from __future__ import annotations
 
-import itertools
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from spinix_spark.dsl import ast_nodes as ast
 from spinix_spark.dsl.compiler import (
@@ -70,33 +70,6 @@ class NodeSQL:
     left_kw: str
     right_kw: str
     op: str
-    # (col_name, sql) pairs projected BEFORE ok_sql/refs_sql evaluate —
-    # buffered-device ring vertices land here so each predicate
-    # expression references short column names and whole-stage codegen
-    # stays under the JVM method-size limit
-    prep: list[tuple[str, str]] = field(default_factory=list)
-
-
-_prep_seq = itertools.count(1)
-
-# buffered-target compilation cap: zone rings/lines with more total
-# edges than this (e.g. 64-gon circle zones) stay on the kernel path —
-# the edge-pair SQL grows as target_edges × zone_edges
-BUFFER_EDGE_CAP = 16
-
-# Buffered-device (:radius/:bbox) rules CAN compile to Catalyst
-# (higher-order-function ring predicates, cross-path parity tested),
-# but MEASURED on local[8] at 200k rows the interpreted HOF lambdas are
-# ~250× slower than the vectorized Arrow+NumPy kernel (115 s vs 0.45 s
-# steady-state) — Spark's higher-order functions don't participate in
-# whole-stage codegen and allocate per-element structs. The kernel is
-# therefore the default physical plan for buffered shapes; flip this
-# on (or set SPINIX_COMPILE_BUFFERED=1) only where Python workers are
-# unavailable. Point-device predicates (scalar exprs, full codegen)
-# always compile.
-import os as _os
-
-COMPILE_BUFFERED = _os.environ.get("SPINIX_COMPILE_BUFFERED", "0") == "1"
 
 
 _CMP_SQL = {
@@ -266,115 +239,6 @@ def _zone_point_pred(zone, op: Token) -> str | None:
     return _verb_table(op, inter, within)
 
 
-def _buffered_zone_pred(
-    zone, op: Token, kind: Token, meters: float, steps: int,
-    prep: list[tuple[str, str]],
-) -> str | None:
-    """Per-zone predicate for a BUFFERED device (``:radius`` 12-gon /
-    ``:bbox`` rect) — the SQL form of the kernel's
-    zone_intersects_poly / zone_within_poly / zone_*_rect
-    (engine/runtime.py:249-287) with the per-row ring vertices
-    registered as prep columns. None when the zone's edge count would
-    blow past BUFFER_EDGE_CAP (circle zones polygonize to 64-gons) —
-    those stay on the kernel path."""
-    from spinix_spark.geo.sqlgen import (
-        buffer_ring_verts_sql,
-        const_ring_sql,
-        hof_line_intersects_ring_sql,
-        hof_pip_sql,
-        hof_ring_contains_pts_sql,
-        hof_ring_intersects_ring_sql,
-        struct_ring_sql,
-    )
-
-    n_edges = sum(len(r) - 1 for r in zone.rings) + sum(
-        len(l) - 1 for l in zone.lines
-    )
-    n_pts = 0 if zone.points is None else len(zone.points)
-    if n_edges > BUFFER_EDGE_CAP or n_pts > BUFFER_EDGE_CAP:
-        return None
-    if not zone.rings and not zone.lines and zone.points is None:
-        return None
-    # dateline/polar geometry stays on the kernel path: the HOF ring
-    # predicates here are planar and UNFRAMED (per-row ring vertices vs
-    # constant zone rings), so a zone near ±180° or a pole could
-    # diverge from the wrap-correct kernel. The guard is conservative
-    # (reach-padded) and a no-op for all mid-longitude rules.
-    import math as _math
-
-    from spinix_spark.geo.geodesy import EARTH_RADIUS_M as _R
-
-    _pad = 2.0 * _math.degrees((float(meters) + 1.0) / _R) + 0.1
-    _b = zone.bbox
-    if (
-        float(_b[1]) <= -180.0 + _pad
-        or float(_b[3]) >= 180.0 - _pad
-        or max(abs(float(_b[0])), abs(float(_b[2]))) + _pad >= 84.0
-    ):
-        return None
-
-    uid = next(_prep_seq)
-    ring_col = f"_br{uid}"
-    raw = buffer_ring_verts_sql("lat", "lon", meters, steps)
-    if kind is Token.RADIUS:
-        prep.append((ring_col, struct_ring_sql(raw)))
-        n_t = len(raw)
-    else:  # BBOX: rect ring from the 4-step ring's bbox
-        lo_y = "LEAST(" + ", ".join(v[0] for v in raw[:-1]) + ")"
-        hi_y = "GREATEST(" + ", ".join(v[0] for v in raw[:-1]) + ")"
-        lo_x = "LEAST(" + ", ".join(v[1] for v in raw[:-1]) + ")"
-        hi_x = "GREATEST(" + ", ".join(v[1] for v in raw[:-1]) + ")"
-        yl, yh = f"_b{uid}ylo", f"_b{uid}yhi"
-        xl, xh = f"_b{uid}xlo", f"_b{uid}xhi"
-        prep.append((yl, lo_y))
-        prep.append((yh, hi_y))
-        prep.append((xl, lo_x))
-        prep.append((xh, hi_x))
-        rect_ring = [(yl, xl), (yl, xh), (yh, xh), (yh, xl), (yl, xl)]
-        prep.append((ring_col, struct_ring_sql(rect_ring)))
-        n_t = 5
-
-    def c(v: float) -> str:
-        return repr(float(v))
-
-    inter_terms: list[str] = []
-    within_terms: list[str] = []
-    for ring in zone.rings:
-        zr = const_ring_sql(ring)
-        inter_terms.append(
-            hof_ring_intersects_ring_sql(ring_col, n_t, zr, len(ring))
-        )
-        within_terms.append(hof_ring_contains_pts_sql(ring_col, n_t, zr))
-    for line in zone.lines:
-        zl = const_ring_sql(line)
-        inter_terms.append(
-            hof_line_intersects_ring_sql(zl, len(line), ring_col, n_t)
-        )
-        within_terms.append(hof_ring_contains_pts_sql(ring_col, n_t, zl))
-    if zone.points is not None:
-        for p in zone.points:
-            pin = hof_pip_sql(c(p[0]), c(p[1]), ring_col, n_t)
-            inter_terms.append(pin)
-            within_terms.append(pin)
-
-    inter = "(" + " OR ".join(inter_terms) + ")"
-    if kind is Token.BBOX:
-        # zone_within_rect: zone bbox inside the target rect
-        b = zone.bbox
-        within = (
-            f"({c(b[0])} >= _b{uid}ylo AND {c(b[2])} <= _b{uid}yhi"
-            f" AND {c(b[1])} >= _b{uid}xlo AND {c(b[3])} <= _b{uid}xhi)"
-        )
-    else:
-        within = "(" + " AND ".join(within_terms) + ")" if within_terms else "false"
-    # factor the whole per-zone predicate into ONE boolean prep column:
-    # ok_sql and refs_sql both consume it, so the (already compact) HOF
-    # expression is analyzed and evaluated once per row
-    pred_col = f"_zp{uid}"
-    prep.append((pred_col, _verb_table(op, inter, within)))
-    return pred_col
-
-
 def _near_candidate_sql(zone, meters: float) -> str:
     """Search-rect(point, meters) intersects zone bbox — the exact
     candidacy test of ZoneStore.near / rect_from_center
@@ -539,7 +403,6 @@ def compile_node_sql(node, engine, props, columns: set[str]) -> NodeSQL | None:
             left_kw=v.left_kw,
             right_kw=v.right_kw,
             op=v.op,
-            prep=v.prep,
         )
     if isinstance(node, SpDDevicesOp):
         # membership gate on exactly one side then delegate
@@ -613,18 +476,9 @@ def compile_node_sql(node, engine, props, columns: set[str]) -> NodeSQL | None:
             op=str(node.op),
         )
     if isinstance(node, SpObjectOp):
-        kind = node.left.kind
-        if kind in (Token.RADIUS, Token.BBOX) and not COMPILE_BUFFERED:
-            return None  # measured: the vectorized kernel wins (see flag)
+        if node.left.kind in (Token.RADIUS, Token.BBOX):
+            return None  # buffered device: kernel path (module docstring)
         meters = node.left.meters()
-        steps = node.left.steps()
-        prep: list[tuple[str, str]] = []
-
-        def zone_pred(z) -> str | None:
-            if kind in (Token.RADIUS, Token.BBOX):
-                return _buffered_zone_pred(z, node.op, kind, meters, steps, prep)
-            return _zone_point_pred(z, node.op)
-
         if node.right.all and not node.right.refs:
             # ``@``: candidate universe = Objects.Near's bbox prefilter
             # with the device's buffer reach (50 m floor, SMALL-tier
@@ -646,7 +500,7 @@ def compile_node_sql(node, engine, props, columns: set[str]) -> NodeSQL | None:
             for z in engine.zones.all_zones():
                 if z.layer_id != props.layer:
                     continue
-                pred = zone_pred(z)
+                pred = _zone_point_pred(z, node.op)
                 if pred is None:
                     return None
                 cand = _near_candidate_sql(z, search_m)
@@ -658,7 +512,6 @@ def compile_node_sql(node, engine, props, columns: set[str]) -> NodeSQL | None:
                 left_kw="device",
                 right_kw=str(node.right.kind),
                 op=str(node.op),
-                prep=prep,
             )
         if not node.right.refs:
             return None
@@ -667,7 +520,7 @@ def compile_node_sql(node, engine, props, columns: set[str]) -> NodeSQL | None:
             z = engine.zones.lookup(rid)
             if z is None or z.layer_id != props.layer:
                 continue
-            pred = zone_pred(z)
+            pred = _zone_point_pred(z, node.op)
             if pred is None:
                 return None
             pairs.append((pred, rid))
@@ -679,7 +532,6 @@ def compile_node_sql(node, engine, props, columns: set[str]) -> NodeSQL | None:
             left_kw="device",
             right_kw=str(node.right.kind),
             op=str(node.op),
-            prep=prep,
         )
     if isinstance(node, EqualObjectOp):
         cmp = _CMP_SQL[node.op]
@@ -822,7 +674,6 @@ class RuleSQLPlan:
     recorded_sql: list[str]
     final_sql: str
     layer_sql: str
-    prep: list[tuple[str, str]] = field(default_factory=list)
 
 
 def try_compile_rule_sql(engine, rule, columns=None) -> RuleSQLPlan | None:
@@ -869,8 +720,6 @@ def try_compile_rule_sql(engine, rule, columns=None) -> RuleSQLPlan | None:
             recorded.append("true")
             acc = f"({acc} OR {nodes[j].ok_sql})"
     final = f"({acc} AND {layer_sql})"
-    prep = [p for ns in nodes for p in ns.prep]
     return RuleSQLPlan(
-        nodes=nodes, recorded_sql=recorded, final_sql=final, layer_sql=layer_sql,
-        prep=prep,
+        nodes=nodes, recorded_sql=recorded, final_sql=final, layer_sql=layer_sql
     )

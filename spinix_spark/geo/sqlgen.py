@@ -16,6 +16,13 @@ deterministic synthetic inputs avoid.
 The formulas mirror geo/geodesy.py (haversine, R=6371e3) and
 geo/predicates.py (ray-casting crossing count, boundary-exclusive in
 this SQL form).
+
+Ring-vs-ring predicates over PER-ROW rings (a buffered device's ring
+against a zone) have no SQL form here: Catalyst can only express them
+with higher-order-function lambdas, measured ~250× slower than the
+NumPy kernel, so buffered devices always run on the kernel path
+(engine/sql_compile.py). The per-row ring vertices themselves
+(buffer_ring_verts_sql) serve the point-in-buffer oracle predicates.
 """
 
 from __future__ import annotations
@@ -186,234 +193,6 @@ def point_in_buffer_ring_sql(
     libm last-ulp differences (PIP is robust to those off-edge)."""
     verts = buffer_ring_verts_sql(clat, clon, meters, steps)
     return point_in_expr_ring_sql(plat, plon, verts, inclusive=inclusive)
-
-
-# --- higher-order-function ring predicates --------------------------------
-# For PER-ROW rings (buffered devices) the edge-pair predicates are
-# expressed over an array<struct<y,x>> ring column with Spark's
-# aggregate/exists/forall lambdas: the predicate body appears ONCE in
-# the SQL regardless of edge counts, so the Catalyst expression tree
-# stays small (a fully-expanded 13×9-edge segment-test expression is
-# ~100 KB of SQL per zone and OOMs analysis). Same arithmetic as
-# geo/predicates.py, evaluated JVM-side (no Python workers).
-
-
-def struct_ring_sql(verts: Sequence[tuple[str, str]]) -> str:
-    """(lat_expr, lon_expr) list → array<struct<y: double, x: double>>."""
-    items = ", ".join(
-        f"struct(CAST({vy} AS DOUBLE) AS y, CAST({vx} AS DOUBLE) AS x)"
-        for vy, vx in verts
-    )
-    return f"array({items})"
-
-
-def const_ring_sql(ring) -> str:
-    """Closed constant ring (S, 2) lat/lon array → array<struct<y,x>>."""
-    return struct_ring_sql([(repr(float(p[0])), repr(float(p[1]))) for p in ring])
-
-
-def hof_pip_sql(py: str, px: str, ring: str, n_verts: int) -> str:
-    """Inclusive ray-cast point-in-polygon over an array<struct<y,x>>
-    ring expression — predicates.points_in_ring term-for-term
-    (crossing count + on-edge)."""
-    e = n_verts - 1  # edges
-    a = f"element_at({ring}, i)"
-    b = f"element_at({ring}, i + 1)"
-    straddle = f"(({a}.y > {py}) <> ({b}.y > {py}))"
-    xint = f"(({b}.x - {a}.x) * ({py} - {a}.y) / ({b}.y - {a}.y) + {a}.x)"
-    crossings = (
-        f"(aggregate(sequence(1, {e}), 0, (acc, i) -> acc + "
-        f"(CASE WHEN {straddle} AND {px} < {xint} THEN 1 ELSE 0 END)) % 2 = 1)"
-    )
-    cross0 = (
-        f"(({b}.x - {a}.x) * ({py} - {a}.y) - ({b}.y - {a}.y) * ({px} - {a}.x))"
-    )
-    on_edge = (
-        f"exists(sequence(1, {e}), i -> {cross0} = 0.0"
-        f" AND {px} >= LEAST({a}.x, {b}.x) AND {px} <= GREATEST({a}.x, {b}.x)"
-        f" AND {py} >= LEAST({a}.y, {b}.y) AND {py} <= GREATEST({a}.y, {b}.y))"
-    )
-    return f"({crossings} OR {on_edge})"
-
-
-def _hof_seg_test(a1: str, a2: str, b1: str, b2: str) -> str:
-    """Inclusive segment intersection of struct<y,x> endpoint exprs —
-    predicates.segments_intersect arithmetic."""
-
-    def orient(px, py, qx, qy, rx, ry):
-        return f"(({qx} - {px}) * ({ry} - {py}) - ({qy} - {py}) * ({rx} - {px}))"
-
-    ay, ax = f"{a1}.y", f"{a1}.x"
-    by, bx = f"{a2}.y", f"{a2}.x"
-    cy, cx = f"{b1}.y", f"{b1}.x"
-    dy, dx = f"{b2}.y", f"{b2}.x"
-    d1 = orient(ax, ay, bx, by, cx, cy)
-    d2 = orient(ax, ay, bx, by, dx, dy)
-    d3 = orient(cx, cy, dx, dy, ax, ay)
-    d4 = orient(cx, cy, dx, dy, bx, by)
-    proper = (
-        f"((({d1} > 0 AND {d2} < 0) OR ({d1} < 0 AND {d2} > 0))"
-        f" AND (({d3} > 0 AND {d4} < 0) OR ({d3} < 0 AND {d4} > 0)))"
-    )
-
-    def on_seg(oy, ox, sy1, sx1, sy2, sx2, d):
-        return (
-            f"({d} = 0.0"
-            f" AND {ox} >= LEAST({sx1}, {sx2}) AND {ox} <= GREATEST({sx1}, {sx2})"
-            f" AND {oy} >= LEAST({sy1}, {sy2}) AND {oy} <= GREATEST({sy1}, {sy2}))"
-        )
-
-    touch = " OR ".join(
-        [
-            on_seg(cy, cx, ay, ax, by, bx, d1),
-            on_seg(dy, dx, ay, ax, by, bx, d2),
-            on_seg(ay, ax, cy, cx, dy, dx, d3),
-            on_seg(by, bx, cy, cx, dy, dx, d4),
-        ]
-    )
-    return f"({proper} OR {touch})"
-
-
-def hof_rings_cross_sql(ring_a: str, na: int, ring_b: str, nb: int) -> str:
-    """Any edge of ring A intersects any edge of ring B (both
-    array<struct<y,x>> exprs) — predicates.ring_edges_cross."""
-    test = _hof_seg_test(
-        f"element_at({ring_a}, i)",
-        f"element_at({ring_a}, i + 1)",
-        f"element_at({ring_b}, j)",
-        f"element_at({ring_b}, j + 1)",
-    )
-    return (
-        f"exists(sequence(1, {na - 1}), i -> "
-        f"exists(sequence(1, {nb - 1}), j -> {test}))"
-    )
-
-
-def hof_ring_intersects_ring_sql(ring_a: str, na: int, ring_b: str, nb: int) -> str:
-    """predicates.ring_intersects_ring: edges cross or either first
-    vertex contained in the other ring."""
-    cross = hof_rings_cross_sql(ring_a, na, ring_b, nb)
-    b0 = f"element_at({ring_b}, 1)"
-    a0 = f"element_at({ring_a}, 1)"
-    b0_in_a = hof_pip_sql(f"{b0}.y", f"{b0}.x", ring_a, na)
-    a0_in_b = hof_pip_sql(f"{a0}.y", f"{a0}.x", ring_b, nb)
-    return f"({cross} OR {b0_in_a} OR {a0_in_b})"
-
-
-def hof_ring_contains_pts_sql(ring: str, n_verts: int, pts: str) -> str:
-    """Every struct<y,x> in ``pts`` (array expr) inside ``ring`` —
-    the vertex test of predicates.ring_contains_ring."""
-    pip = hof_pip_sql("p.y", "p.x", ring, n_verts)
-    return f"forall({pts}, p -> {pip})"
-
-
-def hof_line_intersects_ring_sql(line: str, nl: int, ring: str, nr: int) -> str:
-    """Open polyline (array expr, nl verts) intersects ring —
-    predicates.line_intersects_ring: segment crossings or any line
-    vertex inside."""
-    cross = hof_rings_cross_sql(line, nl, ring, nr)  # same edge walk
-    pip_any = hof_pip_sql("p.y", "p.x", ring, nr)
-    any_in = f"exists({line}, p -> {pip_any})"
-    return f"({cross} OR {any_in})"
-
-
-def orient_sql(ax: str, ay: str, bx: str, by: str, cx: str, cy: str) -> str:
-    """2D orientation — exact operand order of predicates._orient
-    (x = lon, y = lat)."""
-    return f"(({bx} - {ax}) * ({cy} - {ay}) - ({by} - {ay}) * ({cx} - {ax}))"
-
-
-def segments_intersect_sql(
-    p1: tuple[str, str],
-    p2: tuple[str, str],
-    q1: tuple[str, str],
-    q2: tuple[str, str],
-) -> str:
-    """Inclusive segment intersection, points as (lat_expr, lon_expr) —
-    the SQL form of predicates.segments_intersect (proper crossing +
-    collinear touch), identical arithmetic."""
-    ay, ax = p1
-    by, bx = p2
-    cy, cx = q1
-    dy, dx = q2
-    d1 = orient_sql(ax, ay, bx, by, cx, cy)
-    d2 = orient_sql(ax, ay, bx, by, dx, dy)
-    d3 = orient_sql(cx, cy, dx, dy, ax, ay)
-    d4 = orient_sql(cx, cy, dx, dy, bx, by)
-    proper = (
-        f"((({d1} > 0 AND {d2} < 0) OR ({d1} < 0 AND {d2} > 0))"
-        f" AND (({d3} > 0 AND {d4} < 0) OR ({d3} < 0 AND {d4} > 0)))"
-    )
-
-    def on_seg(oy, ox, sy1, sx1, sy2, sx2, d):
-        return (
-            f"({d} = 0.0"
-            f" AND {ox} >= LEAST({sx1}, {sx2}) AND {ox} <= GREATEST({sx1}, {sx2})"
-            f" AND {oy} >= LEAST({sy1}, {sy2}) AND {oy} <= GREATEST({sy1}, {sy2}))"
-        )
-
-    touch = " OR ".join(
-        [
-            on_seg(cy, cx, ay, ax, by, bx, d1),
-            on_seg(dy, dx, ay, ax, by, bx, d2),
-            on_seg(ay, ax, cy, cx, dy, dx, d3),
-            on_seg(by, bx, cy, cx, dy, dx, d4),
-        ]
-    )
-    return f"({proper} OR {touch})"
-
-
-def _edges_of(verts: Sequence[tuple[str, str]]):
-    return list(zip(verts[:-1], verts[1:]))
-
-
-def rings_cross_sql(
-    verts_a: Sequence[tuple[str, str]], verts_b: Sequence[tuple[str, str]]
-) -> str:
-    """Any edge of ring A intersects any edge of ring B (closed vertex
-    lists of (lat_expr, lon_expr))."""
-    tests = [
-        segments_intersect_sql(a1, a2, b1, b2)
-        for a1, a2 in _edges_of(verts_a)
-        for b1, b2 in _edges_of(verts_b)
-    ]
-    return "(" + " OR ".join(tests) + ")"
-
-
-def ring_intersects_ring_sql(
-    verts_a: Sequence[tuple[str, str]], verts_b: Sequence[tuple[str, str]]
-) -> str:
-    """predicates.ring_intersects_ring: edges cross, or either ring's
-    first vertex lies in the other (covers containment)."""
-    cross = rings_cross_sql(verts_a, verts_b)
-    b0_in_a = point_in_expr_ring_sql(verts_b[0][0], verts_b[0][1], verts_a, inclusive=True)
-    a0_in_b = point_in_expr_ring_sql(verts_a[0][0], verts_a[0][1], verts_b, inclusive=True)
-    return f"({cross} OR {b0_in_a} OR {a0_in_b})"
-
-
-def ring_contains_ring_sql(
-    outer: Sequence[tuple[str, str]], inner: Sequence[tuple[str, str]]
-) -> str:
-    """predicates.ring_contains_ring: every inner vertex inside outer
-    (inclusive)."""
-    terms = [
-        point_in_expr_ring_sql(vy, vx, outer, inclusive=True) for vy, vx in inner
-    ]
-    return "(" + " AND ".join(terms) + ")"
-
-
-def line_intersects_ring_sql(
-    line: Sequence[tuple[str, str]], ring: Sequence[tuple[str, str]]
-) -> str:
-    """predicates.line_intersects_ring: any line segment crosses a ring
-    edge, or any line vertex is inside the ring."""
-    cross = [
-        segments_intersect_sql(a1, a2, b1, b2)
-        for a1, a2 in _edges_of(line)
-        for b1, b2 in _edges_of(ring)
-    ]
-    v_in = [point_in_expr_ring_sql(vy, vx, ring, inclusive=True) for vy, vx in line]
-    return "(" + " OR ".join(cross + v_in) + ")"
 
 
 def point_on_line_sql(

@@ -10,7 +10,8 @@ rule gate, trigger fold and state rows:
 
 - ``stream_detect``: the dimension-scale form — carries the snapshot
   and trigger state across micro-batches on the driver (zones/rules
-  stay broadcast). Checkpointing via the stream's checkpointLocation.
+  stay broadcast). The stream's checkpointLocation restores only the
+  source offsets; a restart resumes with empty trigger state.
 - ``stream_detect_scalable``: the fact-scale form — snapshot and
   trigger state live in bucketed, versioned parquet tables; nothing
   fact-sized reaches the driver.
@@ -58,7 +59,14 @@ def stream_detect(
 
     ``sink(events_df, batch_id)`` receives each micro-batch's event
     rows. The engine's snapshot and trigger state advance between
-    micro-batches (batch N sees positions as of batch N-1)."""
+    micro-batches (batch N sees positions as of batch N-1).
+
+    Both live only in memory (``state_rows`` and ``engine.devices``),
+    so ``checkpoint_dir`` restores just the source offsets: a
+    restarted query resumes after the last committed batch with an
+    EMPTY trigger state and whatever device snapshot the new engine
+    holds. Use :func:`stream_detect_scalable` when state must survive
+    a restart."""
     state_rows: list[dict] = []
 
     def process(batch_df: DataFrame, batch_id: int) -> None:

@@ -348,9 +348,8 @@ def test_zone_rule_polar_sql_vs_kernel(spark):
 
 
 def test_buffered_device_vs_zone_dateline(spark):
-    """BUFFERED devices vs a zone across ±180° (kernel path —
-    COMPILE_BUFFERED is off and the round-6 guard keeps dateline
-    zones off the HOF SQL): ``:radius`` exercises the framed
+    """BUFFERED devices vs a zone across ±180° (kernel path — buffered
+    devices never compile to Catalyst): ``:radius`` exercises the framed
     ring-ring intersect (zone_intersects_poly), ``:bbox`` + IN the
     framed rect containment (zone_within_rect). Distances avoid the
     polygonized ambiguity band of the 12-gon+hexagon sum

@@ -1,6 +1,8 @@
-"""Cross-path parity for the widened Catalyst compiler: buffered
-devices (opt-in — see sql_compile.COMPILE_BUFFERED) and line zones
-(default-on for point devices)."""
+"""Buffered devices and line zones on the Spark detect paths: line
+zones compile to Catalyst for point devices (parity with the kernel),
+and buffered devices (``:radius`` / ``:bbox``) never compile — they
+run on the kernel path, checked here against the sequential
+``Engine.detect_batch`` reference."""
 
 from __future__ import annotations
 
@@ -8,7 +10,6 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from spinix_spark.engine import sql_compile
 from spinix_spark.engine.detect import Engine
 from spinix_spark.engine.spark_pipeline import detect_batch_spark, split_output
 from spinix_spark.engine.stores import Zone, zone_from_ring
@@ -104,20 +105,6 @@ BUFFERED_RULES = [
 ]
 
 
-@pytest.mark.parametrize("rule", BUFFERED_RULES)
-def test_buffered_device_compile_parity(spark, rule, monkeypatch):
-    """Opt-in buffered compilation (HOF ring predicates) must be
-    row-identical to the kernel. Kept opt-in because the measured
-    HOF throughput is ~250× below the vectorized kernel."""
-    monkeypatch.setattr(sql_compile, "COMPILE_BUFFERED", True)
-    eng = _engine(rule)
-    from spinix_spark.engine.sql_compile import try_compile_rule_sql
-
-    assert try_compile_rule_sql(eng, eng.rules["r" + "0" * 19]) is not None
-    rows = _both_paths(spark, rule)
-    assert len(rows) > 0
-
-
 def test_devices_object_membership_compiles(spark):
     """spDevicesObjectOp (devices(list) vs zone) compiles: membership
     IN gate + delegated zone predicate — parity with the kernel."""
@@ -133,8 +120,22 @@ def test_devices_object_membership_compiles(spark):
     assert len(rows) > 0
 
 
-def test_buffered_stays_on_kernel_by_default(spark):
-    eng = _engine(BUFFERED_RULES[0])
+@pytest.mark.parametrize("rule", BUFFERED_RULES)
+def test_buffered_stays_on_kernel_by_default(spark, rule):
+    """A buffered device never compiles to Catalyst, and its kernel
+    path emits exactly the sequential reference's match rows."""
+    eng = _engine(rule)
     from spinix_spark.engine.sql_compile import try_compile_rule_sql
 
     assert try_compile_rule_sql(eng, eng.rules["r" + "0" * 19]) is None
+    ev, _ = split_output(
+        detect_batch_spark(spark.createDataFrame(_pts()).repartition(5), eng)
+    )
+    want = sorted(
+        (e["url"], m["left_kw"], m["right_kw"], m["op"], tuple(m["right_refs"]))
+        for e in _engine(rule).detect_batch(_pts()).to_dict("records")
+        for m in e["matches"]
+    )
+    got = _canon(ev)
+    assert got == want, f"rule={rule}: spark={len(got)} reference={len(want)}"
+    assert len(got) > 0

@@ -25,10 +25,13 @@ K0 = "c5vj26evvhfjvfseauk0"
 AULG = "c5vj26evvhfjvfseaulg"
 
 
+FIXTURES = sorted(glob.glob(f"{FIXTURE_DIR}/*.json")) + sorted(
+    glob.glob(f"{TRACKER_DIR}/*.json")
+)
+
+
 @pytest.mark.parametrize(
-    "path",
-    sorted(glob.glob(f"{FIXTURE_DIR}/*.json")) + sorted(glob.glob(f"{TRACKER_DIR}/*.json")),
-    ids=lambda p: os.path.basename(p),
+    "path", FIXTURES, ids=[os.path.basename(p) for p in FIXTURES]
 )
 def test_g8_every_fixture_covered(path):
     with open(path) as f:
