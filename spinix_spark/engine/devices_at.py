@@ -79,9 +79,8 @@ def devices_at_node(rule, allow_stateful: bool = False) -> SpDevicesOp | None:
     from spinix_spark.dsl import ast_nodes as ast
 
     spec = rule.spec
-    # any {...} props block marks the spec stateful (reference parity),
-    # but without a :trigger the gate is constant-true and state rows
-    # never influence events — only a real trigger needs the keyed fold
+    # only a real :trigger carries state (runtime.spec_carries_state)
+    # and needs the sequential fold; a props block without one keeps none
     if not allow_stateful and spec.props.repeat != ast.REPEAT_NONE:
         return None
     if any(op is not Token.AND for op in spec.ops):

@@ -1268,6 +1268,17 @@ def spec_has_dwell(spec: CompiledSpec) -> bool:
     return any(_dwell_lit(n) is not None for n in spec.nodes)
 
 
+def spec_carries_state(spec: CompiledSpec, eval_dwell: bool) -> bool:
+    """The state contract: a rule keeps (device, rule) state only when a
+    later event can depend on it — a real ``:trigger``, or a dwell
+    suffix under ``eval_dwell``. A trigger-less ``{...}`` props block
+    marks a spec stateful (``is_stateful``, runtime.go:338-342) but its
+    trigger gate is constant-true, so its state could decide nothing."""
+    return spec.props.repeat != ast.REPEAT_NONE or (
+        eval_dwell and spec_has_dwell(spec)
+    )
+
+
 def _apply_dwell(
     spec: CompiledSpec,
     batch: DeviceBatch,
@@ -1383,7 +1394,7 @@ def eval_spec_full(
     layer_ok = batch.layer_id == spec.props.layer
 
     gate = layer_ok
-    if spec.is_stateful:
+    if spec.props.repeat != ast.REPEAT_NONE:
         gate = fold_trigger(
             ref.states, spec, rule_id, batch.device_id, batch.datetime, layer_ok
         )
@@ -1416,7 +1427,9 @@ def eval_spec(
     rule_id: str,
     eval_dwell: bool = False,
 ) -> tuple[np.ndarray, list[list[dict]]]:
-    """Evaluate one compiled rule against a batch.
+    """Evaluate one compiled rule against a batch — the per-match
+    oracle form behind ``Engine.detect_batch``; the Spark surfaces emit
+    columnar rows through ``spark_pipeline.kernel_event_frames``.
 
     Returns (ok bool (N,), matches per device) where each match is a
     dict (ok, left_kw, right_kw, op, left_refs, right_refs) — the
@@ -1472,11 +1485,8 @@ def fold_trigger(
     (Engine.Detect evaluates one update at a time, engine.go:190-225):
     row i+1 of a device sees the state as updated by row i, so callers
     feed rows in (device_id, datetime, url) order and the outcome is
-    independent of Arrow batch boundaries and partition count. A spec
-    at repeat NONE always fires, so the fold then only advances
-    ``last_seen`` (the trigger-less stateful case)."""
+    independent of Arrow batch boundaries and partition count."""
     reset_s = spec.props.reset_interval_s
-    always = spec.props.repeat == ast.REPEAT_NONE
     counts_hits = spec.props.repeat in (ast.REPEAT_TIMES, ast.REPEAT_ONCE)
     fired = np.zeros(len(nows), dtype=bool)
     for i in np.flatnonzero(gate).tolist():
@@ -1488,7 +1498,7 @@ def fold_trigger(
         if state_need_reset(st, reset_s):
             state_reset(st)
             st["last_reset"] = st["now"]  # UpdateLastResetTime
-        if always or _check_trigger(spec, st):
+        if _check_trigger(spec, st):
             # changeState — immediately, so the device's next row sees it
             fired[i] = True
             st["last_seen"] = st["now"]

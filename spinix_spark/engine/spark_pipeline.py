@@ -19,7 +19,9 @@ takes one of three strategies:
 Every Python strategy calls the same helpers: ``rule_gate_mask``
 (engine/detect.py) for the in-task bbox gate, ``fold_trigger``
 (engine/runtime.py) for the sequential per-row trigger fold, and
-``_state_rows_frame`` for the state rows. Stateful rows are
+``_state_rows_frame`` for the state rows; the kernel and the keyed
+stream share one kernel stage, ``kernel_event_frames``. Rows of rules
+that carry state (``runtime.spec_carries_state``) are
 hash-partitioned by device_id and sorted by (device_id, datetime,
 url), so each (device, rule) state is owned by one task and folds in
 event-time order. Prior states arrive either as a DataFrame joined
@@ -53,6 +55,7 @@ from spinix_spark.engine.runtime import (
     Reference,
     eval_spec_full,
     fold_trigger,
+    spec_carries_state,
     spec_has_dwell,
 )
 from spinix_spark.engine.stores import DeviceSnapshot, StateStore
@@ -148,13 +151,10 @@ def _rule_prune_expr_for(engine: Engine, rule) -> str:
     it would let a stale first_visit anchor qualify later rows."""
     import math
 
-    from spinix_spark.dsl import ast_nodes as ast
     from spinix_spark.dsl.compiler import SpDevicesObjectOp, SpObjectOp
 
     base = _bbox_pred(rule.bbox)
-    if rule.spec.props.repeat != ast.REPEAT_NONE:
-        return base
-    if engine.eval_dwell and spec_has_dwell(rule.spec):
+    if spec_carries_state(rule.spec, engine.eval_dwell):
         return base
     if any(op is not Token.AND for op in rule.spec.ops):
         return base
@@ -388,6 +388,58 @@ def _event_rows_frame(
     )
 
 
+def kernel_event_frames(
+    rules, pdf: pd.DataFrame, ref: Reference, eval_dwell: bool
+) -> list[pd.DataFrame]:
+    """The kernel stage of detect_batch_spark and the keyed stream: per
+    ``(rule_id, spec, bbox)`` in ``rules``, the bbox gate
+    (``rule_gate_mask``), then ``eval_spec_full`` (trigger and dwell
+    state fold into ``ref.states``), then one columnar
+    ``_event_rows_frame`` per matching node. Rows must arrive in
+    per-device event order."""
+    frames: list[pd.DataFrame] = []
+    lat = pdf["lat"].to_numpy(dtype=np.float64)
+    lon = pdf["lon"].to_numpy(dtype=np.float64)
+    for rule_id, spec, bbox in rules:
+        mask = rule_gate_mask(bbox, lat, lon)
+        if not mask.any():
+            continue
+        sub = pdf.loc[mask].reset_index(drop=True)
+        ok, node_results, recorded, _gate = eval_spec_full(
+            spec, sub, ref, rule_id, eval_dwell=eval_dwell
+        )
+        if not ok.any():
+            continue
+        urls = (
+            sub["url"].to_numpy(dtype=object)
+            if "url" in sub
+            else np.full(len(sub), "", dtype=object)
+        )
+        dids = sub["device_id"].to_numpy(dtype=object)
+        dts = (
+            sub["datetime"].to_numpy(dtype=np.int64)
+            if "datetime" in sub
+            else np.zeros(len(sub), dtype=np.int64)
+        )
+        for j, res in enumerate(node_results):
+            idx = np.nonzero(ok & recorded[j] & res.ok)[0]
+            if idx.size == 0:
+                continue
+            refs_col = (
+                [list(res.right_refs[i]) for i in idx]
+                if res.right_refs is not None
+                else [[] for _ in range(idx.size)]
+            )
+            kws = (str(res.left_kw), str(res.right_kw), str(res.op))
+            frames.append(
+                _event_rows_frame(
+                    rule_id, spec.source, kws,
+                    urls[idx], dids[idx], dts[idx], refs_col,
+                )
+            )
+    return frames
+
+
 def _state_seed_rows(device_id: str, st_list) -> list[dict]:
     """One device's carried state structs (STATE_COLS minus device_id)
     as StateStore rows."""
@@ -545,55 +597,6 @@ def _at_rule_events_stateful(
     return slim.mapInPandas(fold, schema=OUT_SCHEMA)
 
 
-def _triggerless_state_rows(
-    points: DataFrame, rule, state_df: DataFrame | None
-) -> DataFrame:
-    """State rows for a TRIGGER-LESS stateful spec (a ``{...}`` props
-    block without ``:trigger``) evaluated on the SQL / pair-join paths.
-
-    The reference calls changeState for every isStateful spec
-    (runtime.go:133-163): with repeat NONE the gate is constant-true,
-    so per gated row (rule bbox ∧ layer): maybe-reset, then
-    ``last_seen = now``. Events are unaffected, but state output must
-    match the kernel path. The fold is sequential per device, so it
-    runs as applyInPandas over a two-column (device_id, datetime)
-    projection — nothing else crosses Arrow."""
-    rule_id = rule.rule_id
-    spec = rule.spec
-    layer = spec.props.layer
-    gated = points.where(F.expr(_bbox_pred(rule.bbox))).where(
-        F.col("layer_id") == layer
-    )
-    dt_sql = (
-        "CAST(datetime AS BIGINT)"
-        if "datetime" in points.columns
-        else "CAST(0 AS BIGINT)"
-    )
-    slim = gated.selectExpr("device_id", f"{dt_sql} AS _dt")
-    if state_df is not None:
-        slim = _join_state_carry(slim, state_df)
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        states = StateStore()
-        states.clear_dirty()
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            _seed_states_from_column(states, pdf)
-            fold_trigger(
-                states, spec, rule_id,
-                pdf["device_id"].to_numpy(dtype=object),
-                pdf["_dt"].to_numpy(dtype=np.int64),
-                np.ones(len(pdf), dtype=bool),
-            )
-        snap = states.dirty_snapshot()
-        if snap:
-            yield _state_rows_frame(snap)
-
-    slim = slim.repartition("device_id").sortWithinPartitions("device_id", "_dt")
-    return slim.mapInPandas(fold, schema=OUT_SCHEMA)
-
-
 def detect_batch_spark(
     points: DataFrame,
     engine: Engine,
@@ -602,7 +605,6 @@ def detect_batch_spark(
     devices_df: DataFrame | None = None,
     at_salt: int = 0,
     state_df: DataFrame | None = None,
-    synth_triggerless_states: bool = False,
 ) -> DataFrame:
     """Evaluate every registered rule over a points DataFrame.
 
@@ -636,14 +638,9 @@ def detect_batch_spark(
     silently match nothing, so this raises instead (populate
     engine.devices for the kernel fallback, or reshape the rule).
 
-    TRIGGER-LESS stateful specs (a ``{...}`` props block without
-    ``:trigger``): the reference still advances last_seen per gated
-    row, and the kernel path reproduces that, but on the SQL/pair-join
-    fast paths the state fold would cost a full Arrow pass over every
-    gated row for state nobody reads (the gate is constant-true, so
-    events never depend on it). By default those paths emit NO state
-    rows for trigger-less specs; pass ``synth_triggerless_states=True``
-    to synthesize them exactly (kernel-parity tested).
+    State rows are emitted only for rules whose state a later event can
+    depend on (``runtime.spec_carries_state``: a real ``:trigger``, or
+    a dwell suffix under ``eval_dwell``), identically on every path.
     """
     from spinix_spark.dsl import ast_nodes as ast
     from spinix_spark.dsl.compiler import SpDevicesOp
@@ -668,7 +665,6 @@ def detect_batch_spark(
     sql_planned = []
     kernel_rules = []
     at_outs = []
-    state_synth_rules = []
     for r in engine.rules.values():
         if engine.eval_dwell and spec_has_dwell(r.spec):
             # dwell gating is a sequential per-device fold over the
@@ -689,12 +685,6 @@ def detect_batch_spark(
                     ev = _at_rule_events(
                         points, engine, r, at_node, devices_df, n_salt=at_salt
                     )
-                    if (
-                        ev is not None
-                        and synth_triggerless_states
-                        and r.spec.is_stateful
-                    ):
-                        state_synth_rules.append(r)
                 if ev is not None:
                     at_outs.append(ev)
                     continue
@@ -705,10 +695,6 @@ def detect_batch_spark(
         )
         if plan is not None:
             sql_planned.append((r, plan))
-            if synth_triggerless_states and r.spec.is_stateful:
-                # trigger-less stateful: constant-true gate, but the
-                # reference still advances last_seen per gated row
-                state_synth_rules.append(r)
         else:
             if devices_df is not None and len(engine.devices) == 0 and any(
                 isinstance(n, SpDevicesOp) and n.right.all and not n.right.refs
@@ -730,10 +716,6 @@ def detect_batch_spark(
                     "Catalyst-compilable companions)."
                 )
             kernel_rules.append(r)
-
-    at_outs += [
-        _triggerless_state_rows(points, r, state_df) for r in state_synth_rules
-    ]
 
     sql_outs = at_outs + [
         _sql_rule_events(points, engine, r, plan) for r, plan in sql_planned
@@ -762,7 +744,7 @@ def detect_batch_spark(
     pruned = points.where(F.expr(kernel_prune)).select(
         *[c for c in points.columns if c in KERNEL_COLS]
     )
-    if any(r.spec.is_stateful for r in kernel_rules):
+    if any(spec_carries_state(r.spec, engine.eval_dwell) for r in kernel_rules):
         if state_df is not None:
             # the join and the repartition below share the device_id
             # partitioning
@@ -784,50 +766,9 @@ def detect_batch_spark(
             if pdf.empty:
                 continue
             _seed_states_from_column(states, pdf)
-            out_frames: list[pd.DataFrame] = []
-            lat = pdf["lat"].to_numpy(dtype=np.float64)
-            lon = pdf["lon"].to_numpy(dtype=np.float64)
-            for rule_id, spec, bbox in p["rules"]:
-                mask = rule_gate_mask(bbox, lat, lon)
-                if not mask.any():
-                    continue
-                sub = pdf.loc[mask].reset_index(drop=True)
-                ok, node_results, recorded, _gate = eval_spec_full(
-                    spec, sub, ref, rule_id, eval_dwell=p["eval_dwell"]
-                )
-                if not ok.any():
-                    continue
-                urls = (
-                    sub["url"].to_numpy(dtype=object)
-                    if "url" in sub
-                    else np.full(len(sub), "", dtype=object)
-                )
-                dids = sub["device_id"].to_numpy(dtype=object)
-                dts = (
-                    sub["datetime"].to_numpy(dtype=np.int64)
-                    if "datetime" in sub
-                    else np.zeros(len(sub), dtype=np.int64)
-                )
-                # columnar match-row emission: one vectorized slice per
-                # node instead of a per-event Python loop
-                for j, res in enumerate(node_results):
-                    idx = np.nonzero(ok & recorded[j] & res.ok)[0]
-                    if idx.size == 0:
-                        continue
-                    refs_col = (
-                        [list(res.right_refs[i]) for i in idx]
-                        if res.right_refs is not None
-                        else [[] for _ in range(idx.size)]
-                    )
-                    kws = (str(res.left_kw), str(res.right_kw), str(res.op))
-                    out_frames.append(
-                        _event_rows_frame(
-                            rule_id, spec.source, kws,
-                            urls[idx], dids[idx], dts[idx], refs_col,
-                        )
-                    )
-            if out_frames:
-                yield pd.concat(out_frames, ignore_index=True)
+            frames = kernel_event_frames(p["rules"], pdf, ref, p["eval_dwell"])
+            if frames:
+                yield pd.concat(frames, ignore_index=True)
         # state rows: ONE emission per task, dirty keys only. The
         # repartition("device_id") above means every row of a device
         # lands in exactly one task, so each touched (device, rule)

@@ -687,10 +687,9 @@ def try_compile_rule_sql(engine, rule, columns=None) -> RuleSQLPlan | None:
     types), nodes on ABSENT columns compile against the zero value
     itself. Defaults to the minimal schema every caller guarantees."""
     spec: CompiledSpec = rule.spec
-    # any {...} props block marks a spec stateful (reference parity),
-    # but without a :trigger the gate is constant-true and state rows
-    # never affect events — only real triggers need the kernel/keyed
-    # path. Rules with just :center/:radius compile fine.
+    # only a real :trigger carries state (runtime.spec_carries_state);
+    # its sequential fold needs the kernel path. A props block with just
+    # :center/:radius keeps no state and compiles fine.
     if spec.props.repeat != ast.REPEAT_NONE:
         return None
     if columns is None:

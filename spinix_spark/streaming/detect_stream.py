@@ -104,36 +104,6 @@ def stream_detect(
     return writer.start()
 
 
-def _warn_triggerless_stateful(engine: Engine) -> None:
-    """Surface the documented fast-path divergence up front: a
-    trigger-less ``{...}`` props block is stateful (the reference
-    advances last_seen per gated row), but the SQL/pair-join fast
-    paths suppress those state rows unless
-    ``synth_triggerless_states=True`` — events are unaffected (the
-    gate is constant-true). Callers that read the STATE output of a
-    fast-path run for such rules would otherwise silently miss rows
-    depending on which physical strategy each rule took."""
-    import warnings
-
-    from spinix_spark.dsl import ast_nodes as ast
-
-    ids = [
-        r.rule_id
-        for r in engine.rules.values()
-        if r.spec.is_stateful and r.spec.props.repeat == ast.REPEAT_NONE
-    ]
-    if ids:
-        warnings.warn(
-            "trigger-less stateful rule(s) "
-            + ", ".join(ids)
-            + ": state rows are suppressed on the SQL/pair-join fast "
-            "paths (events unaffected); pass synth_triggerless_states="
-            "True to detect_batch_spark for exact kernel-parity state "
-            "output",
-            stacklevel=3,
-        )
-
-
 def stream_detect_scalable(
     points_stream: DataFrame,
     engine: Engine,
@@ -167,9 +137,7 @@ def stream_detect_scalable(
     second bucketed table (bucketed on device_id) and join the shuffle
     co-partitioned with their rows (detect_batch_spark(state_df=...));
     dirty emissions merge back into only their buckets (merge_state_df
-    over the dirty subset). Trigger-less stateful specs emit no state
-    rows on the SQL/pair-join fast paths (a warning names them; events
-    are unaffected). The keyed applyInPandasWithState form
+    over the dirty subset). The keyed applyInPandasWithState form
     (keyed_detect) keeps the same state rows in Spark's state store.
 
     ``retain_versions`` bounds the on-disk history PER BUCKET: each
@@ -203,7 +171,6 @@ def stream_detect_scalable(
             "empty broadcast device snapshot at fact scale: "
             + "; ".join(reasons)
         )
-    _warn_triggerless_stateful(engine)
 
     snap_cols = ["device_id", "layer_id", "lat", "lon", "datetime"]
 

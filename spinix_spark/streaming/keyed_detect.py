@@ -10,10 +10,11 @@ and evaluated in ``applyInPandasWithState``, so
   cluster, checkpointed with the query), as the same state rows
   detect_batch_spark emits (``spark_pipeline.STATE_COLS``);
 - all of a device's rows in a micro-batch are concatenated and sorted
-  once by (datetime, url), then every rule runs the shared bbox gate
-  (``rule_gate_mask``) and kernel (``eval_spec``, whose trigger fold is
-  ``fold_trigger``) — the reference's sequential evaluate-then-insert
-  order per device (engine.go:218-221), independent of Arrow batch
+  once by (datetime, url), then run through the kernel stage that
+  detect_batch_spark uses (``spark_pipeline.kernel_event_frames``: bbox
+  gate, ``eval_spec_full`` with its trigger and dwell folds, columnar
+  event rows) — the reference's sequential evaluate-then-insert order
+  per device (engine.go:218-221), independent of Arrow batch
   boundaries;
 - zones + compiled rules ride a broadcast variable.
 
@@ -28,7 +29,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -40,13 +40,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from spinix_spark.engine.detect import Engine, rule_gate_mask
-from spinix_spark.engine.runtime import Reference, eval_spec
+from spinix_spark.engine.detect import Engine
+from spinix_spark.engine.runtime import Reference
 from spinix_spark.engine.spark_pipeline import (
     OUT_SCHEMA,
     STATE_COLS,
     _state_rows_frame,
     _state_seed_rows,
+    kernel_event_frames,
 )
 from spinix_spark.engine.stores import DeviceSnapshot, StateStore
 
@@ -93,38 +94,13 @@ def make_keyed_detect_fn(payload_broadcast):
         if state.exists:
             states.load(_state_seed_rows(device_id, state.get[0]))
         ref = Reference(zones=p["zones"], devices=DeviceSnapshot(), states=states)
-        lat = pdf["lat"].to_numpy(np.float64)
-        lon = pdf["lon"].to_numpy(np.float64)
-        out_rows = []
-        for rule_id, spec, bbox in p["rules"]:
-            mask = rule_gate_mask(bbox, lat, lon)
-            if not mask.any():
-                continue
-            sub = pdf.loc[mask].reset_index(drop=True)
-            ok, matches = eval_spec(
-                spec, sub, ref, rule_id, eval_dwell=p["eval_dwell"]
-            )
-            urls = sub["url"].astype(str) if "url" in sub else [""] * len(sub)
-            for i in np.nonzero(ok)[0]:
-                for m in matches[i]:
-                    out_rows.append(
-                        {
-                            "device_id": device_id,
-                            "url": urls[i],
-                            "rule_id": rule_id,
-                            "left_kw": m["left_kw"],
-                            "right_kw": m["right_kw"],
-                            "op": m["op"],
-                            "right_refs": m["right_refs"],
-                            "datetime": int(sub.at[i, "datetime"]),
-                        }
-                    )
+        frames = kernel_event_frames(p["rules"], pdf, ref, p["eval_dwell"])
         snap = states.snapshot()
         if snap:
             rows = _state_rows_frame(snap)[STATE_COLS[1:]].to_dict("records")
             state.update((rows,))
-        if out_rows:
-            yield pd.DataFrame(out_rows)
+        if frames:
+            yield pd.concat(frames, ignore_index=True)[EVENT_SCHEMA.names]
 
     return update
 

@@ -384,47 +384,118 @@ def test_latest_version_replay_idempotent(spark, tmp_path):
     assert got == {ka: 30, kb: 31}
 
 
-def test_triggerless_stateful_state_rows_on_sql_path(spark):
-    """A trigger-less {...} props block is stateful (reference parity:
-    changeState still advances last_seen per gated row) — the SQL path
-    must synthesize the same state rows the kernel path emits."""
-    rule = "status eq 1 { :center 42.92 -72.27 :radius 5km }"
-    n = 30
-    pdf = pd.DataFrame(
-        {
-            "url": [f"u{i}" for i in range(n)],
-            "device_id": [f"d{i % 3:019d}" for i in range(n)],
-            "layer_id": [LAYER] * n,
-            "lat": [42.92] * n,
-            "lon": [-72.27] * n,
-            "datetime": [1700000000 + i for i in range(n)],
-            "speed": [0.0] * n,
-            "status": [i % 2 for i in range(n)],
-        }
-    )
-    points = spark.createDataFrame(pdf).repartition(4)
+ZID = "c5vj26evvhfjvfseaulg"
+# rule bbox: 20 km around the zone; the zone itself is ~400 m across
+PROPS = ":center 42.93 -72.27 :radius 20km"
+TRIGGERLESS = {
+    "sql": f"device intersects polygon({ZID}) {{ {PROPS} }}",
+    "kernel": f"device :radius 100m intersects polygon({ZID}) {{ {PROPS} }}",
+    "pairjoin": f"device :radius 300m intersects devices(@) {{ {PROPS} }}",
+}
 
-    eng_sql = Engine()
-    eng_sql.add_rule(rule, rule_id=RID)
-    ev_s, st_s = split_output(
-        detect_batch_spark(
-            points, eng_sql, prefer_sql=True, synth_triggerless_states=True
+
+def _contract_engine(rule, snap_rows):
+    from spinix_spark.engine.stores import zone_from_ring
+
+    eng = Engine()
+    eng.zones.add(
+        zone_from_ring(
+            ZID,
+            np.array(
+                [(42.928, -72.272), (42.928, -72.268), (42.932, -72.268),
+                 (42.932, -72.272), (42.928, -72.272)]
+            ),
         )
     )
+    for row in snap_rows:
+        eng.devices.insert_or_replace(row)
+    eng.add_rule(rule, rule_id=RID)
+    return eng
 
-    eng_k = Engine()
-    eng_k.add_rule(rule, rule_id=RID)
-    ev_k, st_k = split_output(detect_batch_spark(points, eng_k, prefer_sql=False))
 
-    assert _ev_canon(ev_s) == _ev_canon(ev_k)
-    canon_s, canon_k = _st_canon(st_s), _st_canon(st_k)
-    assert canon_s == canon_k and len(canon_s) == 3  # one state per device
+def _contract_points(n_dev=6, per_dev=2):
+    """Half the devices sit in the zone; the other half are 3 km north:
+    inside the rule bbox, outside the zone-proximity prune."""
+    n = n_dev * per_dev
+    dev = [i % n_dev for i in range(n)]
+    return pd.DataFrame(
+        {
+            "url": [f"u{i}" for i in range(n)],
+            "device_id": [f"d{d:019d}" for d in dev],
+            "layer_id": [LAYER] * n,
+            "lat": [42.930 if d < n_dev // 2 else 42.957 for d in dev],
+            "lon": [-72.270] * n,
+            "datetime": [1700000000 + 60 * i for i in range(n)],
+            "speed": [0.0] * n,
+            "status": [0] * n,
+        }
+    )
 
-    # default (synth off): SQL path emits no state rows for the
-    # trigger-less spec — documented divergence, events identical
-    ev_d, st_d = split_output(detect_batch_spark(points, eng_sql, prefer_sql=True))
-    assert _ev_canon(ev_d) == _ev_canon(ev_k)
-    assert st_d.count() == 0
+
+def _oracle_canon(events: pd.DataFrame):
+    return sorted(
+        (e["url"], e["device_id"], e["rule_id"], m["left_kw"], m["right_kw"],
+         m["op"], tuple(sorted(m["right_refs"] or [])), e["datetime"])
+        for e in events.to_dict("records")
+        for m in e["matches"]
+    )
+
+
+@pytest.mark.parametrize("path", sorted(TRIGGERLESS))
+def test_triggerless_spec_keeps_no_state_on_any_surface(spark, path):
+    """The state contract: a ``{...}`` props block without ``:trigger``
+    marks a spec stateful, but no event can depend on its state, so no
+    surface keeps any — Engine.detect_batch, the kernel, the SQL path
+    and the pair join all emit zero state rows and the same events, for
+    rows in the rule bbox that the zone prune drops as well as rows it
+    keeps."""
+    from spinix_spark.engine.devices_at import devices_at_node
+    from spinix_spark.engine.sql_compile import try_compile_rule_sql
+
+    rule = TRIGGERLESS[path]
+    snap_rows = [
+        {"device_id": f"s{i:019d}", "layer_id": LAYER, "lat": 42.930 + 0.001 * i,
+         "lon": -72.270, "datetime": 1690000000 + i}
+        for i in range(3)
+    ]
+    pdf = _contract_points()
+    points = spark.createDataFrame(pdf).repartition(3)
+    devices_df = (
+        spark.createDataFrame(pd.DataFrame(snap_rows)) if path == "pairjoin" else None
+    )
+
+    oracle = _contract_engine(rule, snap_rows)
+    want = _oracle_canon(oracle.detect_batch(pdf))
+    assert len(want) > 0
+
+    eng = _contract_engine(rule, snap_rows)
+    r = eng.rules[RID]
+    compiled = try_compile_rule_sql(eng, r, columns=points.columns) is not None
+    assert compiled == (path == "sql")
+    assert (devices_at_node(r) is not None) == (path == "pairjoin")
+    for prefer_sql in (True, False):
+        ev, st = split_output(
+            detect_batch_spark(
+                points, eng, prefer_sql=prefer_sql, devices_df=devices_df
+            )
+        )
+        assert st.count() == 0, (path, prefer_sql)
+        assert _ev_canon(ev) == want, (path, prefer_sql)
+    assert oracle.states.snapshot() == []
+
+
+@pytest.mark.parametrize("trigger,n_shuffles", [("", 0), (":trigger every 600s", 1)])
+def test_kernel_device_shuffle_only_for_state(spark, trigger, n_shuffles):
+    """Plan-shape budget: the kernel stage hash-partitions by device_id
+    only for rules that carry state; a trigger-less buffered zone rule
+    runs where its rows already are."""
+    eng = _contract_engine(
+        f"device :radius 100m intersects polygon({ZID}) {{ {PROPS} {trigger} }}", []
+    )
+    out = detect_batch_spark(spark.createDataFrame(_contract_points()), eng)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("hashpartitioning(device_id") == n_shuffles, plan
 
 
 def test_collect_guard_snapshot(spark, monkeypatch):

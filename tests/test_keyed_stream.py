@@ -164,3 +164,52 @@ def test_keyed_dwell_matches_simulator(spark, tmp_path):
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
     got = [(bno, r.device_id, r.datetime) for bno, rows in enumerate(runs) for r in rows]
     assert sorted(got) == want and len(want) > 0
+
+
+def test_keyed_match_rows_equal_engine(spark, tmp_path):
+    """Full match rows of the keyed surface equal Engine.detect_batch's
+    for a two-node OR rule with a trigger-less props block, including
+    rows where both nodes match and one row emits two matches."""
+    rule = (
+        f"device intersects polygon({AULG}) or speed range [30 .. 120]"
+        " { :center 42.9236 -72.2795 :radius 5km }"
+    )
+    in_zone = (42.9236075, -72.2792333)
+    off_zone = (42.9300000, -72.2700000)  # in the rule bbox
+    spots = [in_zone, in_zone, off_zone, off_zone]
+    speeds = [50.0, 0.0, 60.0, 0.0]  # both, zone only, speed only, neither
+    n = 12
+    pdf = pd.DataFrame(
+        {
+            "device_id": [(K0, OG)[i % 2] for i in range(n)],
+            "url": [f"u{i}" for i in range(n)],
+            "layer_id": "0" * 20,
+            "lat": [spots[i % 4][0] for i in range(n)],
+            "lon": [spots[i % 4][1] for i in range(n)],
+            "datetime": [1000 + 10 * i for i in range(n)],
+            "speed": [speeds[i % 4] for i in range(n)],
+            "status": 0,
+        }
+    )
+
+    def engine():
+        eng = Engine()
+        eng.zones.add(zone_from_ring(AULG, G3_RING))
+        eng.add_rule(rule, rule_id="r" + "0" * 19)
+        return eng
+
+    want = sorted(
+        (e["device_id"], e["url"], e["rule_id"], m["left_kw"], m["right_kw"],
+         m["op"], tuple(sorted(m["right_refs"])), e["datetime"])
+        for e in engine().detect_batch(pdf).to_dict("records")
+        for m in e["matches"]
+    )
+    (rows,) = _run_keyed(spark, engine(), [pdf], tmp_path)
+    got = sorted(
+        (r.device_id, r.url, r.rule_id, r.left_kw, r.right_kw, r.op,
+         tuple(sorted(r.right_refs)), r.datetime)
+        for r in rows
+    )
+    assert got == want
+    per_url = pd.Series([g[1] for g in got]).value_counts()
+    assert (per_url == 2).any() and (per_url == 1).any()
