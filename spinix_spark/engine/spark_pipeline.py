@@ -85,8 +85,12 @@ OUT_SCHEMA = StructType(
 
 # one (device, rule) trigger-state row, as every surface carries it:
 # the 'state' rows of OUT_SCHEMA, the per-device ``_states`` shuffle
-# carry, the bucketed state table and keyed_detect's GroupState
+# carry, the stream's devices table and keyed_detect's GroupState
 STATE_COLS = ["device_id", "rule_id", "last_seen", "last_reset", "hits", "now", "visits"]
+# the element of a per-device state array (STATE_COLS minus device_id):
+# the ``_states`` carry, the devices table's ``states`` column and
+# keyed_detect's GroupState all hold arrays of it
+STATE_STRUCT = StructType([OUT_SCHEMA[c] for c in STATE_COLS[1:]])
 
 
 def _bbox_pred(b, pad_lat: float = 0.0, pad_lon: float = 0.0) -> str:
@@ -474,16 +478,19 @@ def _seed_states_from_column(states: StateStore, pdf: pd.DataFrame) -> None:
     )
 
 
+def states_by_device(state_df: DataFrame, name: str = "_states") -> DataFrame:
+    """(device_id, ``name``): each device's state rows as one
+    STATE_STRUCT array."""
+    return state_df.groupBy("device_id").agg(
+        F.collect_list(F.struct(*STATE_COLS[1:])).alias(name)
+    )
+
+
 def _join_state_carry(df: DataFrame, state_df: DataFrame) -> DataFrame:
     """Attach prior (device, rule) trigger states to rows as a
     per-device struct array — the fact-scale carry: states ride the
     device_id shuffle, no broadcast, no driver round-trip."""
-    if "visits" not in state_df.columns:
-        state_df = state_df.withColumn("visits", F.lit(""))
-    sdf = state_df.groupBy("device_id").agg(
-        F.collect_list(F.struct(*STATE_COLS[1:])).alias("_states")
-    )
-    return df.join(sdf, "device_id", "left")
+    return df.join(states_by_device(state_df), "device_id", "left")
 
 
 def _at_rule_events_stateful(
@@ -792,10 +799,6 @@ def merge_state_df(prior: DataFrame, updated: DataFrame) -> DataFrame:
     (device_id, rule_id). One shuffle; nothing touches the driver."""
     from pyspark.sql.window import Window
 
-    if "visits" not in prior.columns:
-        prior = prior.withColumn("visits", F.lit(""))
-    if "visits" not in updated.columns:
-        updated = updated.withColumn("visits", F.lit(""))
     allr = prior.select(*STATE_COLS).withColumn("_prio", F.lit(0)).unionByName(
         updated.select(*STATE_COLS).withColumn("_prio", F.lit(1))
     )

@@ -2,19 +2,13 @@
 
 The north-star extension: matches roll up into an H3-style cell raster
 (``groupBy(cell).agg(...)`` — partial aggregation map-side, one shuffle
-on the cell key), and any cell set converts to a GeoJSON
-FeatureCollection of cell polygons — the vector side, mirroring the
-reference's ``IndexToFeatureCollection`` (which converts H3 cells to
-hex-polygon features, /root/reference/internal/geojson/index.go:112-127;
-our cells are grid squares).
-
-Writes are partitioned by a coarse cell prefix so storage partition
-pruning works for spatial range queries over the tile table.
+on the cell key), and raster rows gain their cell polygon as GeoJSON
+text — the vector side, mirroring the reference's
+``IndexToFeatureCollection`` (index.go:112-127, which converts H3 cells
+to hex-polygon features; our cells are grid squares).
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -53,30 +47,6 @@ def point_density_raster(points_with_cell: DataFrame) -> DataFrame:
     )
 
 
-def cells_to_feature_collection(cells: list[int], scheme: GridScheme) -> str:
-    """Vector side: cell ids → GeoJSON FeatureCollection of cell
-    polygons (≙ IndexToFeatureCollection, index.go:112-127)."""
-    feats = []
-    for c in cells:
-        b = scheme.cell_bbox(int(c))
-        minlat, minlon, maxlat, maxlon = (float(x) for x in b)
-        ring = [
-            [minlon, minlat],
-            [maxlon, minlat],
-            [maxlon, maxlat],
-            [minlon, maxlat],
-            [minlon, minlat],
-        ]
-        feats.append(
-            {
-                "type": "Feature",
-                "properties": {"cell": int(c)},
-                "geometry": {"type": "Polygon", "coordinates": [ring]},
-            }
-        )
-    return json.dumps({"type": "FeatureCollection", "features": feats})
-
-
 def vector_tiles(raster: DataFrame, scheme: GridScheme) -> DataFrame:
     """Raster rows → vector rows with the cell polygon as GeoJSON text
     (Catalyst-only: bbox arithmetic + string build, no UDF)."""
@@ -107,11 +77,3 @@ def vector_tiles(raster: DataFrame, scheme: GridScheme) -> DataFrame:
     )
     return raster.withColumn("geojson", geojson)
 
-
-def write_tiles(raster: DataFrame, path: str, scheme: GridScheme, coarse_shift: int = 8) -> None:
-    """Partitioned tile write: coarse cell prefix as the partition
-    column → storage partition pruning for spatial range scans."""
-    # integer DIV — cell ids are near 2^53; double division would lose
-    # integer precision
-    out = raster.withColumn("cell_prefix", F.expr(f"cell DIV {2**coarse_shift}"))
-    out.write.mode("overwrite").partitionBy("cell_prefix").parquet(path)

@@ -9,10 +9,6 @@ partition) to a parquet-backed warehouse directory. Swapping
 is the only change needed on a real cluster; the partition strategy —
 the part that matters for 100 TB scans — is the same:
 
-- events:  partitioned by ``rule_id`` (small cardinality, the common
-  filter) — spatial locality comes from the tile table instead
-- tiles:   partitioned by coarse cell prefix → storage partition
-  pruning for spatial range queries (see engine/tiles.py)
 - points:  partitioned by coarse cell prefix → co-located spatial
   joins and pruned region scans
 """
@@ -23,10 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spinix_spark.geo.cells import GridScheme
-
-
-def write_events(events: DataFrame, path: str) -> None:
-    events.write.mode("overwrite").partitionBy("rule_id").parquet(path)
 
 
 def write_points(

@@ -16,8 +16,8 @@ hash-bucketed on the bucket key. Per micro-batch:
    first-writer-wins race within the batch (min doc_id per bkey —
    deterministic, no chaining: a doc colliding only with a DROPPED
    doc is still dropped, the bucket was claimed);
-4. append the admitted docs' bkeys as the touched buckets' next
-   version (dirty-bucket write);
+4. write the admitted docs' bkeys, merged with the history of their
+   buckets, as those buckets' next version (O(admitted) write);
 5. hand the admitted docs to the sink.
 
 Bucket collision ⇒ near-dup is the standard conservative streaming
@@ -122,11 +122,11 @@ def admission_batch(
         .select("bkey")
         .distinct()
     )
-
-    def merge(prior, upd):
-        return prior.unionByName(upd).distinct()
-
-    table.merge_write(adm_keys, batch_id, merge=merge)
+    if hist is not None:
+        adm_keys = (
+            table.in_buckets_of(hist, adm_keys).unionByName(adm_keys).distinct()
+        )
+    table.write_version(adm_keys, batch_id)
     bk.unpersist()
     return admitted
 

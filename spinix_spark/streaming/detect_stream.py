@@ -12,9 +12,9 @@ rule gate, trigger fold and state rows:
   and trigger state across micro-batches on the driver (zones/rules
   stay broadcast). The stream's checkpointLocation restores only the
   source offsets; a restart resumes with empty trigger state.
-- ``stream_detect_scalable``: the fact-scale form — snapshot and
-  trigger state live in bucketed, versioned parquet tables; nothing
-  fact-sized reaches the driver.
+- ``stream_detect_scalable``: the fact-scale form — each device's
+  position and trigger state live in one bucketed, versioned parquet
+  table; nothing fact-sized reaches the driver.
 
 ``streaming_tile_rollup`` is the windowed tile raster with a
 watermark. The keyed ``applyInPandasWithState`` form, with per-device
@@ -27,12 +27,17 @@ import posixpath
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
 from spinix_spark.engine.detect import Engine
 from spinix_spark.engine.spark_pipeline import (
+    STATE_STRUCT,
     detect_batch_spark,
+    merge_state_df,
     merge_state_rows,
     split_output,
+    states_by_device,
 )
 
 
@@ -53,9 +58,10 @@ def stream_detect(
     DIMENSION-SCALE demo form: it maintains the device snapshot and
     trigger state on the driver (collects each micro-batch), which is
     only appropriate when the device universe is small. The fact-scale
-    forms are :func:`stream_detect_scalable` (snapshot as parquet
-    state, no fact-side collect) and keyed_detect.keyed_stream_detect
-    (per-device trigger state in Spark's state store).
+    forms are :func:`stream_detect_scalable` (positions and trigger
+    state in one parquet table, no fact-side collect) and
+    keyed_detect.keyed_stream_detect (per-device trigger state in
+    Spark's state store).
 
     ``sink(events_df, batch_id)`` receives each micro-batch's event
     rows. The engine's snapshot and trigger state advance between
@@ -116,29 +122,31 @@ def stream_detect_scalable(
     n_buckets: int = 256,
 ):
     """Fact-scale micro-batch detection: NOTHING fact-sized ever
-    reaches the driver, and per-batch state I/O is O(delta), not
+    reaches the driver, and per-batch state writes are O(delta), not
     O(device universe).
 
-    The device-position snapshot lives as a hash-bucketed, per-bucket
-    versioned parquet table under ``work_dir`` (latest position per
-    device; :class:`~spinix_spark.streaming.state_table.
-    BucketedVersionTable`). Batch N is evaluated against the table as
-    of N-1 — the reference's evaluate-then-insert ordering
-    (engine.go:218-221) — then ONLY the buckets containing batch-N
-    devices are rewritten as ``latest(prior_bucket ∪ batch)`` (window
-    + filter, one shuffle on device_id). All filesystem metadata goes
-    through the Hadoop FileSystem API, so ``work_dir`` may be an
-    ``s3a://``/``gs://``/``hdfs://`` path. ``devices(@)`` rules route
-    through the pair-join strategy (engine/devices_at.py) against that
-    snapshot DataFrame; zones/rules stay broadcast (dimension-sized).
+    The stream's state is one table, ``work_dir/devices``: one row per
+    device holding its latest position (``device_id, layer_id, lat,
+    lon, datetime``, the reference's one record per device,
+    devices.go:105-147) and a ``states`` array of its per-rule trigger
+    and dwell state (spark_pipeline.STATE_STRUCT, the element
+    keyed_detect's GroupState stores too). The table is hash-bucketed
+    on device_id and versioned per bucket
+    (:class:`~spinix_spark.streaming.state_table.BucketedVersionTable`),
+    and all its metadata goes through the Hadoop FileSystem API, so
+    ``work_dir`` may be an ``s3a://``/``gs://``/``hdfs://`` path.
 
-    Trigger and dwell state ride the same mechanism: the
-    per-(device, rule) state rows (spark_pipeline.STATE_COLS) live in a
-    second bucketed table (bucketed on device_id) and join the shuffle
-    co-partitioned with their rows (detect_batch_spark(state_df=...));
-    dirty emissions merge back into only their buckets (merge_state_df
-    over the dirty subset). The keyed applyInPandasWithState form
-    (keyed_detect) keeps the same state rows in Spark's state store.
+    Batch N reads the table once, as of N-1. Its positions are the
+    device snapshot, which ``devices(@)`` rules join through the
+    pair-join strategy (engine/devices_at.py); its states, unnested,
+    join the rules' device_id shuffle as the prior trigger state
+    (detect_batch_spark(state_df=...)). Zones and rules stay broadcast
+    (dimension-sized). Evaluate-then-insert (engine.go:218-221): after
+    the sink, the prior rows of the buckets batch N touches (a
+    semi-join on the bucket id) are merged with the batch, as each
+    device's latest position plus its prior states overlaid with the
+    batch's emissions (merge_state_df), and written as version N of
+    only those buckets.
 
     ``retain_versions`` bounds the on-disk history PER BUCKET: each
     bucket keeps its newest ``retain_versions + 1`` versions. The
@@ -150,12 +158,16 @@ def stream_detect_scalable(
     ``n_buckets`` is a layout constant for the stream's lifetime —
     only non-empty buckets materialise, so the 256 default costs
     nothing at small scale.
+
+    A ``work_dir`` that holds the older two-table layout
+    (``snapshot/`` and ``state/``) is refused: resuming from it would
+    silently drop every carried trigger state.
     """
     from spinix_spark.engine.devices_at import (
         at_ineligible_reasons,
         snapshot_df_from_points,
     )
-    from spinix_spark.engine.spark_pipeline import merge_state_df
+    from spinix_spark.io.hdfs import exists
     from spinix_spark.streaming.state_table import BucketedVersionTable
 
     # every @ rule must fit the pair-join strategy here (the kernel
@@ -171,52 +183,59 @@ def stream_detect_scalable(
             "empty broadcast device snapshot at fact scale: "
             + "; ".join(reasons)
         )
+    old = [
+        n
+        for n in ("snapshot", "state")
+        if exists(points_stream.sparkSession, posixpath.join(work_dir, n))
+    ]
+    if old:
+        raise ValueError(
+            f"stream_detect_scalable: {work_dir} holds "
+            f"{', '.join(n + '/' for n in old)} from the two-table state "
+            "layout; state now lives in one per-device table (devices/) "
+            "and cannot be resumed from it. Use an empty work_dir."
+        )
 
-    snap_cols = ["device_id", "layer_id", "lat", "lon", "datetime"]
+    pos_cols = [
+        c
+        for c in ("device_id", "layer_id", "lat", "lon", "datetime")
+        if c in points_stream.columns
+    ]
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        snap_t = BucketedVersionTable(
-            spark, posixpath.join(work_dir, "snapshot"), n_buckets=n_buckets
+        table = BucketedVersionTable(
+            batch_df.sparkSession,
+            posixpath.join(work_dir, "devices"),
+            n_buckets=n_buckets,
         )
-        state_t = BucketedVersionTable(
-            spark, posixpath.join(work_dir, "state"), n_buckets=n_buckets
-        )
-        snap = snap_t.read_latest(batch_id)
-        state = state_t.read_latest(batch_id)
+        pts = batch_df.select(*pos_cols)
+        prior = table.read_latest(batch_id)
+        if prior is None:
+            prior = pts.limit(0).withColumn(
+                "states", F.lit(None).cast(ArrayType(STATE_STRUCT))
+            )
         out = detect_batch_spark(
             batch_df,
             engine,
-            devices_df=snap
-            if snap is not None
-            else spark.createDataFrame([], "device_id string, layer_id string, lat double, lon double"),
+            devices_df=prior.select(*pos_cols),
             at_salt=at_salt,
-            state_df=state,
-        ).cache()  # one pipeline run feeds both the sink and the state table
+            state_df=prior.select("device_id", F.inline("states")),
+        ).cache()  # one pipeline run feeds both the sink and the table
         events, states = split_output(out)
         sink(events, batch_id)
-        # trigger state: dirty buckets = buckets of this batch's dirty
-        # emissions; merge_state_df restricted to those buckets is
-        # identical to the full merge there, and untouched buckets keep
-        # their older versions (no rewrite).
-        state_t.merge_write(states, batch_id, merge=merge_state_df)
-        out.unpersist()
-        # snapshot: dirty buckets = buckets of batch devices
-        have = [c for c in snap_cols if c in batch_df.columns]
-        batch_pts = batch_df.select(*have)
-
-        def snap_merge(prior, upd):
-            return snapshot_df_from_points(prior.unionByName(upd))
-
-        snap_t.merge_write(
-            snapshot_df_from_points(batch_pts),
-            batch_id,
-            merge=snap_merge,
-            select_cols=have,
+        # every state row emitted is a batch device's, so the batch's
+        # buckets hold all of them
+        touched = table.in_buckets_of(prior, pts)
+        states = merge_state_df(
+            touched.select("device_id", F.inline("states")), states
         )
+        rows = snapshot_df_from_points(
+            touched.select(*pos_cols).unionByName(pts)
+        ).join(states_by_device(states, "states"), "device_id", "left")
+        table.write_version(rows, batch_id)
+        out.unpersist()
         if retain_versions is not None:
-            snap_t.prune(retain_versions)
-            state_t.prune(retain_versions)
+            table.prune(retain_versions)
 
     writer = points_stream.writeStream.foreachBatch(process).outputMode("append")
     if checkpoint_dir:
@@ -237,8 +256,6 @@ def streaming_tile_rollup(
     (window, cell). State for closed windows is dropped by the
     watermark; the aggregation is partial map-side then keyed by
     (window, cell) — the streaming form of engine/tiles.py rollup."""
-    from pyspark.sql import functions as F
-
     return (
         points_stream.withWatermark(ts_col, watermark_delay)
         .groupBy(F.window(F.col(ts_col), window_duration), F.col("cell"))

@@ -43,8 +43,8 @@ from pyspark.sql.types import (
 from spinix_spark.engine.detect import Engine
 from spinix_spark.engine.runtime import Reference
 from spinix_spark.engine.spark_pipeline import (
-    OUT_SCHEMA,
     STATE_COLS,
+    STATE_STRUCT,
     _state_rows_frame,
     _state_seed_rows,
     kernel_event_frames,
@@ -66,13 +66,7 @@ EVENT_SCHEMA = StructType(
 
 # state: the device's (rule) state rows — STATE_COLS minus the
 # grouping key
-STATE_SCHEMA = StructType(
-    [
-        StructField(
-            "states", ArrayType(StructType([OUT_SCHEMA[c] for c in STATE_COLS[1:]]))
-        )
-    ]
-)
+STATE_SCHEMA = StructType([StructField("states", ArrayType(STATE_STRUCT))])
 
 
 def make_keyed_detect_fn(payload_broadcast):

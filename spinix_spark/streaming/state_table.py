@@ -1,43 +1,32 @@
 """Hash-bucketed, per-bucket-versioned parquet tables for streaming
-state — the cluster-real mechanism behind
-:func:`spinix_spark.streaming.detect_stream.stream_detect_scalable`.
+state: the per-device table of
+:func:`spinix_spark.streaming.detect_stream.stream_detect_scalable`
+and the admitted band-key set of
+:func:`spinix_spark.streaming.dedup_stream.stream_neardup_filter`.
 
-Replaces the round-3 flat layout (``{table}/v{N}`` holding a FULL
-snapshot per micro-batch) with two fixes the 100 TB deployment needs:
+Layout is bucket-major: a row's bucket is
+``pmod(xxhash64(key), n_buckets)`` and each bucket keeps its own
+version history::
 
-1. **All filesystem metadata ops go through the Hadoop ``FileSystem``
-   API** (``Path.getFileSystem`` on the active Hadoop configuration),
-   so listing/renaming/deleting versions works identically on
-   ``file:``, ``hdfs:``, ``s3a:``, ``gs:`` and ``abfs:`` paths — the
-   round-3 ``os.listdir``/``shutil.rmtree`` implementation silently
-   required a driver-local (or NFS) work_dir.
-2. **Writes are incremental**: the table is hash-partitioned on a key
-   column into ``n_buckets`` buckets (``pmod(xxhash64(key), n)``), and
-   a micro-batch rewrites ONLY the buckets containing updated keys.
-   Layout is bucket-major::
+    {base}/bucket={B}/v{N}/part-*.parquet
 
-       {base}/bucket={B}/v{N}/part-*.parquet
-
-   so each bucket carries its own version history and retention.
-   Per-batch write I/O is O(delta ⋅ bucket-size) instead of
-   O(device-universe): at 10^9 devices / 256 buckets, a batch touching
-   1 % of devices rewrites ~256 bucket-versions of ~4 M rows each read
-   path unchanged — instead of re-serialising all 10^9 rows.
-
-The read contract is the replay-idempotency contract from round 3,
-now per bucket: *the state as of batch N* is, for every bucket, the
-newest version STRICTLY BELOW N. A checkpointed ``foreachBatch``
-replay of batch N therefore re-reads the pre-N state even when the
-crashed attempt already wrote some (or all) of the ``v{N}`` bucket
-dirs — those are simply skipped by the strict inequality, then
-overwritten by the replay (reference ordering: evaluate-then-insert,
-engine.go:218-221).
-
-Retention is per bucket: keep the newest ``retain + 1`` versions of
-each bucket, delete the rest. A cold bucket (not updated for many
-batches) always keeps its newest version — the flat layout's
-"delete below batch_id - retain" rule would eventually delete a cold
-bucket's only copy.
+- **Writes are O(delta).** A micro-batch writes version N of only the
+  buckets its rows fall in (``write_version``); every other bucket
+  keeps its older versions, byte-untouched. The caller restricts the
+  prior table to those buckets first (``in_buckets_of``, a semi-join on
+  the bucket id) and merges its updates into them.
+- **Replay contract.** The table as of batch N is, per bucket, the
+  newest version STRICTLY BELOW N (``read_latest``). A checkpointed
+  ``foreachBatch`` replay of batch N therefore re-reads the pre-N state
+  even when the crashed attempt already wrote some or all of its
+  ``v{N}`` bucket dirs; the replay then replaces them (the reference's
+  evaluate-then-insert ordering, engine.go:218-221).
+- **Retention is per bucket** (``prune``): the newest ``retain + 1``
+  versions of each bucket stay, so a cold bucket never loses its only
+  copy.
+- **Metadata goes through the Hadoop FileSystem API** (io/hdfs.py),
+  never ``os.*``, so the table works alike on ``file:``, ``hdfs:``,
+  ``s3a:``, ``gs:`` and ``abfs:`` paths.
 """
 
 from __future__ import annotations
@@ -142,6 +131,19 @@ class BucketedVersionTable:
 
     # --- write ---
 
+    def in_buckets_of(self, df: DataFrame, keys: DataFrame) -> DataFrame:
+        """Rows of ``df`` in the buckets that hold a row of ``keys``: a
+        semi-join on the bucket id, so the bucket set never reaches the
+        driver. Restricting the prior table this way before merging
+        ``keys`` into it makes ``write_version`` rewrite exactly the
+        buckets of ``keys``."""
+        b = self._bucket_expr()
+        return (
+            df.withColumn("_bucket", b)
+            .join(keys.select(b.alias("_bucket")).distinct(), "_bucket", "left_semi")
+            .drop("_bucket")
+        )
+
     def dirty_buckets(self, df: DataFrame) -> list[int]:
         """Buckets containing at least one row of ``df`` — a distinct
         over the bucket id, at most ``n_buckets`` rows collected."""
@@ -165,7 +167,7 @@ class BucketedVersionTable:
             # `bucket` would be silently overwritten and lost on read
             raise ValueError(
                 "BucketedVersionTable reserves the column name 'bucket'; "
-                "rename the data column before write_version/merge_write"
+                "rename the data column before write_version"
             )
         stage = posixpath.join(self.base, f"_stage-v{batch_id}")
         (
@@ -196,27 +198,6 @@ class BucketedVersionTable:
             written.append(b)
         fs.delete(stage_p, True)
         return sorted(written)
-
-    def merge_write(
-        self,
-        updates: DataFrame,
-        batch_id: int,
-        merge,
-        select_cols: list[str] | None = None,
-    ) -> list[int]:
-        """Dirty-bucket incremental upsert: read ONLY the buckets that
-        ``updates`` touches (as of ``batch_id``), combine via
-        ``merge(prior_subset_or_None, updates)``, write the result as
-        ``v{batch_id}`` of those buckets. Untouched buckets get no new
-        version — per-batch I/O is O(delta ⋅ bucket-size)."""
-        dirty = self.dirty_buckets(updates)
-        if not dirty:
-            return []
-        prior = self.read_latest(batch_id, buckets=dirty)
-        if prior is not None and select_cols:
-            prior = prior.select(*select_cols)
-        merged = updates if prior is None else merge(prior, updates)
-        return self.write_version(merged, batch_id)
 
     # --- retention ---
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from spinix_spark.engine.detect import Engine
 from spinix_spark.engine.spark_pipeline import detect_batch_spark, split_output
@@ -322,9 +323,12 @@ def test_stream_scalable_stateful_at_rule(spark, tmp_path):
     from spinix_spark.streaming.state_table import BucketedVersionTable
 
     st = BucketedVersionTable(
-        spark, str(base_once / "work" / "state")
+        spark, str(base_once / "work" / "devices")
     ).read_latest(10**9)
-    rows = {r.device_id: (r.hits, r.last_seen, r.now) for r in st.collect()}
+    rows = {
+        r.device_id: (r.hits, r.last_seen, r.now)
+        for r in st.select("device_id", F.inline("states")).collect()
+    }
     assert len(rows) == 4 and all(h == 1 for h, _, _ in rows.values())
     # last_seen froze at the batch-0 fire time (changeState only runs
     # when the trigger fires); now advanced with the batch-1 row

@@ -22,6 +22,7 @@ import json
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from spinix_spark.engine.detect import Engine
 from spinix_spark.engine.spark_pipeline import detect_batch_spark, split_output
@@ -193,8 +194,8 @@ def test_stream_scalable_dwell_state(spark, tmp_path):
     # the persisted state table carries the visit anchor between batches
     from spinix_spark.streaming.state_table import BucketedVersionTable
 
-    state_t = BucketedVersionTable(spark, str(tmp_path / "work" / "state"))
-    rows = state_t.read_latest(2).collect()
+    state_t = BucketedVersionTable(spark, str(tmp_path / "work" / "devices"))
+    rows = state_t.read_latest(2).select(F.inline("states")).collect()
     assert rows and json.loads(rows[0]["visits"]) == {f"0:{ZID}": 1000}
 
 

@@ -77,6 +77,9 @@ def _key(rows):
         "device NEAR polygon(@)",
         "device NIN polygon(@)",
         "device INTERSECTS polygon(@) and speed range [30 .. 120]",
+        # `@` plus an explicit id parses to refs=[Z1], all=True: the
+        # kernel and Engine.detect_batch match nothing for it
+        f"device INTERSECTS polygon(@{Z1})",
     ],
 )
 def test_all_zones_sql_vs_kernel(spark, spec):
@@ -89,3 +92,9 @@ def test_all_zones_sql_vs_kernel(spark, spec):
     k_sql = _key([r.asDict() for r in ev_sql.collect()])
     k_kernel = _key([r.asDict() for r in ev_k.collect()])
     assert k_sql == k_kernel, f"{spec}: {k_sql} != {k_kernel}"
+    k_engine = _key(
+        {"url": e["url"], **m}
+        for e in _mk_engine(spec).detect_batch(_points()).to_dict("records")
+        for m in e["matches"]
+    )
+    assert k_sql == k_engine, f"{spec}: {k_sql} != {k_engine}"

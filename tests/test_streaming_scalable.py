@@ -1,9 +1,11 @@
-"""Fact-scale streaming detect: snapshot as parquet state, no driver
-collect, devices(@) via the pair-join strategy, multi-partition."""
+"""Fact-scale streaming detect: positions and trigger state in one
+per-device parquet table, no driver collect, devices(@) via the
+pair-join strategy, multi-partition."""
 
 from __future__ import annotations
 
 import pandas as pd
+from pyspark.sql import functions as F
 
 from spinix_spark.engine.detect import Engine
 from spinix_spark.streaming.detect_stream import stream_detect_scalable
@@ -74,10 +76,10 @@ def test_stream_detect_scalable_at_rule(spark, tmp_path):
     assert d[1] not in by_dev  # moved to 42.96: nothing within 300 m
     assert d[3] in by_dev and d[3] in by_dev[d[3]]  # sees own old position
 
-    # the snapshot state advanced on disk (bucketed per-batch versions)
+    # the device positions advanced on disk (bucketed per-batch versions)
     from spinix_spark.streaming.state_table import BucketedVersionTable
 
-    snap_t = BucketedVersionTable(spark, str(tmp_path / "work" / "snapshot"))
+    snap_t = BucketedVersionTable(spark, str(tmp_path / "work" / "devices"))
     bv = snap_t.bucket_versions()
     assert bv and all(vs[-1] == 1 for vs in bv.values())  # all touched in b1
     latest = {r.device_id: r.lat for r in snap_t.read_latest(2).collect()}
@@ -122,17 +124,35 @@ def test_stream_detect_scalable_trigger_state(spark, tmp_path):
     from spinix_spark.streaming.state_table import BucketedVersionTable
 
     st = BucketedVersionTable(
-        spark, str(tmp_path / "work" / "state")
+        spark, str(tmp_path / "work" / "devices")
     ).read_latest(10**9)
-    rows = {(r.device_id, r.rule_id): r.hits for r in st.collect()}
+    rows = {
+        (r.device_id, r.rule_id): r.hits
+        for r in st.select("device_id", F.inline("states")).collect()
+    }
     assert len(rows) == 4 and all(h == 1 for h in rows.values())
 
 
-def test_stream_detect_scalable_version_retention(spark, tmp_path):
-    """retain_versions bounds the on-disk snapshot/state history while
-    each batch still evaluates against its predecessor (trigger state
-    stays continuous across the pruned horizon)."""
+def test_stream_detect_scalable_version_retention(spark, tmp_path, monkeypatch):
+    """retain_versions bounds the on-disk history of the one devices
+    table while each batch still evaluates against its predecessor
+    (trigger state stays continuous across the pruned horizon). Each
+    micro-batch reads the table once, writes it once and prunes it
+    once, with no dirty-bucket collect."""
     import os
+    from collections import Counter
+
+    from spinix_spark.streaming.state_table import BucketedVersionTable
+
+    calls = Counter()
+    for name in ("read_latest", "write_version", "prune", "dirty_buckets"):
+        fn = getattr(BucketedVersionTable, name)
+
+        def counted(self, *a, _fn=fn, _name=name, **kw):
+            calls[_name] += 1
+            return _fn(self, *a, **kw)
+
+        monkeypatch.setattr(BucketedVersionTable, name, counted)
 
     src = str(tmp_path / "src")
     n_batches = 5
@@ -162,17 +182,18 @@ def test_stream_detect_scalable_version_retention(spark, tmp_path):
     q.awaitTermination(240)
     # trigger continuity: 2-times quota is spent in batches 0+1, then 0
     assert [got[i] for i in range(n_batches)] == [4, 4, 0, 0, 0]
-    # retention: every device was touched every batch, so each bucket
-    # keeps exactly its newest retain+1 = 3 versions
-    from spinix_spark.streaming.state_table import BucketedVersionTable
-
-    for table in ("snapshot", "state"):
-        bv = BucketedVersionTable(
-            spark, str(tmp_path / "work" / table)
-        ).bucket_versions()
-        assert bv, table
-        for b, versions in bv.items():
-            assert versions == [2, 3, 4], (table, b, versions)
+    assert calls == {
+        "read_latest": n_batches, "write_version": n_batches, "prune": n_batches
+    }, calls
+    # one table under work_dir; every device was touched every batch,
+    # so each bucket keeps exactly its newest retain+1 = 3 versions
+    assert os.listdir(tmp_path / "work") == ["devices"]
+    bv = BucketedVersionTable(
+        spark, str(tmp_path / "work" / "devices")
+    ).bucket_versions()
+    assert bv
+    for b, versions in bv.items():
+        assert versions == [2, 3, 4], (b, versions)
 
 
 # --- bucketed incremental state table (round 4) ---
@@ -190,7 +211,8 @@ def _mtimes_under(path):
 
 
 def test_bucketed_table_dirty_write_leaves_others_untouched(spark, tmp_path):
-    """merge_write rewrites ONLY the buckets containing updated keys:
+    """A merge restricted to the updated keys' buckets (in_buckets_of)
+    and written with write_version rewrites ONLY those buckets:
     untouched buckets get no new version dir and their existing data
     files are byte-untouched (mtime_ns unchanged) — per-batch write
     I/O is O(delta), not O(universe)."""
@@ -223,7 +245,9 @@ def test_bucketed_table_dirty_write_leaves_others_untouched(spark, tmp_path):
             .drop("_rn", "_p")
         )
 
-    written = t.merge_write(upd, 1, merge=merge)
+    written = t.write_version(
+        merge(t.in_buckets_of(t.read_latest(1), upd), upd), 1
+    )
     d0_bucket = t.dirty_buckets(upd)
     assert written == d0_bucket and len(written) == 1
     bv1 = t.bucket_versions()
@@ -268,7 +292,7 @@ def test_bucketed_table_replay_contract(spark, tmp_path):
 
 def test_stream_scalable_incremental_buckets(spark, tmp_path):
     """Streaming end to end: batches 1-2 touch ONE device out of 8 —
-    the 7 untouched devices' snapshot buckets keep exactly their
+    the 7 untouched devices' buckets keep exactly their
     batch-0 version, with batch-0 files' mtimes unchanged across the
     later batches (captured between availableNow runs sharing one
     checkpoint)."""
@@ -314,10 +338,8 @@ def test_stream_scalable_incremental_buckets(spark, tmp_path):
 
     feed(0, range(n))
     run_once()
-    snap_base = str(tmp_path / "work" / "snapshot")
-    state_base = str(tmp_path / "work" / "state")
+    snap_base = str(tmp_path / "work" / "devices")
     before_snap = _mtimes_under(snap_base)
-    before_state = _mtimes_under(state_base)
     snap_t = BucketedVersionTable(spark, snap_base)
     hot = set(
         snap_t.dirty_buckets(
@@ -340,15 +362,15 @@ def test_stream_scalable_incremental_buckets(spark, tmp_path):
     # batch-0 files byte-untouched through batches 1-2
     after_snap = _mtimes_under(snap_base)
     for p, m in before_snap.items():
-        assert after_snap.get(p) == m, f"snapshot rewritten: {p}"
-    after_state = _mtimes_under(state_base)
-    for p, m in before_state.items():
-        assert after_state.get(p) == m, f"state rewritten: {p}"
-    # and the merged snapshot is still the full 8-device latest view
-    latest = {r.device_id: r.datetime for r in snap_t.read_latest(10**9).collect()}
+        assert after_snap.get(p) == m, f"devices table rewritten: {p}"
+    # and the merged table is still the full 8-device latest view, each
+    # device with its one carried trigger state
+    rows = snap_t.read_latest(10**9).collect()
+    latest = {r.device_id: r.datetime for r in rows}
     assert len(latest) == n
     assert latest["d" + "0" * 19] == 1700000200  # batch-2 position won
     assert latest[f"d{7:019d}"] == 1700000007  # untouched batch-0 row
+    assert all(len(r.states) == 1 and r.states[0].hits == 1 for r in rows)
 
 
 def test_empty_devices_ref_rule_refused(spark, tmp_path):
@@ -388,3 +410,25 @@ def test_empty_devices_ref_rule_refused(spark, tmp_path):
     )
     out = detect_batch_spark(pts, eng, devices_df=snap)
     assert out.count() >= 0
+
+
+def test_two_table_work_dir_refused(spark, tmp_path):
+    """A work_dir written by the two-table layout (snapshot/ + state/)
+    is refused at start instead of resuming with empty trigger state."""
+    import pytest
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(_batch(0, [42.93] * 4, [-72.27] * 4)).coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    engine = Engine()
+    engine.add_rule(
+        "status eq 1 { :center 42.93 -72.27 :radius 5km :trigger once }",
+        rule_id="r" + "5" * 19,
+    )
+    active = len(spark.streams.active)
+    for old in ("snapshot", "state"):
+        work = tmp_path / f"work-{old}"
+        (work / old / "bucket=0" / "v0").mkdir(parents=True)
+        with pytest.raises(ValueError, match=f"{old}/.*two-table state layout"):
+            stream_detect_scalable(stream, engine, lambda e, b: None, work_dir=str(work))
+    assert len(spark.streams.active) == active  # no query started
