@@ -249,9 +249,10 @@ def run_string_rule_kernel(spark, n_pages: int) -> dict:
 
 
 def run_stateful_at_pages(spark, n_pages: int) -> dict:
-    """Fact-scale STATEFUL devices(@): the round-3 composition — pair
-    join for the @ verdict, sequential per-device trigger fold riding
-    the device_id shuffle, DataFrame snapshot, no driver collect."""
+    """Fact-scale STATEFUL devices(@): pair join for the @ verdict,
+    read by the kernel stage's sequential per-device trigger fold
+    riding the device_id shuffle, DataFrame snapshot, no driver
+    collect."""
     from spinix_spark.engine.detect import Engine
     from spinix_spark.engine.devices_at import snapshot_df_from_points
     from spinix_spark.engine.spark_pipeline import detect_batch_spark, split_output
@@ -499,7 +500,7 @@ def main() -> None:
               lambda: run_devices_at_pages(spark, max(n_pages // 10, 10_000)))
     )
 
-    # fact-scale STATEFUL devices(@): pair join + keyed trigger fold
+    # fact-scale STATEFUL devices(@): pair-join verdict + kernel trigger fold
     pipe_stats.update(
         timed("stateful_at_pages",
               lambda: run_stateful_at_pages(spark, max(n_pages // 10, 10_000)))

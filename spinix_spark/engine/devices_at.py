@@ -6,28 +6,37 @@ each task — correct and reference-faithful while the snapshot is
 dimension-sized, but O(snapshot) Python iterations per Arrow batch and
 a driver-side ``.collect()`` to build the snapshot. At url-as-device
 cardinality (the 100 TB shape) the snapshot IS fact-sized, so this
-module provides the relational strategy instead:
+module computes the ``@`` verdict relationally instead:
 
     points ──cell key──► explode k-ring neighbor cells
            ──equi-join── devices_df (cell key, optional salt)
            ──candidacy (exact Devices.Near rect, devices.go:166-199)
-           ──mapInPandas pairwise verb refine (vectorized kernel)
-           ──groupBy row: ok = ANY candidate, refs = satisfied ids
-           ──AND-fold with the rule's remaining (Catalyst) nodes
-           ──event rows
+           ──pairwise verb refine (vectorized kernel in mapInPandas;
+             plain Catalyst for a point target)
+           ──groupBy row: refs = sorted satisfied ids (no row ⇔ none)
 
-Everything before the refine is whole-stage codegen; the refine sees
-only (rowkey, a_lat, a_lon, b_id, b_lat, b_lon) pairs that already
-passed the exact candidacy rect — the same candidate universe the
-kernel's ``Devices.Near`` prefilter admits, so results are identical
-(asserted by the cross-strategy parity test). Ref lists are emitted in
-sorted order; the kernel emits snapshot-insertion order — the set is
-identical, the order is an unspecified implementation detail.
+The refine sees only (rowkey, a_lat, a_lon, b_id, b_lat, b_lon) pairs
+that already passed the exact candidacy rect — the same candidate
+universe the kernel's ``Devices.Near`` prefilter admits, so results are
+identical (asserted by the cross-strategy parity tests). Ref lists are
+emitted in sorted order; the kernel emits snapshot-insertion order —
+the set is identical, the order is an unspecified implementation
+detail.
 
-Scope: stateless rules, all-AND fold, exactly one SpDevicesOp node
-with ``right.all`` (any target buffer, point ``@`` candidates); the
-other nodes must compile to Catalyst (engine/sql_compile.py). Rules
-outside this shape keep the broadcast path.
+Every point ``@`` node (:func:`is_at_node`, any target buffer) gets its
+verdict here when detect_batch_spark is given ``devices_df``:
+
+- a stateless all-AND rule with one ``@`` node whose other nodes
+  compile to Catalyst (:func:`devices_at_node`) inner-joins the verdict
+  and folds in Catalyst — entirely JVM-side;
+- every other rule (a real ``:trigger``, dwell, an OR fold, companions
+  that do not compile) left-joins it onto the kernel stage's rows as
+  the column ``runtime.at_verdict_col(node)``, which
+  ``runtime._eval_sp_devices`` reads in place of the broadcast
+  snapshot; trigger, dwell and fold run there as for any rule.
+
+A buffered ``devices(@) :radius ...`` candidate keeps the broadcast
+snapshot; :func:`empty_snapshot_ref_reasons` refuses it at fact scale.
 """
 
 from __future__ import annotations
@@ -68,42 +77,38 @@ def at_search_meters(node: SpDevicesOp) -> float:
     return MIN_DIST_METERS if meters <= 0 else normalize_distance(meters, TINY_REGION_SIZE)
 
 
-def devices_at_node(rule, allow_stateful: bool = False) -> SpDevicesOp | None:
-    """The rule's single devices(@) node if the rule fits this
-    strategy's shape, else None.
+def is_at_node(node) -> bool:
+    """Whether ``node`` is a ``devices(@)`` node whose candidates are
+    points — the verdict this module's pair join computes. A buffered
+    ``devices(@) :radius ...`` is not one; it keeps the broadcast
+    snapshot."""
+    return (
+        isinstance(node, SpDevicesOp)
+        and node.right.all
+        and not node.right.refs
+        and node.right.kind not in (Token.RADIUS, Token.BBOX)
+    )
 
-    ``allow_stateful=True`` admits rules with a real ``:trigger`` —
-    their events still come from the same pair-join candidates, gated
-    afterwards by the sequential per-device trigger fold
-    (spark_pipeline._at_rule_events_stateful)."""
+
+def devices_at_node(rule) -> SpDevicesOp | None:
+    """The rule's single devices(@) node if the rule fits the all-JVM
+    pair-join strategy's shape (stateless, all-AND fold, one point
+    ``@`` node), else None."""
     from spinix_spark.dsl import ast_nodes as ast
 
     spec = rule.spec
-    # only a real :trigger carries state (runtime.spec_carries_state)
-    # and needs the sequential fold; a props block without one keeps none
-    if not allow_stateful and spec.props.repeat != ast.REPEAT_NONE:
+    if spec.props.repeat != ast.REPEAT_NONE:
         return None
     if any(op is not Token.AND for op in spec.ops):
         return None
-    at_nodes = [
-        n
-        for n in spec.nodes
-        if isinstance(n, SpDevicesOp) and n.right.all and not n.right.refs
-    ]
-    if len(at_nodes) != 1:
-        return None
-    node = at_nodes[0]
-    # point candidates only (devices(@) carries no buffer in the DSL
-    # grammar; defensive check)
-    if node.right.kind in (Token.RADIUS, Token.BBOX):
-        return None
-    return node
+    at_nodes = [n for n in spec.nodes if is_at_node(n)]
+    return at_nodes[0] if len(at_nodes) == 1 else None
 
 
 def empty_snapshot_ref_reasons(engine) -> list[str]:
-    """Rules whose explicit device refs would silently resolve to
-    nothing because engine.devices is empty — one reason per rule,
-    empty when the snapshot is populated or no rule uses refs.
+    """Rules that would read device positions from engine.devices while
+    it is empty, and so silently match nothing — one reason per rule,
+    empty when the snapshot is populated or no rule reads it.
 
     Explicit device refs (``devices(d1 d2)``, ``devices(A)`` vs
     ``devices(B)``, distance-to-device comparators) resolve positions
@@ -115,8 +120,11 @@ def empty_snapshot_ref_reasons(engine) -> list[str]:
     zero events with no error. Refs are dimension-sized by
     construction (named ids in the DSL text), so the fix at fact scale
     is to register exactly those devices in engine.devices, not to
-    skip the check. Fact-scale entry points (detect_batch_spark with
-    devices_df, stream_detect_scalable) refuse loudly on these."""
+    skip the check. A buffered ``devices(@) :radius ...`` reads the
+    broadcast snapshot too: the pair join evaluates point candidates
+    only (:func:`is_at_node`). Fact-scale entry points
+    (detect_batch_spark with devices_df, stream_detect_scalable)
+    refuse loudly on these."""
     from spinix_spark.dsl.compiler import EqualDevicesOp, SpDDevicesOp
 
     if len(engine.devices) != 0:
@@ -139,54 +147,17 @@ def empty_snapshot_ref_reasons(engine) -> list[str]:
                 "register the referenced devices (dimension-sized) in "
                 "engine.devices"
             )
-    return reasons
-
-
-def at_ineligible_reasons(engine, columns) -> list[str]:
-    """Why each registered devices(@) rule would FAIL the pair-join
-    strategy and fall back to the broadcast-kernel path — one reason
-    string per ineligible rule, empty when every @ rule is pair-join
-    eligible.
-
-    The kernel fallback evaluates @ against the broadcast snapshot
-    (engine.devices); at fact scale that snapshot is empty and @ would
-    silently evaluate false everywhere, so callers that supply the
-    snapshot as a DataFrame (detect_batch_spark(devices_df=...),
-    stream_detect_scalable) use this probe to refuse loudly instead.
-    ``columns`` is the points schema the companion nodes must compile
-    against (e.g. ``points_df.columns``)."""
-    from spinix_spark.engine.sql_compile import compile_node_sql
-
-    cols = set(columns)
-    ref_reasons = empty_snapshot_ref_reasons(engine)
-    flagged = {s.split(":", 1)[0] for s in ref_reasons}
-    reasons = list(ref_reasons)
-    for r in engine.rules.values():
-        if f"rule {r.rule_id}" in flagged:
-            continue
-        has_at = any(
-            isinstance(n, SpDevicesOp) and n.right.all and not n.right.refs
+        elif any(
+            isinstance(n, SpDevicesOp) and n.right.all and not is_at_node(n)
             for n in r.spec.nodes
-        )
-        if not has_at:
-            continue
-        node = devices_at_node(r, allow_stateful=True)
-        if node is None:
+        ):
             reasons.append(
-                f"rule {r.rule_id}: devices(@) outside the pair-join shape "
-                "(needs an all-AND fold with exactly one @ node)"
+                f"rule {r.rule_id}: a buffered devices(@) candidate reads "
+                "every device from engine.devices, which is EMPTY — the "
+                "rule would silently match nothing; populate "
+                "engine.devices (dimension scale) or drop the candidate "
+                "buffer"
             )
-            continue
-        for n in r.spec.nodes:
-            if n is node:
-                continue
-            if compile_node_sql(n, engine, r.spec.props, cols) is None:
-                reasons.append(
-                    f"rule {r.rule_id}: companion node {type(n).__name__} is "
-                    "not Catalyst-compilable against the points schema "
-                    f"{sorted(cols)}"
-                )
-                break
     return reasons
 
 

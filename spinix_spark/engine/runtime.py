@@ -863,6 +863,17 @@ def _eval_sp_object(
     )
 
 
+def at_verdict_col(node: SpDevicesOp) -> str:
+    """The batch column that carries a point ``devices(@)`` node's
+    verdict when the snapshot is a DataFrame (spark_pipeline joins it
+    on; engine/devices_at.py): the sorted ids of the snapshot devices
+    that satisfy the verb, null when none does. The verdict depends on
+    the verb and the target buffer only, and a buffered candidate has
+    no verdict column (its name carries the candidate kind)."""
+    meters = repr(node.left.meters()).replace(".", "_")
+    return f"_at_{node.op.name}_{node.left.kind.name}_{meters}_{node.right.kind.name}"
+
+
 def _eval_sp_devices(
     node: SpDevicesOp,
     batch: DeviceBatch,
@@ -931,6 +942,20 @@ def _eval_sp_devices(
             ok |= mask
             for i in np.nonzero(mask)[0]:
                 refs[i].append(rid)
+    elif (
+        node.right.all
+        and not node.right.refs
+        and member_mask is None
+        and at_verdict_col(node) in batch.pdf
+    ):
+        # ``@`` with the snapshot as a DataFrame: the pair join's
+        # verdict (engine/devices_at.py), null where no candidate holds.
+        # Only a rule's own node has one; the devices(A) VERB
+        # devices(@) form (member_mask) loops the snapshot below.
+        verdict = batch.pdf[at_verdict_col(node)].to_numpy(dtype=object)
+        ok = active & pd.notna(verdict)
+        for i in np.nonzero(ok)[0]:
+            refs[i] = list(verdict[i])
     elif node.right.all and not node.right.refs:
         # ``@``: candidate universe = Devices.Near's bbox prefilter
         # (devices.go:166-199) with the negated-verb radius bump —

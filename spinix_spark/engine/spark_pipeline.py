@@ -7,28 +7,28 @@ prune (``_bbox_pred`` ≙ Rules.Walk, rule.go:229-249, pushed into the
 scan; tightened to zone proximity where that is event-sound), then
 takes one of three strategies:
 
-- devices(@) rules of the all-AND pair-join shape, when the snapshot
-  is given as a DataFrame: the fact-scale pair join
-  (engine/devices_at.py); with a real ``:trigger`` the slim joined
-  rows then run the trigger fold in mapInPandas;
+- stateless all-AND devices(@) rules, when the snapshot is given as a
+  DataFrame: the all-JVM pair join (engine/devices_at.py);
 - rules that compile to Catalyst expressions (engine/sql_compile.py):
   entirely JVM-side;
-- everything else: the vectorized kernel (engine/runtime.py) in
+- everything else: the kernel stage, ``kernel_event_frames``, in
   mapInPandas, with zones, rules and the device snapshot broadcast.
+  When the snapshot is given as a DataFrame, the pair join supplies
+  each devices(@) node's verdict as a column of the kernel's rows.
 
-Every Python strategy calls the same helpers: ``rule_gate_mask``
-(engine/detect.py) for the in-task bbox gate, ``fold_trigger``
-(engine/runtime.py) for the sequential per-row trigger fold, and
-``_state_rows_frame`` for the state rows; the kernel and the keyed
-stream share one kernel stage, ``kernel_event_frames``. Rows of rules
-that carry state (``runtime.spec_carries_state``) are
-hash-partitioned by device_id and sorted by (device_id, datetime,
-url), so each (device, rule) state is owned by one task and folds in
-event-time order. Prior states arrive either as a DataFrame joined
-onto the rows (``state_df``, the fact-scale carry) or broadcast from
-a driver list (``state_rows``); each task emits only the states it
-touched. The streaming forms built on this (foreachBatch) and the
-keyed applyInPandasWithState form live in spinix_spark/streaming/.
+The kernel stage is shared with the keyed stream. It calls
+``rule_gate_mask`` (engine/detect.py) for the in-task bbox gate,
+``eval_spec_full`` (engine/runtime.py), whose ``fold_trigger`` is the
+sequential per-row trigger fold of every surface, and
+``_state_rows_frame`` for the state rows. Rows of rules that carry
+state (``runtime.spec_carries_state``) are hash-partitioned by
+device_id and sorted by (device_id, datetime, url), so each (device,
+rule) state is owned by one task and folds in event-time order.
+Prior states arrive either as a DataFrame joined onto the rows
+(``state_df``, the fact-scale carry) or broadcast from a driver list
+(``state_rows``); each task emits only the states it touched. The
+streaming forms built on this (foreachBatch) and the keyed
+applyInPandasWithState form live in spinix_spark/streaming/.
 """
 
 from __future__ import annotations
@@ -53,8 +53,8 @@ from spinix_spark.dsl.tokens import Token
 from spinix_spark.engine.detect import Engine, rule_gate_mask
 from spinix_spark.engine.runtime import (
     Reference,
+    at_verdict_col,
     eval_spec_full,
-    fold_trigger,
     spec_carries_state,
     spec_has_dwell,
 )
@@ -251,18 +251,22 @@ def _sql_rule_events(points: DataFrame, engine: Engine, rule, plan) -> DataFrame
     return out
 
 
-def _at_base_rows(
+def _with_rowkey(df: DataFrame) -> DataFrame:
+    """``_rowkey``: the row identity the devices(@) verdict joins on."""
+    key_cols = [c for c in ("url", "device_id", "datetime", "lat", "lon") if c in df.columns]
+    return df.withColumn("_rowkey", F.xxhash64(*key_cols))
+
+
+def _at_rule_events(
     points: DataFrame, engine: Engine, rule, at_node, devices_df: DataFrame,
-    n_salt: int, join_how: str,
-):
-    """Shared front half of the devices(@) pair-join strategies:
-    pruned + layer-filtered rows carrying ``_rowkey`` and the @ verdict
-    joined on as ``_at_refs`` (null ⇔ no candidate satisfied the verb).
-    ``join_how='inner'`` keeps only @-matching rows (stateless all-AND:
-    non-matching rows can never emit); ``'left'`` keeps every gated row
-    (stateful: the trigger fold must see non-matching rows too). Returns
-    ``(joined, node_sqls)`` or None when a companion node is not
-    Catalyst-compilable."""
+    n_salt: int = 0,
+) -> DataFrame | None:
+    """Event rows for one stateless all-AND devices(@) rule, entirely
+    JVM-side: the pair join (engine/devices_at.py) inner-joins the @
+    verdict onto the rule's pruned, layer-matching rows (a row without
+    one can never emit) and the other nodes fold as Catalyst columns.
+    Returns None when a non-@ node is not Catalyst-compilable (the
+    rule then takes the kernel stage)."""
     from spinix_spark.engine.devices_at import at_candidate_pairs, at_row_matches
     from spinix_spark.engine.sql_compile import compile_node_sql
 
@@ -280,32 +284,13 @@ def _at_base_rows(
                 return None
             node_sqls.append(ns)
 
-    base = points.where(F.expr(_rule_prune_expr_for(engine, rule))).where(
-        F.col("layer_id") == props.layer
+    base = _with_rowkey(
+        points.where(F.expr(_rule_prune_expr_for(engine, rule))).where(
+            F.col("layer_id") == props.layer
+        )
     )
-    key_cols = [
-        c for c in ("url", "device_id", "datetime", "lat", "lon") if c in columns
-    ]
-    base = base.withColumn("_rowkey", F.xxhash64(*key_cols))
     pairs = at_candidate_pairs(base, devices_df, at_node, engine.scheme, n_salt=n_salt)
-    joined = base.join(at_row_matches(pairs), "_rowkey", join_how)
-    return joined, node_sqls
-
-
-def _at_rule_events(
-    points: DataFrame, engine: Engine, rule, at_node, devices_df: DataFrame,
-    n_salt: int = 0,
-) -> DataFrame | None:
-    """Event rows for one STATELESS devices(@) rule via the fact-scale
-    pair-join strategy (engine/devices_at.py): no snapshot broadcast,
-    no driver collect, no per-snapshot-device Python loop. Returns None
-    when a non-@ node is not Catalyst-compilable (caller falls back to
-    the broadcast kernel path)."""
-    res = _at_base_rows(points, engine, rule, at_node, devices_df, n_salt, "inner")
-    if res is None:
-        return None
-    joined, node_sqls = res
-    columns = set(points.columns)
+    joined = base.join(at_row_matches(pairs), "_rowkey", "inner")
 
     ok_sqls = ["true" if ns is None else ns.ok_sql for ns in node_sqls]
     acc = ok_sqls[0]
@@ -486,122 +471,39 @@ def states_by_device(state_df: DataFrame, name: str = "_states") -> DataFrame:
     )
 
 
-def _join_state_carry(df: DataFrame, state_df: DataFrame) -> DataFrame:
-    """Attach prior (device, rule) trigger states to rows as a
-    per-device struct array — the fact-scale carry: states ride the
-    device_id shuffle, no broadcast, no driver round-trip."""
-    return df.join(states_by_device(state_df), "device_id", "left")
+def _at_verdicts(
+    points: DataFrame, engine: Engine, rules, devices_df: DataFrame, n_salt: int
+) -> list[DataFrame]:
+    """(``_rowkey``, ``at_verdict_col(node)``) frames for the point
+    devices(@) nodes of the kernel stage's ``rules``: the pair join
+    (engine/devices_at.py) over the pruned, layer-matching rows of the
+    rules that read each column. The kernel reads them in place of the
+    broadcast snapshot (runtime._eval_sp_devices)."""
+    from functools import reduce
 
-
-def _at_rule_events_stateful(
-    points: DataFrame, engine: Engine, rule, at_node, devices_df: DataFrame,
-    n_salt: int = 0, state_df: DataFrame | None = None,
-    state_rows: list[dict] | None = None,
-) -> DataFrame | None:
-    """Event + state rows for one STATEFUL (real ``:trigger``)
-    devices(@) rule at fact scale — the composition of the two existing
-    mechanisms (reference semantics: runtime.go:103-163 + 1461-1483):
-
-    1. the pair-join candidate strategy (engine/devices_at.py) computes
-       the @ verdict relationally — snapshot stays a DataFrame, k-ring
-       equi-join, exact-candidacy rect, vectorized refine; LEFT join so
-       non-matching rows survive (the trigger consumes on them);
-    2. companion nodes evaluate as Catalyst columns; the all-AND fold
-       collapses to one ``_final`` boolean — all JVM-side;
-    3. the sequential per-device trigger fold (checkTrigger/changeState
-       in (device_id, datetime) order) runs in mapInPandas over a
-       SLIM projection (url, device_id, datetime, _final, refs) — the
-       only per-row Python is the inherently-sequential state machine,
-       and prior states ride the same device_id shuffle
-       (``state_df`` carry), so nothing fact-sized touches the driver.
-
-    Plan note (measured, round 3 / PLANS.md): the @ ref arrays ride
-    the device_id shuffle DELIBERATELY. The alternative — join only a
-    boolean for the fold and re-attach refs to the fired output —
-    makes the pair-refine stage a diamond consumed twice; Catalyst
-    re-evaluates it (no exchange reuse across the mapInPandas stage),
-    which measured ~35% slower end to end. One evaluation + arrays in
-    one shuffle beats two evaluations.
-
-    Returns None when a companion node is not Catalyst-compilable."""
-    res = _at_base_rows(points, engine, rule, at_node, devices_df, n_salt, "left")
-    if res is None:
-        return None
-    joined, node_sqls = res
-    spec = rule.spec
-    columns = set(points.columns)
-
-    ok_sqls = [
-        "(_at_refs IS NOT NULL)" if ns is None else ns.ok_sql for ns in node_sqls
-    ]
-    final_sql = " AND ".join(f"({s})" for s in ok_sqls)
-    refs_sqls = [
-        "coalesce(_at_refs, array())" if ns is None else ns.refs_sql
-        for ns in node_sqls
-    ]
-    url_sql = "url" if "url" in columns else "''"
-    dt_sql = "CAST(datetime AS BIGINT)" if "datetime" in columns else "CAST(0 AS BIGINT)"
-    sel = [
-        f"{url_sql} AS url",
-        "device_id",
-        f"{dt_sql} AS _dt",
-        f"coalesce({final_sql}, false) AS _final",
-    ]
-    sel += [f"{rs} AS _refs{j}" for j, rs in enumerate(refs_sqls)]
-    slim = joined.selectExpr(*sel)
-    if state_df is not None:
-        slim = _join_state_carry(slim, state_df)
-    # one owner task per device + deterministic per-device event order
-    # (same discipline as the kernel's stateful branch)
-    slim = slim.repartition("device_id").sortWithinPartitions(
-        "device_id", "_dt", "url"
+    from spinix_spark.engine.devices_at import (
+        at_candidate_pairs,
+        at_row_matches,
+        is_at_node,
     )
 
-    node_meta = [
-        ("device", "devices", str(at_node.op))
-        if ns is None
-        else (ns.left_kw, ns.right_kw, ns.op)
-        for ns in node_sqls
+    wanted: dict[str, tuple] = {}  # column -> (node, row predicates)
+    for r in rules:
+        pred = F.expr(_rule_prune_expr_for(engine, r)) & (
+            F.col("layer_id") == r.spec.props.layer
+        )
+        for n in r.spec.nodes:
+            if is_at_node(n):
+                wanted.setdefault(at_verdict_col(n), (n, []))[1].append(pred)
+    return [
+        at_row_matches(
+            at_candidate_pairs(
+                _with_rowkey(points.where(reduce(lambda a, b: a | b, preds))),
+                devices_df, node, engine.scheme, n_salt=n_salt,
+            )
+        ).withColumnRenamed("_at_refs", col)
+        for col, (node, preds) in wanted.items()
     ]
-    rule_id = rule.rule_id
-    spec_src = spec.source
-    seed_rows = [dict(r) for r in (state_rows or [])]
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        states = StateStore()
-        states.load(seed_rows)
-        states.clear_dirty()
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            _seed_states_from_column(states, pdf)
-            dts = pdf["_dt"].to_numpy(dtype=np.int64)
-            dids = pdf["device_id"].to_numpy(dtype=object)
-            finals = (
-                pdf["_final"].astype("boolean").fillna(False).to_numpy(dtype=bool)
-            )
-            fired = fold_trigger(
-                states, spec, rule_id, dids, dts, np.ones(len(pdf), dtype=bool)
-            )
-            idx = np.nonzero(fired & finals)[0]
-            if idx.size == 0:
-                continue
-            urls = pdf["url"].to_numpy(dtype=object)
-            frames = []
-            for j, kws in enumerate(node_meta):
-                refs = pdf[f"_refs{j}"].to_numpy(dtype=object)
-                frames.append(
-                    _event_rows_frame(
-                        rule_id, spec_src, kws, urls[idx], dids[idx], dts[idx],
-                        [list(refs[i]) for i in idx],
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-        snap = states.dirty_snapshot()
-        if snap:
-            yield _state_rows_frame(snap)
-
-    return slim.mapInPandas(fold, schema=OUT_SCHEMA)
 
 
 def detect_batch_spark(
@@ -620,17 +522,21 @@ def detect_batch_spark(
     get (events, states).
 
     Per-rule physical strategy:
-    1. ``devices_df`` given + rule is an all-AND devices(@) shape →
-       fact-scale pair-join (engine/devices_at.py): the device snapshot
-       stays a DataFrame (no broadcast, no driver collect). Rules with
-       a real ``:trigger`` additionally route through the sequential
-       per-device trigger fold (_at_rule_events_stateful).
+    1. ``devices_df`` given + a stateless all-AND rule with one point
+       devices(@) node and Catalyst-compilable companions
+       (``devices_at.devices_at_node``) → the all-JVM pair join
+       (engine/devices_at.py): the device snapshot stays a DataFrame
+       (no broadcast, no driver collect).
     2. Rule compiles to pure Catalyst expressions
        (engine/sql_compile.py) → entirely JVM-side.
-    3. Otherwise → vectorized-kernel mapInPandas path with the
-       broadcast snapshot (engine.devices).
+    3. Otherwise → the kernel stage (``kernel_event_frames`` in
+       mapInPandas), with zones, rules and engine.devices broadcast.
+       With ``devices_df`` given, the pair join supplies each point
+       devices(@) node's verdict as a column joined onto the kernel's
+       rows, read in place of the broadcast snapshot; trigger, dwell
+       and fold run in the kernel as for any rule.
     All strategies produce identical rows (cross-path parity tested);
-    ``prefer_sql=False`` forces the kernel path for 2/3.
+    ``prefer_sql=False`` sends every rule to the kernel stage.
 
     State carry between batches: ``state_df`` is the FACT-SCALE form
     (prior states ride the device_id shuffle as a co-partitioned
@@ -639,18 +545,16 @@ def detect_batch_spark(
     touched (device, rule) keys, fine for small jobs, wrong at a huge
     device universe); prefer ``state_df`` + :func:`merge_state_df`.
 
-    When ``devices_df`` is given but an @ rule falls OUTSIDE the
-    pair-join shape, the kernel fallback would evaluate @ against the
-    broadcast snapshot; if that snapshot is EMPTY the rule would
-    silently match nothing, so this raises instead (populate
-    engine.devices for the kernel fallback, or reshape the rule).
+    engine.devices still serves explicit device refs and buffered
+    devices(@) candidates. With ``devices_df`` given and
+    engine.devices EMPTY, a rule that reads it would silently match
+    nothing, so this raises instead
+    (``devices_at.empty_snapshot_ref_reasons``).
 
     State rows are emitted only for rules whose state a later event can
     depend on (``runtime.spec_carries_state``: a real ``:trigger``, or
     a dwell suffix under ``eval_dwell``), identically on every path.
     """
-    from spinix_spark.dsl import ast_nodes as ast
-    from spinix_spark.dsl.compiler import SpDevicesOp
     from spinix_spark.engine.devices_at import (
         devices_at_node,
         empty_snapshot_ref_reasons,
@@ -658,10 +562,6 @@ def detect_batch_spark(
     from spinix_spark.engine.sql_compile import try_compile_rule_sql
 
     if devices_df is not None:
-        # devices_df signals a fact-scale caller whose device universe
-        # lives in the DataFrame — but explicit device refs still
-        # resolve from engine.devices at compile time; empty means the
-        # rule silently compiles to `false`. Refuse loudly instead.
         ref_reasons = empty_snapshot_ref_reasons(engine)
         if ref_reasons:
             raise ValueError(
@@ -680,18 +580,11 @@ def detect_batch_spark(
             kernel_rules.append(r)
             continue
         if devices_df is not None and prefer_sql:
-            at_node = devices_at_node(r, allow_stateful=True)
+            at_node = devices_at_node(r)
             if at_node is not None:
-                if r.spec.props.repeat != ast.REPEAT_NONE:
-                    ev = _at_rule_events_stateful(
-                        points, engine, r, at_node, devices_df,
-                        n_salt=at_salt, state_df=state_df,
-                        state_rows=state_rows,
-                    )
-                else:
-                    ev = _at_rule_events(
-                        points, engine, r, at_node, devices_df, n_salt=at_salt
-                    )
+                ev = _at_rule_events(
+                    points, engine, r, at_node, devices_df, n_salt=at_salt
+                )
                 if ev is not None:
                     at_outs.append(ev)
                     continue
@@ -703,25 +596,6 @@ def detect_batch_spark(
         if plan is not None:
             sql_planned.append((r, plan))
         else:
-            if devices_df is not None and len(engine.devices) == 0 and any(
-                isinstance(n, SpDevicesOp) and n.right.all and not n.right.refs
-                for n in r.spec.nodes
-            ):
-                from spinix_spark.engine.devices_at import at_ineligible_reasons
-
-                reasons = at_ineligible_reasons(engine, points.columns)
-                why = "; ".join(
-                    x for x in reasons if x.startswith(f"rule {r.rule_id}:")
-                ) or f"rule {r.rule_id}: not Catalyst-compilable"
-                raise ValueError(
-                    "devices(@) rule fell back to the broadcast-kernel "
-                    "path while the snapshot was supplied as a DataFrame "
-                    "and engine.devices is EMPTY — @ would silently "
-                    f"evaluate false everywhere. {why}. Populate "
-                    "engine.devices (dimension scale) or reshape the "
-                    "rule to the pair-join shape (all-AND, one @ node, "
-                    "Catalyst-compilable companions)."
-                )
             kernel_rules.append(r)
 
     sql_outs = at_outs + [
@@ -751,11 +625,22 @@ def detect_batch_spark(
     pruned = points.where(F.expr(kernel_prune)).select(
         *[c for c in points.columns if c in KERNEL_COLS]
     )
+    verdicts = (
+        _at_verdicts(points, engine, kernel_rules, devices_df, at_salt)
+        if devices_df is not None
+        else []
+    )
+    if verdicts:
+        pruned = _with_rowkey(pruned)
+        for v in verdicts:
+            pruned = pruned.join(v, "_rowkey", "left")
+        pruned = pruned.drop("_rowkey")
     if any(spec_carries_state(r.spec, engine.eval_dwell) for r in kernel_rules):
         if state_df is not None:
-            # the join and the repartition below share the device_id
-            # partitioning
-            pruned = _join_state_carry(pruned, state_df)
+            # the fact-scale carry: each device's prior states ride its
+            # rows as one struct array; the join and the repartition
+            # below share the device_id partitioning
+            pruned = pruned.join(states_by_device(state_df), "device_id", "left")
         # one owner task per device + deterministic per-device event
         # order: trigger state folds sequentially over (device_id,
         # datetime) regardless of Arrow batch boundaries or partition
@@ -835,19 +720,14 @@ SNAPSHOT_GUARD_ROWS = 1_000_000
 
 def snapshot_from_points(points: DataFrame) -> DeviceSnapshot:
     """Latest position per device (InsertOrReplace set-form,
-    devices.go:105-147): row_number over (device_id order by datetime
-    desc) = 1, collected to a broadcastable snapshot. DIMENSION-SCALE
-    ONLY (one row per device on the driver) — at url-as-device
-    cardinality use :func:`spinix_spark.engine.devices_at.
-    snapshot_df_from_points`, which keeps the snapshot a DataFrame."""
-    from pyspark.sql.window import Window
+    devices.go:105-147) collected to a broadcastable snapshot: the rows
+    of :func:`spinix_spark.engine.devices_at.snapshot_df_from_points`,
+    which keeps the snapshot a DataFrame. DIMENSION-SCALE ONLY (one
+    row per device on the driver) — at url-as-device cardinality use
+    that DataFrame form directly."""
+    from spinix_spark.engine.devices_at import snapshot_df_from_points
 
-    w = Window.partitionBy("device_id").orderBy(F.col("datetime").desc())
-    latest = (
-        points.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    ).cache()
+    latest = snapshot_df_from_points(points).cache()
     n = latest.count()
     if n > SNAPSHOT_GUARD_ROWS:
         latest.unpersist()
@@ -858,9 +738,7 @@ def snapshot_from_points(points: DataFrame) -> DeviceSnapshot:
             "collect) at this scale"
         )
     snap = DeviceSnapshot()
-    cols = ["device_id", "layer_id", "lat", "lon", "datetime"]
-    have = [c for c in cols if c in latest.columns]
-    for row in latest.select(*have).collect():
+    for row in latest.collect():
         snap.insert_or_replace(row.asDict())
     latest.unpersist()
     return snap

@@ -310,12 +310,11 @@ def detect_devices_at(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def detect_devices_at_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STATEFUL fact-scale ``devices(@)`` (round-3 strategy,
-    spark_pipeline._at_rule_events_stateful): the pair-join @ verdict
-    gated by the sequential per-device ``:trigger every 600s`` fold,
-    run over TWO batches of the same points with the trigger state
-    carried as a DataFrame (state_df) — no broadcast snapshot, nothing
-    fact-sized on the driver. Batch 1 fires each device's first row
+    """STATEFUL fact-scale ``devices(@)``: the pair-join @ verdict,
+    read by the kernel stage, gated by the sequential per-device
+    ``:trigger every 600s`` fold, run over TWO batches of the same
+    points with the trigger state carried as a DataFrame (state_df) —
+    no broadcast snapshot, nothing fact-sized on the driver. Batch 1 fires each device's first row
     (last_seen == 0) plus rows > 600 s past the anchor; batch 2 (same
     rows, carried state) re-fires only the past-anchor rows. Events
     appear only where the fired row's 250 m 12-gon contains a snapshot

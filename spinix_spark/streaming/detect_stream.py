@@ -137,8 +137,8 @@ def stream_detect_scalable(
     ``work_dir`` may be an ``s3a://``/``gs://``/``hdfs://`` path.
 
     Batch N reads the table once, as of N-1. Its positions are the
-    device snapshot, which ``devices(@)`` rules join through the
-    pair-join strategy (engine/devices_at.py); its states, unnested,
+    device snapshot, from which the pair join (engine/devices_at.py)
+    gives every ``devices(@)`` node its verdict; its states, unnested,
     join the rules' device_id shuffle as the prior trigger state
     (detect_batch_spark(state_df=...)). Zones and rules stay broadcast
     (dimension-sized). Evaluate-then-insert (engine.go:218-221): after
@@ -164,19 +164,17 @@ def stream_detect_scalable(
     silently drop every carried trigger state.
     """
     from spinix_spark.engine.devices_at import (
-        at_ineligible_reasons,
+        empty_snapshot_ref_reasons,
         snapshot_df_from_points,
     )
     from spinix_spark.io.hdfs import exists
     from spinix_spark.streaming.state_table import BucketedVersionTable
 
-    # every @ rule must fit the pair-join strategy here (the kernel
-    # fallback's broadcast snapshot is empty at fact scale — @ would
-    # silently evaluate false), and every explicit device ref must
-    # resolve against a populated engine.devices. The probe mirrors
-    # the ACTUAL routing: shape check + a Catalyst compile dry-run.
-    # Stateful @ rules are fine — they take _at_rule_events_stateful.
-    reasons = at_ineligible_reasons(engine, points_stream.columns)
+    # devices(@) rules get their verdict from the devices table through
+    # the pair join, whatever their shape; only a rule that reads
+    # engine.devices (explicit device refs, a buffered @ candidate)
+    # would see an empty snapshot here and silently match nothing
+    reasons = empty_snapshot_ref_reasons(engine)
     if reasons:
         raise ValueError(
             "stream_detect_scalable: rule(s) would evaluate against an "

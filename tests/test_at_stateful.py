@@ -1,13 +1,17 @@
-"""Fact-scale STATEFUL devices(@): the pair-join candidate strategy
-composed with the sequential per-device trigger fold
-(spark_pipeline._at_rule_events_stateful) must reproduce the broadcast
-kernel path exactly — events AND trigger-state rows — across trigger
-kinds, partitionings, and multi-batch state carries. Also covers the
-loud-failure guards for @ rules that fall outside the pair-join shape
+"""Fact-scale devices(@): with the snapshot as a DataFrame, the pair
+join supplies the @ verdict — inner-joined by the all-JVM stateless
+strategy, left-joined onto the kernel stage's rows for every other
+rule (triggers, dwell, OR folds, companions that do not compile) —
+and must reproduce the broadcast kernel and Engine.detect_batch
+exactly, events AND trigger-state rows, across trigger kinds,
+partitionings, and multi-batch state carries. Also covers the
+loud-failure guards for rules that read an empty engine.devices
 (reference semantics: runtime.go:103-163 + 1461-1483).
 """
 
 from __future__ import annotations
+
+import json
 
 import numpy as np
 import pandas as pd
@@ -65,9 +69,47 @@ def _ev_canon(ev):
 
 def _st_canon(st):
     return sorted(
-        (r.device_id, r.rule_id, r.last_seen, r.last_reset, r.hits, r.now)
+        (r.device_id, r.rule_id, r.last_seen, r.last_reset, r.hits, r.now, r.visits)
         for r in st.collect()
     )
+
+
+def _engine_st_canon(eng):
+    """Engine.detect_batch's states in _st_canon's form (visits as the
+    Spark surfaces' JSON)."""
+    return sorted(
+        (s["device_id"], s["rule_id"], s["last_seen"], s["last_reset"], s["hits"],
+         s["now"], json.dumps(s["visits"], separators=(",", ":"), sort_keys=True)
+         if s.get("visits") else "")
+        for s in eng.states.snapshot()
+    )
+
+
+def _three_surfaces(spark, rule, pdf, snap_rows, eval_dwell=False, zones=()):
+    """Canonical (events, states) of one batch on Engine.detect_batch,
+    the broadcast kernel (snapshot in engine.devices) and the fact-scale
+    form (snapshot as devices_df, engine.devices empty)."""
+    def engine(with_snapshot):
+        eng = Engine(eval_dwell=eval_dwell)
+        for z in zones:
+            eng.zones.add(z)
+        if with_snapshot:
+            for row in snap_rows:
+                eng.devices.insert_or_replace(row)
+        eng.add_rule(rule, rule_id=RID)
+        return eng
+
+    oracle = engine(True)
+    want = (_oracle_canon(oracle.detect_batch(pdf)), _engine_st_canon(oracle))
+    points = spark.createDataFrame(pdf).repartition(4)
+    ev_k, st_k = split_output(detect_batch_spark(points, engine(True)))
+    devices_df = spark.createDataFrame(pd.DataFrame(snap_rows))
+    ev_j, st_j = split_output(
+        detect_batch_spark(points, engine(False), devices_df=devices_df)
+    )
+    kernel = (_ev_canon(ev_k), _st_canon(st_k))
+    fact = (_ev_canon(ev_j), _st_canon(st_j))
+    return want, kernel, fact
 
 
 TRIGGERS = [
@@ -206,63 +248,149 @@ def test_at_stateful_empty_snapshot_consumes_trigger(spark):
     assert ev2.count() == 0  # quota was consumed against the empty snapshot
 
 
-def test_at_kernel_fallback_guard(spark):
-    """An @ rule OUTSIDE the pair-join shape (OR fold) with devices_df
-    supplied and an EMPTY broadcast snapshot must raise, not silently
-    evaluate @ as false."""
-    rule = (
-        "device :radius 300m intersects devices(@) or speed range [0 .. 10]"
-        " { :center 42.93 -72.27 :radius 50km }"
-    )
-    eng = Engine()
-    eng.add_rule(rule, rule_id=RID)
-    points = spark.createDataFrame(_mk_points(n=9))
-    devices_df = spark.createDataFrame(pd.DataFrame(_mk_snapshot(m=3)))
-    with pytest.raises(ValueError, match="pair-join"):
-        detect_batch_spark(points, eng, devices_df=devices_df).count()
+ZONE_SOUTH = "c5vj26evvhfjvfseaus0"
 
 
-def test_at_kernel_fallback_ok_when_snapshot_populated(spark):
-    """Same OR-fold rule, but engine.devices IS populated: the kernel
-    fallback is correct, so no raise."""
-    rule = (
-        "device :radius 300m intersects devices(@) or speed range [0 .. 10]"
-        " { :center 42.93 -72.27 :radius 50km }"
+def _south_zone():
+    """A zone over the southern half of _mk_points' box."""
+    from spinix_spark.engine.stores import zone_from_ring
+
+    return zone_from_ring(
+        ZONE_SOUTH,
+        np.array(
+            [(42.90, -72.32), (42.90, -72.21), (42.93, -72.21),
+             (42.93, -72.32), (42.90, -72.32)]
+        ),
     )
-    snap_rows = _mk_snapshot(m=3)
+
+
+@pytest.mark.parametrize("trigger", ["", ":trigger every 600s"])
+def test_at_or_fold_parity(spark, trigger):
+    """An @ rule in an OR fold never takes the all-JVM pair join; with
+    devices_df and an EMPTY engine.devices the kernel stage reads the
+    pair join's verdict and must equal the broadcast kernel and
+    Engine.detect_batch."""
+    rule = (
+        "device :radius 300m intersects devices(@) or speed range [0 .. 20]"
+        f" {{ :center 42.93 -72.27 :radius 50km {trigger} }}"
+    )
+    want, kernel, fact = _three_surfaces(spark, rule, _mk_points(), _mk_snapshot())
+    assert any(e[4] == "devices" for e in want[0])
+    assert kernel == want
+    assert fact == want
+    # devices_df beside a populated engine.devices: accepted, same rows
     eng = Engine()
-    for row in snap_rows:
+    for row in _mk_snapshot():
         eng.devices.insert_or_replace(row)
     eng.add_rule(rule, rule_id=RID)
-    points = spark.createDataFrame(_mk_points(n=9))
-    devices_df = spark.createDataFrame(pd.DataFrame(snap_rows))
-    out = detect_batch_spark(points, eng, devices_df=devices_df)
-    out.count()  # no raise
+    ev, st = split_output(
+        detect_batch_spark(
+            spark.createDataFrame(_mk_points()), eng,
+            devices_df=spark.createDataFrame(pd.DataFrame(_mk_snapshot())),
+        )
+    )
+    assert (_ev_canon(ev), _st_canon(st)) == want
 
 
-def test_stream_scalable_guard_mirrors_eligibility(spark, tmp_path):
-    """stream_detect_scalable rejects @ rules outside the pair-join
-    shape up front (OR fold here) — and ACCEPTS stateful @ rules, which
-    round 2 rejected blanket-wise."""
+def test_at_dwell_parity(spark):
+    """A dwell rule with a devices(@) node under eval_dwell: the visit
+    fold runs in the kernel stage, fed the pair join's @ verdict — the
+    fact-scale form once emitted nothing here."""
+    rule = (
+        "device :radius 300m intersects devices(@) and device intersects"
+        f" polygon({ZONE_SOUTH}) :time duration 600s"
+        " { :center 42.93 -72.27 :radius 50km }"
+    )
+    want, kernel, fact = _three_surfaces(
+        spark, rule, _mk_points(n=180, n_dev=6), _mk_snapshot(m=60),
+        eval_dwell=True, zones=[_south_zone()],
+    )
+    assert len(want[0]) > 0 and any(v for *_, v in want[1])
+    assert kernel == want
+    assert fact == want
+
+
+def test_at_stateful_parity_with_buffered_zone_companion(spark):
+    """A stateful @ rule whose companion (a buffered zone verb) does not
+    compile to Catalyst: trigger, zone verb and fold run in the kernel
+    stage on the pair join's @ verdict."""
+    rule = (
+        "device :radius 400m intersects devices(@) and device :radius 300m"
+        f" intersects polygon({ZONE_SOUTH})"
+        " { :center 42.93 -72.27 :radius 50km :trigger every 600s }"
+    )
+    want, kernel, fact = _three_surfaces(
+        spark, rule, _mk_points(), _mk_snapshot(), zones=[_south_zone()]
+    )
+    assert len(want[0]) > 0
+    assert kernel == want
+    assert fact == want
+
+
+def test_buffered_at_candidate_refused(spark, tmp_path):
+    """A buffered devices(@) candidate reads engine.devices (the pair
+    join evaluates point candidates only): with it empty, fact-scale
+    entry points refuse instead of matching nothing."""
     from spinix_spark.streaming.detect_stream import stream_detect_scalable
 
+    eng = Engine()
+    eng.add_rule(
+        "device intersects devices(@) :radius 300m"
+        " { :center 42.93 -72.27 :radius 50km }",
+        rule_id=RID,
+    )
+    points = spark.createDataFrame(_mk_points(n=9))
+    devices_df = spark.createDataFrame(pd.DataFrame(_mk_snapshot(m=3)))
+    with pytest.raises(ValueError, match="buffered devices.*EMPTY"):
+        detect_batch_spark(points, eng, devices_df=devices_df)
     src = str(tmp_path / "src")
-    spark.createDataFrame(_mk_points(n=4)).coalesce(1).write.parquet(src)
+    points.coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(points.schema).parquet(src)
+    with pytest.raises(ValueError, match="buffered devices.*EMPTY"):
+        stream_detect_scalable(stream, eng, lambda e, b: None, work_dir=str(tmp_path / "w"))
+
+
+def test_stream_scalable_or_fold_at_rule(spark, tmp_path):
+    """stream_detect_scalable runs an @ rule of any shape (OR fold with
+    a trigger here): each batch's events equal Engine.detect_batch fed
+    the same batches (snapshot as of the previous batch)."""
+    from spinix_spark.streaming.detect_stream import stream_detect_scalable
+
+    rule = (
+        "device :radius 300m intersects devices(@) or speed range [0 .. 20]"
+        " { :center 42.93 -72.27 :radius 50km :trigger every 50s }"
+    )
+    pdf = _mk_points(n=36, n_dev=12)
+    # a ~450 m box, so most rows have a snapshot device within 300 m
+    pdf = pdf.assign(lat=42.93 + (pdf.lat - 42.90) / 15, lon=-72.27 + (pdf.lon + 72.31) / 20)
+    batches = [pdf.iloc[:12], pdf.iloc[12:24], pdf.iloc[24:]]
+    src = str(tmp_path / "src")
+    for b in batches:
+        spark.createDataFrame(b).coalesce(1).write.mode("append").parquet(src)
     stream = (
         spark.readStream.schema(spark.read.parquet(src).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    eng_bad = Engine()
-    eng_bad.add_rule(
-        "device :radius 300m intersects devices(@) or speed range [0 .. 10]"
-        " { :center 42.93 -72.27 :radius 50km }",
-        rule_id=RID,
+    eng = Engine()
+    eng.add_rule(rule, rule_id=RID)
+    got = {}
+
+    def sink(events, batch_id):
+        got[batch_id] = _ev_canon(events)
+
+    q = stream_detect_scalable(
+        stream, eng, sink, work_dir=str(tmp_path / "w"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
     )
-    with pytest.raises(ValueError, match="pair-join|kernel"):
-        stream_detect_scalable(
-            stream, eng_bad, lambda e, b: None, work_dir=str(tmp_path / "w")
-        )
+    q.awaitTermination(180)
+    assert q.exception() is None
+
+    oracle = Engine()
+    oracle.add_rule(rule, rule_id=RID)
+    want = {k: _oracle_canon(oracle.detect_batch(b)) for k, b in enumerate(batches)}
+    assert any(e[4] == "devices" for e in want[2])
+    assert got == want
 
 
 def test_stream_scalable_stateful_at_rule(spark, tmp_path):
@@ -533,11 +661,11 @@ def test_collect_guard_stream_detect(spark, tmp_path, monkeypatch):
 
 
 def test_at_stateful_plan_shape(spark):
-    """Plan-shape regression (PLANS.md round 3): the stateful @
-    strategy must evaluate the pair-refine stage ONCE — exactly two
-    MapInPandas stages (candidate refine + trigger fold) and one
-    device_id repartition. A third MapInPandas means a diamond over
-    row_matches re-evaluating the k-ring join (measured ~35% slower)."""
+    """Plan-shape regression (PLANS.md round 3): a stateful @ rule
+    evaluates the pair-refine stage ONCE — exactly two MapInPandas
+    stages (candidate refine + kernel stage) and one device_id
+    repartition. A third MapInPandas means a diamond over row_matches
+    re-evaluating the k-ring join (measured ~35% slower)."""
     rule = (
         "device :radius 400m intersects devices(@)"
         " { :center 42.93 -72.27 :radius 50km :trigger once }"
@@ -550,6 +678,63 @@ def test_at_stateful_plan_shape(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 2, plan
     assert "hashpartitioning(device_id" in plan, plan
+
+
+def test_stream_rules_plan_budget(spark):
+    """Plan-shape budget of the benchmark stream's batch: its two
+    stateful rules (a buffered zone verb and a devices(@) verb), with
+    the snapshot and the prior states as DataFrames, fold in ONE kernel
+    stage — two MapInPandas (@ candidate refine + kernel), two
+    device_id exchanges (the rows and the state carry) and one state
+    aggregation. A second fold stage would add a MapInPandas, two
+    exchanges and an aggregation."""
+    from perfbench.workloads import gen_params, new_engine, stream_rules, synth_positions
+
+    from spinix_spark.engine.spark_pipeline import STATE_COLS
+
+    eng = new_engine()
+    for k, spec in enumerate(stream_rules()):
+        eng.add_rule(spec, rule_id="rbench" + f"{k:014d}")
+    pts = spark.createDataFrame(
+        synth_positions(gen_params("stream_stateful", 1, 300), 0, 300)
+    )
+    state_df = spark.createDataFrame(
+        [], ", ".join(
+            f"{c} {'string' if c in ('device_id', 'rule_id', 'visits') else 'bigint'}"
+            for c in STATE_COLS
+        )
+    )
+    out = detect_batch_spark(
+        pts, eng,
+        devices_df=pts.select("device_id", "layer_id", "lat", "lon", "datetime"),
+        state_df=state_df,
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 2, plan
+    assert plan.count("Exchange hashpartitioning(device_id") == 2, plan
+    assert plan.count("functions=[collect_list(") == 1, plan
+
+
+def test_snapshot_from_points_breaks_datetime_ties(spark):
+    """One latest-position rule: on a datetime tie snapshot_from_points
+    keeps the row snapshot_df_from_points keeps (lat, then lon,
+    descending), whatever the input order."""
+    from spinix_spark.engine.devices_at import snapshot_df_from_points
+    from spinix_spark.engine.spark_pipeline import snapshot_from_points
+
+    rows = [
+        ("d0", LAYER, 42.0, -72.0, 5),
+        ("d0", LAYER, 42.5, -72.0, 5),
+        ("d0", LAYER, 42.5, -71.0, 5),
+        ("d0", LAYER, 43.0, -70.0, 4),
+    ]
+    schema = "device_id string, layer_id string, lat double, lon double, datetime long"
+    for order in (rows, rows[::-1]):
+        pts = spark.createDataFrame(order, schema).coalesce(1)
+        got = snapshot_from_points(pts).lookup("d0")
+        assert (got["lat"], got["lon"]) == (42.5, -71.0), order
+        (df_row,) = snapshot_df_from_points(pts).collect()
+        assert df_row.asDict() == got
 
 
 def test_at_stateful_random_worlds(spark):
