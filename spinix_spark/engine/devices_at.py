@@ -26,11 +26,12 @@ detail.
 Every point ``@`` node (:func:`is_at_node`, any target buffer) gets its
 verdict here when detect_batch_spark is given ``devices_df``:
 
-- a stateless all-AND rule with one ``@`` node whose other nodes
-  compile to Catalyst (:func:`devices_at_node`) inner-joins the verdict
-  and folds in Catalyst — entirely JVM-side;
-- every other rule (a real ``:trigger``, dwell, an OR fold, companions
-  that do not compile) left-joins it onto the kernel stage's rows as
+- a stateless all-AND rule with one ``@`` node (:func:`devices_at_node`)
+  whose other nodes are attribute or distance nodes, which compile to
+  Catalyst, inner-joins the verdict and folds in Catalyst — entirely
+  JVM-side;
+- every other rule (a real ``:trigger``, dwell, an OR fold, a
+  spatial-verb companion) left-joins it onto the kernel stage's rows as
   the column ``runtime.at_verdict_col(node)``, which
   ``runtime._eval_sp_devices`` reads in place of the broadcast
   snapshot; trigger, dwell and fold run there as for any rule.
@@ -112,12 +113,12 @@ def empty_snapshot_ref_reasons(engine) -> list[str]:
 
     Explicit device refs (``devices(d1 d2)``, ``devices(A)`` vs
     ``devices(B)``, distance-to-device comparators) resolve positions
-    from engine.devices AT COMPILE TIME
-    (sql_compile._candidate_device_pred / EqualDevicesOp lookups),
-    silently skipping missing refs (kernel parity with the reference's
-    lookup behavior, runtime.go:1444-1712) — so against an EMPTY
-    snapshot every such node compiles to ``false`` and the rule emits
-    zero events with no error. Refs are dimension-sized by
+    from engine.devices — the kernel from its broadcast copy, the
+    compiled distance comparator (sql_compile, EqualDevicesOp) at plan
+    time — silently skipping missing refs (the reference's lookup
+    behavior, runtime.go:1444-1712). Against an EMPTY snapshot every
+    such node is ``false`` and the rule emits zero events with no
+    error. Refs are dimension-sized by
     construction (named ids in the DSL text), so the fix at fact scale
     is to register exactly those devices in engine.devices, not to
     skip the check. A buffered ``devices(@) :radius ...`` reads the

@@ -810,8 +810,7 @@ def _eval_sp_object(
         )
         rects = rect_from_center(batch.lat, batch.lon, search_m)  # (N, 4)
         # Candidacy is visible semantics for negated verbs, so this
-        # must stay in LOCKSTEP with the Catalyst form
-        # (sql_compile._near_candidate_sql) and ZoneStore.near: the
+        # must stay in LOCKSTEP with ZoneStore.near: the
         # zone's lon interval is rigidly shifted by ±360° into each
         # row's frame (exact no-op mid-longitude — zones never cross
         # ±180° per the RFC 7946 split convention, but the search rect

@@ -9,10 +9,11 @@ takes one of three strategies:
 
 - stateless all-AND devices(@) rules, when the snapshot is given as a
   DataFrame: the all-JVM pair join (engine/devices_at.py);
-- rules that compile to Catalyst expressions (engine/sql_compile.py):
-  entirely JVM-side;
+- stateless rules of attribute and distance nodes only: compiled to
+  Catalyst expressions (engine/sql_compile.py), entirely JVM-side;
 - everything else: the kernel stage, ``kernel_event_frames``, in
   mapInPandas, with zones, rules and the device snapshot broadcast.
+  It is the one evaluator of zone and explicit-device verbs.
   When the snapshot is given as a DataFrame, the pair join supplies
   each devices(@) node's verdict as a column of the kernel's rows.
 
@@ -265,8 +266,9 @@ def _at_rule_events(
     JVM-side: the pair join (engine/devices_at.py) inner-joins the @
     verdict onto the rule's pruned, layer-matching rows (a row without
     one can never emit) and the other nodes fold as Catalyst columns.
-    Returns None when a non-@ node is not Catalyst-compilable (the
-    rule then takes the kernel stage)."""
+    Returns None unless every other node is an attribute or distance
+    node (engine/sql_compile.py); the rule then takes the kernel
+    stage."""
     from spinix_spark.engine.devices_at import at_candidate_pairs, at_row_matches
     from spinix_spark.engine.sql_compile import compile_node_sql
 
@@ -279,7 +281,7 @@ def _at_rule_events(
         if n is at_node:
             node_sqls.append(None)
         else:
-            ns = compile_node_sql(n, engine, props, columns)
+            ns = compile_node_sql(n, engine, columns)
             if ns is None:
                 return None
             node_sqls.append(ns)
@@ -523,14 +525,16 @@ def detect_batch_spark(
 
     Per-rule physical strategy:
     1. ``devices_df`` given + a stateless all-AND rule with one point
-       devices(@) node and Catalyst-compilable companions
-       (``devices_at.devices_at_node``) → the all-JVM pair join
+       devices(@) node whose other nodes are attribute or distance
+       nodes (``devices_at.devices_at_node``) → the all-JVM pair join
        (engine/devices_at.py): the device snapshot stays a DataFrame
        (no broadcast, no driver collect).
-    2. Rule compiles to pure Catalyst expressions
-       (engine/sql_compile.py) → entirely JVM-side.
+    2. A stateless rule of attribute and distance nodes only compiles
+       to pure Catalyst expressions (engine/sql_compile.py) → entirely
+       JVM-side.
     3. Otherwise → the kernel stage (``kernel_event_frames`` in
-       mapInPandas), with zones, rules and engine.devices broadcast.
+       mapInPandas), with zones, rules and engine.devices broadcast:
+       the one evaluator of zone and explicit-device verbs.
        With ``devices_df`` given, the pair join supplies each point
        devices(@) node's verdict as a column joined onto the kernel's
        rows, read in place of the broadcast snapshot; trigger, dwell

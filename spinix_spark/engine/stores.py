@@ -282,8 +282,19 @@ class DeviceSnapshot:
         self._arr = None
 
     def merge_batch(self, rows: list[dict]) -> None:
+        """Keep each device's newest row by (datetime, lat, lon), a
+        missing datetime counting as 0, among its current row and
+        ``rows`` — the row devices_at.snapshot_df_from_points and the
+        stream's devices table keep, whatever the arrival order."""
+
+        def newest(r: dict) -> tuple:
+            dt = r.get("datetime")
+            return (0 if dt is None or dt != dt else dt, r["lat"], r["lon"])
+
         for r in rows:
-            self.insert_or_replace(r)
+            cur = self._rows.get(r["device_id"])
+            if cur is None or newest(r) > newest(cur):
+                self.insert_or_replace(r)
 
     def lookup(self, device_id: str) -> dict | None:
         return self._rows.get(device_id)

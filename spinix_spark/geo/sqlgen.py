@@ -14,15 +14,15 @@ so results agree bit-for-bit except at ulp-boundary cases, which the
 deterministic synthetic inputs avoid.
 
 The formulas mirror geo/geodesy.py (haversine, R=6371e3) and
-geo/predicates.py (ray-casting crossing count, boundary-exclusive in
-this SQL form).
+geo/predicates.py (ray-casting crossing count; boundary-exclusive
+unless ``inclusive``).
 
-Ring-vs-ring predicates over PER-ROW rings (a buffered device's ring
-against a zone) have no SQL form here: Catalyst can only express them
-with higher-order-function lambdas, measured ~250× slower than the
-NumPy kernel, so buffered devices always run on the kernel path
-(engine/sql_compile.py). The per-row ring vertices themselves
-(buffer_ring_verts_sql) serve the point-in-buffer oracle predicates.
+The detect engine's Spark plans use the distance (haversine_sql,
+round50_sql), lon-framing (lon_frame_sql) and candidacy
+(rect_from_center_pred_sql) forms only: its zone and device verbs are
+evaluated by the NumPy kernel alone (engine/sql_compile.py). The ring
+generators serve the gated queries and their oracle SQL
+(queries_geo.py, queries_detect.py).
 """
 
 from __future__ import annotations
@@ -193,26 +193,6 @@ def point_in_buffer_ring_sql(
     libm last-ulp differences (PIP is robust to those off-edge)."""
     verts = buffer_ring_verts_sql(clat, clon, meters, steps)
     return point_in_expr_ring_sql(plat, plon, verts, inclusive=inclusive)
-
-
-def point_on_line_sql(
-    lat_col: str, lon_col: str, line: Sequence[tuple[float, float]]
-) -> str:
-    """Point lies on any segment of an open constant polyline
-    (predicates.point_on_line: collinear + inside segment bbox)."""
-    terms = []
-    for (ay, ax), (by, bx) in zip(line[:-1], line[1:]):
-        cross = (
-            f"(({bx!r} - {ax!r}) * ({lat_col} - {ay!r})"
-            f" - ({by!r} - {ay!r}) * ({lon_col} - {ax!r}))"
-        )
-        lo_x, hi_x = (ax, bx) if ax <= bx else (bx, ax)
-        lo_y, hi_y = (ay, by) if ay <= by else (by, ay)
-        terms.append(
-            f"({cross} = 0.0 AND {lon_col} >= {lo_x!r} AND {lon_col} <= {hi_x!r}"
-            f" AND {lat_col} >= {lo_y!r} AND {lat_col} <= {hi_y!r})"
-        )
-    return "(" + " OR ".join(terms) + ")"
 
 
 def lon_frame_sql(lon: str, frame_lon: str) -> str:

@@ -1,7 +1,7 @@
 """Full-pipeline detect queries for the correctness gate.
 
 These run the actual distributed rules engine (broadcast zones +
-compiled rules + mapInPandas refinement) over device points derived
+Catalyst-compiled attribute/distance rules + the mapInPandas kernel) over device points derived
 from ``documents``. The stateful variant exercises trigger state
 (op #19) — inherently non-SQL-expressible, so the driver records the
 rows-only check for it; the stateless variant's match set equals the
@@ -243,8 +243,8 @@ def detect_weekday_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
 def detect_devices_object(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Op #4 spDevicesObjectOp: ``devices(list) INTERSECTS
     polygon(pentagon)`` — zone containment membership-gated to an
-    explicit device list (runtime.go:1147-1191). Compiles to Catalyst
-    (membership is an IN filter, containment the fixed PIP)."""
+    explicit device list (runtime.go:1147-1191). Kernel stage, like
+    every zone verb."""
     engine = _engine()
     members = ", ".join(_slot_id(s) for s in MEMBER_SLOTS)
     engine.add_rule(
@@ -511,10 +511,10 @@ DETECT_RANGE_DT_ORACLE = (
 # --- spObjectOp at the dateline / pole through the RULE ENGINE -----------
 # Round-6: the zone_join_dateline/zone_join_polar gates verify the
 # shared framed-PIP SQL; these two verify the same geometry through
-# detect_batch_spark — kernel zone predicates (framed
-# zone_intersects_point, framed _zone_prefilter) and the compiled
-# _zone_point_pred — against an independent DuckDB oracle with framed
-# lons (inclusive PIP, matching the kernel's boundary semantics).
+# detect_batch_spark — the kernel zone predicates (framed
+# zone_intersects_point, framed _zone_prefilter) — against an
+# independent DuckDB oracle with framed lons (inclusive PIP, matching
+# the kernel's boundary semantics).
 
 _DATELINE_ZONE_IDS = ["e1", "e2", "e3", "e4"]
 _POLAR_ZONE_IDS = ["f1", "f2", "f3"]
@@ -577,8 +577,8 @@ def _detect_zone_world(
 
 def detect_zone_dateline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Op #1 spObjectOp with polygon zones STRADDLING ±180° through
-    the real pipeline (framed kernel/compiled PIP, framed prefilters,
-    framed add_rule expansion)."""
+    the real pipeline (framed kernel PIP, framed prefilters, framed
+    add_rule expansion)."""
     return _detect_zone_world(spark, sf_dir, "dateline", "r" + "a" * 19)
 
 

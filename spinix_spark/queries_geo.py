@@ -298,8 +298,8 @@ DUCK_DND_POLAR = (
 # keep UNNORMALIZED, continuous lons (the engine convention — parts
 # never straddle ±180° internally); the row lon is framed by ±360°
 # into each zone part's frame (geo/sqlgen.lon_frame_sql — the exact
-# CASE arithmetic of the kernel's zone_intersects_point and the
-# compiled _zone_point_pred). Shared SQL text runs on Spark AND
+# CASE arithmetic of the kernel's zone_intersects_point). Shared SQL
+# text runs on Spark AND
 # DuckDB; the dateline gate's fixtures guarantee matches on BOTH
 # sides of ±180° (pinned by tests/test_registry.py).
 

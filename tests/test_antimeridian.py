@@ -130,6 +130,14 @@ def _events_sets(events_df):
     }
 
 
+def _reference_sets(eng, pdf):
+    """_events_sets of the sequential reference, Engine.detect_batch."""
+    return {
+        e["url"]: tuple(sorted(r for m in e["matches"] for r in m["right_refs"] or []))
+        for e in eng.detect_batch(pdf).to_dict("records")
+    }
+
+
 @pytest.mark.parametrize("world", [_world_dateline, _world_pole])
 def test_at_global_worlds(spark, world):
     points, snap, rule = world()
@@ -161,10 +169,9 @@ def test_at_global_worlds(spark, world):
 
 def _world_dateline_refs():
     """Explicit-refs variant of the dateline world: the rule names the
-    snapshot devices instead of ``@``, so it exercises the Catalyst-
-    compiled _candidate_device_pred path (plan-time-constant candidate
-    rings) — the round-6 ADVICE hole: the compiled path tested raw
-    lons against the candidate ring with no frame shift."""
+    snapshot devices instead of ``@`` (plan-time-constant candidate
+    rings; the kernel frames each row's lon into the candidate's
+    frame)."""
     points, snap, _ = _world_dateline()
     ids = ", ".join(s[0] for s in snap)
     rule = (
@@ -175,9 +182,8 @@ def _world_dateline_refs():
 
 
 def _world_pole_refs():
-    """Explicit-refs polar world: pole-crossing candidate circles must
-    be decided geodesically on the compiled path too (kernel
-    _dd_verb_mask polar override)."""
+    """Explicit-refs polar world: pole-crossing candidate circles are
+    decided geodesically (kernel _dd_verb_mask polar override)."""
     points, snap, _ = _world_pole()
     ids = ", ".join(s[0] for s in snap)
     rule = (
@@ -188,35 +194,31 @@ def _world_pole_refs():
 
 
 @pytest.mark.parametrize("world", [_world_dateline_refs, _world_pole_refs])
-def test_explicit_refs_global_worlds_sql_vs_kernel(spark, world):
-    """Kernel and compiled-SQL paths must agree with the brute oracle
-    for explicit-refs device rules at the dateline and poles (ADVICE
-    round-6 medium: sql_compile._candidate_device_pred lacked the
-    lon frame + geodesic polar override)."""
+def test_explicit_refs_global_worlds_vs_oracle(spark, world):
+    """Explicit-refs device rules at the dateline and poles take the
+    kernel stage (no spatial verb compiles to Catalyst); it and
+    Engine.detect_batch must agree with the brute oracle."""
     from spinix_spark.engine.sql_compile import try_compile_rule_sql
 
     points, snap, rule = world()
-    pts_df, _ = _points_df(spark, points)
+    pts_df, pdf = _points_df(spark, points)
     oracle = _brute_oracle(points, snap)
     assert any(len(v) >= 2 for v in oracle.values())
 
-    results = {}
-    for prefer_sql in (False, True):
+    def engine():
         eng = Engine()
         for row in _snap_rows(snap):
             eng.devices.insert_or_replace(row)
-        r = eng.add_rule(rule, rule_id="r" + "6" * 19)
-        if prefer_sql:
-            # the rule must actually take the compiled path
-            assert try_compile_rule_sql(eng, r) is not None, rule
-        ev, _ = split_output(
-            detect_batch_spark(pts_df, eng, prefer_sql=prefer_sql)
-        )
-        results[prefer_sql] = _events_sets(ev)
+        eng.add_rule(rule, rule_id="r" + "6" * 19)
+        return eng
 
+    eng = engine()
+    assert try_compile_rule_sql(eng, eng.rules["r" + "6" * 19]) is None, rule
+    ev, _ = split_output(detect_batch_spark(pts_df, eng))
     expected = {u: refs for u, refs in oracle.items() if refs}
-    assert results[False] == expected, f"kernel {results[False]} != {expected}"
-    assert results[True] == expected, f"sql {results[True]} != {expected}"
+    assert _events_sets(ev) == expected, f"kernel {_events_sets(ev)} != {expected}"
+    reference = _reference_sets(engine(), pdf)
+    assert reference == expected, f"reference {reference} != {expected}"
 
 
 # --- spObjectOp (point device vs polygon zones) at the dateline/pole -----
@@ -228,13 +230,14 @@ ZRAD = 200.0
 ZAMBIG_LO, ZAMBIG_HI = ZRAD * 0.8660, ZRAD
 
 
-def test_zone_rule_dateline_sql_vs_kernel_vs_oracle(spark, tmp_path):
+def test_zone_rule_dateline_kernel_vs_oracle(spark, tmp_path):
     """spObjectOp point-vs-polygon across ±180°: the kernel's framed
-    zone PIP (zone_intersects_point + framed _zone_prefilter), the
-    compiled-SQL zone path (_zone_point_pred with lon_frame_sql) and
-    the keyed stream (framed rule_gate_mask) must all match the
-    true-disc oracle; matches must straddle the line in both
-    directions."""
+    zone PIP (zone_intersects_point + framed _zone_prefilter) on
+    detect_batch_spark and the keyed stream (framed rule_gate_mask),
+    and Engine.detect_batch must all match the true-disc oracle;
+    matches must straddle the line in both directions. The rule does
+    not compile to Catalyst."""
+    from spinix_spark.engine.sql_compile import try_compile_rule_sql
     from spinix_spark.engine.stores import zone_from_ring
     from spinix_spark.geo.rings import circle_ring
     from spinix_spark.streaming.keyed_detect import keyed_stream_detect
@@ -263,14 +266,14 @@ def test_zone_rule_dateline_sql_vs_kernel_vs_oracle(spark, tmp_path):
     assert oracle["pe1"] and oracle["pw2"]  # straddling in BOTH directions
 
     points = [(u, f"d{i:019d}", la, lo) for i, (u, la, lo) in enumerate(pts)]
-    pts_df, _ = _points_df(spark, points)
+    pts_df, pdf = _points_df(spark, points)
     zone_ids = ", ".join(zones)
     rule = (
         f"device INTERSECTS polygon({zone_ids})"
         " { :center 10.01 179.9995 :radius 50km }"
     )
     results = {}
-    for surface in ("kernel", "sql", "keyed"):
+    for surface in ("kernel", "reference", "keyed"):
         eng = Engine()
         for zid, (zlat, zlon) in zones.items():
             eng.zones.add(
@@ -294,13 +297,11 @@ def test_zone_rule_dateline_sql_vs_kernel_vs_oracle(spark, tmp_path):
                 x.url: tuple(sorted(x.right_refs or [])) for x in rows
             }
             continue
-        if surface == "sql":
-            from spinix_spark.engine.sql_compile import try_compile_rule_sql
-
-            assert try_compile_rule_sql(eng, r) is not None, rule
-        ev, _ = split_output(
-            detect_batch_spark(pts_df, eng, prefer_sql=surface == "sql")
-        )
+        if surface == "reference":
+            results[surface] = _reference_sets(eng, pdf)
+            continue
+        assert try_compile_rule_sql(eng, r) is None, rule
+        ev, _ = split_output(detect_batch_spark(pts_df, eng))
         results[surface] = _events_sets(ev)
 
     expected = {u: refs for u, refs in oracle.items() if refs}
@@ -308,12 +309,11 @@ def test_zone_rule_dateline_sql_vs_kernel_vs_oracle(spark, tmp_path):
         assert got == expected, f"{surface} {got} != {expected}"
 
 
-def test_zone_rule_polar_sql_vs_kernel(spark):
+def test_zone_rule_polar_kernel_vs_reference(spark):
     """spObjectOp point-vs-polygon with a pole-adjacent zone: planar
     polygon semantics (reference parity — the hexagon at lat 89.996 is
     heavily lon-distorted, so the oracle is hand-placed memberships,
-    not a disc), kernel and compiled paths bit-agree, and the
-    @-candidacy polar band admits the zone for cap-crossing rows."""
+    not a disc) on the kernel stage and in Engine.detect_batch."""
     from spinix_spark.engine.stores import zone_from_ring
     from spinix_spark.geo.rings import circle_ring
 
@@ -325,26 +325,25 @@ def test_zone_rule_polar_sql_vs_kernel(spark):
         ("pmid", 89.996, 149.0),    # 1° of lon ≈ 7.8 m — inside
     ]
     points = [(u, f"e{i:019d}", la, lo) for i, (u, la, lo) in enumerate(pts)]
-    pts_df, _ = _points_df(spark, points)
+    pts_df, pdf = _points_df(spark, points)
     rule = (
         f"device INTERSECTS polygon({zid})"
         " { :center 89.996 150.0 :radius 50km }"
     )
-    results = {}
-    for prefer_sql in (False, True):
+
+    def engine():
         eng = Engine()
         eng.zones.add(
             zone_from_ring(zid, circle_ring(zlat, zlon, ZRAD, 6),
                            layer_id=LAYER)
         )
         eng.add_rule(rule, rule_id="r" + "8" * 19)
-        ev, _ = split_output(
-            detect_batch_spark(pts_df, eng, prefer_sql=prefer_sql)
-        )
-        results[prefer_sql] = _events_sets(ev)
+        return eng
+
+    ev, _ = split_output(detect_batch_spark(pts_df, engine()))
     expected = {"pin": (zid,), "pmid": (zid,)}
-    assert results[False] == expected, results[False]
-    assert results[True] == expected, results[True]
+    assert _events_sets(ev) == expected, _events_sets(ev)
+    assert _reference_sets(engine(), pdf) == expected
 
 
 def test_buffered_device_vs_zone_dateline(spark):

@@ -520,7 +520,7 @@ ZID = "c5vj26evvhfjvfseaulg"
 # rule bbox: 20 km around the zone; the zone itself is ~400 m across
 PROPS = ":center 42.93 -72.27 :radius 20km"
 TRIGGERLESS = {
-    "sql": f"device intersects polygon({ZID}) {{ {PROPS} }}",
+    "sql": f"device :radius 1km lt polygon({ZID}) {{ {PROPS} }}",
     "kernel": f"device :radius 100m intersects polygon({ZID}) {{ {PROPS} }}",
     "pairjoin": f"device :radius 300m intersects devices(@) {{ {PROPS} }}",
 }

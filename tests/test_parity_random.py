@@ -61,10 +61,10 @@ def _build_engine(zones) -> Engine:
         f" {{ :center {zones[3][1]} {zones[3][2]} :radius 100km }}",
         rule_id="r" + "1" * 19,
     )
-    # point-device + explicit refs + attribute AND: eligible for the
+    # distance comparator + attribute AND: eligible for the
     # all-Catalyst compiled path (engine/sql_compile.py)
     engine.add_rule(
-        f"device INTERSECTS polygon({ids[4]}, {ids[5]}) and speed range [10 .. 180]",
+        f"device :radius 1km lt polygon({ids[4]}, {ids[5]}) and speed range [10 .. 180]",
         rule_id="r" + "2" * 19,
     )
     return engine

@@ -1,5 +1,6 @@
-"""SQL path for ``polygon(@)`` point-device rules: the Near-prefilter
-candidate universe as fixed expressions — parity vs the kernel."""
+"""``polygon(@)`` point-device rules never compile to Catalyst: the
+kernel stage evaluates them, with the Near-prefilter candidate
+universe, and must emit exactly Engine.detect_batch's match rows."""
 
 from __future__ import annotations
 
@@ -20,7 +21,7 @@ Z2 = "c5vj26evvhfjvfseauk0"
 def _mk_engine(spec: str) -> Engine:
     # `@`-rules require :center props, and braces props mark a rule
     # stateful in the reference (PropExpr → isStateful); to exercise
-    # the stateless SQL path, build the Rule directly with a manual
+    # the stateless path, build the Rule directly with a manual
     # geofence — the documented API for engine-managed rules.
     from spinix_spark.dsl import compile_spec
     from spinix_spark.engine.detect import Rule
@@ -82,19 +83,15 @@ def _key(rows):
         f"device INTERSECTS polygon(@{Z1})",
     ],
 )
-def test_all_zones_sql_vs_kernel(spark, spec):
+def test_all_zones_kernel_vs_engine(spark, spec):
     e1 = _mk_engine(spec)
-    assert try_compile_rule_sql(e1, e1.rules["r" + "0" * 19]) is not None, spec
+    assert try_compile_rule_sql(e1, e1.rules["r" + "0" * 19]) is None, spec
     sdf = spark.createDataFrame(_points())
-    ev_sql, _ = split_output(detect_batch_spark(sdf, e1, prefer_sql=True))
-    e2 = _mk_engine(spec)
-    ev_k, _ = split_output(detect_batch_spark(sdf, e2, prefer_sql=False))
-    k_sql = _key([r.asDict() for r in ev_sql.collect()])
-    k_kernel = _key([r.asDict() for r in ev_k.collect()])
-    assert k_sql == k_kernel, f"{spec}: {k_sql} != {k_kernel}"
+    ev, _ = split_output(detect_batch_spark(sdf, e1))
+    k_spark = _key([r.asDict() for r in ev.collect()])
     k_engine = _key(
         {"url": e["url"], **m}
         for e in _mk_engine(spec).detect_batch(_points()).to_dict("records")
         for m in e["matches"]
     )
-    assert k_sql == k_engine, f"{spec}: {k_sql} != {k_engine}"
+    assert k_spark == k_engine, f"{spec}: {k_spark} != {k_engine}"

@@ -1,6 +1,7 @@
 """SQL-compiled rule path: datetime/string attribute translations must
 match the kernel bit-for-bit (date_format vs pandas strftime, day
-anchors, int truncation)."""
+anchors, int truncation). Each spec pairs the attribute with a
+distance comparator, so the fold and ref capture compile too."""
 
 from __future__ import annotations
 
@@ -18,17 +19,17 @@ K0 = "c5vj26evvhfjvfseauk0"
 Z = "c5vj26evvhfjvfseaulg"
 
 SPECS = [
-    f"device INTERSECTS polygon({Z}) and hour range [0 .. 23]",
-    f"device INTERSECTS polygon({Z}) and month eq 6",
-    f'device INTERSECTS polygon({Z}) and date eq "2023-06-15"',
-    f'device INTERSECTS polygon({Z}) and month eq "June"',
-    f'device INTERSECTS polygon({Z}) and day eq "Thursday"',
-    f"device INTERSECTS polygon({Z}) and time range [12:00 .. 23:00]",
-    f"device INTERSECTS polygon({Z}) and year in [2023, 2024]",
-    f'device INTERSECTS polygon({Z}) and datetime range '
+    f"device :radius 1km lt polygon({Z}) and hour range [0 .. 23]",
+    f"device :radius 1km lt polygon({Z}) and month eq 6",
+    f'device :radius 1km lt polygon({Z}) and date eq "2023-06-15"',
+    f'device :radius 1km lt polygon({Z}) and month eq "June"',
+    f'device :radius 1km lt polygon({Z}) and day eq "Thursday"',
+    f"device :radius 1km lt polygon({Z}) and time range [12:00 .. 23:00]",
+    f"device :radius 1km lt polygon({Z}) and year in [2023, 2024]",
+    f'device :radius 1km lt polygon({Z}) and datetime range '
     '["2023-06-15T00:00:00Z" .. "2023-06-16T00:00:00Z"]',
-    f"device INTERSECTS polygon({Z}) and week range [20 .. 30]",
-    f"device INTERSECTS polygon({Z}) or speed nrange [50 .. 150]",
+    f"device :radius 1km lt polygon({Z}) and week range [20 .. 30]",
+    f"device :radius 1km lt polygon({Z}) or speed nrange [50 .. 150]",
 ]
 
 

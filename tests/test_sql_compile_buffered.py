@@ -1,8 +1,7 @@
-"""Buffered devices and line zones on the Spark detect paths: line
-zones compile to Catalyst for point devices (parity with the kernel),
-and buffered devices (``:radius`` / ``:bbox``) never compile — they
-run on the kernel path, checked here against the sequential
-``Engine.detect_batch`` reference."""
+"""Buffered devices, line zones and device-list membership on the
+Spark detect path: no spatial verb compiles to Catalyst, and the
+kernel stage must emit exactly the sequential ``Engine.detect_batch``
+reference's match rows."""
 
 from __future__ import annotations
 
@@ -65,13 +64,24 @@ def _canon(ev):
     )
 
 
-def _both_paths(spark, rule: str):
-    sdf = spark.createDataFrame(_pts()).repartition(5)
-    ev_sql, _ = split_output(detect_batch_spark(sdf, _engine(rule), prefer_sql=True))
-    ev_k, _ = split_output(detect_batch_spark(sdf, _engine(rule), prefer_sql=False))
-    a, b = _canon(ev_sql), _canon(ev_k)
-    assert a == b, f"rule={rule}: sql={len(a)} kernel={len(b)}"
-    return a
+def _kernel_vs_reference(spark, rule: str):
+    """The rule does not compile; detect_batch_spark's rows equal
+    Engine.detect_batch's."""
+    from spinix_spark.engine.sql_compile import try_compile_rule_sql
+
+    eng = _engine(rule)
+    assert try_compile_rule_sql(eng, eng.rules["r" + "0" * 19]) is None
+    ev, _ = split_output(
+        detect_batch_spark(spark.createDataFrame(_pts()).repartition(5), eng)
+    )
+    want = sorted(
+        (e["url"], m["left_kw"], m["right_kw"], m["op"], tuple(m["right_refs"]))
+        for e in _engine(rule).detect_batch(_pts()).to_dict("records")
+        for m in e["matches"]
+    )
+    got = _canon(ev)
+    assert got == want, f"rule={rule}: spark={len(got)} reference={len(want)}"
+    return got
 
 
 POINT_LINE_RULES = [
@@ -82,16 +92,11 @@ POINT_LINE_RULES = [
 
 
 @pytest.mark.parametrize("rule", POINT_LINE_RULES)
-def test_point_device_line_zone_compiles(spark, rule):
-    """Line zones now compile for point devices — and the compiled
-    path must match the kernel. (Hits on an exact line are
+def test_point_device_line_zone_matches_reference(spark, rule):
+    """Line zones for point devices. (Hits on an exact line are
     measure-zero for random points, so NINTERSECTS/NNEAR carry the
-    row weight; the INTERSECTS variant asserts plan eligibility.)"""
-    eng = _engine(rule)
-    from spinix_spark.engine.sql_compile import try_compile_rule_sql
-
-    assert try_compile_rule_sql(eng, eng.rules["r" + "0" * 19]) is not None
-    _both_paths(spark, rule)
+    row weight.)"""
+    _kernel_vs_reference(spark, rule)
 
 
 BUFFERED_RULES = [
@@ -105,18 +110,15 @@ BUFFERED_RULES = [
 ]
 
 
-def test_devices_object_membership_compiles(spark):
-    """spDevicesObjectOp (devices(list) vs zone) compiles: membership
-    IN gate + delegated zone predicate — parity with the kernel."""
+def test_devices_object_membership_matches_reference(spark):
+    """spDevicesObjectOp (devices(list) vs zone): membership gate +
+    delegated zone predicate."""
     members = ", ".join(
         "d" + np.base_repr(s, 32).lower().rjust(19, "0") for s in (1, 4, 9)
     )
-    rule = f"devices({members}) intersects polygon({ZPOLY})"
-    eng = _engine(rule)
-    from spinix_spark.engine.sql_compile import try_compile_rule_sql
-
-    assert try_compile_rule_sql(eng, eng.rules["r" + "0" * 19]) is not None
-    rows = _both_paths(spark, rule)
+    rows = _kernel_vs_reference(
+        spark, f"devices({members}) intersects polygon({ZPOLY})"
+    )
     assert len(rows) > 0
 
 
@@ -124,18 +126,4 @@ def test_devices_object_membership_compiles(spark):
 def test_buffered_stays_on_kernel_by_default(spark, rule):
     """A buffered device never compiles to Catalyst, and its kernel
     path emits exactly the sequential reference's match rows."""
-    eng = _engine(rule)
-    from spinix_spark.engine.sql_compile import try_compile_rule_sql
-
-    assert try_compile_rule_sql(eng, eng.rules["r" + "0" * 19]) is None
-    ev, _ = split_output(
-        detect_batch_spark(spark.createDataFrame(_pts()).repartition(5), eng)
-    )
-    want = sorted(
-        (e["url"], m["left_kw"], m["right_kw"], m["op"], tuple(m["right_refs"]))
-        for e in _engine(rule).detect_batch(_pts()).to_dict("records")
-        for m in e["matches"]
-    )
-    got = _canon(ev)
-    assert got == want, f"rule={rule}: spark={len(got)} reference={len(want)}"
-    assert len(got) > 0
+    assert len(_kernel_vs_reference(spark, rule)) > 0

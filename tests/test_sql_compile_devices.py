@@ -1,6 +1,8 @@
-"""SQL-compiled path for device-vs-devices rules: candidate snapshot
-positions are plan-time constants, so golden-style specs compile to
-pure Catalyst — must match the kernel path row-for-row."""
+"""Device-vs-devices rules on the Spark detect path: the distance
+comparator to explicit devices compiles to Catalyst (candidate
+positions are plan-time constants), every spatial devices verb takes
+the kernel stage — and each path must emit Engine.detect_batch's match
+rows."""
 
 from __future__ import annotations
 
@@ -15,16 +17,14 @@ K0 = "c5vj26evvhfjvfseauk0"
 OG = "c5vj26evvhfjvfseauog"
 KG = "c5vj26evvhfjvfseaukg"
 
-# (spec, expect_sql_path): two-sided devices specs with a buffered
-# side only compile when EVERY membership variant is point-target —
-# `devices(a) VERB devices(b) :radius X` has a buffered-target variant
-# (a member of b's list) so it falls back to the kernel; single-sided
-# `device VERB devices(...)` with any candidate buffer compiles.
+# (spec, compiles): only the distance comparator compiles; the
+# spatial verbs (membership-gated, buffered or not, and single-sided
+# against a candidate list) are evaluated by the kernel stage alone.
 SPECS = [
-    (f"devices({K0}) INTERSECTS devices({OG}) {{ :center 42.922 -72.276 :radius 10km }}", True),
+    (f"devices({K0}) INTERSECTS devices({OG}) {{ :center 42.922 -72.276 :radius 10km }}", False),
     (f"devices({K0}) NINTERSECTS devices({OG}) :radius 500m {{ :center 42.922 -72.276 :radius 10km }}", False),
     (f"devices({K0}) INTERSECTS devices({OG}) :bbox 500m {{ :center 42.922 -72.276 :radius 10km }}", False),
-    (f"device NEAR devices({OG}, {KG}) :radius 300m {{ :center 42.922 -72.276 :radius 10km }}", True),
+    (f"device NEAR devices({OG}, {KG}) :radius 300m {{ :center 42.922 -72.276 :radius 10km }}", False),
     (f"device :radius 100m eq devices({OG}) {{ :center 42.922 -72.276 :radius 10km }}", True),
 ]
 
@@ -33,7 +33,13 @@ def _strip_props(s: str) -> str:
     return s.split("{")[0].strip()
 
 
-def _mk_engine(spec: str) -> Engine:
+def _mk_engine(stateless: str) -> Engine:
+    """A two-device snapshot and the rule WITHOUT its props braces
+    (braces mark a spec stateful), its center set after compile."""
+    from spinix_spark.dsl import compile_spec
+    from spinix_spark.engine.detect import Rule
+    from spinix_spark.geo.rings import RULE_CIRCLE_STEPS, circle_ring, ring_bbox
+
     e = Engine()
     e.devices.insert_or_replace(
         {"device_id": OG, "layer_id": "0" * 20, "lat": 42.9236704, "lon": -72.2768608}
@@ -41,9 +47,12 @@ def _mk_engine(spec: str) -> Engine:
     e.devices.insert_or_replace(
         {"device_id": KG, "layer_id": "0" * 20, "lat": 42.9226333, "lon": -72.2732452}
     )
-    # props braces would mark the rule stateful → strip and re-add the
-    # center explicitly through add_rule's props path
-    e.add_rule(spec, rule_id="r" + "0" * 19)
+    s = compile_spec(stateless)
+    s.props.center_lat, s.props.center_lon = 42.922, -72.276
+    s.props.radius_m = 10_000.0
+    ring = circle_ring(42.922, -72.276, 10_000.0, RULE_CIRCLE_STEPS)
+    r = Rule(rule_id="r" + "0" * 19, spec=s, bbox=ring_bbox(ring), ring=ring)
+    e.rules[r.rule_id] = r
     return e
 
 
@@ -78,56 +87,21 @@ def _key(rows):
     )
 
 
-@pytest.mark.parametrize("spec,expect_sql", SPECS)
-def test_devices_rule_sql_vs_kernel(spark, spec, expect_sql):
-    # NOTE: specs carry props braces → stateful → ineligible. Test the
-    # stateless form by adding rules without braces but seeding the
-    # center via referenced-devices fallback is unavailable — so use
-    # an explicit zones-free engine and strip the braces, passing the
-    # center through a pre-set spec.props after compile.
+@pytest.mark.parametrize("spec,compiles", SPECS)
+def test_devices_rule_paths_vs_engine(spark, spec, compiles):
     stateless = _strip_props(spec)
-    e1 = Engine()
-    e1.devices.insert_or_replace(
-        {"device_id": OG, "layer_id": "0" * 20, "lat": 42.9236704, "lon": -72.2768608}
+    e = _mk_engine(stateless)
+    assert (try_compile_rule_sql(e, e.rules["r" + "0" * 19]) is not None) == compiles
+
+    want = _key(
+        {"url": ev["url"], "rule_id": ev["rule_id"], **m}
+        for ev in _mk_engine(stateless).detect_batch(_points()).to_dict("records")
+        for m in ev["matches"]
     )
-    e1.devices.insert_or_replace(
-        {"device_id": KG, "layer_id": "0" * 20, "lat": 42.9226333, "lon": -72.2732452}
-    )
-    from spinix_spark.dsl import compile_spec
-    from spinix_spark.engine.detect import Rule
-    from spinix_spark.geo.rings import RULE_CIRCLE_STEPS, circle_ring, ring_bbox
-
-    def add_stateless(e: Engine):
-        s = compile_spec(stateless)
-        s.props.center_lat, s.props.center_lon = 42.922, -72.276
-        s.props.radius_m = 10_000.0
-        ring = circle_ring(42.922, -72.276, 10_000.0, RULE_CIRCLE_STEPS)
-        r = Rule(
-            rule_id="r" + "0" * 19,
-            spec=s,
-            bbox=ring_bbox(ring),
-            ring=ring,
-        )
-        e.rules[r.rule_id] = r
-        return r
-
-    r1 = add_stateless(e1)
-    plan = try_compile_rule_sql(e1, r1)
-    assert (plan is not None) == expect_sql, stateless
-
     sdf = spark.createDataFrame(_points())
-    ev_sql, _ = split_output(detect_batch_spark(sdf, e1, prefer_sql=True))
-
-    e2 = Engine()
-    e2.devices.insert_or_replace(
-        {"device_id": OG, "layer_id": "0" * 20, "lat": 42.9236704, "lon": -72.2768608}
-    )
-    e2.devices.insert_or_replace(
-        {"device_id": KG, "layer_id": "0" * 20, "lat": 42.9226333, "lon": -72.2732452}
-    )
-    add_stateless(e2)
-    ev_k, _ = split_output(detect_batch_spark(sdf, e2, prefer_sql=False))
-
-    k_sql = _key([r.asDict() for r in ev_sql.collect()])
-    k_kernel = _key([r.asDict() for r in ev_k.collect()])
-    assert k_sql == k_kernel, f"{stateless}: {k_sql} != {k_kernel}"
+    for prefer_sql in (True, False):
+        ev, _ = split_output(
+            detect_batch_spark(sdf, _mk_engine(stateless), prefer_sql=prefer_sql)
+        )
+        got = _key([r.asDict() for r in ev.collect()])
+        assert got == want, f"{stateless} prefer_sql={prefer_sql}: {got} != {want}"

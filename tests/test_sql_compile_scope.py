@@ -1,0 +1,99 @@
+"""What compiles to Catalyst: attribute and distance rules only. Every
+spatial verb — a point or buffered device, or a device list, against
+explicit zones, ``@``, line zones or devices — is evaluated by the
+kernel stage alone, so a registry of spatial rules plans one kernel
+stage instead of a union of compiled scans."""
+
+from __future__ import annotations
+
+import numpy as np
+import pytest
+
+from spinix_spark.engine.detect import Engine
+from spinix_spark.engine.spark_pipeline import detect_batch_spark
+from spinix_spark.engine.sql_compile import try_compile_rule_sql
+from spinix_spark.engine.stores import Zone, zone_from_ring
+from spinix_spark.geo.rings import circle_ring
+
+LAYER = "0" * 20
+Z = "c5vj26evvhfjvfseaulg"
+ZL = "c5vj26evvhfjvfseauk0"
+X1 = "c5vj26evvhfjvfseauog"
+X2 = "c5vj26evvhfjvfseaukg"
+PROPS = "{ :center 42.93 -72.27 :radius 20km }"
+
+# (spec, compiles)
+SHAPES = [
+    # explicit zones, every verb family, alone and with a companion
+    (f"device intersects polygon({Z}) {PROPS}", False),
+    (f"device NEAR polygon({Z}) {PROPS}", False),
+    (f"device NINTERSECTS polygon({Z}, {ZL}) {PROPS}", False),
+    (f"device IN polygon({Z}) and speed range [30 .. 120] {PROPS}", False),
+    # polygon(@)
+    (f"device intersects polygon(@) {PROPS}", False),
+    (f"device NIN polygon(@) {PROPS}", False),
+    # line zones
+    (f"device intersects line({ZL}) {PROPS}", False),
+    # devices(list) VERB polygon
+    (f"devices({X1}, {X2}) intersects polygon({Z}) {PROPS}", False),
+    # device VERB devices(list): point and :radius candidates
+    (f"device NEAR devices({X1}, {X2}) {PROPS}", False),
+    (f"device intersects devices({X1}, {X2}) :radius 2km {PROPS}", False),
+    # devices(A) VERB devices(B)
+    (f"devices({X1}) intersects devices({X2}) {PROPS}", False),
+    # attribute and distance rules still compile
+    (f"speed range [30 .. 120] {PROPS}", True),
+    (f'day eq "Wednesday" and status in [1, 2] {PROPS}', True),
+    (f'datetime range ["2023-11-14T23:00:00Z" .. "2023-11-15T08:00:00Z"] {PROPS}', True),
+    (f"device :radius 1km lt devices({X1}, {X2}) {PROPS}", True),
+    (f"device :radius 1km gte polygon({Z}) or speed gt 100 {PROPS}", True),
+]
+
+
+def _engine(spec: str) -> Engine:
+    eng = Engine()
+    eng.zones.add(zone_from_ring(Z, circle_ring(42.93, -72.27, 900.0, 6)))
+    eng.zones.add(
+        Zone(ZL, LAYER, "line", lines=[np.array([(42.92, -72.28), (42.94, -72.26)])])
+    )
+    for did, lat in ((X1, 42.931), (X2, 42.929)):
+        eng.devices.insert_or_replace(
+            {"device_id": did, "layer_id": LAYER, "lat": lat, "lon": -72.27}
+        )
+    eng.add_rule(spec, rule_id="r" + "0" * 19)
+    return eng
+
+
+@pytest.mark.parametrize("spec,compiles", SHAPES)
+def test_only_attribute_and_distance_rules_compile(spec, compiles):
+    eng = _engine(spec)
+    plan = try_compile_rule_sql(eng, eng.rules["r" + "0" * 19])
+    assert (plan is not None) == compiles, spec
+
+
+def test_geo_pipeline_rules_plan_budget(spark):
+    """bench.py ``geo_pipeline``'s two rules — a buffered zone verb and
+    a point ``NEAR`` verb — fold in ONE kernel stage: one MapInPandas
+    and no Union of a second, compiled scan."""
+    from spinix_spark.io.geoparse import geoparse_points
+    from spinix_spark.io.pages import BASE_LAT, BASE_LON, synthesize_pages
+
+    eng = Engine()
+    eng.zones.add(
+        zone_from_ring("c5vj26evvhfjvfseaulg", circle_ring(BASE_LAT, BASE_LON, 900.0, 6))
+    )
+    eng.zones.add(
+        zone_from_ring(
+            "c5vj26evvhfjvfseauk0", circle_ring(BASE_LAT + 0.3, BASE_LON + 0.3, 1500.0, 6)
+        )
+    )
+    eng.add_rule(
+        "device :radius 300m INTERSECTS polygon(c5vj26evvhfjvfseaulg,"
+        " c5vj26evvhfjvfseauk0) and speed range [30 .. 170]",
+        rule_id="r" + "0" * 19,
+    )
+    eng.add_rule("device NEAR polygon(c5vj26evvhfjvfseaulg)", rule_id="r" + "1" * 19)
+    points = geoparse_points(synthesize_pages(spark, 50)).drop("text")
+    plan = detect_batch_spark(points, eng)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Union" not in plan, plan

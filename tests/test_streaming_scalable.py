@@ -432,3 +432,69 @@ def test_two_table_work_dir_refused(spark, tmp_path):
         with pytest.raises(ValueError, match=f"{old}/.*two-table state layout"):
             stream_detect_scalable(stream, engine, lambda e, b: None, work_dir=str(work))
     assert len(spark.streams.active) == active  # no query started
+
+
+def test_snapshot_keeps_newest_row_on_every_surface(spark, tmp_path):
+    """A micro-batch that holds a device's rows out of datetime order
+    leaves its NEWEST row in the snapshot — in Engine.detect_batch as
+    in the stream's devices table — so the next batch's devices(@)
+    events agree across surfaces."""
+    d0, d1, d2 = (f"d{j:019d}" for j in range(3))
+
+    def rows(specs):
+        return pd.DataFrame(
+            {
+                "url": [f"u{dt}" for _, dt, _ in specs],
+                "device_id": [d for d, _, _ in specs],
+                "layer_id": [LAYER] * len(specs),
+                "lat": [lat for _, _, lat in specs],
+                "lon": [-72.27] * len(specs),
+                "datetime": [1700000000 + dt for _, dt, _ in specs],
+                "speed": [10.0] * len(specs),
+                "status": [1] * len(specs),
+            }
+        )
+
+    # batch 0: d0 at t=200 (42.930), then d0 at t=100 (42.950, 2.2 km north)
+    b0 = rows([(d0, 200, 42.9300), (d0, 100, 42.9500)])
+    # batch 1: d1 next to d0's newest position, d2 next to its older one
+    b1 = rows([(d1, 300, 42.9301), (d2, 301, 42.9501)])
+
+    engine = Engine()
+    engine.add_rule(RULE, rule_id="r" + "0" * 19)
+    engine.detect_batch(b0)
+    kept = engine.devices.lookup(d0)
+    assert (kept["datetime"], kept["lat"]) == (1700000200, 42.9300)
+    want = sorted(
+        (e["url"], tuple(sorted(m["right_refs"])))
+        for e in engine.detect_batch(b1).to_dict("records")
+        for m in e["matches"]
+    )
+    assert want == [("u300", (d0,))]
+
+    src = str(tmp_path / "src")
+    for b in (b0, b1):
+        spark.createDataFrame(b).coalesce(1).write.mode("append").parquet(src)
+    stream = (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    stream_engine = Engine()
+    stream_engine.add_rule(RULE, rule_id="r" + "0" * 19)
+    got: dict[int, list] = {}
+
+    def sink(events, batch_id):
+        got[batch_id] = sorted(
+            (r.url, tuple(sorted(r.right_refs))) for r in events.collect()
+        )
+
+    q = stream_detect_scalable(
+        stream,
+        stream_engine,
+        sink,
+        work_dir=str(tmp_path / "work"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(180)
+    assert got[1] == want

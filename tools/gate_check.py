@@ -4,6 +4,8 @@ Runs each __spark_entry__ query on Spark AND its DuckDB oracle over the
 same parquet tables, then compares row count, schema (column names) and
 exact values (columns sorted by name, rows sorted by all columns,
 elementwise exact equality — floats compared bit-for-bit via repr).
+Each compared query's line ends with ``spark_s=<seconds>``: the wall
+time of building and collecting its Spark result (``toPandas``).
 Usage:
     python tools/gate_check.py [--adversarial] [sf_dir] [query ...]
 
@@ -17,6 +19,7 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -88,15 +91,17 @@ def main() -> None:
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        t0 = time.perf_counter()
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"{name}: SPARK ERROR {e}")
             failures.append(name)
             continue
+        spark_s = f"spark_s={time.perf_counter() - t0:.2f}"
         sql = oracles.get(name)
         if sql is None:
-            print(f"{name}: no_oracle rows={len(sdf)}")
+            print(f"{name}: no_oracle rows={len(sdf)} {spark_s}")
             continue
         try:
             odf = con.execute(sql).fetch_df()
@@ -121,7 +126,7 @@ def main() -> None:
                     break
                 print(
                     f"{name}: rows={rows} schema={schema} VALUES=False "
-                    f"bad_cols={bad_cols} example={ex}"
+                    f"bad_cols={bad_cols} example={ex} {spark_s}"
                 )
                 failures.append(name)
                 continue
@@ -130,7 +135,7 @@ def main() -> None:
             failures.append(name)
         print(
             f"{name}: {status} rows={len(sdf)}/{len(odf)} schema={schema} "
-            f"values={values}"
+            f"values={values} {spark_s}"
         )
     print("\nFAILURES:", failures if failures else "none")
     spark.stop()
