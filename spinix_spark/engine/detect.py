@@ -126,7 +126,7 @@ class Engine:
     ) -> None:
         self.scheme = scheme
         # opt-in dwell evaluation for ``:time duration|after`` object
-        # suffixes (runtime._apply_dwell). Default False = reference
+        # suffixes (runtime.fold_state). Default False = reference
         # row parity (the reference only marks such rules stateful,
         # runtime.go:270-285, and never evaluates the dwell — see
         # COVERAGE.md parity footnote).

@@ -21,8 +21,10 @@ operator-for-operator (file:line cited per class below), including:
 - the distance comparators' last-candidate-wins ``Ok`` plus
   per-candidate ref collection (runtime.go:1795-1825 — replicated
   bug-for-bug)
-- trigger state: check → evaluate → changeState (hits increment per
-  evaluation, not per match — runtime.go:224-235)
+- trigger state: reset → checkTrigger → changeState per gated row,
+  hits incrementing per evaluation, not per match (runtime.go:103-163,
+  224-235); ``fold_state`` runs it after node evaluation, which never
+  reads state, together with the opt-in dwell visits
 
 Determinism note: the reference stamps state time with the wall clock
 (``State.SetTime(time.Now())``, runtime.go:153) but evaluates trigger
@@ -1273,12 +1275,12 @@ def eval_node(node, batch: DeviceBatch, ref: Reference, layer: str) -> NodeResul
     raise TypeError(f"unknown node type: {type(node)!r}")
 
 
-# --- spec evaluation (fold + trigger state, runtime.go:133-236) ----------
+# --- spec evaluation (state fold + node fold, runtime.go:103-236) --------
 
 
 def _dwell_lit(node) -> ast.ObjectLit | None:
     """The node's ObjectLit iff it carries a live ``:time duration|
-    after`` suffix on a spatial verb (dwell scope; see _apply_dwell).
+    after`` suffix on a spatial verb (dwell scope; see fold_state).
     Comparator ops (EqualObjectOp) keep the reference's stateful-mark-
     only treatment even under ``eval_dwell``."""
     if isinstance(node, (SpObjectOp, SpDevicesObjectOp)):
@@ -1288,10 +1290,6 @@ def _dwell_lit(node) -> ast.ObjectLit | None:
     return None
 
 
-def spec_has_dwell(spec: CompiledSpec) -> bool:
-    return any(_dwell_lit(n) is not None for n in spec.nodes)
-
-
 def spec_carries_state(spec: CompiledSpec, eval_dwell: bool) -> bool:
     """The state contract: a rule keeps (device, rule) state only when a
     later event can depend on it — a real ``:trigger``, or a dwell
@@ -1299,92 +1297,116 @@ def spec_carries_state(spec: CompiledSpec, eval_dwell: bool) -> bool:
     marks a spec stateful (``is_stateful``, runtime.go:338-342) but its
     trigger gate is constant-true, so its state could decide nothing."""
     return spec.props.repeat != ast.REPEAT_NONE or (
-        eval_dwell and spec_has_dwell(spec)
+        eval_dwell and any(_dwell_lit(n) is not None for n in spec.nodes)
     )
 
 
-def _apply_dwell(
+def fold_state(
     spec: CompiledSpec,
     batch: DeviceBatch,
-    ref: Reference,
+    states: StateStore,
     rule_id: str,
-    node_results: list[NodeResult],
     layer_ok: np.ndarray,
-) -> None:
-    """Dwell-time gating for ``:time duration|after <dur>`` object
-    suffixes — EXCEEDS the reference: spinix parses the suffix and
-    marks the rule stateful (runtime.go:270-285, parser.go:499) but
-    never calls ``State.LastVisit``/``SetLastVisit`` (state.go:237-247)
-    from any evaluater, so the reference's own behavior is "suffix is
-    a no-op". This engine implements the evaluation the stub implies,
-    opt-in via ``eval_dwell`` so the default keeps reference row
-    parity. Semantics, per (rule, device, node, object):
+    node_results: list[NodeResult],
+    eval_dwell: bool,
+) -> np.ndarray:
+    """The (device, rule) state machine, one fold for every detect
+    surface: each layer-gated row looks up its state once, then
 
-    - a *visit* opens at the first gated event where the node's
-      spatial predicate holds for that object and CLEARS at the first
-      gated event where it does not (events outside the rule bbox are
-      never observed — same pruning discipline as the trigger fold);
+    - with a real ``:trigger``, maybe-resets (State.NeedReset,
+      state.go:199-211), runs checkTrigger, then changeState
+      (runtime.go:103-163);
+    - under ``eval_dwell``, advances each dwell node's visits and
+      rewrites the node's ``ok`` and ``right_refs`` (see below).
+
+    Returns the gate: ``layer_ok``, narrowed to the rows whose trigger
+    fired when the rule has one. Node evaluation never reads state, so
+    folding after it gives the reference's check → evaluate →
+    changeState outcome. A rule with neither a trigger nor a live
+    dwell suffix keeps no state and skips the loop.
+
+    SEQUENTIAL per row, exactly the reference's per-event ordering
+    (Engine.Detect evaluates one update at a time, engine.go:190-225):
+    row i+1 of a device sees the state as updated by row i, so callers
+    feed rows in (device_id, datetime, url) order and the outcome is
+    independent of Arrow batch boundaries and partition count.
+
+    Dwell (``:time duration|after <dur>`` on a spatial verb) EXCEEDS
+    the reference: spinix parses the suffix and marks the rule stateful
+    (runtime.go:270-285, parser.go:499) but never calls
+    ``State.LastVisit``/``SetLastVisit`` (state.go:237-247), so its
+    suffix is a no-op; this engine evaluates it, opt-in via
+    ``eval_dwell`` so the default keeps reference row parity. Per
+    (node, object):
+
+    - a *visit* opens at the first gated row where the node holds for
+      the object and CLEARS at the first gated row where it does not
+      (rows outside the rule bbox are never observed);
     - ``duration D`` (level-triggered): the node matches the object at
-      event time t iff the predicate holds and t - first_visit >= D;
+      time t iff it holds and t - first_visit >= D;
     - ``after D`` (edge-triggered): same threshold, but only the first
-      qualifying event of each visit matches.
+      qualifying row of each visit matches.
 
-    Visit state rides the per-(device, rule) trigger-state dict under
-    ``visits`` ({"<node_idx>:<object_id>": first_visit}; the reference
-    shape is State.objectsVisits, a per-objectID int64 map — the node
-    index is prefixed so two dwell nodes over the same object cannot
-    alias). An ``after`` node that fired stores -(first_visit + 1) —
-    sign-safe for visits opened at unix ts 0, where a bare -first
-    would alias 0 and lose the mark (ADVICE r6). A fired mark saved
-    in the old bare ``-first`` format decodes 1 s early; that cannot
-    be observed: a fired ``after`` node stays suppressed while its mark
-    is negative (the decoded first visit decides nothing until a miss
-    clears the visit), and ``duration`` nodes never store negatives.
-    Dwell state updates on every gated event regardless of the other nodes'
-    outcomes (presence tracking is per node, not per rule result).
-    The fold is sequential in the batch's row order — identical
-    ordering contract to the trigger gate (callers feed (device_id,
-    datetime)-sorted rows); requires real event timestamps.
-    """
-    n = batch.n
-    for j, node in enumerate(spec.nodes):
-        lit = _dwell_lit(node)
-        if lit is None:
-            continue
-        res = node_results[j]
-        refs = res.right_refs
-        dur = float(lit.dur_val)
-        edge = lit.dur_typ is Token.AFTER
-        prefix = f"{j}:"
-        explicit = (
-            [prefix + r for r in lit.refs] if (lit.refs and not lit.all) else None
-        )
-        new_ok = np.zeros(n, dtype=bool)
-        for i in range(n):
-            if not layer_ok[i]:
-                continue
-            st = ref.states.lookup_or_make(str(batch.device_id[i]), rule_id)
-            visits = st.get("visits")
-            if not isinstance(visits, dict):
-                visits = st["visits"] = {}
-            now = int(batch.datetime[i])
-            hit_keys = {prefix + o: o for o in (refs[i] if refs is not None else ())}
+    Visits live in the state's ``visits`` map ({"<node_idx>:<object_id>":
+    first_visit}, the shape of State.objectsVisits with the node index
+    prefixed so two dwell nodes over one object cannot alias). A fired
+    ``after`` visit stores -(first_visit + 1), sign-safe for a visit
+    opened at unix ts 0 (a mark saved in the older bare ``-first`` form
+    decodes 1 s early, which no later row can observe: the node stays
+    suppressed while the mark is negative). Visits advance on every gated row whatever the
+    other nodes and the trigger decide, and a trigger reset leaves them
+    alone (stores.state_reset)."""
+    trigger = spec.props.repeat != ast.REPEAT_NONE
+    dwell = []  # (node result, prefix, explicit keys, duration, edge, new ok)
+    if eval_dwell:
+        for j, node in enumerate(spec.nodes):
+            lit = _dwell_lit(node)
+            if lit is not None:
+                prefix = f"{j}:"
+                explicit = (
+                    [prefix + r for r in lit.refs] if lit.refs and not lit.all else None
+                )
+                dwell.append(
+                    (node_results[j], prefix, explicit, float(lit.dur_val),
+                     lit.dur_typ is Token.AFTER, np.zeros(batch.n, dtype=bool))
+                )
+    if not trigger and not dwell:
+        return layer_ok
+    reset_s = spec.props.reset_interval_s
+    counts_hits = spec.props.repeat in (ast.REPEAT_TIMES, ast.REPEAT_ONCE)
+    gate = np.zeros(batch.n, dtype=bool) if trigger else layer_ok
+    for i in np.flatnonzero(layer_ok).tolist():
+        # the store's own dict, already marked dirty: mutated in place
+        st = states.lookup_or_make(str(batch.device_id[i]), rule_id)
+        now = int(batch.datetime[i])
+        if trigger:
+            if now > 0:
+                st["now"] = now
+            if state_need_reset(st, reset_s):
+                state_reset(st)
+                st["last_reset"] = st["now"]  # UpdateLastResetTime
+            if _check_trigger(spec, st):
+                # changeState — immediately, so the device's next row sees it
+                gate[i] = True
+                st["last_seen"] = st["now"]
+                if counts_hits:
+                    st["hits"] += 1
+        for res, prefix, explicit, dur, edge, new_ok in dwell:
+            visits = st["visits"]
+            refs = res.right_refs
+            hits = {prefix + o: o for o in (refs[i] if refs is not None else ())}
             # a miss clears the visit — only keys this node owns
-            universe = (
+            owned = (
                 explicit
                 if explicit is not None
                 else [k for k in visits if k.startswith(prefix)]
             )
-            for k in universe:
-                if k in visits and k not in hit_keys:
+            for k in owned:
+                if k in visits and k not in hits:
                     del visits[k]
-            ok_objs: list[str] = []
-            for k, obj in hit_keys.items():
-                fv = visits.get(k)
-                if fv is None:
-                    fv = visits[k] = now
-                # fired mark = -(first+1): sign-safe when a visit opens
-                # at unix ts 0 (-0 == 0 lost the mark — ADVICE r6)
+            ok_objs = []
+            for k, obj in hits.items():
+                fv = visits.setdefault(k, now)
                 first = (-fv - 1) if fv < 0 else fv
                 if now - first >= dur and not (edge and fv < 0):
                     ok_objs.append(obj)
@@ -1393,7 +1415,25 @@ def _apply_dwell(
             new_ok[i] = bool(ok_objs)
             if refs is not None:
                 refs[i] = ok_objs
+    for res, *_, new_ok in dwell:
         res.ok = new_ok
+    return gate
+
+
+def _check_trigger(spec: CompiledSpec, st: dict) -> bool:
+    """checkTrigger (runtime.go:111-131)."""
+    repeat = spec.props.repeat
+    if repeat == ast.REPEAT_EVERY:
+        if st["last_seen"] == 0:
+            return True
+        return (st["now"] - st["last_reset"]) > int(spec.props.delay_s)
+    if repeat == ast.REPEAT_TIMES:
+        if (st["now"] - st["last_seen"]) < int(spec.props.interval_s):
+            return False
+        return st["hits"] < spec.props.times
+    if repeat == ast.REPEAT_ONCE:
+        return st["hits"] == 0
+    return True
 
 
 def eval_spec_full(
@@ -1403,12 +1443,15 @@ def eval_spec_full(
     rule_id: str,
     eval_dwell: bool = False,
 ):
-    """Low-level evaluation: returns
+    """Low-level evaluation of one rule over one batch: every node is
+    evaluated vectorized, then ``fold_state`` advances the rule's
+    (device, rule) trigger and dwell state in one sequential pass — the
+    one state machine of every detect surface. Returns
     ``(final_ok, node_results, recorded, gate)`` where ``gate`` is the
     layer∧trigger mask and ``recorded[j]`` marks devices for which
     node j's Match would be captured (AND-skip semantics,
     runtime.go:186-231). Callers build match rows columnar from these
-    arrays — no per-row Python on the hot path."""
+    arrays."""
     batch = DeviceBatch(batch_pdf)
     n = batch.n
     if n == 0 or not spec.nodes:
@@ -1416,17 +1459,10 @@ def eval_spec_full(
         return z, [], [], z
 
     layer_ok = batch.layer_id == spec.props.layer
-
-    gate = layer_ok
-    if spec.props.repeat != ast.REPEAT_NONE:
-        gate = fold_trigger(
-            ref.states, spec, rule_id, batch.device_id, batch.datetime, layer_ok
-        )
-
     node_results = [eval_node(node, batch, ref, spec.props.layer) for node in spec.nodes]
-
-    if eval_dwell:
-        _apply_dwell(spec, batch, ref, rule_id, node_results, layer_ok)
+    gate = fold_state(
+        spec, batch, ref.states, rule_id, layer_ok, node_results, eval_dwell
+    )
 
     # left-to-right fold with AND-skip (runtime.go:186-231)
     acc = node_results[0].ok & layer_ok
@@ -1490,58 +1526,3 @@ def eval_spec(
                     }
                 )
     return final_ok, matches
-
-
-def fold_trigger(
-    states: StateStore,
-    spec: CompiledSpec,
-    rule_id: str,
-    device_ids: np.ndarray,
-    nows: np.ndarray,
-    gate: np.ndarray,
-) -> np.ndarray:
-    """The trigger state machine, one fold for every detect surface:
-    per gated row, maybe-reset (State.NeedReset, state.go:199-211),
-    checkTrigger, then changeState (runtime.go:103-163). Returns the
-    fired mask (False on ungated rows).
-
-    SEQUENTIAL per row, exactly the reference's per-event ordering
-    (Engine.Detect evaluates one update at a time, engine.go:190-225):
-    row i+1 of a device sees the state as updated by row i, so callers
-    feed rows in (device_id, datetime, url) order and the outcome is
-    independent of Arrow batch boundaries and partition count."""
-    reset_s = spec.props.reset_interval_s
-    counts_hits = spec.props.repeat in (ast.REPEAT_TIMES, ast.REPEAT_ONCE)
-    fired = np.zeros(len(nows), dtype=bool)
-    for i in np.flatnonzero(gate).tolist():
-        # the store's own dict, already marked dirty: mutated in place
-        st = states.lookup_or_make(str(device_ids[i]), rule_id)
-        now = int(nows[i])
-        if now > 0:
-            st["now"] = now
-        if state_need_reset(st, reset_s):
-            state_reset(st)
-            st["last_reset"] = st["now"]  # UpdateLastResetTime
-        if _check_trigger(spec, st):
-            # changeState — immediately, so the device's next row sees it
-            fired[i] = True
-            st["last_seen"] = st["now"]
-            if counts_hits:
-                st["hits"] += 1
-    return fired
-
-
-def _check_trigger(spec: CompiledSpec, st: dict) -> bool:
-    """checkTrigger (runtime.go:111-131)."""
-    repeat = spec.props.repeat
-    if repeat == ast.REPEAT_EVERY:
-        if st["last_seen"] == 0:
-            return True
-        return (st["now"] - st["last_reset"]) > int(spec.props.delay_s)
-    if repeat == ast.REPEAT_TIMES:
-        if (st["now"] - st["last_seen"]) < int(spec.props.interval_s):
-            return False
-        return st["hits"] < spec.props.times
-    if repeat == ast.REPEAT_ONCE:
-        return st["hits"] == 0
-    return True

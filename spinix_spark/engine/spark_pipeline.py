@@ -19,8 +19,8 @@ takes one of three strategies:
 
 The kernel stage is shared with the keyed stream. It calls
 ``rule_gate_mask`` (engine/detect.py) for the in-task bbox gate,
-``eval_spec_full`` (engine/runtime.py), whose ``fold_trigger`` is the
-sequential per-row trigger fold of every surface, and
+``eval_spec_full`` (engine/runtime.py), whose ``fold_state`` is the
+one sequential per-row trigger and dwell fold of every surface, and
 ``_state_rows_frame`` for the state rows. Rows of rules that carry
 state (``runtime.spec_carries_state``) are hash-partitioned by
 device_id and sorted by (device_id, datetime, url), so each (device,
@@ -57,7 +57,6 @@ from spinix_spark.engine.runtime import (
     at_verdict_col,
     eval_spec_full,
     spec_carries_state,
-    spec_has_dwell,
 )
 from spinix_spark.engine.stores import DeviceSnapshot, StateStore
 
@@ -79,7 +78,7 @@ OUT_SCHEMA = StructType(
         StructField("hits", LongType()),
         StructField("now", LongType()),
         # dwell visit map (JSON string; empty unless eval_dwell rules
-        # ran — see runtime._apply_dwell)
+        # ran — see runtime.fold_state)
         StructField("visits", StringType()),
     ]
 )
@@ -145,15 +144,15 @@ def _rule_prune_expr_for(engine: Engine, rule) -> str:
     (SURVEY.md §2A.1) so rules containing only those keep the wide
     bbox.
 
-    Rules with a REAL trigger never tighten: the trigger state
-    advances on every in-bbox layer-matching row regardless of node
-    outcomes (checkTrigger/changeState run BEFORE node evaluation,
-    runtime.go:103-163), so dropping a non-matching in-bbox row would
-    change which later rows fire — tightening is only event-sound when
-    the gate is constant-true. Dwell rules under ``eval_dwell`` never
-    tighten either, even at repeat NONE: a non-matching in-bbox row is
-    the event that CLEARS a visit (runtime._apply_dwell), so dropping
-    it would let a stale first_visit anchor qualify later rows."""
+    Rules that carry state (``runtime.spec_carries_state``) never
+    tighten: ``runtime.fold_state`` advances the state on every in-bbox
+    layer-matching row regardless of node outcomes. For a REAL trigger
+    (checkTrigger/changeState, runtime.go:103-163), dropping a
+    non-matching in-bbox row would change which later rows fire —
+    tightening is only event-sound when the gate is constant-true. For
+    a dwell rule under ``eval_dwell``, a non-matching in-bbox row is
+    the event that CLEARS a visit, so dropping it would let a stale
+    first_visit anchor qualify later rows."""
     import math
 
     from spinix_spark.dsl.compiler import SpDevicesObjectOp, SpObjectOp
@@ -384,8 +383,8 @@ def kernel_event_frames(
 ) -> list[pd.DataFrame]:
     """The kernel stage of detect_batch_spark and the keyed stream: per
     ``(rule_id, spec, bbox)`` in ``rules``, the bbox gate
-    (``rule_gate_mask``), then ``eval_spec_full`` (trigger and dwell
-    state fold into ``ref.states``), then one columnar
+    (``rule_gate_mask``), then ``eval_spec_full`` (its ``fold_state``
+    advances trigger and dwell state in ``ref.states``), then one columnar
     ``_event_rows_frame`` per matching node. Rows must arrive in
     per-device event order."""
     frames: list[pd.DataFrame] = []
@@ -577,12 +576,6 @@ def detect_batch_spark(
     kernel_rules = []
     at_outs = []
     for r in engine.rules.values():
-        if engine.eval_dwell and spec_has_dwell(r.spec):
-            # dwell gating is a sequential per-device fold over the
-            # node's per-object hits — kernel path only (the SQL and
-            # pair-join paths have no visit state)
-            kernel_rules.append(r)
-            continue
         if devices_df is not None and prefer_sql:
             at_node = devices_at_node(r)
             if at_node is not None:

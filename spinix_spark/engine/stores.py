@@ -32,7 +32,6 @@ from spinix_spark.geo.geodesy import (
     MIN_DIST_METERS,
     TINY_REGION_SIZE,
     SMALL_REGION_SIZE,
-    haversine_m,
     lon_to_frame,
     normalize_distance,
 )
@@ -354,12 +353,6 @@ class DeviceSnapshot:
             hit |= a["lat"] <= -90.0 + 2.0 * deg_r
         return [self._rows[a["device_id"][i]] for i in np.nonzero(hit)[0]]
 
-    def moved_distance(self, row: dict) -> float | None:
-        prev = self._rows.get(row["device_id"])
-        if prev is None:
-            return None
-        return float(haversine_m(prev["lat"], prev["lon"], row["lat"], row["lon"]))
-
 
 def state_need_reset(st: dict, interval_s: float) -> bool:
     """State.NeedReset (state.go:199-211): zero interval or never-reset
@@ -392,7 +385,9 @@ def state_reset(st: dict) -> None:
 
 
 class StateStore:
-    """Per-(device, rule) trigger state (state.go:111-127).
+    """Per-(device, rule) state (state.go:111-127): the trigger fields
+    and the dwell ``visits`` map, both advanced by
+    ``runtime.fold_state`` in one pass per row.
 
     Tracks *dirty* keys — states created or handed out for mutation
     since the last :meth:`clear_dirty` — so a distributed task that
@@ -425,8 +420,8 @@ class StateStore:
         if st is None:
             st = self._blank(device_id, rule_id)
             self._states[key] = st
-        # the returned dict is mutated in place (runtime.fold_trigger,
-        # runtime._apply_dwell), so handing it out marks it dirty
+        # the returned dict is mutated in place (runtime.fold_state),
+        # so handing it out marks it dirty
         self._dirty.add(key)
         return st
 

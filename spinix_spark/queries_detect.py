@@ -618,7 +618,7 @@ def _zone_world_oracle(world: str) -> str:
     )
 
 
-# --- dwell gates (op exceeds the reference: runtime._apply_dwell) --------
+# --- dwell gates (op exceeds the reference: runtime.fold_state) ---------
 # ``:time duration|after`` evaluation is flag-gated (Engine(eval_dwell=
 # True)); the reference parses the suffix and marks the rule stateful
 # (runtime.go:270-285) but never calls State.LastVisit/SetLastVisit

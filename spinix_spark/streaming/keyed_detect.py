@@ -12,7 +12,7 @@ and evaluated in ``applyInPandasWithState``, so
 - all of a device's rows in a micro-batch are concatenated and sorted
   once by (datetime, url), then run through the kernel stage that
   detect_batch_spark uses (``spark_pipeline.kernel_event_frames``: bbox
-  gate, ``eval_spec_full`` with its trigger and dwell folds, columnar
+  gate, ``eval_spec_full`` with its one trigger and dwell fold, columnar
   event rows) — the reference's sequential evaluate-then-insert order
   per device (engine.go:218-221), independent of Arrow batch
   boundaries;

@@ -5,7 +5,8 @@ SetLastVisit (state.go:237-247) from any evaluater. Evaluation is
 opt-in (``Engine(eval_dwell=True)``); default-off keeps reference row
 parity (test_flag_off_parity pins that).
 
-Semantics pinned here (runtime._apply_dwell):
+Semantics pinned here (the dwell half of runtime.fold_state, the one
+per-row pass that also advances the trigger):
 - a visit opens at the first gated event where the node's predicate
   holds for the object and clears at the first gated miss;
 - ``duration D`` is level-triggered: every in-visit event with

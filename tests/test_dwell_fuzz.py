@@ -1,4 +1,5 @@
-"""Randomized parity for the dwell fold (runtime._apply_dwell).
+"""Randomized parity for the dwell half of the state fold
+(runtime.fold_state).
 
 An INDEPENDENT pure-Python simulator replays the documented dwell
 semantics (visit opens on first hit, clears on first miss;

@@ -7,6 +7,7 @@ stage instead of a union of compiled scans."""
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from spinix_spark.engine.detect import Engine
@@ -97,3 +98,69 @@ def test_geo_pipeline_rules_plan_budget(spark):
     plan = detect_batch_spark(points, eng)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1, plan
     assert "Union" not in plan, plan
+
+
+DWELL_SPECS = [
+    f"device intersects polygon({Z}) :time duration 60s"
+    f" and speed range [30 .. 120] {PROPS}",
+    f"device NINTERSECTS devices(@) and device intersects polygon({Z})"
+    f" :time duration 60s {PROPS}",
+]
+
+
+@pytest.mark.parametrize("spec", DWELL_SPECS)
+def test_dwell_rule_runs_one_kernel_stage(spark, spec):
+    """Under ``eval_dwell`` with the snapshot as ``devices_df``, a dwell
+    rule with an attribute companion and one with a ``devices(@)``
+    node each fold in ONE kernel stage — no compiled scan, no all-JVM
+    pair-join route — and emit Engine.detect_batch's events."""
+    rng = np.random.default_rng(7)
+    n = 48
+    pdf = pd.DataFrame(
+        {
+            "url": [f"u{i:02d}" for i in range(n)],
+            "device_id": [f"d{i % 4:019d}" for i in range(n)],
+            "layer_id": LAYER,
+            "lat": 42.93 + rng.uniform(-0.012, 0.012, n),
+            "lon": -72.27 + rng.uniform(-0.012, 0.012, n),
+            "datetime": 1_700_000_000 + 20 * np.arange(n),
+            "speed": rng.uniform(0, 150, n),
+            "status": 0,
+        }
+    )
+    snap = pd.DataFrame(
+        {
+            "device_id": [f"s{i:019d}" for i in range(6)],
+            "layer_id": LAYER,
+            "lat": 42.93 + rng.uniform(-0.01, 0.01, 6),
+            "lon": -72.27 + rng.uniform(-0.01, 0.01, 6),
+            "datetime": 1_690_000_000,
+        }
+    )
+
+    def engine(with_snapshot: bool) -> Engine:
+        eng = Engine(eval_dwell=True)
+        eng.zones.add(zone_from_ring(Z, circle_ring(42.93, -72.27, 900.0, 6)))
+        if with_snapshot:
+            for row in snap.to_dict("records"):
+                eng.devices.insert_or_replace(row)
+        eng.add_rule(spec, rule_id="r" + "0" * 19)
+        return eng
+
+    want = sorted(
+        (e["url"], m["op"], tuple(sorted(m["right_refs"])))
+        for e in engine(True).detect_batch(pdf).to_dict("records")
+        for m in e["matches"]
+    )
+    out = detect_batch_spark(
+        spark.createDataFrame(pdf), engine(False),
+        devices_df=spark.createDataFrame(snap),
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Union" not in plan, plan
+    got = sorted(
+        (r.url, r.op, tuple(sorted(r.right_refs)))
+        for r in out.where("row_type = 'event'").collect()
+    )
+    assert got == want and len(want) > 0
