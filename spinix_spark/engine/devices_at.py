@@ -49,7 +49,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    DoubleType,
     LongType,
     StringType,
     StructField,
@@ -58,24 +57,10 @@ from pyspark.sql.types import (
 
 from spinix_spark.dsl.compiler import SpDevicesOp
 from spinix_spark.dsl.tokens import Token
-from spinix_spark.engine.runtime import _clamp_all_negated, _dd_verb_mask
+from spinix_spark.engine.runtime import _dd_verb_mask, spatial_verb
+from spinix_spark.engine.stores import at_search_meters
 from spinix_spark.geo.cells import GridScheme
-from spinix_spark.geo.geodesy import (
-    MIN_DIST_METERS,
-    TINY_REGION_SIZE,
-    normalize_distance,
-)
 from spinix_spark.geo.sqlgen import rect_from_center_pred_sql
-
-
-def at_search_meters(node: SpDevicesOp) -> float:
-    """The kernel's ``@`` search radius: target buffer reach with the
-    negated-verb bump (runtime.go:1515-1525) and the TINY-tier clamp
-    (devices.go:166-199)."""
-    meters = node.left.meters()
-    if node.op in (Token.NINTERSECTS, Token.NNEAR):
-        meters = _clamp_all_negated(meters)
-    return MIN_DIST_METERS if meters <= 0 else normalize_distance(meters, TINY_REGION_SIZE)
 
 
 def is_at_node(node) -> bool:
@@ -265,18 +250,13 @@ def at_candidate_pairs(
         .select("_rowkey", "a_id", "a_lat", "a_lon", "b_id", "b_lat", "b_lon")
     )
 
-    op = node.op
-    t_kind = node.left.kind
-    t_meters = node.left.meters()
-    t_steps = node.left.steps()
+    if node.left.kind not in (Token.RADIUS, Token.BBOX):
+        # point target vs point candidate: every verb reads coordinate
+        # equality (runtime.go:1662-1700) — stay in Catalyst, no Python
+        def eq():
+            return (F.col("a_lat") == F.col("b_lat")) & (F.col("a_lon") == F.col("b_lon"))
 
-    if t_kind not in (Token.RADIUS, Token.BBOX):
-        # point target vs point candidate: every verb reduces to
-        # coordinate (in)equality (runtime.go:1662-1700) — stay in
-        # Catalyst, no Python
-        eq = (F.col("a_lat") == F.col("b_lat")) & (F.col("a_lon") == F.col("b_lon"))
-        pred = ~eq if op in (Token.NINTERSECTS, Token.NIN, Token.NNEAR) else eq
-        return cand.where(pred).select("_rowkey", "b_id")
+        return cand.where(spatial_verb(node.op, eq, eq)).select("_rowkey", "b_id")
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from spinix_spark.engine.runtime import DeviceBatch
@@ -291,19 +271,13 @@ def at_candidate_pairs(
                     "lon": pdf["a_lon"].to_numpy(np.float64),
                 }
             )
-            batch = DeviceBatch(apdf)
-            rings = batch.rings(t_meters, t_steps)
             pred = _dd_verb_mask(
-                op,
-                t_kind,
-                rings,
-                batch,
-                Token.DEVICE,
+                node.op,
+                node.left,
+                node.right,
+                DeviceBatch(apdf),
                 pdf["b_lat"].to_numpy(np.float64),
                 pdf["b_lon"].to_numpy(np.float64),
-                0.0,
-                0,
-                target_meters=t_meters,
             )
             yield pdf.loc[pred, ["_rowkey", "b_id"]]
 

@@ -12,10 +12,16 @@ operator-for-operator (file:line cited per class below), including:
   latches true if ANY candidate satisfies the (possibly negated)
   predicate; every satisfying candidate id is appended to
   ``right_refs`` (runtime.go:1334-1341, 1632-1638; SURVEY.md §2A.1)
-- the device-kind × verb × zone-kind predicate truth tables
-  (runtime.go:1259-1333 for objects, 1530-1700 for devices)
-- the ``@``-candidate search-radius clamps, which are visible
-  semantics for negated verbs (runtime.go:1515-1525, devices.go:167-171)
+- the six-verb truth table of spObjectOp/spDevicesOp
+  (runtime.go:1259-1333 for objects, 1530-1700 for devices), written
+  once (``spatial_verb``) over each device-kind × candidate-kind
+  pair's intersect/contain primitives
+- one masked evaluator (``_eval_candidates``): a candidate's verb runs
+  only on its rows — an explicit ref's bbox-prefilter survivors, or
+  the rows whose ``@`` Near scan admits it (``stores.zone_candidacy``
+  / ``stores.point_candidacy``, shared with the stores' ``near``); the
+  ``@`` search-radius clamps are visible semantics for negated verbs
+  (runtime.go:1515-1525, devices.go:167-171; ``stores.at_search_meters``)
 - the left-to-right AND/OR fold with AND-skip and per-node Match
   capture (runtime.go:165-236)
 - the distance comparators' last-candidate-wins ``Ok`` plus
@@ -43,6 +49,7 @@ import pandas as pd
 
 from spinix_spark.dsl import ast_nodes as ast
 from spinix_spark.dsl.compiler import (
+    NIL_XID,
     CompiledSpec,
     EqualDevicesOp,
     EqualFloatOp,
@@ -68,19 +75,19 @@ from spinix_spark.engine.stores import (
     StateStore,
     Zone,
     ZoneStore,
+    at_search_meters,
+    near_radius,
+    point_candidacy,
     state_need_reset,
     state_reset,
+    zone_candidacy,
 )
 from spinix_spark.geo.geodesy import (
     EARTH_RADIUS_M,
     MIN_DIST_METERS,
     SMALL_REGION_SIZE,
-    SMALL_REGION_THRESHOLD_M,
-    TINY_REGION_SIZE,
-    TINY_REGION_THRESHOLD_M,
     haversine_m,
     lon_to_frame,
-    normalize_distance,
     round_to_unit,
 )
 from spinix_spark.geo.predicates import (
@@ -88,13 +95,11 @@ from spinix_spark.geo.predicates import (
     point_on_line,
     points_equal,
     points_in_ring,
-    rect_contains_point,
     rect_contains_rect,
-    rect_intersects_rect,
     ring_contains_ring,
     ring_intersects_ring,
 )
-from spinix_spark.geo.rings import circle_ring, rect_from_center, rect_ring, ring_bbox
+from spinix_spark.geo.rings import circle_ring, rect_ring, ring_bbox
 
 
 @dataclass
@@ -280,7 +285,7 @@ def _day_anchor(batch: DeviceBatch, hour: int, minute: int) -> np.ndarray:
     return midnight + hour * 3600 + minute * 60
 
 
-# --- zone predicates (object side of runtime.go:1259-1333) ---------------
+# --- zone primitives (object side of runtime.go:1259-1333) ---------------
 
 
 def _part_mid_lon(part: np.ndarray) -> float:
@@ -347,10 +352,6 @@ def zone_within_poly(zone: Zone, rings: np.ndarray) -> np.ndarray:
     return out if any_part else np.zeros(n, dtype=bool)
 
 
-def zone_intersects_rect(zone: Zone, rect: np.ndarray) -> np.ndarray:
-    return zone_intersects_poly(zone, rect_ring(rect))
-
-
 def zone_within_rect(zone: Zone, rect: np.ndarray) -> np.ndarray:
     # all-points-in-axis-aligned-rect ⇔ bbox within rect; the zone
     # bbox lon interval is rigidly shifted into each rect's frame
@@ -396,58 +397,55 @@ def zone_within_point(zone: Zone, lat: np.ndarray, lon: np.ndarray) -> np.ndarra
     return np.zeros(lat.shape[0], dtype=bool)
 
 
+def spatial_verb(op: Token, inter, cont, inside=None):
+    """The six spatial verbs (spObjectOp runtime.go:1259-1333,
+    spDevicesOp runtime.go:1530-1700) over lazily evaluated primitives,
+    so each verb computes only what it reads: ``inter()`` (the sides
+    intersect) and ``cont()`` (NEAR's containment). ``inside`` is IN's
+    containment where it is not NEAR's — a ``:bbox`` candidate against
+    a buffered target, where IN asks whether the candidate's box holds
+    the target's box. NNEAR is ¬C ∨ ¬I, not ¬NEAR. Works on boolean
+    NumPy arrays and on Catalyst Columns alike."""
+    if op is Token.INTERSECTS:
+        return inter()
+    if op is Token.NINTERSECTS:
+        return ~inter()
+    if op is Token.NEAR:
+        return cont() | inter()
+    if op is Token.NNEAR:
+        return ~cont() | ~inter()
+    inside = inside or cont
+    if op is Token.IN:
+        return inside()
+    if op is Token.NIN:
+        return ~inside()
+    raise ValueError(f"not a spatial verb: {op}")
+
+
 def _zone_verb_mask(
     zone: Zone, op: Token, kind: Token, batch: DeviceBatch, meters: float, steps: int
 ) -> np.ndarray:
-    """Truth table of spObjectOp (runtime.go:1259-1333) for one zone
-    against every device in the batch."""
+    """spObjectOp for one zone against every device in the batch."""
     if kind is Token.RADIUS:
         rings = batch.rings(meters, steps)
-        if op is Token.INTERSECTS:
-            return zone_intersects_poly(zone, rings)
-        if op is Token.NINTERSECTS:
-            return ~zone_intersects_poly(zone, rings)
-        if op is Token.NEAR:
-            return zone_within_poly(zone, rings) | zone_intersects_poly(zone, rings)
-        if op is Token.NNEAR:
-            return ~zone_within_poly(zone, rings) | ~zone_intersects_poly(zone, rings)
-        if op is Token.IN:
-            return zone_within_poly(zone, rings)
-        if op is Token.NIN:
-            return ~zone_within_poly(zone, rings)
-    elif kind is Token.BBOX:
+        return spatial_verb(
+            op,
+            lambda: zone_intersects_poly(zone, rings),
+            lambda: zone_within_poly(zone, rings),
+        )
+    if kind is Token.BBOX:
         rect = ring_bbox(batch.rings(meters, steps))
-        if op is Token.INTERSECTS:
-            return zone_intersects_rect(zone, rect)
-        if op is Token.NINTERSECTS:
-            return ~zone_intersects_rect(zone, rect)
-        if op is Token.NEAR:
-            return zone_within_rect(zone, rect) | zone_intersects_rect(zone, rect)
-        if op is Token.NNEAR:
-            return ~zone_within_rect(zone, rect) | ~zone_intersects_rect(zone, rect)
-        if op is Token.IN:
-            return zone_within_rect(zone, rect)
-        if op is Token.NIN:
-            return ~zone_within_rect(zone, rect)
-    else:  # point device
-        lat, lon = batch.lat, batch.lon
-        if op is Token.INTERSECTS:
-            return zone_intersects_point(zone, lat, lon)
-        if op is Token.NINTERSECTS:
-            return ~zone_intersects_point(zone, lat, lon)
-        if op is Token.NEAR:
-            return zone_intersects_point(zone, lat, lon) | zone_within_point(
-                zone, lat, lon
-            )
-        if op is Token.NNEAR:
-            return ~zone_intersects_point(zone, lat, lon) | ~zone_within_point(
-                zone, lat, lon
-            )
-        if op is Token.IN:
-            return zone_within_point(zone, lat, lon)
-        if op is Token.NIN:
-            return ~zone_within_point(zone, lat, lon)
-    return np.zeros(batch.n, dtype=bool)
+        return spatial_verb(
+            op,
+            lambda: zone_intersects_poly(zone, rect_ring(rect)),
+            lambda: zone_within_rect(zone, rect),
+        )
+    lat, lon = batch.lat, batch.lon
+    return spatial_verb(
+        op,
+        lambda: zone_intersects_point(zone, lat, lon),
+        lambda: zone_within_point(zone, lat, lon),
+    )
 
 
 # --- device-vs-device predicates (runtime.go:1530-1700) ------------------
@@ -468,35 +466,80 @@ def _rings_to_frame(
     return shifted
 
 
+_BUFFERED = (Token.RADIUS, Token.BBOX)
+
+
 def _dd_verb_mask(
     op: Token,
-    target_kind: Token,
-    target_rings: np.ndarray | None,
+    target: ast.DeviceLit,
+    other: ast.DevicesLit,
     batch: DeviceBatch,
-    other_kind: Token,
-    other_lat: float,
-    other_lon: float,
-    other_meters: float,
-    other_steps: int,
-    target_meters: float = 0.0,
+    other_lat,
+    other_lon,
 ) -> np.ndarray:
-    """One candidate device vs all batch targets — planar polygonized
-    rings (reference parity) with a GEODESIC override for polar rows:
-    when either circle crosses a pole, planar lat/lon polygon math is
-    undefined (the ring's lons jump ~180° across the pole), so RADIUS
-    verbs there are decided by the true spherical circle —
-    haversine-based intersect/contain. Bitwise no-op for every
-    non-polar row."""
-    res = _dd_verb_mask_planar(
-        op, target_kind, target_rings, batch, other_kind,
-        other_lat, other_lon, other_meters, other_steps,
+    """spDevicesOp for one candidate device (``other``, the node's
+    right literal, at ``other_lat``/``other_lon`` — scalars, or per-row
+    arrays in the pair join's refine) against every batch target
+    (``target``, the node's left literal).
+
+    Planar polygonized rings (reference parity), antimeridian-framed:
+    target rings / batch lons are shifted by exact ±360° into the
+    candidate's frame (bitwise no-op mid-longitude). A GEODESIC
+    override decides polar rows: when either circle crosses a pole,
+    planar lat/lon polygon math is undefined (the ring's lons jump
+    ~180° across the pole), so RADIUS verbs there are decided by the
+    true spherical circle — haversine-based intersect/contain. Bitwise
+    no-op for every non-polar row."""
+    n = batch.n
+    t_rings = (
+        batch.rings(target.meters(), target.steps())
+        if target.kind in _BUFFERED
+        else None
     )
-    if target_kind is Token.BBOX or other_kind is Token.BBOX:
+    if other.kind in _BUFFERED:
+        oring = circle_ring(other_lat, other_lon, other.meters(), other.steps())
+        if t_rings is None:
+            pin = lambda: points_in_ring(
+                batch.lat, lon_to_frame(batch.lon, other_lon), oring
+            )
+            res = spatial_verb(op, pin, pin)
+        elif other.kind is Token.RADIUS:
+            t_rings = _rings_to_frame(t_rings, batch.lon, other_lon)
+            res = spatial_verb(
+                op,
+                lambda: ring_intersects_ring(t_rings, oring),
+                lambda: ring_contains_ring(t_rings, oring),
+            )
+        else:
+            t_rings = _rings_to_frame(t_rings, batch.lon, other_lon)
+            trect = rect_ring(ring_bbox(t_rings))
+            res = spatial_verb(
+                op,
+                lambda: ring_intersects_ring(trect, oring),
+                lambda: ring_contains_ring(t_rings, rect_ring(ring_bbox(oring))),
+                inside=lambda: ring_contains_ring(oring, trect),
+            )
+    elif t_rings is not None:
+        # the candidate point in each target ring: frame its lon per
+        # ring (each ring is continuous around its own device's lon; a
+        # dateline neighbor's raw lon sits a world away in planar coords)
+        pin = lambda: points_in_ring(
+            np.broadcast_to(np.asarray(other_lat, dtype=np.float64), (n,)),
+            lon_to_frame(
+                np.broadcast_to(np.asarray(other_lon, dtype=np.float64), (n,)),
+                batch.lon,
+            ),
+            t_rings,
+        )
+        res = spatial_verb(op, pin, pin)
+    else:
+        eq = lambda: points_equal(batch.lat, batch.lon, other_lat, other_lon)
+        return spatial_verb(op, eq, eq)  # coordinate equality, pole-safe
+    if Token.BBOX in (target.kind, other.kind):
         return res  # planar-rect semantics; poles documented unsupported
-    t_m = float(target_meters) if target_rings is not None else 0.0
-    o_m = float(other_meters) if other_kind is Token.RADIUS else 0.0
+    t_m, o_m = float(target.meters()), float(other.meters())
     if t_m <= 0.0 and o_m <= 0.0:
-        return res  # point vs point: exact coordinate equality, pole-safe
+        return res  # zero reach on both sides: no geodesic override
     deg_t = math.degrees(t_m / EARTH_RADIUS_M)
     deg_o = math.degrees(o_m / EARTH_RADIUS_M)
     polar = (np.abs(batch.lat) + deg_t >= 90.0) | (
@@ -505,148 +548,16 @@ def _dd_verb_mask(
     if not np.any(polar):
         return res
     d = haversine_m(batch.lat, batch.lon, other_lat, other_lon)
-    if target_rings is not None and other_kind is Token.RADIUS:
-        inter = d <= t_m + o_m
-        cont = d + o_m <= t_m  # target circle contains candidate circle
-        geo = {
-            Token.INTERSECTS: inter,
-            Token.NINTERSECTS: ~inter,
-            Token.NEAR: cont | inter,
-            Token.NNEAR: ~cont | ~inter,
-            Token.IN: cont,
-            Token.NIN: ~cont,
-        }[op]
+    if t_rings is not None and other.kind is Token.RADIUS:
+        # target circle intersects / contains the candidate circle
+        geo = spatial_verb(op, lambda: d <= t_m + o_m, lambda: d + o_m <= t_m)
     else:
-        # one side is a point: every positive verb is the disc test
-        # (mirrors the planar pin mapping branch for branch)
-        pin = d <= max(t_m, o_m)
-        geo = pin if op in (Token.INTERSECTS, Token.NEAR, Token.IN) else ~pin
+        # one side is a point: every verb reads the disc test
+        pin = lambda: d <= max(t_m, o_m)
+        geo = spatial_verb(op, pin, pin)
     out = res.copy()
     out[polar] = np.broadcast_to(geo, out.shape)[polar]
     return out
-
-
-def _dd_verb_mask_planar(
-    op: Token,
-    target_kind: Token,
-    target_rings: np.ndarray | None,
-    batch: DeviceBatch,
-    other_kind: Token,
-    other_lat: float,
-    other_lon: float,
-    other_meters: float,
-    other_steps: int,
-) -> np.ndarray:
-    """Planar verb table (runtime.go:1530-1700), antimeridian-framed."""
-    n = batch.n
-    if other_kind in (Token.RADIUS, Token.BBOX):
-        oring = circle_ring(other_lat, other_lon, other_meters, other_steps)
-        # antimeridian: planar ring math needs one longitude frame —
-        # shift target rings / batch lons into the candidate ring's
-        # frame (exact ±360°; bitwise no-op mid-longitude)
-        if target_rings is not None:
-            target_rings = _rings_to_frame(target_rings, batch.lon, other_lon)
-        batch_lon_f = lon_to_frame(batch.lon, other_lon)
-        if other_kind is Token.RADIUS:
-            if target_rings is not None:
-                t_in = ring_intersects_ring(target_rings, oring)
-                t_cont = ring_contains_ring(target_rings, oring)
-                if op is Token.INTERSECTS:
-                    return t_in
-                if op is Token.NINTERSECTS:
-                    return ~t_in
-                if op is Token.NEAR:
-                    return t_cont | t_in
-                if op is Token.NNEAR:
-                    return ~t_cont | ~t_in
-                if op is Token.IN:
-                    return t_cont
-                if op is Token.NIN:
-                    return ~t_cont
-            else:
-                pin = points_in_ring(batch.lat, batch_lon_f, oring)
-                if op in (Token.INTERSECTS, Token.NEAR):
-                    return pin
-                if op in (Token.NINTERSECTS,):
-                    return ~pin
-                if op is Token.NNEAR:
-                    return ~pin | ~pin
-                if op is Token.IN:
-                    return pin
-                if op is Token.NIN:
-                    return ~pin
-        else:  # other BBOX
-            if target_rings is not None:
-                trect = ring_bbox(target_rings)
-                orect = ring_bbox(oring)
-                o_x_t = zone_like_ring_intersects_rect(oring, trect)
-                t_cont_o = _ring_contains_rect(target_rings, orect)
-                o_cont_t = _ring_contains_rect_single(oring, trect)
-                if op is Token.INTERSECTS:
-                    return o_x_t
-                if op is Token.NINTERSECTS:
-                    return ~o_x_t
-                if op is Token.NEAR:
-                    return t_cont_o | o_x_t
-                if op is Token.NNEAR:
-                    return ~t_cont_o | ~o_x_t
-                if op is Token.IN:
-                    return o_cont_t
-                if op is Token.NIN:
-                    return ~o_cont_t
-            else:
-                pin = points_in_ring(batch.lat, batch_lon_f, oring)
-                if op in (Token.INTERSECTS, Token.NEAR, Token.IN):
-                    return pin
-                if op in (Token.NINTERSECTS, Token.NIN):
-                    return ~pin
-                if op is Token.NNEAR:
-                    return ~pin
-    else:  # other is a point
-        if target_rings is not None:
-            # frame the candidate's lon per target ring (each ring is
-            # continuous around its own device's lon; a dateline
-            # neighbor's raw lon sits a world away in planar coords)
-            pin = points_in_ring(
-                np.broadcast_to(np.asarray(other_lat, dtype=np.float64), (n,)),
-                lon_to_frame(
-                    np.broadcast_to(
-                        np.asarray(other_lon, dtype=np.float64), (n,)
-                    ),
-                    batch.lon,
-                ),
-                target_rings,
-            )
-            if op in (Token.INTERSECTS, Token.NEAR, Token.IN):
-                return pin
-            if op in (Token.NINTERSECTS, Token.NIN):
-                return ~pin
-            if op is Token.NNEAR:
-                return ~pin
-        else:
-            eq = points_equal(batch.lat, batch.lon, other_lat, other_lon)
-            if op in (Token.INTERSECTS, Token.NEAR, Token.IN):
-                return eq
-            if op in (Token.NINTERSECTS, Token.NIN):
-                return ~eq
-            if op is Token.NNEAR:
-                return ~eq
-    return np.zeros(n, dtype=bool)
-
-
-def zone_like_ring_intersects_rect(oring: np.ndarray, rect: np.ndarray) -> np.ndarray:
-    """One candidate ring (S, 2) vs per-target rects (N, 4)."""
-    return ring_intersects_ring(rect_ring(rect), oring)
-
-
-def _ring_contains_rect(rings: np.ndarray, rect: np.ndarray) -> np.ndarray:
-    """Per-target rings (N, S, 2) contain one rect (4,)."""
-    return ring_contains_ring(rings, rect_ring(rect))
-
-
-def _ring_contains_rect_single(ring: np.ndarray, rects: np.ndarray) -> np.ndarray:
-    """One ring (S, 2) contains per-target rects (N, 4)."""
-    return ring_contains_ring(ring, rect_ring(rects))
 
 
 # --- two-phase filtering helpers ----------------------------------------
@@ -700,161 +611,86 @@ def _zone_prefilter(zone: Zone, batch: DeviceBatch, meters: float) -> np.ndarray
     )
 
 
-def _masked_zone_eval(
-    zone: Zone,
-    op: Token,
-    kind: Token,
-    batch: DeviceBatch,
-    meters: float,
-    steps: int,
-    pre: np.ndarray,
+def _device_prefilter(
+    batch: DeviceBatch, lat: float, lon: float, meters: float
 ) -> np.ndarray:
-    """Exact predicate only on prefilter survivors; far rows take the
-    op's known far-field value. Identical output to evaluating the full
-    batch, at a fraction of the memory traffic."""
-    out = np.full(batch.n, op in _FAR_TRUE_OPS)
-    idx = np.nonzero(pre)[0]
-    if idx.size == batch.n:
-        return _zone_verb_mask(zone, op, kind, batch, meters, steps)
-    if idx.size:
-        sub = DeviceBatch(batch.pdf.iloc[idx])
-        out[idx] = _zone_verb_mask(zone, op, kind, sub, meters, steps)
-    return out
-
-
-def _masked_dd_eval(
-    op: Token,
-    t_kind: Token,
-    node_left,
-    batch: DeviceBatch,
-    other_kind: Token,
-    other_lat: float,
-    other_lon: float,
-    other_meters: float,
-    other_steps: int,
-    pre: np.ndarray,
-) -> np.ndarray:
-    out = np.full(batch.n, op in _FAR_TRUE_OPS)
-    idx = np.nonzero(pre)[0]
-    full_rings = (
-        batch.rings(node_left.meters(), node_left.steps())
-        if t_kind in (Token.RADIUS, Token.BBOX)
-        else None
+    """Cheap candidate mask for one candidate device at ``lat``/``lon``:
+    rows within the combined buffer reach (framed lons); near a pole
+    the lon pad can't express the full-circle reach, so cross-pole
+    rows are admitted (the exact verb's geodesic polar branch
+    decides). Output-transparent, as ``_zone_prefilter``."""
+    dlat, dlon = _deg_pad(meters, float(lat))
+    pre = (np.abs(batch.lat - lat) <= dlat) & (
+        np.abs(batch.lon - lon_to_frame(lon, batch.lon)) <= dlon
     )
-    if idx.size == batch.n:
-        return _dd_verb_mask(
-            op, t_kind, full_rings, batch, other_kind,
-            other_lat, other_lon, other_meters, other_steps,
-            target_meters=node_left.meters(),
-        )
-    if idx.size:
-        sub = DeviceBatch(batch.pdf.iloc[idx])
-        sub_rings = (
-            sub.rings(node_left.meters(), node_left.steps())
-            if t_kind in (Token.RADIUS, Token.BBOX)
-            else None
-        )
-        out[idx] = _dd_verb_mask(
-            op, t_kind, sub_rings, sub, other_kind,
-            other_lat, other_lon, other_meters, other_steps,
-            target_meters=node_left.meters(),
-        )
-    return out
+    if abs(float(lat)) + dlat >= 90.0:
+        pre |= np.abs(batch.lat) + dlat >= 90.0 - dlat
+    return pre
+
+
+def _eval_candidates(batch: DeviceBatch, scans) -> tuple[np.ndarray, list[list[str]]]:
+    """The masked evaluator: ``scans`` yields (candidate id, rows, fill,
+    gate, verb) and each candidate's ``verb(sub_batch)`` runs on the
+    rows where ``rows`` holds only, scattered back; every other row
+    takes ``fill`` — the verb's far-field value outside an explicit
+    ref's prefilter, False outside the ``@`` candidacy (non-candidates
+    are never examined: Near pruning is visible semantics for negated
+    verbs, SURVEY.md §2B.1). No copy when ``rows`` covers the batch.
+    ``ok`` latches every candidate's ``mask & gate`` and each satisfied
+    row appends the id (runtime.go:1334-1341, 1632-1638)."""
+    n = batch.n
+    ok = np.zeros(n, dtype=bool)
+    refs: list[list[str]] = [[] for _ in range(n)]
+    for rid, rows, fill, gate, verb in scans:
+        idx = np.flatnonzero(rows)
+        if not (idx.size or fill):
+            continue
+        if idx.size == n:
+            mask = verb(batch)
+        else:
+            mask = np.full(n, fill)
+            if idx.size:
+                mask[idx] = verb(DeviceBatch(batch.pdf.iloc[idx]))
+        mask = mask & gate
+        ok |= mask
+        for i in np.flatnonzero(mask):
+            refs[i].append(rid)
+    return ok, refs
 
 
 # --- node evaluation -----------------------------------------------------
 
 
-def _clamp_all_negated(meters: float) -> float:
-    """Search-radius bump for negated verbs with ``@`` candidates
-    (runtime.go:1515-1525 — sequential ifs, replicated exactly: a
-    radius below the TINY threshold is raised exactly TO it, so the
-    second branch only fires for radii that were already above)."""
-    if meters < TINY_REGION_THRESHOLD_M:
-        meters = TINY_REGION_THRESHOLD_M
-    if meters > TINY_REGION_THRESHOLD_M:
-        meters = SMALL_REGION_THRESHOLD_M
-    return meters
-
-
 def _eval_sp_object(
     node: SpObjectOp, batch: DeviceBatch, ref: Reference, layer: str
 ) -> NodeResult:
-    n = batch.n
-    ok = np.zeros(n, dtype=bool)
-    refs: list[list[str]] = [[] for _ in range(n)]
     layer_ok = batch.layer_id == layer
-    meters = node.left.meters()
-    steps = node.left.steps()
-    kind = node.left.kind
+    op, kind = node.op, node.left.kind
+    meters, steps = node.left.meters(), node.left.steps()
 
+    def verb(z: Zone):
+        return lambda b: _zone_verb_mask(z, op, kind, b, meters, steps)
+
+    scans = ()
     if node.right.refs and not node.right.all:
-        candidates: list[Zone] = []
-        for rid in node.right.refs:
-            z = ref.zones.lookup(rid)
-            if z is not None and z.layer_id == layer:
-                candidates.append(z)
-        for z in candidates:
-            pre = _zone_prefilter(z, batch, meters)
-            mask = _masked_zone_eval(z, node.op, kind, batch, meters, steps, pre)
-            mask &= layer_ok
-            ok |= mask
-            for i in np.nonzero(mask)[0]:
-                refs[i].append(z.object_id)
-    elif node.right.all and not node.right.refs:
-        # ``@``: per-device candidate universe = Objects.Near's bbox
-        # prefilter (object.go:115-151) — vectorized: one pass per zone
-        # with a per-device candidacy mask, no per-row Python.
-        search_m = (
-            MIN_DIST_METERS
-            if meters <= 0
-            else normalize_distance(meters, SMALL_REGION_SIZE)
+        far = op in _FAR_TRUE_OPS
+        zones = (ref.zones.lookup(rid) for rid in node.right.refs)
+        scans = (
+            (z.object_id, _zone_prefilter(z, batch, meters), far, layer_ok, verb(z))
+            for z in zones
+            if z is not None and z.layer_id == layer
         )
-        rects = rect_from_center(batch.lat, batch.lon, search_m)  # (N, 4)
-        # Candidacy is visible semantics for negated verbs, so this
-        # must stay in LOCKSTEP with ZoneStore.near: the
-        # zone's lon interval is rigidly shifted by ±360° into each
-        # row's frame (exact no-op mid-longitude — zones never cross
-        # ±180° per the RFC 7946 split convention, but the search rect
-        # may overflow past it), and a search disc that crosses a pole
-        # admits every zone touching the 2·deg_s polar band.
-        deg_s = math.degrees(search_m / EARTH_RADIUS_M)
-        cap_n = batch.lat + deg_s >= 90.0
-        cap_s = batch.lat - deg_s <= -90.0
-        for z in ref.zones.all_zones():
-            if z.layer_id != layer:
-                continue
-            b = z.bbox
-            zc = (float(b[1]) + float(b[3])) / 2.0
-            dl = lon_to_frame(zc, batch.lon) - zc
-            cand = (
-                (rects[:, 0] <= b[2])
-                & (rects[:, 2] >= b[0])
-                & (rects[:, 1] <= b[3] + dl)
-                & (rects[:, 3] >= b[1] + dl)
-            )
-            if float(b[2]) >= 90.0 - 2.0 * deg_s:
-                cand |= cap_n
-            if float(b[0]) <= -90.0 + 2.0 * deg_s:
-                cand |= cap_s
-            cand &= layer_ok
-            if not cand.any():
-                continue
-            # exact predicate only on the candidate subset; non-candidates
-            # are never examined (Objects.Near pruning — part of the
-            # visible semantics for negated verbs, SURVEY.md §2B.1)
-            mask = cand.copy()
-            idx = np.nonzero(cand)[0]
-            sub = DeviceBatch(batch.pdf.iloc[idx]) if idx.size < batch.n else batch
-            sub_mask = _zone_verb_mask(z, node.op, kind, sub, meters, steps)
-            if idx.size < batch.n:
-                mask[idx] = sub_mask
-                mask &= cand
-            else:
-                mask = cand & sub_mask
-            ok |= mask
-            for i in np.nonzero(mask)[0]:
-                refs[i].append(z.object_id)
+    elif node.right.all and not node.right.refs:
+        # ``@``: per-row candidates = Objects.Near's bbox scan
+        cand = zone_candidacy(
+            batch.lat, batch.lon, near_radius(meters, SMALL_REGION_SIZE)
+        )
+        scans = (
+            (z.object_id, cand(z.bbox) & layer_ok, False, layer_ok, verb(z))
+            for z in ref.zones.all_zones()
+            if z.layer_id == layer
+        )
+    ok, refs = _eval_candidates(batch, scans)
     return NodeResult(
         ok=ok,
         left_kw=Token.DEVICE,
@@ -882,67 +718,27 @@ def _eval_sp_devices(
     layer: str,
     member_mask: np.ndarray | None = None,
 ) -> NodeResult:
-    n = batch.n
-    ok = np.zeros(n, dtype=bool)
-    refs: list[list[str]] = [[] for _ in range(n)]
     layer_ok = batch.layer_id == layer
     active = layer_ok if member_mask is None else (layer_ok & member_mask)
 
-    target_meters = node.left.meters()
-    t_kind = node.left.kind
-    target_rings = (
-        batch.rings(target_meters, node.left.steps())
-        if t_kind in (Token.RADIUS, Token.BBOX)
-        else None
-    )
-    other_kind = (
-        node.right.kind if node.right.kind in (Token.RADIUS, Token.BBOX) else Token.DEVICE
-    )
-    other_meters = node.right.meters()
-    other_steps = node.right.steps()
+    def gate(other: dict) -> np.ndarray:
+        return active & (batch.layer_id == other.get("layer_id", NIL_XID))
 
+    def verb(other: dict):
+        return lambda b: _dd_verb_mask(
+            node.op, node.left, node.right, b, other["lat"], other["lon"]
+        )
+
+    scans = ()
     if node.right.refs and not node.right.all:
-        for rid in node.right.refs:
-            other = ref.devices.lookup(rid)
-            if other is None:
-                continue
-            cand_layer_ok = batch.layer_id == other.get("layer_id", "0" * 20)
-            # two-phase: cheap reach prefilter around the candidate,
-            # exact predicate only on survivors
-            dlat, dlon = _deg_pad(
-                target_meters + other_meters, float(other["lat"])
-            )
-            pre = (
-                (np.abs(batch.lat - other["lat"]) <= dlat)
-                & (
-                    np.abs(batch.lon - lon_to_frame(other["lon"], batch.lon))
-                    <= dlon
-                )
-            )
-            # polar band: near a pole the lon pad can't express the
-            # full-circle reach — admit cross-pole candidates (the
-            # exact verb's geodesic polar branch decides)
-            if abs(float(other["lat"])) + dlat >= 90.0:
-                pre |= np.abs(batch.lat) + dlat >= 90.0 - dlat
-            mask = (
-                _masked_dd_eval(
-                    node.op,
-                    t_kind,
-                    node.left,
-                    batch,
-                    other_kind,
-                    other["lat"],
-                    other["lon"],
-                    other_meters,
-                    other_steps,
-                    pre,
-                )
-                & active
-                & cand_layer_ok
-            )
-            ok |= mask
-            for i in np.nonzero(mask)[0]:
-                refs[i].append(rid)
+        far = node.op in _FAR_TRUE_OPS
+        reach = node.left.meters() + node.right.meters()
+        others = ((rid, ref.devices.lookup(rid)) for rid in node.right.refs)
+        scans = (
+            (rid, _device_prefilter(batch, o["lat"], o["lon"], reach), far, gate(o), verb(o))
+            for rid, o in others
+            if o is not None
+        )
     elif (
         node.right.all
         and not node.right.refs
@@ -955,67 +751,23 @@ def _eval_sp_devices(
         # devices(@) form (member_mask) loops the snapshot below.
         verdict = batch.pdf[at_verdict_col(node)].to_numpy(dtype=object)
         ok = active & pd.notna(verdict)
+        refs: list[list[str]] = [[] for _ in range(batch.n)]
         for i in np.nonzero(ok)[0]:
             refs[i] = list(verdict[i])
-    elif node.right.all and not node.right.refs:
-        # ``@``: candidate universe = Devices.Near's bbox prefilter
-        # (devices.go:166-199) with the negated-verb radius bump —
-        # vectorized one pass per snapshot device.
-        search_meters = target_meters
-        if node.op in (Token.NINTERSECTS, Token.NNEAR):
-            search_meters = _clamp_all_negated(search_meters)
-        search_m = (
-            MIN_DIST_METERS
-            if search_meters <= 0
-            else normalize_distance(search_meters, TINY_REGION_SIZE)
+        return NodeResult(
+            ok=ok, left_kw=Token.DEVICE, right_kw=Token.DEVICES, op=node.op, right_refs=refs
         )
-        rects = rect_from_center(batch.lat, batch.lon, search_m)  # (N, 4)
-        # polar widening: a search disc that crosses a pole reaches all
-        # longitudes there — the rect's asin-clamped dlon (≤ 90°)
-        # cannot express that, so rows in the cap admit every candidate
-        # in the 2·deg_s polar band (superset; the exact verb decides)
-        deg_s = math.degrees(search_m / EARTH_RADIUS_M)
-        cap_n = batch.lat + deg_s >= 90.0
-        cap_s = batch.lat - deg_s <= -90.0
-        for other in ref.devices.all_devices():
-            # rect lon bounds are unnormalized (center ± dlon, possibly
-            # past ±180): frame the candidate lon per rect
-            cand = rect_contains_point(
-                rects, other["lat"], lon_to_frame(other["lon"], batch.lon)
-            )
-            if other["lat"] >= 90.0 - 2.0 * deg_s:
-                cand |= cap_n
-            if other["lat"] <= -90.0 + 2.0 * deg_s:
-                cand |= cap_s
-            cand &= active
-            cand &= batch.layer_id == other.get("layer_id", "0" * 20)
-            if not cand.any():
-                continue
-            # exact predicate only on candidate rows (non-candidates are
-            # outside the pruned Near universe and contribute nothing)
-            idx = np.nonzero(cand)[0]
-            mask = np.zeros(n, dtype=bool)
-            if idx.size < n:
-                sub = DeviceBatch(batch.pdf.iloc[idx])
-                sub_rings = (
-                    sub.rings(target_meters, node.left.steps())
-                    if t_kind in (Token.RADIUS, Token.BBOX)
-                    else None
-                )
-                mask[idx] = _dd_verb_mask(
-                    node.op, t_kind, sub_rings, sub, other_kind,
-                    other["lat"], other["lon"], other_meters, other_steps,
-                    target_meters=target_meters,
-                )
-            else:
-                mask = cand & _dd_verb_mask(
-                    node.op, t_kind, target_rings, batch, other_kind,
-                    other["lat"], other["lon"], other_meters, other_steps,
-                    target_meters=target_meters,
-                )
-            ok |= mask
-            for i in np.nonzero(mask)[0]:
-                refs[i].append(other["device_id"])
+    elif node.right.all and not node.right.refs:
+        # ``@``: per-row candidates = Devices.Near's bbox scan
+        cand = point_candidacy(batch.lat, batch.lon, at_search_meters(node))
+
+        def at_scans():
+            for o in ref.devices.all_devices():
+                g = gate(o)
+                yield o["device_id"], cand(o["lat"], o["lon"]) & g, False, g, verb(o)
+
+        scans = at_scans()
+    ok, refs = _eval_candidates(batch, scans)
     return NodeResult(
         ok=ok,
         left_kw=Token.DEVICE,

@@ -22,19 +22,24 @@ parsing.
 from __future__ import annotations
 
 import json
+import math
 from dataclasses import dataclass, field
 
 import numpy as np
 
 from spinix_spark.dsl.compiler import NIL_XID
+from spinix_spark.dsl.tokens import Token
 from spinix_spark.geo.geodesy import (
     EARTH_RADIUS_M,
     MIN_DIST_METERS,
-    TINY_REGION_SIZE,
     SMALL_REGION_SIZE,
+    SMALL_REGION_THRESHOLD_M,
+    TINY_REGION_SIZE,
+    TINY_REGION_THRESHOLD_M,
     lon_to_frame,
     normalize_distance,
 )
+from spinix_spark.geo.predicates import rect_contains_point
 from spinix_spark.geo.rings import circle_ring, rect_from_center
 
 CIRCLE_ZONE_STEPS = 64  # polygonization used for circle-zone ring ops
@@ -186,10 +191,89 @@ def zone_from_ring(object_id: str, ring_latlon: np.ndarray, layer_id: str = NIL_
     return Zone(object_id, layer_id, "polygon", rings=[_close_ring(np.asarray(ring_latlon, dtype=np.float64))])
 
 
+# --- Near candidacy: the one bbox scan behind the stores' ``near`` and
+# the kernel's ``@`` loops (Objects.Near object.go:115-151, Devices.Near
+# devices.go:166-199). Candidacy is visible semantics for negated verbs.
+
+
+def near_radius(meters: float, region_size: int) -> float:
+    """A Near query's search radius: MIN_DIST_METERS for a bare point,
+    else ``meters`` clamped to the tier ceiling (region.go:273-292)."""
+    return MIN_DIST_METERS if meters <= 0 else normalize_distance(meters, region_size)
+
+
+def at_search_meters(node) -> float:
+    """The search radius of a ``devices(@)`` node: the target buffer
+    reach with the negated-verb bump (runtime.go:1515-1525 — sequential
+    ifs, replicated exactly: a reach below the TINY threshold is raised
+    exactly TO it, so the second branch only fires for reaches already
+    above), clamped to the TINY tier (devices.go:167-171)."""
+    meters = node.left.meters()
+    if node.op in (Token.NINTERSECTS, Token.NNEAR):
+        if meters < TINY_REGION_THRESHOLD_M:
+            meters = TINY_REGION_THRESHOLD_M
+        if meters > TINY_REGION_THRESHOLD_M:
+            meters = SMALL_REGION_THRESHOLD_M
+    return near_radius(meters, TINY_REGION_SIZE)
+
+
+def _search_disc(lat, lon, search_m: float):
+    """(rect, deg, cap_n, cap_s) of search discs at ``lat``/``lon``:
+    the bounding rect (unnormalized lons, possibly past ±180), the
+    angular radius, and whether the disc crosses either pole — where
+    it reaches every longitude, which the asin-clamped rect (dlon ≤
+    90°) cannot express."""
+    rect = rect_from_center(lat, lon, search_m)
+    deg = math.degrees(search_m / EARTH_RADIUS_M)
+    return rect, deg, lat + deg >= 90.0, lat - deg <= -90.0
+
+
+def zone_candidacy(lat, lon, search_m: float):
+    """``cand(bbox)`` for search discs of radius ``search_m`` centred
+    at ``lat``/``lon`` (scalars or (N,) arrays): true where a zone bbox
+    (..., 4) meets a disc's rect. Each zone's lon interval is rigidly
+    shifted by ±360° into the center's frame (exact no-op
+    mid-longitude — zones never cross ±180° per the RFC 7946 split
+    convention, but the rect may overflow past it); a disc that
+    crosses a pole admits every zone touching the 2·deg polar band."""
+    rect, deg, cap_n, cap_s = _search_disc(lat, lon, search_m)
+
+    def cand(b: np.ndarray) -> np.ndarray:
+        zc = (b[..., 1] + b[..., 3]) / 2.0
+        dl = lon_to_frame(zc, lon) - zc
+        hit = (
+            (rect[..., 0] <= b[..., 2])
+            & (rect[..., 2] >= b[..., 0])
+            & (rect[..., 1] <= b[..., 3] + dl)
+            & (rect[..., 3] >= b[..., 1] + dl)
+        )
+        hit |= cap_n & (b[..., 2] >= 90.0 - 2.0 * deg)
+        hit |= cap_s & (b[..., 0] <= -90.0 + 2.0 * deg)
+        return hit
+
+    return cand
+
+
+def point_candidacy(lat, lon, search_m: float):
+    """``cand(p_lat, p_lon)`` for search discs of radius ``search_m``
+    centred at ``lat``/``lon``: true where a point candidate lies in a
+    disc's rect, the candidate lon framed to the center (exact no-op
+    mid-longitude). A disc that crosses a pole admits every candidate
+    in the 2·deg polar band (a superset; the exact verb decides)."""
+    rect, deg, cap_n, cap_s = _search_disc(lat, lon, search_m)
+
+    def cand(p_lat, p_lon) -> np.ndarray:
+        hit = rect_contains_point(rect, p_lat, lon_to_frame(p_lon, lon))
+        hit |= cap_n & (p_lat >= 90.0 - 2.0 * deg)
+        hit |= cap_s & (p_lat <= -90.0 + 2.0 * deg)
+        return hit
+
+    return cand
+
+
 class ZoneStore:
-    """Objects storage. ``near`` mirrors Objects.Near
-    (object.go:115-151): clamp radius to the SMALL tier, bbox-candidate
-    scan, layer filter."""
+    """Objects storage. ``near`` is Objects.Near (object.go:115-151):
+    SMALL-tier radius clamp, bbox-candidate scan, layer filter."""
 
     def __init__(self) -> None:
         self._zones: dict[str, Zone] = {}
@@ -225,38 +309,11 @@ class ZoneStore:
             )
 
     def near(self, layer_id: str, lat: float, lon: float, meters: float) -> list[Zone]:
-        if meters <= 0:
-            meters = MIN_DIST_METERS
-        else:
-            meters = normalize_distance(meters, SMALL_REGION_SIZE)
         self._index()
-        if not self._ids:
-            return []
-        rect = rect_from_center(lat, lon, meters)
-        b = self._bboxes
-        # frame each zone's lon interval to the query center (zones
-        # themselves never cross ±180° — RFC 7946 split convention —
-        # but the query rect may overflow past it); rigid per-zone
-        # ±360° shift, exact no-op mid-longitude
-        zc = (b[:, 1] + b[:, 3]) / 2.0
-        dl = lon_to_frame(zc, lon) - zc
-        hit = (
-            (b[:, 0] <= rect[2])
-            & (b[:, 2] >= rect[0])
-            & (b[:, 1] + dl <= rect[3])
-            & (b[:, 3] + dl >= rect[1])
-        )
-        # polar widening (mirrors the kernel @ path): a search disc
-        # that crosses a pole reaches all longitudes there — admit
-        # every zone touching the 2·deg_r polar band
-        deg_r = float(np.degrees(meters / EARTH_RADIUS_M))
-        if lat + deg_r >= 90.0:
-            hit |= b[:, 2] >= 90.0 - 2.0 * deg_r
-        if lat - deg_r <= -90.0:
-            hit |= b[:, 0] <= -90.0 + 2.0 * deg_r
+        cand = zone_candidacy(lat, lon, near_radius(meters, SMALL_REGION_SIZE))
         return [
             self._zones[self._ids[i]]
-            for i in np.nonzero(hit)[0]
+            for i in np.nonzero(cand(self._bboxes))[0]
             if self._layers[i] == layer_id
         ]
 
@@ -321,37 +378,12 @@ class DeviceSnapshot:
             }
 
     def near(self, lat: float, lon: float, meters: float) -> list[dict]:
-        """Devices.Near (devices.go:166-199): clamp to TINY tier, bbox
-        candidate scan (point entries)."""
-        if meters <= 0:
-            meters = MIN_DIST_METERS
-        else:
-            meters = normalize_distance(meters, TINY_REGION_SIZE)
+        """Devices.Near (devices.go:166-199): TINY-tier radius clamp,
+        bbox-candidate scan (point entries)."""
         self._index()
         a = self._arr
-        if a["lat"].size == 0:
-            return []
-        rect = rect_from_center(lat, lon, meters)
-        # rect lon bounds are unnormalized (center ± dlon past ±180):
-        # frame candidate lons to the query center (exact no-op
-        # mid-longitude) so the dateline doesn't split the search box
-        lon_f = lon_to_frame(a["lon"], lon)
-        hit = (
-            (a["lat"] >= rect[0])
-            & (a["lat"] <= rect[2])
-            & (lon_f >= rect[1])
-            & (lon_f <= rect[3])
-        )
-        # polar widening (mirrors the kernel @ path): a search disc
-        # that crosses a pole reaches all longitudes there — the
-        # asin-clamped rect (dlon ≤ 90°) cannot express that, so admit
-        # every device in the 2·deg_r polar band
-        deg_r = float(np.degrees(meters / EARTH_RADIUS_M))
-        if lat + deg_r >= 90.0:
-            hit |= a["lat"] >= 90.0 - 2.0 * deg_r
-        if lat - deg_r <= -90.0:
-            hit |= a["lat"] <= -90.0 + 2.0 * deg_r
-        return [self._rows[a["device_id"][i]] for i in np.nonzero(hit)[0]]
+        cand = point_candidacy(lat, lon, near_radius(meters, TINY_REGION_SIZE))
+        return [self._rows[a["device_id"][i]] for i in np.nonzero(cand(a["lat"], a["lon"]))[0]]
 
 
 def state_need_reset(st: dict, interval_s: float) -> bool:

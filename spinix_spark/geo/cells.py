@@ -143,16 +143,6 @@ class GridScheme:
         row, col = divmod(c, self.cols)
         return self._expand(row - k, row + k, col - k, col + k)
 
-    def kring_for_radius(self, meters: float) -> int:
-        """Rings needed so a radius search around any point in a cell is
-        fully covered IN LATITUDE (exact meters-per-degree, R·π/180).
-        Longitude reach widens by 1/cos(lat) — callers joining at
-        non-trivial latitudes with radii near the cell size must widen
-        the column span per row (see engine/devices_at.py) or verify
-        cell width ≥ radius / cos(max |lat|)."""
-        cell_m = self.size * math.radians(1.0) * 6371e3
-        return max(1, int(math.ceil(meters / cell_m)))
-
     # --- SQL (shared by Spark Catalyst and the DuckDB oracle) ----------
 
     def sql_cell_expr(self, lat_col: str, lon_col: str) -> str:

@@ -76,9 +76,6 @@ class ChunkedRunner:
             )
             return False
 
-    def pending_chunks(self) -> list[int]:
-        return [k for k in range(self.n_chunks) if not self.chunk_done(k)]
-
     def run(
         self,
         spark: SparkSession,

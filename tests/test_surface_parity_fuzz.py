@@ -1,13 +1,17 @@
 """Cross-surface parity fuzz: every detect surface emits the events of
 ``Engine(eval_dwell=True).detect_batch`` and carries the same states.
 
-A seeded random world — mid-latitude zones, a zone that crosses ±180°
-and a zone at the pole — and one rule registry that covers positive
-and negated zone verbs, explicit refs and ``@``, ``:radius``/``:bbox``
-devices, point ``devices(@)`` candidates, attribute companions, every
-``:trigger`` form with ``:reset after``, and ``:time duration|after``
-dwell (one rule with a trigger and a dwell node, one with two dwell
-nodes). The same rows, split into random micro-batches, go to:
+A seeded random world — mid-latitude zones (polygons, plus a line
+and a point registered from GeoJSON), a zone that crosses ±180° and a
+zone at the pole — and one rule registry that covers positive and
+negated zone verbs (a buffered NNEAR among them), explicit refs and
+``@``, ``:radius``/``:bbox`` devices, point ``devices(@)`` candidates
+(a negated verb, whose search radius takes the negated-verb bump, and
+a ``:bbox`` target), attribute companions, ``lt``/``gte`` distance
+comparators, every ``:trigger`` form with ``:reset after``, and
+``:time duration|after`` dwell (one rule with a trigger and a dwell
+node, one with two dwell nodes). The same rows, split into random
+micro-batches, go to:
 
 - ``Engine.detect_batch`` (the oracle, one call per micro-batch);
 - ``detect_batch_spark`` with ``prefer_sql`` True and False, under the
@@ -43,7 +47,7 @@ from spinix_spark.engine.spark_pipeline import (
     merge_state_rows,
     split_output,
 )
-from spinix_spark.engine.stores import zone_from_ring
+from spinix_spark.engine.stores import zone_from_geojson, zone_from_ring
 from spinix_spark.geo.rings import circle_ring
 
 SEEDS = (5,)
@@ -61,7 +65,7 @@ def _zid(i: int) -> str:
     return "c5vj26evvhfjvfseau" + f"{i:02d}"
 
 
-ZA, ZB, ZC, ZD, ZP = (_zid(i) for i in range(5))
+ZA, ZB, ZC, ZD, ZP, ZL, ZQ = (_zid(i) for i in range(7))
 
 P_MID = f":center {MID[0]} {MID[1]} :radius 10km"
 P_DL = f":center {DATELINE[0]} {DATELINE[1]} :radius 20km"
@@ -105,6 +109,16 @@ RULES = {
     "rm" + "0" * 18: f"device :radius 800m intersects devices(@) {{ {P_DL} }}",
     "rn" + "0" * 18: f"device intersects polygon(@) :time after 30s {{ {P_POLAR} }}",
     "ro" + "0" * 18: f"device NEAR polygon({ZP}) {{ {P_POLAR} :trigger 2 times interval 10s }}",
+    "rp" + "0" * 18: f"device :radius 300m NNEAR polygon({ZA}, {ZC}) {{ {P_MID} }}",
+    "rq" + "0" * 18: (
+        f"device :radius 150m NINTERSECTS devices(@) and speed range [30 .. 170] {{ {P_MID} }}"
+    ),
+    "rr" + "0" * 18: f"device :bbox 700m intersects devices(@) {{ {P_DL} :trigger every 20s }}",
+    "rs" + "0" * 18: (
+        f"device :radius 250m intersects line({ZL}) or device :radius 400m NEAR point({ZQ})"
+        f" {{ {P_MID} }}"
+    ),
+    "rt" + "0" * 18: f"device :radius 1200m gte line({ZL}) and speed gt 120 {{ {P_MID} }}",
 }
 DEVICE_RULES = {k for k, v in RULES.items() if "devices(" in v}
 DWELL_RULES = {k for k, v in RULES.items() if ":time" in v}
@@ -112,7 +126,7 @@ DWELL_RULES = {k for k, v in RULES.items() if ":time" in v}
 
 @functools.lru_cache(maxsize=None)
 def _world(seed: int):
-    """(zones {id: ring}, micro-batches): rows in global event order,
+    """(zones {id: Zone}, micro-batches): rows in global event order,
     split at random cut points, each batch sorted by (device_id,
     datetime, url) — the order every surface folds state in."""
     rng = np.random.default_rng(seed)
@@ -135,6 +149,19 @@ def _world(seed: int):
     # near the pole: its hexagon spans ~80° of longitude
     zp_lon = jitter(180.0)
     zones[ZP] = circle_ring(89.996, zp_lon, 300.0, 6)
+    zones = {zid: zone_from_ring(zid, ring) for zid, ring in zones.items()}
+    # a line and a point registered from GeoJSON ((lon, lat) order)
+    line = [
+        [MID[1] + dx, MID[0] + dy]
+        for dx, dy in ((-0.015, -0.01), (0.002, 0.003), (0.016, 0.012))
+    ]
+    zones[ZL] = zone_from_geojson(
+        ZL, LAYER, json.dumps({"type": "LineString", "coordinates": line})
+    )
+    point = [MID[1] + 0.004, MID[0] - 0.003]
+    zones[ZQ] = zone_from_geojson(
+        ZQ, LAYER, json.dumps({"type": "Point", "coordinates": point})
+    )
 
     devices = [
         (f"d{region[0]}{i:018d}", region)
@@ -192,8 +219,8 @@ def _world(seed: int):
 def _engine(seed: int, keyed: bool = False) -> Engine:
     zones, _ = _world(seed)
     eng = Engine(eval_dwell=True)
-    for zid, ring in zones.items():
-        eng.zones.add(zone_from_ring(zid, ring))
+    for zone in zones.values():
+        eng.zones.add(zone)
     for rid, spec in RULES.items():
         if not (keyed and rid in DEVICE_RULES):
             eng.add_rule(spec, rule_id=rid)
