@@ -8,8 +8,7 @@ a driver-side ``.collect()`` to build the snapshot. At url-as-device
 cardinality (the 100 TB shape) the snapshot IS fact-sized, so this
 module computes the ``@`` verdict relationally instead:
 
-    points ──cell key──► explode k-ring neighbor cells
-           ──equi-join── devices_df (cell key, optional salt)
+    points ──cell pair join (joins.cell_pair_candidates)── devices_df
            ──candidacy (exact Devices.Near rect, devices.go:166-199)
            ──pairwise verb refine (vectorized kernel in mapInPandas;
              plain Catalyst for a point target)
@@ -163,75 +162,37 @@ def at_candidate_pairs(
     n_salt: int = 0,
 ) -> DataFrame:
     """(row, snapshot-device) pairs satisfying the exact verb — the
-    distributed form of the kernel's per-snapshot-device loop.
+    distributed form of the kernel's per-snapshot-device loop: the cell
+    pair join (joins.cell_pair_candidates) at the node's search radius,
+    then layer equality, the kernel's candidacy rect and the verb.
 
     ``points`` must carry ``_rowkey`` (unique per row), lat, lon,
     layer_id, device_id. ``devices_df`` needs device_id, layer_id,
-    lat, lon. ``n_salt`` > 0 splits hot cells two-level (see
-    joins.near_pairs_salted).
+    lat, lon. ``n_salt`` > 1 salts each row by its ``_rowkey``.
     """
     import math
 
+    from spinix_spark.engine.joins import cell_pair_candidates
     from spinix_spark.geo.geodesy import EARTH_RADIUS_M
 
     search_m = at_search_meters(node)
-    cell = F.expr(scheme.sql_cell_expr("lat", "lon"))
-
-    # search/probe key construction is shared with the radius
-    # self-join (engine/joins.py): per-row wrapped k-ring span
-    # (latitude reach = angular radius; longitude widens by 1/cos lat),
-    # single-explode key arrays, polar-cap keys for pole-crossing
-    # discs — mirroring the kernel's rect universe + polar widening.
-    from spinix_spark.engine.joins import (
-        _with_cap_probe_keys,
-        _with_neighbor_cells,
-    )
-
     deg_s = math.degrees(search_m / EARTH_RADIUS_M)
-
+    cell = F.expr(scheme.sql_cell_expr("lat", "lon"))
     left = points.select(
         "_rowkey",
         F.col("device_id").alias("a_id"),
         F.col("layer_id").alias("a_layer"),
         F.col("lat").alias("a_lat"),
         F.col("lon").alias("a_lon"),
-        "lat",
         cell.alias("_cell"),
     )
-    left = _with_neighbor_cells(
-        left, scheme, "_cell", search_m, lat_col="lat"
-    ).drop("lat", "_cell")
-    right = _with_cap_probe_keys(
-        devices_df.select(
-            F.col("device_id").alias("b_id"),
-            F.col("layer_id").alias("b_layer"),
-            F.col("lat").alias("b_lat"),
-            F.col("lon").alias("b_lon"),
-            cell.alias("_cell"),
-        ),
-        scheme,
-        search_m,
-        "b_lat",
-        "_cell",
+    right = devices_df.select(
+        F.col("device_id").alias("b_id"),
+        F.col("layer_id").alias("b_layer"),
+        F.col("lat").alias("b_lat"),
+        F.col("lon").alias("b_lon"),
+        cell.alias("_cell"),
     )
-    join_keys = ["_ncell"]
-    if n_salt > 0:
-        # Two-level salt with the EXPLODE on the snapshot side (round
-        # 7): the fact side already fans out ~(2k+1)^2 k-ring keys per
-        # row, so exploding it ×S again multiplied the big side's rows
-        # for nothing (measured 4.3M vs 0.55M candidate-build rows at
-        # 60k pages / S=8). Each fact row keeps ONE deterministic salt
-        # (hash of its unique _rowkey) and each snapshot row replicates
-        # over all S salts — every (row, device) pair still meets at
-        # exactly one (_ncell, _bb) key, and a hot cell's work splits
-        # across S sub-keys by the FACT-side multiplicity (the large
-        # one: the snapshot holds at most one row per device). Pair
-        # set identical (cross-strategy parity tests).
-        left = left.withColumn("_bb", F.pmod(F.xxhash64("_rowkey"), n_salt))
-        right = right.withColumn(
-            "_bb", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
-        )
-        join_keys = ["_ncell", "_bb"]
 
     # candidacy = kernel universe: the framed rect test, widened at the
     # poles (cap row × band candidate) exactly as the kernel widens —
@@ -244,7 +205,7 @@ def at_candidate_pairs(
         f" OR (a_lat - {deg_s!r} <= -90.0 AND b_lat <= {-90.0 + 2.0 * deg_s!r}))"
     )
     cand = (
-        left.join(right, join_keys)
+        cell_pair_candidates(left, right, scheme, search_m, n_salt, "_rowkey")
         .where(F.col("a_layer") == F.col("b_layer"))
         .where(F.expr(f"({rect_pred} OR {polar_pred})"))
         .select("_rowkey", "a_id", "a_lat", "a_lon", "b_id", "b_lat", "b_lon")

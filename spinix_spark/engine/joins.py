@@ -1,43 +1,42 @@
-"""Join-based physical strategies for the spatial operators.
+"""The k-ring cell pair join: which rows lie within a radius of which.
 
-The engine's default plan broadcasts zones/rules and refines inside
-``mapInPandas`` (engine/spark_pipeline.py) — right when the dimension
-side fits in memory, which mirrors the reference's in-memory indexes.
-This module provides the *relational* strategies for when it doesn't:
+The reference answers "which devices are near this one" with an index
+lookup (``Devices.Near``, devices.go:166-199). At fact scale the same
+question is an equi-join on grid-cell keys, built once here in
+:func:`cell_pair_candidates`:
 
-- ``points_in_zones_join``: explode zone covering cells → broadcast
-  equi-join on the cell key → vectorized exact PIP refinement on the
-  surviving (point, zone) candidates only. The refine stage sees just
-  (lat, lon, ring) columns — column pruning keeps the scan minimal.
-- ``near_pairs``: device-near-device radius self-join via k-ring cell
-  expansion (shuffle hash join on the cell key).
-- ``near_pairs_salted``: the hot-cell remedy. A dense cell makes the
-  pair join quadratic *within one task*; bucketing each cell's rows
-  into S salt buckets and joining on (cell, bucket_a, bucket_b) splits
-  that cell's work across S² tasks — the two-level salting the
-  north_rule calls for (AQE skew-join splits partitions, but cannot
-  split a single key's quadratic blowup; salting can).
+- each left row explodes to the keys of every cell its search disc
+  can touch (per-row longitude span, antimeridian wrap, polar band
+  and cap keys — :func:`_with_neighbor_cells`);
+- each right row carries its own canonical key, plus the cap key near
+  a pole (:func:`_with_cap_probe_keys`);
+- with ``n_salt`` > 1 a left row takes one salt and a right row is
+  replicated over all salts, so one hot cell's work splits
+  ``n_salt`` ways.
+
+Callers refine the candidates exactly: :func:`near_pairs` (the
+device-near-device radius self-join) by haversine,
+``devices_at.at_candidate_pairs`` (the ``devices(@)`` verdict) by the
+kernel's candidacy rect and verb.
+
+Hot-cell measurement (``bench.py``'s hot-cell shape: 60 k pages, ~10 %
+in one cell, 150 m, S = 8; 4-core host, ``local[4]``, AQE on, one
+Spark session, 7 interleaved reps; median (quartiles)): salting both
+sides (S² keys, the previous ``near_pairs_salted``) 5.90 s
+(5.24–6.90); one-sided salt (:func:`cell_pair_candidates`) 3.71 s
+(3.29–4.21); unsalted 2.21 s (2.06–2.71) — all three the same
+15,377,073 pairs. Unsalted was fastest on that host: that salting
+pays once one key's work outgrows a task is expected, not measured.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from spinix_spark.geo.cells import GridScheme
 from spinix_spark.geo.geodesy import EARTH_RADIUS_M
 from spinix_spark.geo.sqlgen import haversine_sql
-from spinix_spark.engine.stores import Zone, zone_cells
 
 # Polar-cap join keys — sentinels far outside every canonical cell-id
 # band AND every out-of-band neighbor id (max legal id ≈ 1.2e16 at res
@@ -80,68 +79,6 @@ def polar_band_rows(scheme: GridScheme, radius_m: float) -> int:
         return scheme.rows // 4
     colat = math.degrees(math.asin(sin_r / s))
     return min(scheme.rows // 4, int(math.ceil(colat / scheme.size)))
-
-
-def zones_cells_df(spark, zones: list[Zone], scheme: GridScheme) -> DataFrame:
-    """Zone dimension exploded to one row per covering cell."""
-    rows = []
-    for z in zones:
-        for c in zone_cells(z, scheme):
-            rows.append((z.object_id, z.layer_id, int(c)))
-    return spark.createDataFrame(rows, "object_id string, layer_id string, cell long")
-
-
-def points_in_zones_join(
-    points: DataFrame,
-    zones: list[Zone],
-    scheme: GridScheme,
-    cell_col: str = "cell",
-) -> DataFrame:
-    """(point × zone) containment via cell equi-join + exact refine.
-
-    Plan: points ⨝ broadcast(zone_cells) on cell (no shuffle on the
-    fact side) → applyInPandas-style refine with the zone rings shipped
-    in a broadcast variable → (url/doc id, object_id) match rows.
-    """
-    spark = points.sparkSession
-    zdf = zones_cells_df(spark, zones, scheme)
-    cand = points.join(F.broadcast(zdf), on=cell_col)
-
-    rings_by_id = {z.object_id: [r.copy() for r in z.rings] for z in zones}
-    b = spark.sparkContext.broadcast(rings_by_id)
-
-    id_col = "url" if "url" in points.columns else points.columns[0]
-    out_schema = StructType(
-        [
-            StructField(id_col, points.schema[id_col].dataType),
-            StructField("object_id", StringType()),
-            StructField("lat", DoubleType()),
-            StructField("lon", DoubleType()),
-        ]
-    )
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from spinix_spark.geo.predicates import points_in_ring
-
-        rings = b.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            lat = pdf["lat"].to_numpy(np.float64)
-            lon = pdf["lon"].to_numpy(np.float64)
-            oids = pdf["object_id"].to_numpy(object)
-            for oid in pd.unique(pdf["object_id"]):
-                m = oids == oid
-                hit = np.zeros(int(m.sum()), dtype=bool)
-                for ring in rings.get(oid, []):
-                    hit |= points_in_ring(lat[m], lon[m], ring)
-                keep[np.nonzero(m)[0][hit]] = True
-            yield pdf.loc[keep, [id_col, "object_id", "lat", "lon"]]
-
-    return cand.select(id_col, "object_id", "lat", "lon").mapInPandas(
-        refine, schema=out_schema
-    )
 
 
 def _with_neighbor_cells(
@@ -296,46 +233,67 @@ def _with_cap_probe_keys(
     return df.withColumn("_ncell", F.explode(keys)).drop(cell_col)
 
 
+def cell_pair_candidates(
+    left: DataFrame,
+    right: DataFrame,
+    scheme: GridScheme,
+    radius_m: float,
+    n_salt: int = 0,
+    salt_key: str = "a_id",
+) -> DataFrame:
+    """The k-ring cell equi-join: every (left, right) row pair that
+    can lie within ``radius_m``, plus some that do not — callers
+    refine. ``left`` carries a_lat, a_lon and ``_cell`` (its grid cell
+    under ``scheme``), ``right`` b_lat, b_lon and ``_cell``; any other
+    columns pass through. Left keys are the radius-covering search
+    keys (:func:`_with_neighbor_cells`), right keys the probe keys
+    (:func:`_with_cap_probe_keys`), so a true pair meets on exactly
+    one key.
+
+    ``n_salt`` > 1 splits each key ``n_salt`` ways: a left row takes
+    the one salt ``pmod(xxhash64(salt_key), n_salt)`` and a right row
+    is replicated over all of them, joining on (_ncell, _bb) — each
+    pair still meets exactly once, and a hot cell's left rows spread
+    over ``n_salt`` tasks. The left side is the one that already fans
+    out over the k-ring, so it is never replicated."""
+    left = _with_neighbor_cells(left, scheme, "_cell", radius_m).drop("_cell")
+    right = _with_cap_probe_keys(right, scheme, radius_m, "b_lat", "_cell")
+    keys = ["_ncell"]
+    if n_salt > 1:
+        left = left.withColumn("_bb", F.pmod(F.xxhash64(salt_key), n_salt))
+        right = right.withColumn(
+            "_bb", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
+        )
+        keys.append("_bb")
+    return left.join(right, keys)
+
+
 def near_pairs(
     points: DataFrame,
     scheme: GridScheme,
     radius_m: float,
-    id_col: str = "doc_id",
-    cell_col: str = "cell",
+    n_salt: int = 0,
 ) -> DataFrame:
-    """Pairs within radius via wrapped k-ring cell join + exact
-    haversine. Globally correct: per-row longitude span (1/cos lat),
-    antimeridian column wrap, polar-cap key for pole-crossing discs —
-    the exact haversine refine admits every candidate the cell join
-    surfaces, and the cell join surfaces every true pair (asserted
-    against the O(n²) trig oracle in tests)."""
-    left = _with_neighbor_cells(
-        points.select(
-            F.col(id_col).alias("a_id"),
-            F.col("lat").alias("a_lat"),
-            F.col("lon").alias("a_lon"),
-            F.col(cell_col),
-        ),
-        scheme,
-        cell_col,
-        radius_m,
-        lat_col="a_lat",
-    ).drop(cell_col)
-    right = _with_cap_probe_keys(
-        points.select(
-            F.col(id_col).alias("b_id"),
-            F.col("lat").alias("b_lat"),
-            F.col("lon").alias("b_lon"),
-            F.col(cell_col),
-        ),
-        scheme,
-        radius_m,
-        "b_lat",
-        cell_col,
+    """Pairs (a_id < b_id) of ``points`` (doc_id, lat, lon, cell)
+    within ``radius_m``: the cell pair join refined by exact
+    haversine. Globally correct — the join surfaces every true pair
+    (asserted against the O(n²) trig oracle in tests), at any
+    ``n_salt``."""
+    left = points.select(
+        F.col("doc_id").alias("a_id"),
+        F.col("lat").alias("a_lat"),
+        F.col("lon").alias("a_lon"),
+        F.col("cell").alias("_cell"),
+    )
+    right = points.select(
+        F.col("doc_id").alias("b_id"),
+        F.col("lat").alias("b_lat"),
+        F.col("lon").alias("b_lon"),
+        F.col("cell").alias("_cell"),
     )
     dist = F.expr(haversine_sql("a_lat", "a_lon", "b_lat", "b_lon"))
     return (
-        left.join(right, "_ncell")
+        cell_pair_candidates(left, right, scheme, radius_m, n_salt)
         .where(F.col("a_id") < F.col("b_id"))
         .where(dist <= radius_m)
         .select("a_id", "b_id", dist.alias("dist_m"))
@@ -347,51 +305,6 @@ def near_pairs_salted(
     scheme: GridScheme,
     radius_m: float,
     n_salt: int = 8,
-    id_col: str = "doc_id",
-    cell_col: str = "cell",
 ) -> DataFrame:
-    """Two-level salted radius self-join for hot-cell skew.
-
-    Each row gets a deterministic salt bucket ``b = hash(id) mod S``;
-    the join key becomes (neighbor_cell, b_left, b_right), with the
-    left side exploding all S right-buckets and the right side keeping
-    its own bucket — so a cell holding H rows runs as S² tasks of
-    (H/S)² work instead of one H² task. Result set is identical to
-    :func:`near_pairs` (asserted in tests)."""
-    salted = points.withColumn("_b", F.pmod(F.xxhash64(F.col(id_col)), n_salt))
-    left = _with_neighbor_cells(
-        salted.select(
-            F.col(id_col).alias("a_id"),
-            F.col("lat").alias("a_lat"),
-            F.col("lon").alias("a_lon"),
-            F.col(cell_col),
-            F.col("_b").alias("_ba"),
-        ),
-        scheme,
-        cell_col,
-        radius_m,
-        lat_col="a_lat",
-    ).drop(cell_col)
-    left = left.withColumn(
-        "_bb", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
-    )
-    right = _with_cap_probe_keys(
-        salted.select(
-            F.col(id_col).alias("b_id"),
-            F.col("lat").alias("b_lat"),
-            F.col("lon").alias("b_lon"),
-            F.col(cell_col),
-            F.col("_b").alias("_bb"),
-        ),
-        scheme,
-        radius_m,
-        "b_lat",
-        cell_col,
-    ).withColumn("_ba", F.explode(F.array(*[F.lit(i) for i in range(n_salt)])))
-    dist = F.expr(haversine_sql("a_lat", "a_lon", "b_lat", "b_lon"))
-    return (
-        left.join(right, ["_ncell", "_ba", "_bb"])
-        .where(F.col("a_id") < F.col("b_id"))
-        .where(dist <= radius_m)
-        .select("a_id", "b_id", dist.alias("dist_m"))
-    )
+    """:func:`near_pairs` with ``n_salt`` hot-cell salts (default 8)."""
+    return near_pairs(points, scheme, radius_m, n_salt)

@@ -172,17 +172,6 @@ def rect_contains_point(rect: np.ndarray, lat, lon) -> np.ndarray:
     )
 
 
-def rect_intersects_rect(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    a = np.asarray(a, dtype=np.float64)
-    b = np.asarray(b, dtype=np.float64)
-    return (
-        (a[..., 0] <= b[..., 2])
-        & (a[..., 2] >= b[..., 0])
-        & (a[..., 1] <= b[..., 3])
-        & (a[..., 3] >= b[..., 1])
-    )
-
-
 def rect_contains_rect(outer: np.ndarray, inner: np.ndarray) -> np.ndarray:
     outer = np.asarray(outer, dtype=np.float64)
     inner = np.asarray(inner, dtype=np.float64)

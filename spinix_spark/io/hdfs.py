@@ -41,14 +41,6 @@ def delete(spark: SparkSession, path: str, recursive: bool = True) -> None:
         fs.delete(p, recursive)
 
 
-def list_names(spark: SparkSession, path: str) -> list[str]:
-    """Child entry names of a directory ([] when absent)."""
-    fs, p, _ = hadoop_fs(spark, path)
-    if not fs.exists(p):
-        return []
-    return sorted(st.getPath().getName() for st in fs.listStatus(p))
-
-
 def read_text(spark: SparkSession, path: str) -> str | None:
     """Full contents of a (small) text file; None when absent."""
     fs, p, jvm = hadoop_fs(spark, path)

@@ -385,23 +385,6 @@ def ivf_train(
     return cents
 
 
-def ivf_sq_dist_objective(embeddings: DataFrame, cents: list[list[float]]) -> float:
-    """k-means objective: mean over the table of the squared distance
-    to the nearest centroid — non-increasing under Lloyd iterations."""
-    adj = ", ".join(
-        f"({_spark_dot('embedding', _spark_arr(c))} - CAST({_dot_py(c, c) / 2.0!r} AS DOUBLE))"
-        for c in cents
-    )
-    sq_norm = (
-        "aggregate(embedding, CAST(0.0 AS DOUBLE), "
-        "(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))"
-    )
-    row = embeddings.selectExpr(
-        f"avg({sq_norm} - 2 * array_max(array({adj}))) AS obj"
-    ).collect()[0]
-    return float(row.obj)
-
-
 def ann_recall_stats(
     spark: SparkSession,
     sf_dir: str,
@@ -494,34 +477,6 @@ def ann_recall_stats(
     scored.unpersist()
     gt.unpersist()
     return out
-
-
-def choose_nprobe(
-    spark: SparkSession,
-    sf_dir: str,
-    target_recall: float = 0.9,
-    max_nprobe: int = NLIST,
-    **kwargs,
-) -> tuple[int, dict]:
-    """Smallest NPROBE whose recall@k meets ``target_recall`` — the
-    operational wrapper around :func:`ann_recall_stats`: doubling
-    probe counts (1, 2, 4, ...) until the target is met, returning
-    (nprobe, full recall curve). At 100 TB this is the offline tuning
-    job that fixes the serving NPROBE; probing costs grow linearly in
-    NPROBE while recall saturates, so the doubling sweep finds the
-    knee in O(log NLIST) evaluations of the shared scored pass."""
-    nprobes = []
-    p = 1
-    while p < max_nprobe:
-        nprobes.append(p)
-        p *= 2
-    nprobes.append(max_nprobe)
-    curve = ann_recall_stats(spark, sf_dir, nprobes=tuple(nprobes), **kwargs)
-    topk = kwargs.get("topk", TOPK)
-    for p in nprobes:
-        if curve[f"recall{topk}_nprobe{p}"] >= target_recall:
-            return p, curve
-    return max_nprobe, curve
 
 
 ANN_QUERIES: dict[str, tuple] = {

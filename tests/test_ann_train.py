@@ -10,9 +10,26 @@ from __future__ import annotations
 
 import numpy as np
 
-from spinix_spark.queries_ann import ivf_sq_dist_objective, ivf_train
+from spinix_spark.queries_ann import _dot_py, _spark_arr, _spark_dot, ivf_train
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def ivf_sq_dist_objective(embeddings, cents: list[list[float]]) -> float:
+    """k-means objective: mean over the table of the squared distance
+    to the nearest centroid — non-increasing under Lloyd iterations."""
+    adj = ", ".join(
+        f"({_spark_dot('embedding', _spark_arr(c))} - CAST({_dot_py(c, c) / 2.0!r} AS DOUBLE))"
+        for c in cents
+    )
+    sq_norm = (
+        "aggregate(embedding, CAST(0.0 AS DOUBLE), "
+        "(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))"
+    )
+    row = embeddings.selectExpr(
+        f"avg({sq_norm} - 2 * array_max(array({adj}))) AS obj"
+    ).collect()[0]
+    return float(row.obj)
 
 
 def _numpy_train(vecs: np.ndarray, ids: np.ndarray, nlist: int, iters: int):

@@ -10,8 +10,9 @@ circle agree on every fixture pair.
 
 Covers: GridScheme wrap/reflect (cells.py), the kernel's framed rect +
 polar widening + geodesic polar verb (runtime.py), the pair-join path
-(devices_at.py: wrapped k-ring + polar-cap keys), near_pairs /
-near_pairs_salted (joins.py), and the rule bbox gate for rules
+(devices_at.py) and near_pairs at every salt count — both through the
+one cell pair join (joins.cell_pair_candidates: wrapped k-ring +
+polar-band and polar-cap keys) — and the rule bbox gate for rules
 centered at ±180° in both forms — SQL (spark_pipeline._bbox_pred) and
 NumPy (detect.rule_gate_mask, on the kernel and keyed-stream
 surfaces).
@@ -404,7 +405,7 @@ def test_at_dateline_both_sides_match(spark):
     assert oracle["pf"] == ()
 
 
-# --- near_pairs / near_pairs_salted vs brute haversine -------------------
+# --- near_pairs (every salt count) vs brute haversine ------------------
 
 
 def _brute_pairs(ids, lat, lon, radius_m):
@@ -453,9 +454,9 @@ NEAR_WORLD = [
 ]
 
 
-@pytest.mark.parametrize("salted", [False, True])
-def test_near_pairs_global(spark, salted):
-    from spinix_spark.engine.joins import near_pairs, near_pairs_salted
+@pytest.mark.parametrize("n_salt", [0, 1, 3, 8])
+def test_near_pairs_global(spark, n_salt):
+    from spinix_spark.engine.joins import near_pairs
 
     scheme = GridScheme(res=9)
     ids = [w[0] for w in NEAR_WORLD]
@@ -465,13 +466,12 @@ def test_near_pairs_global(spark, salted):
     pdf["cell"] = scheme.cell_of(lat, lon)
     df = spark.createDataFrame(pdf).repartition(3)
     radius = 250.0
-    fn = near_pairs_salted if salted else near_pairs
     got = {
         (r.a_id, r.b_id)
-        for r in fn(df, scheme, radius).collect()
+        for r in near_pairs(df, scheme, radius, n_salt).collect()
     }
     exp = _brute_pairs(ids, lat, lon, radius)
-    assert got == exp, f"salted={salted}: {got} != {exp}"
+    assert got == exp, f"n_salt={n_salt}: {got} != {exp}"
     # the world must actually exercise all the hard cases
     assert (1, 2) in exp and (3, 4) in exp and (5, 6) in exp
     assert (10, 11) in exp and (12, 13) in exp  # polar band edge/interior
@@ -643,9 +643,9 @@ def test_near_pairs_plan_single_generate_per_side(spark):
     ONE per-row array exploded ONCE per side. The regression this
     guards against — chaining two sequence-explodes — measured 1.7×
     slower (each Generate is a codegen stage break; PLANS.md). Expected
-    Generates in near_pairs_salted: left keys, left salt fan-out,
-    right probe keys, right salt fan-out = 4 total; plain near_pairs:
-    left keys + right probe keys = 2."""
+    Generates in near_pairs_salted: left keys, right probe keys, right
+    salt fan-out = 3 total (a left row takes one salt, it is never
+    replicated); plain near_pairs: left keys + right probe keys = 2."""
     from spinix_spark.engine.joins import near_pairs, near_pairs_salted
 
     scheme = GridScheme(res=9)
@@ -658,7 +658,7 @@ def test_near_pairs_plan_single_generate_per_side(spark):
     plain = near_pairs(df, scheme, 250.0)._jdf.queryExecution().executedPlan().toString()
     salted = near_pairs_salted(df, scheme, 250.0)._jdf.queryExecution().executedPlan().toString()
     assert plain.count("Generate") == 2, plain
-    assert salted.count("Generate") == 4, salted
+    assert salted.count("Generate") == 3, salted
 
 
 def test_lon_to_frame_noop_and_wrap():

@@ -12,8 +12,16 @@ import pandas as pd
 import pytest
 
 from spinix_spark.engine.detect import Engine
-from spinix_spark.engine.devices_at import snapshot_df_from_points
-from spinix_spark.engine.spark_pipeline import detect_batch_spark, split_output
+from spinix_spark.engine.devices_at import (
+    at_candidate_pairs,
+    is_at_node,
+    snapshot_df_from_points,
+)
+from spinix_spark.engine.spark_pipeline import (
+    _with_rowkey,
+    detect_batch_spark,
+    split_output,
+)
 
 LAYER = "0" * 20
 
@@ -126,6 +134,25 @@ def test_at_join_parity_salted(spark):
         detect_batch_spark(points, eng_j, devices_df=devices_df, at_salt=4)
     )
     assert _events_canon(ev_kernel) == _events_canon(ev_salted)
+
+
+def test_at_pair_join_plan_shape(spark):
+    """Unsalted (the stream's form) explodes the row keys and the probe
+    keys and joins on the cell key alone; salted adds only the
+    snapshot's salt fan-out — a point row is never replicated."""
+    points = spark.createDataFrame(_mk_points(spark))
+    eng_j = Engine()
+    eng_j.add_rule(RULES[0], rule_id="r" + "7" * 19)
+    devices_df = spark.createDataFrame(pd.DataFrame(_mk_snapshot()))
+    (node,) = [n for n in eng_j.rules["r" + "7" * 19].spec.nodes if is_at_node(n)]
+    keyed = _with_rowkey(points)
+    plain, salted = (
+        at_candidate_pairs(keyed, devices_df, node, eng_j.scheme, n_salt=s)
+        ._jdf.queryExecution().executedPlan().toString()
+        for s in (0, 4)
+    )
+    assert plain.count("Generate") == 2 and "_bb" not in plain, plain
+    assert salted.count("Generate") == 3 and "_bb" in salted, salted
 
 
 def test_at_join_negated_bump(spark):

@@ -21,7 +21,6 @@ from spinix_spark.geo.predicates import (
     points_equal,
     points_in_ring,
     rect_contains_point,
-    rect_intersects_rect,
     ring_contains_ring,
     ring_intersects_ring,
 )
@@ -119,11 +118,6 @@ def test_ring_intersects_and_contains():
 
 def test_rect_ops():
     a = np.array([0.0, 0.0, 10.0, 10.0])
-    b = np.array([5.0, 5.0, 15.0, 15.0])
-    c = np.array([2.0, 2.0, 3.0, 3.0])
-    assert bool(rect_intersects_rect(a, b))
-    assert bool(rect_intersects_rect(a, c))
-    assert not bool(rect_intersects_rect(b, c))
     assert bool(rect_contains_point(a, 10.0, 10.0))
     assert not bool(rect_contains_point(a, 10.0, 10.1))
 

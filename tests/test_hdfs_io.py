@@ -25,14 +25,15 @@ def test_text_roundtrip_and_atomic_replace(spark, tmp_path):
 
 def test_list_and_delete(spark, tmp_path):
     base = str(tmp_path / "d")
-    assert hdfs.list_names(spark, base) == []
+    assert not hdfs.exists(spark, base)
     hdfs.mkdirs(spark, base + "/a")
     hdfs.write_text_atomic(spark, base + "/b.txt", "x")
-    assert hdfs.list_names(spark, base) == ["a", "b.txt"]
+    assert hdfs.exists(spark, base + "/a") and hdfs.exists(spark, base + "/b.txt")
     hdfs.delete(spark, base + "/a")
-    assert hdfs.list_names(spark, base) == ["b.txt"]
+    assert not hdfs.exists(spark, base + "/a") and hdfs.exists(spark, base + "/b.txt")
     hdfs.delete(spark, base)
-    assert hdfs.list_names(spark, base) == []
+    assert not hdfs.exists(spark, base)
+    hdfs.delete(spark, base)  # deleting an absent path is a no-op
 
 
 def test_unicode_and_large_text(spark, tmp_path):

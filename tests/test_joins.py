@@ -1,20 +1,17 @@
-"""Join-based physical strategies: equality against the broadcast
-engine path / unsalted join, and plan shape checks."""
+"""The cell pair join (engine/joins.py): salted equals unsalted, and
+plan shape checks."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from spinix_spark.engine.joins import (
+    cell_pair_candidates,
     near_pairs,
     near_pairs_salted,
-    points_in_zones_join,
 )
-from spinix_spark.engine.stores import zone_from_ring
 from spinix_spark.geo.cells import GridScheme
-from spinix_spark.geo.rings import circle_ring
 from spinix_spark.io.derive import derived_points
 
 SF = "/root/testdata/sf0.001"
@@ -40,27 +37,27 @@ def test_near_pairs_salted_equals_unsalted(spark, points):
     assert len(base) > 0
 
 
-def test_points_in_zones_join_matches_kernel(spark, points):
-    ring = circle_ring(42.935, -72.27, 1500.0, 5)
-    zones = [zone_from_ring("c5vj26evvhfjvfseaulg", ring)]
-    scheme = GridScheme(res=8)
-    pts = derived_points(spark, SF).withColumn(
-        "cell", F.expr(scheme.sql_cell_expr("lat", "lon"))
-    )
-    got = {
-        r.url
-        for r in points_in_zones_join(
-            pts.withColumnRenamed("doc_id", "url"), zones, scheme
-        ).collect()
-    }
-    # kernel reference
-    from spinix_spark.geo.predicates import points_in_ring
+def test_cell_pair_candidates_same_multiset_at_any_salt(spark, points):
+    """The salt placement neither drops nor repeats a candidate: the
+    unrefined (left, right) rows are the same multiset unsalted and
+    salted, so every pair still meets on exactly one key."""
 
-    pdf = derived_points(spark, SF).toPandas()
-    expected = set(
-        pdf.doc_id[points_in_ring(pdf.lat.to_numpy(), pdf.lon.to_numpy(), ring)]
-    )
-    assert got == expected and len(got) > 0
+    def side(p):
+        return points.select(
+            F.col("doc_id").alias(f"{p}_id"),
+            F.col("lat").alias(f"{p}_lat"),
+            F.col("lon").alias(f"{p}_lon"),
+            F.col("cell").alias("_cell"),
+        )
+
+    def counts(n_salt):
+        cand = cell_pair_candidates(side("a"), side("b"), FINE, 250.0, n_salt)
+        rows = cand.groupBy("a_id", "b_id").count().collect()
+        return {(r.a_id, r.b_id): r["count"] for r in rows}
+
+    base = counts(0)
+    assert set(base.values()) == {1} and len(base) > points.count()
+    assert counts(4) == base
 
 
 def test_near_pairs_plan_is_cell_equijoin(spark, points):
@@ -69,14 +66,3 @@ def test_near_pairs_plan_is_cell_equijoin(spark, points):
     assert "Cartesian" not in plan
     assert "Join" in plan
 
-
-def test_zone_join_broadcasts_dimension(spark, points):
-    ring = circle_ring(42.935, -72.27, 1500.0, 5)
-    zones = [zone_from_ring("c5vj26evvhfjvfseaulg", ring)]
-    scheme = GridScheme(res=8)
-    pts = derived_points(spark, SF).withColumn(
-        "cell", F.expr(scheme.sql_cell_expr("lat", "lon"))
-    )
-    df = points_in_zones_join(pts.withColumnRenamed("doc_id", "url"), zones, scheme)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
