@@ -23,17 +23,18 @@ the set is identical, the order is an unspecified implementation
 detail.
 
 Every point ``@`` node (:func:`is_at_node`, any target buffer) gets its
-verdict here when detect_batch_spark is given ``devices_df``:
+verdict here when detect_batch_spark is given ``devices_df``, as the
+column ``runtime.at_verdict_col(node)`` left-joined onto the rows of
+the rule's strategy:
 
-- a stateless all-AND rule with one ``@`` node (:func:`devices_at_node`)
-  whose other nodes are attribute or distance nodes, which compile to
-  Catalyst, inner-joins the verdict and folds in Catalyst — entirely
-  JVM-side;
-- every other rule (a real ``:trigger``, dwell, an OR fold, a
-  spatial-verb companion) left-joins it onto the kernel stage's rows as
-  the column ``runtime.at_verdict_col(node)``, which
-  ``runtime._eval_sp_devices`` reads in place of the broadcast
-  snapshot; trigger, dwell and fold run there as for any rule.
+- a stateless rule whose other nodes are attribute or distance nodes
+  compiles to Catalyst (engine/sql_compile.py), which reads the column
+  as ``IS NOT NULL`` and folds it like any other node — entirely
+  JVM-side; under an all-AND fold the left join turns inner;
+- every other rule (a real ``:trigger``, dwell, a spatial-verb
+  companion) takes the kernel stage, where ``runtime._eval_sp_devices``
+  reads the column in place of the broadcast snapshot; trigger, dwell
+  and fold run there as for any rule.
 
 A buffered ``devices(@) :radius ...`` candidate keeps the broadcast
 snapshot; :func:`empty_snapshot_ref_reasons` refuses it at fact scale.
@@ -73,21 +74,6 @@ def is_at_node(node) -> bool:
         and not node.right.refs
         and node.right.kind not in (Token.RADIUS, Token.BBOX)
     )
-
-
-def devices_at_node(rule) -> SpDevicesOp | None:
-    """The rule's single devices(@) node if the rule fits the all-JVM
-    pair-join strategy's shape (stateless, all-AND fold, one point
-    ``@`` node), else None."""
-    from spinix_spark.dsl import ast_nodes as ast
-
-    spec = rule.spec
-    if spec.props.repeat != ast.REPEAT_NONE:
-        return None
-    if any(op is not Token.AND for op in spec.ops):
-        return None
-    at_nodes = [n for n in spec.nodes if is_at_node(n)]
-    return at_nodes[0] if len(at_nodes) == 1 else None
 
 
 def empty_snapshot_ref_reasons(engine) -> list[str]:

@@ -5,17 +5,21 @@ DataFrame and returns one OUT_SCHEMA frame of ``row_type = 'event'``
 and ``row_type = 'state'`` rows. Each rule first passes its geofence
 prune (``_bbox_pred`` ≙ Rules.Walk, rule.go:229-249, pushed into the
 scan; tightened to zone proximity where that is event-sound), then
-takes one of three strategies:
+takes one of two strategies:
 
-- stateless all-AND devices(@) rules, when the snapshot is given as a
-  DataFrame: the all-JVM pair join (engine/devices_at.py);
-- stateless rules of attribute and distance nodes only: compiled to
-  Catalyst expressions (engine/sql_compile.py), entirely JVM-side;
+- stateless rules of attribute, distance and point devices(@) nodes:
+  compiled to Catalyst expressions (engine/sql_compile.py), entirely
+  JVM-side;
 - everything else: the kernel stage, ``kernel_event_frames``, in
   mapInPandas, with zones, rules and the device snapshot broadcast.
   It is the one evaluator of zone and explicit-device verbs.
-  When the snapshot is given as a DataFrame, the pair join supplies
-  each devices(@) node's verdict as a column of the kernel's rows.
+
+When the snapshot is given as a DataFrame, the pair join
+(engine/devices_at.py) supplies each point devices(@) node's verdict
+as a column (``_at_verdicts``), left-joined onto the rows of either
+strategy: a compiled rule reads it in Catalyst, the kernel in place of
+the broadcast snapshot. Without that DataFrame no devices(@) node
+compiles, and the kernel reads the broadcast snapshot.
 
 The kernel stage is shared with the keyed stream. It calls
 ``rule_gate_mask`` (engine/detect.py) for the in-task bbox gate,
@@ -198,7 +202,7 @@ def rules_prune_expr(engine: Engine) -> str:
 
 def _event_cols_sql(rule, kws: tuple, refs_sql: str, columns) -> list[str]:
     """SQL select list of ``row_type = 'event'`` rows (OUT_SCHEMA) for
-    one node of a JVM-side strategy; ``kws`` = (left_kw, right_kw, op)."""
+    one node of a compiled rule; ``kws`` = (left_kw, right_kw, op)."""
     left_kw, right_kw, op = kws
     url_sql = "url" if "url" in columns else "''"
     dt_sql = "CAST(datetime AS BIGINT)" if "datetime" in columns else "CAST(0 AS BIGINT)"
@@ -223,13 +227,20 @@ def _event_cols_sql(rule, kws: tuple, refs_sql: str, columns) -> list[str]:
     ]
 
 
-def _sql_rule_events(points: DataFrame, engine: Engine, rule, plan) -> DataFrame:
+def _sql_rule_events(
+    points: DataFrame, engine: Engine, rule, plan, verdicts: dict[str, DataFrame]
+) -> DataFrame:
     """All-Catalyst event rows for one compiled-to-SQL rule: prune →
-    predicate/fold/refs columns → per-node filtered projections,
-    unioned. Whole-stage codegen end to end."""
+    the verdict columns of its point devices(@) nodes, left-joined on
+    ``_rowkey`` from ``verdicts`` (``_at_verdicts``) → predicate/fold/refs
+    columns → per-node filtered projections, unioned. Under an all-AND
+    fold the ``IS NOT NULL`` filter turns each left join inner
+    (Catalyst's EliminateOuterJoin)."""
     points.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
     cols = set(points.columns)
-    pruned = points.where(F.expr(_rule_prune_expr_for(engine, rule)))
+    pruned = _join_verdicts(
+        points.where(F.expr(_rule_prune_expr_for(engine, rule))), [rule], verdicts
+    )
     sel = ["*", f"{plan.final_sql} AS _final"]
     for j, ns in enumerate(plan.nodes):
         sel.append(f"{ns.ok_sql} AS _ok{j}")
@@ -257,64 +268,31 @@ def _with_rowkey(df: DataFrame) -> DataFrame:
     return df.withColumn("_rowkey", F.xxhash64(*key_cols))
 
 
-def _at_rule_events(
-    points: DataFrame, engine: Engine, rule, at_node, devices_df: DataFrame,
-    n_salt: int = 0,
-) -> DataFrame | None:
-    """Event rows for one stateless all-AND devices(@) rule, entirely
-    JVM-side: the pair join (engine/devices_at.py) inner-joins the @
-    verdict onto the rule's pruned, layer-matching rows (a row without
-    one can never emit) and the other nodes fold as Catalyst columns.
-    Returns None unless every other node is an attribute or distance
-    node (engine/sql_compile.py); the rule then takes the kernel
-    stage."""
-    from spinix_spark.engine.devices_at import at_candidate_pairs, at_row_matches
-    from spinix_spark.engine.sql_compile import compile_node_sql
+def _verdict_cols(rules) -> list[str]:
+    """The verdict columns (``runtime.at_verdict_col``) the point
+    devices(@) nodes of ``rules`` read, each once."""
+    from spinix_spark.engine.devices_at import is_at_node
 
-    points.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
-    spec = rule.spec
-    props = spec.props
-    columns = set(points.columns)
-    node_sqls = []
-    for n in spec.nodes:
-        if n is at_node:
-            node_sqls.append(None)
-        else:
-            ns = compile_node_sql(n, engine, columns)
-            if ns is None:
-                return None
-            node_sqls.append(ns)
-
-    base = _with_rowkey(
-        points.where(F.expr(_rule_prune_expr_for(engine, rule))).where(
-            F.col("layer_id") == props.layer
+    return list(
+        dict.fromkeys(
+            at_verdict_col(n) for r in rules for n in r.spec.nodes if is_at_node(n)
         )
     )
-    pairs = at_candidate_pairs(base, devices_df, at_node, engine.scheme, n_salt=n_salt)
-    joined = base.join(at_row_matches(pairs), "_rowkey", "inner")
 
-    ok_sqls = ["true" if ns is None else ns.ok_sql for ns in node_sqls]
-    acc = ok_sqls[0]
-    recorded = ["true"]
-    for j in range(1, len(ok_sqls)):
-        recorded.append(acc)
-        acc = f"({acc} AND {ok_sqls[j]})"
 
-    outs = []
-    for j, ns in enumerate(node_sqls):
-        if ns is None:
-            kws, refs_sql = ("device", "devices", str(at_node.op)), "_at_refs"
-        else:
-            kws, refs_sql = (ns.left_kw, ns.right_kw, ns.op), ns.refs_sql
-        outs.append(
-            joined.where(F.expr(f"({acc}) AND {recorded[j]} AND {ok_sqls[j]}")).selectExpr(
-                *_event_cols_sql(rule, kws, refs_sql, columns)
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionAll(o)
-    return out
+def _join_verdicts(
+    rows: DataFrame, rules, verdicts: dict[str, DataFrame]
+) -> DataFrame:
+    """``rows`` with the ``verdicts`` columns that ``rules`` read
+    left-joined on ``_rowkey`` (null where no snapshot device satisfies
+    the verb)."""
+    cols = [c for c in _verdict_cols(rules) if c in verdicts]
+    if not cols:
+        return rows
+    rows = _with_rowkey(rows)
+    for c in cols:
+        rows = rows.join(verdicts[c], "_rowkey", "left")
+    return rows.drop("_rowkey")
 
 
 def _visits_json(st: dict) -> str:
@@ -474,11 +452,12 @@ def states_by_device(state_df: DataFrame, name: str = "_states") -> DataFrame:
 
 def _at_verdicts(
     points: DataFrame, engine: Engine, rules, devices_df: DataFrame, n_salt: int
-) -> list[DataFrame]:
-    """(``_rowkey``, ``at_verdict_col(node)``) frames for the point
-    devices(@) nodes of the kernel stage's ``rules``: the pair join
+) -> dict[str, DataFrame]:
+    """``at_verdict_col(node)`` -> (``_rowkey``, that column) frame for
+    every point devices(@) node of ``rules``: the pair join
     (engine/devices_at.py) over the pruned, layer-matching rows of the
-    rules that read each column. The kernel reads them in place of the
+    rules that read the column. A compiled rule reads it as a Catalyst
+    column (sql_compile.compile_node_sql), the kernel in place of the
     broadcast snapshot (runtime._eval_sp_devices)."""
     from functools import reduce
 
@@ -496,15 +475,15 @@ def _at_verdicts(
         for n in r.spec.nodes:
             if is_at_node(n):
                 wanted.setdefault(at_verdict_col(n), (n, []))[1].append(pred)
-    return [
-        at_row_matches(
+    return {
+        col: at_row_matches(
             at_candidate_pairs(
                 _with_rowkey(points.where(reduce(lambda a, b: a | b, preds))),
                 devices_df, node, engine.scheme, n_salt=n_salt,
             )
         ).withColumnRenamed("_at_refs", col)
         for col, (node, preds) in wanted.items()
-    ]
+    }
 
 
 def detect_batch_spark(
@@ -522,23 +501,21 @@ def detect_batch_spark(
     'state' for updated trigger states). Use :func:`split_output` to
     get (events, states).
 
-    Per-rule physical strategy:
-    1. ``devices_df`` given + a stateless all-AND rule with one point
-       devices(@) node whose other nodes are attribute or distance
-       nodes (``devices_at.devices_at_node``) → the all-JVM pair join
-       (engine/devices_at.py): the device snapshot stays a DataFrame
-       (no broadcast, no driver collect).
-    2. A stateless rule of attribute and distance nodes only compiles
-       to pure Catalyst expressions (engine/sql_compile.py) → entirely
+    With ``devices_df`` given, the device snapshot stays a DataFrame
+    (no broadcast, no driver collect): the pair join
+    (engine/devices_at.py) computes each point devices(@) node's
+    verdict once, as a column (``runtime.at_verdict_col``) that either
+    strategy joins onto its rows. Per-rule physical strategy:
+    1. A stateless rule of attribute, distance and (with
+       ``devices_df``) point devices(@) nodes compiles to pure
+       Catalyst expressions (engine/sql_compile.py) → entirely
        JVM-side.
-    3. Otherwise → the kernel stage (``kernel_event_frames`` in
+    2. Otherwise → the kernel stage (``kernel_event_frames`` in
        mapInPandas), with zones, rules and engine.devices broadcast:
-       the one evaluator of zone and explicit-device verbs.
-       With ``devices_df`` given, the pair join supplies each point
-       devices(@) node's verdict as a column joined onto the kernel's
-       rows, read in place of the broadcast snapshot; trigger, dwell
-       and fold run in the kernel as for any rule.
-    All strategies produce identical rows (cross-path parity tested);
+       the one evaluator of zone and explicit-device verbs, triggers
+       and dwell. A point devices(@) node reads its verdict column in
+       place of the broadcast snapshot.
+    Both strategies produce identical rows (cross-path parity tested);
     ``prefer_sql=False`` sends every rule to the kernel stage.
 
     State carry between batches: ``state_df`` is the FACT-SCALE form
@@ -558,12 +535,10 @@ def detect_batch_spark(
     depend on (``runtime.spec_carries_state``: a real ``:trigger``, or
     a dwell suffix under ``eval_dwell``), identically on every path.
     """
-    from spinix_spark.engine.devices_at import (
-        devices_at_node,
-        empty_snapshot_ref_reasons,
-    )
+    from spinix_spark.engine.devices_at import empty_snapshot_ref_reasons
     from spinix_spark.engine.sql_compile import try_compile_rule_sql
 
+    rules = list(engine.rules.values())
     if devices_df is not None:
         ref_reasons = empty_snapshot_ref_reasons(engine)
         if ref_reasons:
@@ -571,32 +546,24 @@ def detect_batch_spark(
                 "detect_batch_spark(devices_df=...): "
                 + "; ".join(ref_reasons)
             )
-
+    verdicts = (
+        _at_verdicts(points, engine, rules, devices_df, at_salt)
+        if devices_df is not None
+        else {}
+    )
+    # a point devices(@) node's verdict column compiles like any other
+    columns = [*points.columns, *verdicts]
     sql_planned = []
     kernel_rules = []
-    at_outs = []
-    for r in engine.rules.values():
-        if devices_df is not None and prefer_sql:
-            at_node = devices_at_node(r)
-            if at_node is not None:
-                ev = _at_rule_events(
-                    points, engine, r, at_node, devices_df, n_salt=at_salt
-                )
-                if ev is not None:
-                    at_outs.append(ev)
-                    continue
-        plan = (
-            try_compile_rule_sql(engine, r, columns=points.columns)
-            if prefer_sql
-            else None
-        )
+    for r in rules:
+        plan = try_compile_rule_sql(engine, r, columns=columns) if prefer_sql else None
         if plan is not None:
             sql_planned.append((r, plan))
         else:
             kernel_rules.append(r)
 
-    sql_outs = at_outs + [
-        _sql_rule_events(points, engine, r, plan) for r, plan in sql_planned
+    sql_outs = [
+        _sql_rule_events(points, engine, r, plan, verdicts) for r, plan in sql_planned
     ]
     if not kernel_rules:
         if not sql_outs:
@@ -619,19 +586,13 @@ def detect_batch_spark(
     kernel_prune = " OR ".join(
         _rule_prune_expr_for(engine, r) for r in kernel_rules
     )
-    pruned = points.where(F.expr(kernel_prune)).select(
-        *[c for c in points.columns if c in KERNEL_COLS]
+    pruned = _join_verdicts(
+        points.where(F.expr(kernel_prune)).select(
+            *[c for c in points.columns if c in KERNEL_COLS]
+        ),
+        kernel_rules,
+        verdicts,
     )
-    verdicts = (
-        _at_verdicts(points, engine, kernel_rules, devices_df, at_salt)
-        if devices_df is not None
-        else []
-    )
-    if verdicts:
-        pruned = _with_rowkey(pruned)
-        for v in verdicts:
-            pruned = pruned.join(v, "_rowkey", "left")
-        pruned = pruned.drop("_rowkey")
     if any(spec_carries_state(r.spec, engine.eval_dwell) for r in kernel_rules):
         if state_df is not None:
             # the fact-scale carry: each device's prior states ride its

@@ -1,11 +1,11 @@
-"""Rule → Catalyst compiler for attribute and distance rules: the
-all-JVM fast path.
+"""Rule → Catalyst compiler for attribute, distance and point
+``devices(@)`` rules: the all-JVM fast path.
 
 For an eligible rule the entire evaluation — the attribute and distance
-comparators, the left-to-right AND/OR fold with AND-skip match capture,
-and the per-node ref collection — compiles to Catalyst column
-expressions over the points scan. No Arrow boundary, no Python workers:
-whole-stage codegen end to end.
+comparators, the ``@`` verdict reads, the left-to-right AND/OR fold
+with AND-skip match capture, and the per-node ref collection —
+compiles to Catalyst column expressions over the points scan. No Arrow
+boundary, no Python workers: whole-stage codegen end to end.
 
 Eligible (any other rule takes the kernel stage of
 engine/spark_pipeline.py):
@@ -16,16 +16,22 @@ engine/spark_pipeline.py):
 - distance comparators to zone centers (EqualObjectOp) and to explicit
   devices (EqualDevicesOp), with their 50 m rounding and the
   reference's last-candidate-wins Ok (runtime.go:1795-1825, 1860-1888)
+- a point ``devices(@)`` node (``devices_at.is_at_node``) whose
+  pair-join verdict column (``runtime.at_verdict_col``) is in the
+  schema, as it is when detect_batch_spark is given the snapshot as a
+  DataFrame: the node reads that column exactly as
+  ``runtime._eval_sp_devices`` does
 
-Spatial verbs (``device``/``devices`` against zones or devices, with
-or without a buffer) never compile: the kernel stage is their one
-evaluator. Measured per rule family (PLANS.md, "Catalyst compile per
-rule family"), the unrolled ray-cast grows with every zone's and
-candidate ring's vertex count: it lost to the kernel from ~64
-vertices, on ``@`` registries and on candidate rings, and won only
-over tiny zones, by the kernel's fixed Arrow-boundary cost. Attribute
-and distance rules run several times faster here than across that
-boundary.
+Every other spatial verb (``device``/``devices`` against zones or
+explicit devices, a buffered ``@`` candidate) never compiles: the
+kernel stage is its one evaluator. Measured per rule family
+(PLANS.md, "Catalyst compile per rule family"), the unrolled ray-cast
+grows with every zone's and candidate ring's vertex count: it lost to
+the kernel from ~64 vertices, on ``@`` registries and on candidate
+rings, and won only over tiny zones, by the kernel's fixed
+Arrow-boundary cost. Attribute and distance rules run several times
+faster here than across that boundary; a ``@`` verdict is one column
+read.
 
 Output rows are bit-identical to the kernel path (asserted by the
 cross-path parity tests).
@@ -53,6 +59,8 @@ from spinix_spark.dsl.compiler import (
     RangeTimeOp,
 )
 from spinix_spark.dsl.tokens import Token
+from spinix_spark.engine.devices_at import is_at_node
+from spinix_spark.engine.runtime import at_verdict_col
 from spinix_spark.geo.geodesy import MIN_DIST_METERS
 from spinix_spark.geo.sqlgen import haversine_sql, round50_sql
 
@@ -164,9 +172,24 @@ def _refs_array_sql(pairs: list[tuple[str, str]]) -> str:
 
 
 def compile_node_sql(node, engine, columns: set[str]) -> NodeSQL | None:
-    """Catalyst form of one attribute or distance node, or None: a
-    spatial verb (or an attribute whose view needs an absent
-    ``datetime``) is evaluated by the kernel stage only."""
+    """Catalyst form of one attribute, distance or point ``devices(@)``
+    node, or None: any other spatial verb, a ``devices(@)`` node
+    without its verdict column in ``columns``, or an attribute whose
+    view needs an absent ``datetime`` is evaluated by the kernel stage
+    only."""
+    if is_at_node(node):
+        # the pair join's verdict: the sorted satisfying snapshot ids,
+        # null when none does
+        col = at_verdict_col(node)
+        if col not in columns:
+            return None
+        return NodeSQL(
+            ok_sql=f"({col} IS NOT NULL)",
+            refs_sql=f"coalesce({col}, array())",
+            left_kw="device",
+            right_kw="devices",
+            op=str(node.op),
+        )
     if isinstance(node, (EqualObjectOp, EqualDevicesOp)):
         # rounded distance to each zone center / explicit device: the
         # last candidate's comparison is Ok, every satisfied candidate
@@ -321,7 +344,8 @@ def try_compile_rule_sql(engine, rule, columns=None) -> RuleSQLPlan | None:
     part needs the kernel path.
 
     ``columns`` is the points schema the plan will run against (pass
-    ``set(points.columns)``); attribute nodes on columns that exist
+    ``points.columns``, plus the devices(@) verdict columns the rows
+    will carry); attribute nodes on columns that exist
     compile to plain comparisons with zero-value null semantics
     (coalesce — matching the kernel and the reference's Go value
     types), nodes on ABSENT columns compile against the zero value

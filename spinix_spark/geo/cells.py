@@ -2,10 +2,11 @@
 
 The reference shards by H3 cells (res 1-3 as cluster shards,
 region.go:14-22); the north-star design keys joins on fine cells
-(res 7-9). The ``h3`` binding is not available in this environment, so
-this module provides an equal-angle lat/lon grid behind the same
-interface. That is safe for correctness: cell keys are only ever a
-no-false-negative prefilter before exact refinement (SURVEY.md §2B.1),
+(res 7-9). This module keys them on an equal-angle lat/lon grid
+instead (no H3 or S2 scheme ships: the joins read the grid's SQL cell
+expressions, which neither library offers). That is safe for
+correctness: cell keys are only ever a no-false-negative prefilter
+before exact refinement (SURVEY.md §2B.1),
 and — unlike H3 — a floor-grid cell id is expressible as a plain SQL
 expression, so Catalyst evaluates it JVM-side with codegen (no UDF on
 the 100 TB fact side) and the DuckDB oracle can verify cell joins and
@@ -177,105 +178,3 @@ class GridScheme:
 
 DEFAULT_SCHEME = GridScheme(res=8)
 
-
-try:  # pragma: no cover - h3 not installed in this environment
-    import h3 as _h3
-
-    class H3Scheme:
-        """Same interface as GridScheme backed by real H3 cells, for
-        deployments where the ``h3`` binding exists. Cell keys are
-        H3 indexes (int64); covering = polyfill of the bbox; k-ring =
-        grid_disk. Correctness is unaffected by the scheme choice —
-        cells are a no-false-negative prefilter (SURVEY.md §2B.1) —
-        but H3's equal-area hexagons balance shuffle partitions better
-        at the poles than the equal-angle grid."""
-
-        def __init__(self, res: int = 8) -> None:
-            self.res = res
-
-        def cell_of(self, lat, lon):
-            import numpy as np
-
-            lat = np.atleast_1d(np.asarray(lat, dtype=float))
-            lon = np.atleast_1d(np.asarray(lon, dtype=float))
-            return np.array(
-                [
-                    _h3.str_to_int(_h3.latlng_to_cell(a, o, self.res))
-                    for a, o in zip(lat, lon)
-                ],
-                dtype=np.int64,
-            )
-
-        def cover_bbox(self, minlat, minlon, maxlat, maxlon):
-            poly = _h3.LatLngPoly(
-                [
-                    (minlat, minlon),
-                    (minlat, maxlon),
-                    (maxlat, maxlon),
-                    (maxlat, minlon),
-                ]
-            )
-            return [_h3.str_to_int(c) for c in _h3.polygon_to_cells(poly, self.res)]
-
-        def kring(self, cell, k=1):
-            return [
-                _h3.str_to_int(c)
-                for c in _h3.grid_disk(_h3.int_to_str(int(cell)), k)
-            ]
-
-    HAVE_H3 = True
-except ImportError:  # the offline default — GridScheme everywhere
-    H3Scheme = None
-    HAVE_H3 = False
-
-
-try:  # pragma: no cover - s2sphere not installed in this environment
-    import s2sphere as _s2
-
-    class S2Scheme:
-        """GridScheme interface over S2 cell tokens (north_star's
-        second index family). Covering = RegionCoverer at a fixed
-        level; k-ring = the cell's edge+vertex neighbors, applied k
-        times (superset of the disc, no false negatives)."""
-
-        def __init__(self, level: int = 14) -> None:
-            self.level = level
-
-        def cell_of(self, lat, lon):
-            import numpy as np
-
-            lat = np.atleast_1d(np.asarray(lat, dtype=float))
-            lon = np.atleast_1d(np.asarray(lon, dtype=float))
-            return np.array(
-                [
-                    _s2.CellId.from_lat_lng(
-                        _s2.LatLng.from_degrees(a, o)
-                    ).parent(self.level).id()
-                    for a, o in zip(lat, lon)
-                ],
-                dtype=np.int64,
-            )
-
-        def cover_bbox(self, minlat, minlon, maxlat, maxlon):
-            rc = _s2.RegionCoverer()
-            rc.min_level = rc.max_level = self.level
-            rect = _s2.LatLngRect(
-                _s2.LatLng.from_degrees(minlat, minlon),
-                _s2.LatLng.from_degrees(maxlat, maxlon),
-            )
-            return [c.id() for c in rc.get_covering(rect)]
-
-        def kring(self, cell, k=1):
-            cells = {int(cell)}
-            for _ in range(k):
-                nxt = set(cells)
-                for c in cells:
-                    cid = _s2.CellId(c)
-                    nxt.update(n.id() for n in cid.get_all_neighbors(self.level))
-                cells = nxt
-            return sorted(cells)
-
-    HAVE_S2 = True
-except ImportError:
-    S2Scheme = None
-    HAVE_S2 = False

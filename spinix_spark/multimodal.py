@@ -3,12 +3,11 @@
 Treats image/audio/video as ``binary`` columns with a metadata struct,
 processed by Arrow-batched ``mapInPandas`` stages. The Spark-side
 plumbing — schema, batch shape, partition-preserving iteration,
-deterministic output — is real and tested; the actual codec work is
-STUBBED (the image/audio libraries are not available in this
-environment): ``decode_stub`` raises ``NotImplementedError`` unless
-``fake=True``, in which case a clearly-marked deterministic fake
-"decoder" derives features from the payload bytes so the distributed
-plumbing can be exercised end-to-end.
+deterministic output — is real and tested; the codec work is
+STUBBED (no image, audio or video library is a dependency):
+clearly-marked deterministic fakes derive the features
+(``fake_decode``), resized images and frames from the payload bytes,
+so the distributed plumbing can be exercised end-to-end.
 """
 
 from __future__ import annotations
@@ -55,15 +54,6 @@ FEATURE_SCHEMA = StructType(
 FEATURE_DIM = 16
 
 
-def decode_stub(payload: bytes, kind: str) -> np.ndarray:
-    """STUB: real decode (PIL / ffmpeg / soundfile) is unavailable in
-    this environment. Raises unless replaced."""
-    raise NotImplementedError(
-        "media decode requires image/audio libraries not present in this "
-        "container; use fake_decode for plumbing tests"
-    )
-
-
 def fake_decode(payload: bytes, kind: str) -> np.ndarray:
     """Deterministic FAKE decoder: derives a FEATURE_DIM float vector
     from the payload's sha1 — stands in for a real embedding model so
@@ -73,17 +63,16 @@ def fake_decode(payload: bytes, kind: str) -> np.ndarray:
     return (raw.astype(np.float64) / 2**32).astype(np.float32)
 
 
-def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
-    """Binary media → per-item feature rows via Arrow-batched
-    mapInPandas (one Python worker pass per partition; payloads never
-    leave the executor)."""
-    decoder = fake_decode if fake else decode_stub
+def extract_features(media: DataFrame) -> DataFrame:
+    """Binary media → per-item feature rows (``fake_decode``) via
+    Arrow-batched mapInPandas (one Python worker pass per partition;
+    payloads never leave the executor)."""
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            feats = [decoder(p, k) for p, k in zip(pdf["payload"], pdf["kind"])]
+            feats = [fake_decode(p, k) for p, k in zip(pdf["payload"], pdf["kind"])]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -110,10 +99,10 @@ RESIZE_SCHEMA = StructType(
 )
 
 
-def resize_images(media: DataFrame, width: int, height: int, fake: bool = True) -> DataFrame:
-    """Image resize stage. Real implementation needs PIL (absent here —
-    STUB); the fake path emits a deterministic payload derived from the
-    source bytes + target dims so partitioning/batching is testable.
+def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
+    """Image resize stage, STUBBED: emits a deterministic payload
+    derived from the source bytes + target dims so partitioning/batching
+    is testable.
     Plumbing notes for the real op: the Arrow batch carries raw bytes
     to the worker once; output partitioning is inherited (narrow op)."""
 
@@ -124,8 +113,6 @@ def resize_images(media: DataFrame, width: int, height: int, fake: bool = True) 
             pdf = pdf[pdf["kind"] == "image"]
             if pdf.empty:
                 continue
-            if not fake:
-                raise NotImplementedError("image resize requires PIL")
             tag = f"resized:{width}x{height}:".encode()
             yield pd.DataFrame(
                 {
@@ -152,11 +139,10 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def sample_frames(media: DataFrame, n_frames: int = 4, fake: bool = True) -> DataFrame:
+def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
     """Video frame sampling: one row per sampled frame (1→N explode in
-    the Python stage). Real decode needs ffmpeg (absent — STUB); the
-    fake path derives N deterministic frame payloads + timestamps from
-    the source bytes."""
+    the Python stage), STUBBED: N deterministic frame payloads +
+    timestamps derived from the source bytes."""
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -165,8 +151,6 @@ def sample_frames(media: DataFrame, n_frames: int = 4, fake: bool = True) -> Dat
             pdf = pdf[pdf["kind"] == "video"]
             if pdf.empty:
                 continue
-            if not fake:
-                raise NotImplementedError("frame sampling requires ffmpeg")
             rows = {"media_id": [], "frame_idx": [], "ts_ms": [], "frame": []}
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 for k in range(n_frames):

@@ -24,7 +24,7 @@ def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     load_tables(spark, sf_dir, ["documents"])
     media = media_from_documents(spark.table("documents"))
-    feats = extract_features(media, fake=True)
+    feats = extract_features(media)
     return feats.select("media_id", "kind", "n_bytes").orderBy("media_id")
 
 
@@ -38,7 +38,7 @@ def media_frame_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     load_tables(spark, sf_dir, ["documents"])
     media = media_from_documents(spark.table("documents"))
-    frames = sample_frames(media, n_frames=4, fake=True)
+    frames = sample_frames(media, n_frames=4)
     return (
         frames.groupBy("media_id")
         .agg(
@@ -66,7 +66,7 @@ def media_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     load_tables(spark, sf_dir, ["documents"])
     media = media_from_documents(spark.table("documents"))
-    resized = resize_images(media, 64, 64, fake=True)
+    resized = resize_images(media, 64, 64)
     return resized.select(
         "media_id",
         F.col("width").cast("bigint").alias("width"),

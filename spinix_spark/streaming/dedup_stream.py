@@ -46,6 +46,7 @@ from spinix_spark.queries_text import (
     BANDS,
     N_HASHES,
     _minhash_sql_wide_noexplode,
+    _wide_band_rows,
     spark_shingles_all,
 )
 from spinix_spark.streaming.state_table import BucketedVersionTable
@@ -53,33 +54,22 @@ from spinix_spark.streaming.state_table import BucketedVersionTable
 BANDS_VIEW = "_sd_batch_docs"
 
 
-def batch_band_buckets(docs: DataFrame, bands: int = BANDS) -> DataFrame:
+def batch_band_buckets(docs: DataFrame) -> DataFrame:
     """(doc_id, bkey) — one row per (doc, band): bkey =
     'band:min0,min1,...' over the band's signature rows. Pure
-    Catalyst; same hash family/band layout as the batch LSH queries."""
+    Catalyst; the band rows are the batch LSH queries'
+    (``queries_text._wide_band_rows``), so the hash family and band
+    layout are theirs. The bkey strings are the persisted admission
+    state: their text must not change."""
     spark = docs.sparkSession
     docs.select("doc_id", "text").createOrReplaceTempView(BANDS_VIEW)
-    rows_per_band = N_HASHES // bands
-    # WIDE signature + per-row band stack (round 7): the long form
-    # stack-exploded to 16 rows per doc only to re-aggregate them back
-    # by (doc, band); the bkey STRINGS are byte-identical (same
-    # CONCAT_WS layout), so persisted bucket state is unaffected.
     sig = _minhash_sql_wide_noexplode(
         spark_shingles_all(table=BANDS_VIEW), _SPARK_X
     )
-    stack_args = ", ".join(
-        f"CAST({b} AS BIGINT), CONCAT_WS(',', "
-        + ", ".join(
-            f"CAST(mh{b * rows_per_band + r} AS STRING)"
-            for r in range(rows_per_band)
-        )
-        + ")"
-        for b in range(bands)
-    )
+    mcols = ", ".join(f"CAST(m{r} AS STRING)" for r in range(N_HASHES // BANDS))
     return spark.sql(
-        f"SELECT doc_id, CONCAT_WS(':', CAST(band AS STRING), bucket) AS bkey "
-        f"FROM (SELECT doc_id, band, bucket FROM ({sig}) w "
-        f"LATERAL VIEW stack({bands}, {stack_args}) t AS band, bucket) b"
+        f"SELECT doc_id, CONCAT_WS(':', CAST(band AS STRING), "
+        f"CONCAT_WS(',', {mcols})) AS bkey FROM ({_wide_band_rows(f'({sig})')}) b"
     )
 
 

@@ -1,10 +1,10 @@
 """Fact-scale devices(@): with the snapshot as a DataFrame, the pair
-join supplies the @ verdict — inner-joined by the all-JVM stateless
-strategy, left-joined onto the kernel stage's rows for every other
-rule (triggers, dwell, OR folds, companions that do not compile) —
-and must reproduce the broadcast kernel and Engine.detect_batch
-exactly, events AND trigger-state rows, across trigger kinds,
-partitionings, and multi-batch state carries. Also covers the
+join supplies the @ verdict as a column — read by the compiled
+Catalyst strategy for a stateless rule whose other nodes compile, by
+the kernel stage for every other rule (triggers, dwell, companions
+that do not compile) — and must reproduce the broadcast kernel and
+Engine.detect_batch exactly, events AND trigger-state rows, across
+trigger kinds, partitionings, and multi-batch state carries. Also covers the
 loud-failure guards for rules that read an empty engine.devices
 (reference semantics: runtime.go:103-163 + 1461-1483).
 """
@@ -266,10 +266,10 @@ def _south_zone():
 
 @pytest.mark.parametrize("trigger", ["", ":trigger every 600s"])
 def test_at_or_fold_parity(spark, trigger):
-    """An @ rule in an OR fold never takes the all-JVM pair join; with
-    devices_df and an EMPTY engine.devices the kernel stage reads the
-    pair join's verdict and must equal the broadcast kernel and
-    Engine.detect_batch."""
+    """An @ rule in an OR fold, with devices_df and an EMPTY
+    engine.devices, reads the pair join's verdict (compiled when
+    stateless, in the kernel stage under a trigger) and must equal the
+    broadcast kernel and Engine.detect_batch."""
     rule = (
         "device :radius 300m intersects devices(@) or speed range [0 .. 20]"
         f" {{ :center 42.93 -72.27 :radius 50km {trigger} }}"
@@ -581,7 +581,8 @@ def test_triggerless_spec_keeps_no_state_on_any_surface(spark, path):
     and the pair join all emit zero state rows and the same events, for
     rows in the rule bbox that the zone prune drops as well as rows it
     keeps."""
-    from spinix_spark.engine.devices_at import devices_at_node
+    from spinix_spark.engine.devices_at import is_at_node
+    from spinix_spark.engine.runtime import at_verdict_col
     from spinix_spark.engine.sql_compile import try_compile_rule_sql
 
     rule = TRIGGERLESS[path]
@@ -604,7 +605,10 @@ def test_triggerless_spec_keeps_no_state_on_any_surface(spark, path):
     r = eng.rules[RID]
     compiled = try_compile_rule_sql(eng, r, columns=points.columns) is not None
     assert compiled == (path == "sql")
-    assert (devices_at_node(r) is not None) == (path == "pairjoin")
+    verdict_cols = [at_verdict_col(n) for n in r.spec.nodes if is_at_node(n)]
+    assert bool(verdict_cols) == (path == "pairjoin")
+    with_verdict = try_compile_rule_sql(eng, r, columns=points.columns + verdict_cols)
+    assert (with_verdict is not None) == (path != "kernel")
     for prefer_sql in (True, False):
         ev, st = split_output(
             detect_batch_spark(

@@ -79,3 +79,27 @@ def test_streaming_admission_dirty_buckets_only(spark, tmp_path):
     _run(spark, tmp_path, got)
     assert got[1] == []
     assert table.bucket_versions() == bv0  # no bucket rewritten
+
+
+# sha256 of the sorted "doc_id\tbkey\n" lines of batch_band_buckets
+# over the first 60 sf0.001 documents, taken before the band rows moved
+# onto queries_text._wide_band_rows: the bkey strings are persisted
+# admission state, so their text must never move
+BKEY_DIGEST = "cf9ce75f0f86bfe288ebc9e64f8f150062eac6d92a2eaaf535677eb0a11bda4f"
+
+
+def test_band_bucket_keys_are_pinned(spark):
+    import hashlib
+
+    from spinix_spark.streaming.dedup_stream import batch_band_buckets
+
+    docs = (
+        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        .select("doc_id", "text")
+        .orderBy("doc_id")
+        .limit(60)
+    )
+    rows = sorted((int(r.doc_id), r.bkey) for r in batch_band_buckets(docs).collect())
+    assert len(rows) == 60 * 4
+    text = "".join(f"{d}\t{k}\n" for d, k in rows)
+    assert hashlib.sha256(text.encode()).hexdigest() == BKEY_DIGEST

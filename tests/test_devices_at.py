@@ -7,6 +7,8 @@ set is the semantic content).
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -153,6 +155,63 @@ def test_at_pair_join_plan_shape(spark):
     )
     assert plain.count("Generate") == 2 and "_bb" not in plain, plain
     assert salted.count("Generate") == 3 and "_bb" in salted, salted
+
+
+def test_or_fold_at_rule_plans_no_kernel_stage(spark):
+    """A stateless OR-fold rule of a point devices(@) node and an
+    attribute companion compiles to Catalyst once the snapshot is a
+    DataFrame: the node reads its verdict column, no kernel stage
+    (MapInPandas) is planned, and the events are Engine.detect_batch's."""
+    rule = "device near devices(@) or speed gt 150 { :center 42.93 -72.27 :radius 50km }"
+    rid = "r" + "7" * 19
+    pdf = _mk_points(spark)
+    snap_rows = _mk_snapshot()
+    oracle = Engine()
+    for row in snap_rows:
+        oracle.devices.insert_or_replace(row)
+    oracle.add_rule(rule, rule_id=rid)
+    want = sorted(
+        (e["url"], e["device_id"], e["rule_id"], m["left_kw"], m["right_kw"], m["op"],
+         tuple(sorted(m["right_refs"] or [])), e["datetime"])
+        for e in oracle.detect_batch(pdf).to_dict("records")
+        for m in e["matches"]
+    )
+
+    eng = Engine()
+    eng.add_rule(rule, rule_id=rid)
+    out = detect_batch_spark(
+        spark.createDataFrame(pdf).repartition(3), eng,
+        devices_df=spark.createDataFrame(pd.DataFrame(snap_rows)),
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan, plan
+    ev, _ = split_output(out)
+    assert _events_canon(ev) == want
+    assert {w[5] for w in want} == {"NEAR", "gt"}, want
+
+
+def test_devices_at_pages_rule_plan_shape(spark):
+    """bench.py ``devices_at_pages``' rule (one ``device :radius 250m
+    intersects devices(@)`` node, salted pair join) plans one
+    MapInPandas — the pair refine — and joins its verdict onto the rows
+    with an inner join."""
+    from spinix_spark.io.geoparse import geoparse_points
+    from spinix_spark.io.pages import BASE_LAT, BASE_LON, synthesize_pages
+
+    points = geoparse_points(synthesize_pages(spark, 200))
+    eng = Engine()
+    eng.add_rule(
+        "device :radius 250m intersects devices(@)"
+        f" {{ :center {BASE_LAT} {BASE_LON} :radius 100km }}",
+        rule_id="r" + "3" * 19,
+    )
+    out = detect_batch_spark(
+        points, eng, devices_df=snapshot_df_from_points(points), at_salt=8
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert re.search(r"Join \[_rowkey#\d+L\], \[_rowkey#\d+L\], Inner", plan), plan
+    assert "LeftOuter" not in plan, plan
 
 
 def test_at_join_negated_bump(spark):

@@ -6,7 +6,6 @@ import tempfile
 
 import numpy as np
 import pandas as pd
-import pytest
 
 from spinix_spark.engine.detect import Engine
 from spinix_spark.engine.stores import zone_from_ring
@@ -14,17 +13,11 @@ from spinix_spark.multimodal import (
     FEATURE_DIM,
     extract_features,
     fake_decode,
-    decode_stub,
     media_from_documents,
 )
 
 K0 = "c5vj26evvhfjvfseauk0"
 AULG = "c5vj26evvhfjvfseaulg"
-
-
-def test_decode_stub_raises():
-    with pytest.raises(NotImplementedError):
-        decode_stub(b"abc", "image")
 
 
 def test_fake_decode_deterministic():
@@ -38,14 +31,14 @@ def test_fake_decode_deterministic():
 def test_multimodal_features(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     media = media_from_documents(docs)
-    feats = extract_features(media, fake=True)
+    feats = extract_features(media)
     rows = feats.collect()
     assert len(rows) == docs.count()
     r = rows[0]
     assert len(r.feature) == FEATURE_DIM
     assert len(r.content_hash) == 40
     # deterministic across runs
-    rows2 = extract_features(media_from_documents(docs), fake=True).collect()
+    rows2 = extract_features(media_from_documents(docs)).collect()
     assert sorted(r.content_hash for r in rows) == sorted(
         r.content_hash for r in rows2
     )

@@ -1,8 +1,11 @@
-"""What compiles to Catalyst: attribute and distance rules only. Every
-spatial verb — a point or buffered device, or a device list, against
-explicit zones, ``@``, line zones or devices — is evaluated by the
-kernel stage alone, so a registry of spatial rules plans one kernel
-stage instead of a union of compiled scans."""
+"""What compiles to Catalyst: attribute and distance rules, and point
+``devices(@)`` nodes whose pair-join verdict column is in the schema
+(detect_batch_spark adds it when given the snapshot as a DataFrame).
+Every other spatial verb — a point or buffered device, or a device
+list, against explicit zones, ``polygon(@)``, line zones, explicit
+devices or buffered ``@`` candidates — is evaluated by the kernel stage
+alone, so a registry of spatial rules plans one kernel stage instead
+of a union of compiled scans."""
 
 from __future__ import annotations
 
@@ -11,6 +14,8 @@ import pandas as pd
 import pytest
 
 from spinix_spark.engine.detect import Engine
+from spinix_spark.engine.devices_at import is_at_node
+from spinix_spark.engine.runtime import at_verdict_col
 from spinix_spark.engine.spark_pipeline import detect_batch_spark
 from spinix_spark.engine.sql_compile import try_compile_rule_sql
 from spinix_spark.engine.stores import Zone, zone_from_ring
@@ -48,7 +53,26 @@ SHAPES = [
     (f'datetime range ["2023-11-14T23:00:00Z" .. "2023-11-15T08:00:00Z"] {PROPS}', True),
     (f"device :radius 1km lt devices({X1}, {X2}) {PROPS}", True),
     (f"device :radius 1km gte polygon({Z}) or speed gt 100 {PROPS}", True),
+    # point devices(@): compiles only with its verdict column in the
+    # schema — alone, in an OR fold, twice in one rule; a buffered @
+    # candidate, a zone-verb companion or a :trigger keeps the kernel
+    (f"device :radius 300m intersects devices(@) {PROPS}", True),
+    (f"device NEAR devices(@) or speed gt 100 {PROPS}", True),
+    (
+        f"device :radius 300m intersects devices(@) and device :bbox 1km NINTERSECTS"
+        f" devices(@) {PROPS}",
+        True,
+    ),
+    (f"device intersects devices(@) :radius 2km {PROPS}", False),
+    (f"device :radius 300m intersects devices(@) and device IN polygon({Z}) {PROPS}", False),
+    (
+        "device :radius 300m intersects devices(@)"
+        " { :center 42.93 -72.27 :radius 20km :trigger once }",
+        False,
+    ),
 ]
+# the schema try_compile_rule_sql assumes when given none
+BASE_COLUMNS = ["url", "device_id", "layer_id", "lat", "lon", "datetime", "speed", "status"]
 
 
 def _engine(spec: str) -> Engine:
@@ -66,10 +90,16 @@ def _engine(spec: str) -> Engine:
 
 
 @pytest.mark.parametrize("spec,compiles", SHAPES)
-def test_only_attribute_and_distance_rules_compile(spec, compiles):
+def test_only_attribute_distance_and_at_verdict_rules_compile(spec, compiles):
+    """With every point ``devices(@)`` verdict column in the schema, a
+    rule compiles iff ``compiles``; without them no ``@`` rule does."""
     eng = _engine(spec)
-    plan = try_compile_rule_sql(eng, eng.rules["r" + "0" * 19])
+    rule = eng.rules["r" + "0" * 19]
+    verdicts = [at_verdict_col(n) for n in rule.spec.nodes if is_at_node(n)]
+    plan = try_compile_rule_sql(eng, rule, columns=BASE_COLUMNS + verdicts)
     assert (plan is not None) == compiles, spec
+    if verdicts:
+        assert try_compile_rule_sql(eng, rule) is None, spec
 
 
 def test_geo_pipeline_rules_plan_budget(spark):
@@ -112,8 +142,8 @@ DWELL_SPECS = [
 def test_dwell_rule_runs_one_kernel_stage(spark, spec):
     """Under ``eval_dwell`` with the snapshot as ``devices_df``, a dwell
     rule with an attribute companion and one with a ``devices(@)``
-    node each fold in ONE kernel stage — no compiled scan, no all-JVM
-    pair-join route — and emit Engine.detect_batch's events."""
+    node each fold in ONE kernel stage — no compiled scan — and emit
+    Engine.detect_batch's events."""
     rng = np.random.default_rng(7)
     n = 48
     pdf = pd.DataFrame(

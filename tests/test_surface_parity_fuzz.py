@@ -6,8 +6,9 @@ and a point registered from GeoJSON), a zone that crosses ±180° and a
 zone at the pole — and one rule registry that covers positive and
 negated zone verbs (a buffered NNEAR among them), explicit refs and
 ``@``, ``:radius``/``:bbox`` devices, point ``devices(@)`` candidates
-(a negated verb, whose search radius takes the negated-verb bump, and
-a ``:bbox`` target), attribute companions, ``lt``/``gte`` distance
+(a negated verb, whose search radius takes the negated-verb bump, a
+``:bbox`` target, an OR fold with an attribute, and two in one all-AND
+rule), attribute companions, ``lt``/``gte`` distance
 comparators, every ``:trigger`` form with ``:reset after``, and
 ``:time duration|after`` dwell (one rule with a trigger and a dwell
 node, one with two dwell nodes). The same rows, split into random
@@ -119,6 +120,11 @@ RULES = {
         f" {{ {P_MID} }}"
     ),
     "rt" + "0" * 18: f"device :radius 1200m gte line({ZL}) and speed gt 120 {{ {P_MID} }}",
+    "ru" + "0" * 18: f"device :radius 400m intersects devices(@) or speed gt 170 {{ {P_MID} }}",
+    "rv" + "0" * 18: (
+        f"device :radius 300m intersects devices(@) and device :radius 900m NEAR devices(@)"
+        f" {{ {P_MID} }}"
+    ),
 }
 DEVICE_RULES = {k for k, v in RULES.items() if "devices(" in v}
 DWELL_RULES = {k for k, v in RULES.items() if ":time" in v}
