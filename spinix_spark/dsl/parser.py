@@ -107,6 +107,17 @@ def parse_date_unix(s: str) -> int:
     return calendar.timegm((y, mo, d, 0, 0, 0, 0, 0, 0))
 
 
+def _attach(expr: ast.Expr, operator: Token, rhs: ast.Expr) -> ast.Expr:
+    """``expr operator rhs`` with the precedence rebalance of
+    parser.go:63-72 applied down the right spine: a binary node whose
+    operator binds no tighter than ``operator`` keeps its LHS and takes
+    the new operator into its RHS, so ``a gt 3 and b gt 4 and c gt 5``
+    folds to three comparisons (the reference steals one level only)."""
+    if isinstance(expr, ast.BinaryExpr) and precedence(expr.op) <= precedence(operator):
+        return ast.BinaryExpr(lhs=expr.lhs, rhs=_attach(expr.rhs, operator, rhs), op=expr.op)
+    return ast.BinaryExpr(lhs=expr, rhs=rhs, op=operator)
+
+
 class Parser:
     def __init__(self, spec: str) -> None:
         self.s = Scanner(spec)
@@ -127,18 +138,7 @@ class Parser:
             ):
                 self.s.reset()
                 return expr
-            rhs = self.parse_expr()
-            if isinstance(expr, ast.BinaryExpr) and precedence(expr.op) <= precedence(
-                operator
-            ):
-                # precedence rebalance (parser.go:63-72): steal the RHS
-                expr = ast.BinaryExpr(
-                    lhs=expr.lhs,
-                    rhs=ast.BinaryExpr(lhs=expr.rhs, rhs=rhs, op=operator),
-                    op=expr.op,
-                )
-            else:
-                expr = ast.BinaryExpr(lhs=expr, rhs=rhs, op=operator)
+            expr = _attach(expr, operator, self.parse_expr())
 
     # --- props ---------------------------------------------------------
 

@@ -29,10 +29,10 @@ one sequential per-row trigger and dwell fold of every surface, and
 state (``runtime.spec_carries_state``) are hash-partitioned by
 device_id and sorted by (device_id, datetime, url), so each (device,
 rule) state is owned by one task and folds in event-time order.
-Prior states arrive either as a DataFrame joined onto the rows
-(``state_df``, the fact-scale carry) or broadcast from a driver list
-(``state_rows``); each task emits only the states it touched. The
-streaming forms built on this (foreachBatch) and the keyed
+Prior states cross batches in one form, ``(device_id, states)``: each
+device's STATE_STRUCT array, joined onto its rows. Each task emits only
+the states it touched, and ``merge_states`` lays them over the prior
+arrays. The streaming forms built on this (foreachBatch) and the keyed
 applyInPandasWithState form live in spinix_spark/streaming/.
 """
 
@@ -200,10 +200,10 @@ def rules_prune_expr(engine: Engine) -> str:
     return " OR ".join(parts) if parts else "false"
 
 
-def _event_cols_sql(rule, kws: tuple, refs_sql: str, columns) -> list[str]:
-    """SQL select list of ``row_type = 'event'`` rows (OUT_SCHEMA) for
-    one node of a compiled rule; ``kws`` = (left_kw, right_kw, op)."""
-    left_kw, right_kw, op = kws
+def _event_cols_sql(rule, columns) -> list[str]:
+    """SQL select list of ``row_type = 'event'`` rows (OUT_SCHEMA) for a
+    compiled rule, over rows carrying one matching node's ``_lkw``,
+    ``_rkw``, ``_op`` and ``_refs``."""
     url_sql = "url" if "url" in columns else "''"
     dt_sql = "CAST(datetime AS BIGINT)" if "datetime" in columns else "CAST(0 AS BIGINT)"
     spec_lit = rule.spec.source.replace("'", "''")
@@ -214,10 +214,10 @@ def _event_cols_sql(rule, kws: tuple, refs_sql: str, columns) -> list[str]:
         f"'{rule.rule_id}' AS rule_id",
         f"'{spec_lit}' AS spec",
         "true AS ok",
-        f"'{left_kw}' AS left_kw",
-        f"'{right_kw}' AS right_kw",
-        f"'{op}' AS op",
-        f"{refs_sql} AS right_refs",
+        "_lkw AS left_kw",
+        "_rkw AS right_kw",
+        "_op AS op",
+        "_refs AS right_refs",
         f"{dt_sql} AS datetime",
         "CAST(0 AS BIGINT) AS last_seen",
         "CAST(0 AS BIGINT) AS last_reset",
@@ -232,34 +232,30 @@ def _sql_rule_events(
 ) -> DataFrame:
     """All-Catalyst event rows for one compiled-to-SQL rule: prune →
     the verdict columns of its point devices(@) nodes, left-joined on
-    ``_rowkey`` from ``verdicts`` (``_at_verdicts``) → predicate/fold/refs
-    columns → per-node filtered projections, unioned. Under an all-AND
-    fold the ``IS NOT NULL`` filter turns each left join inner
-    (Catalyst's EliminateOuterJoin)."""
+    ``_rowkey`` from ``verdicts`` (``_at_verdicts``) → the rows the fold
+    keeps → one event row per recorded matching node, generated from
+    one projection (``inline`` over the per-node match structs). Under
+    an all-AND fold the ``IS NOT NULL`` filter turns each left join
+    inner (Catalyst's EliminateOuterJoin)."""
     points.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
     cols = set(points.columns)
     pruned = _join_verdicts(
         points.where(F.expr(_rule_prune_expr_for(engine, rule))), [rule], verdicts
     )
-    sel = ["*", f"{plan.final_sql} AS _final"]
-    for j, ns in enumerate(plan.nodes):
-        sel.append(f"{ns.ok_sql} AS _ok{j}")
-        sel.append(f"{plan.recorded_sql[j]} AS _rec{j}")
-        sel.append(f"{ns.refs_sql} AS _refs{j}")
-    base = pruned.selectExpr(*sel)
-    outs = []
-    for j, ns in enumerate(plan.nodes):
-        outs.append(
-            base.where(F.expr(f"_final AND _rec{j} AND _ok{j}")).selectExpr(
-                *_event_cols_sql(
-                    rule, (ns.left_kw, ns.right_kw, ns.op), f"_refs{j}", cols
-                )
-            )
+    matches = ", ".join(
+        f"named_struct('keep', {plan.recorded_sql[j]} AND {ns.ok_sql},"
+        f" 'lkw', '{ns.left_kw}', 'rkw', '{ns.right_kw}', 'op', '{ns.op}',"
+        f" 'refs', {ns.refs_sql})"
+        for j, ns in enumerate(plan.nodes)
+    )
+    return (
+        pruned.where(F.expr(plan.final_sql))
+        .selectExpr(
+            "*",
+            f"inline(filter(array({matches}), m -> m.keep)) AS (_keep, _lkw, _rkw, _op, _refs)",
         )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionAll(o)
-    return out
+        .selectExpr(*_event_cols_sql(rule, cols))
+    )
 
 
 def _with_rowkey(df: DataFrame) -> DataFrame:
@@ -426,10 +422,9 @@ def _state_seed_rows(device_id: str, st_list) -> list[dict]:
 
 
 def _seed_states_from_column(states: StateStore, pdf: pd.DataFrame) -> None:
-    """Seed prior states that arrived attached to this batch's rows via
-    the per-device ``_states`` struct array (the fact-scale state
-    carry). First sighting wins — later Arrow batches must not clobber
-    in-task mutations."""
+    """Seed the prior states that arrived attached to this batch's rows
+    as each device's ``_states`` array. First sighting wins — later
+    Arrow batches must not clobber in-task mutations."""
     if "_states" not in pdf.columns:
         return
     states.load_if_absent(
@@ -439,14 +434,6 @@ def _seed_states_from_column(states: StateStore, pdf: pd.DataFrame) -> None:
             if st_list is not None
             for row in _state_seed_rows(did, st_list)
         ]
-    )
-
-
-def states_by_device(state_df: DataFrame, name: str = "_states") -> DataFrame:
-    """(device_id, ``name``): each device's state rows as one
-    STATE_STRUCT array."""
-    return state_df.groupBy("device_id").agg(
-        F.collect_list(F.struct(*STATE_COLS[1:])).alias(name)
     )
 
 
@@ -489,11 +476,10 @@ def _at_verdicts(
 def detect_batch_spark(
     points: DataFrame,
     engine: Engine,
-    state_rows: list[dict] | None = None,
+    states: DataFrame | None = None,
     prefer_sql: bool = True,
     devices_df: DataFrame | None = None,
     at_salt: int = 0,
-    state_df: DataFrame | None = None,
 ) -> DataFrame:
     """Evaluate every registered rule over a points DataFrame.
 
@@ -518,12 +504,12 @@ def detect_batch_spark(
     Both strategies produce identical rows (cross-path parity tested);
     ``prefer_sql=False`` sends every rule to the kernel stage.
 
-    State carry between batches: ``state_df`` is the FACT-SCALE form
-    (prior states ride the device_id shuffle as a co-partitioned
-    join). The ``state_rows`` list is the dimension-scale convenience
-    (it broadcasts from, and merges back on, the driver — bounded by
-    touched (device, rule) keys, fine for small jobs, wrong at a huge
-    device universe); prefer ``state_df`` + :func:`merge_state_df`.
+    ``states`` is the prior trigger and dwell state, ``(device_id,
+    states: array<STATE_STRUCT>)`` with one row per device, as
+    :func:`merge_states` returns it and the stream's devices table holds
+    it. It joins the rules' device_id shuffle, so each device's prior
+    states ride its rows into the task that owns it. The next batch's
+    carry is ``merge_states(states, <this batch's 'state' rows>)``.
 
     engine.devices still serves explicit device refs and buffered
     devices(@) candidates. With ``devices_df`` given and
@@ -578,7 +564,6 @@ def detect_batch_spark(
         "zones": engine.zones,
         "snapshot": engine.devices,
         "rules": [(r.rule_id, r.spec, r.bbox) for r in kernel_rules],
-        "states": state_rows or [],
         "eval_dwell": engine.eval_dwell,
     }
     b = sc.broadcast(payload)
@@ -594,11 +579,15 @@ def detect_batch_spark(
         verdicts,
     )
     if any(spec_carries_state(r.spec, engine.eval_dwell) for r in kernel_rules):
-        if state_df is not None:
-            # the fact-scale carry: each device's prior states ride its
-            # rows as one struct array; the join and the repartition
-            # below share the device_id partitioning
-            pruned = pruned.join(states_by_device(state_df), "device_id", "left")
+        if states is not None:
+            # each device's prior states ride its rows as one array; the
+            # join and the repartition below share the device_id
+            # partitioning
+            pruned = pruned.join(
+                states.select("device_id", F.col("states").alias("_states")),
+                "device_id",
+                "left",
+            )
         # one owner task per device + deterministic per-device event
         # order: trigger state folds sequentially over (device_id,
         # datetime) regardless of Arrow batch boundaries or partition
@@ -609,8 +598,6 @@ def detect_batch_spark(
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         p = b.value
         states = StateStore()
-        states.load(p["states"])  # seeded clean; only touched keys emit
-        states.clear_dirty()
         ref = Reference(zones=p["zones"], devices=p["snapshot"], states=states)
         for pdf in batches:
             if pdf.empty:
@@ -619,13 +606,11 @@ def detect_batch_spark(
             frames = kernel_event_frames(p["rules"], pdf, ref, p["eval_dwell"])
             if frames:
                 yield pd.concat(frames, ignore_index=True)
-        # state rows: ONE emission per task, dirty keys only. The
+        # state rows: ONE emission per task, touched keys only. The
         # repartition("device_id") above means every row of a device
         # lands in exactly one task, so each touched (device, rule)
-        # key is emitted by exactly one task — no duplicates, no
-        # re-emission of broadcast-seeded prior states that this task
-        # never owned (those are merged back by merge_state_rows on
-        # the caller side).
+        # key is emitted by exactly one task; prior states a task never
+        # touched stay in the caller's carry (merge_states)
         snap = states.dirty_snapshot()
         if snap:
             yield _state_rows_frame(snap)
@@ -636,32 +621,28 @@ def detect_batch_spark(
     return out
 
 
-def merge_state_df(prior: DataFrame, updated: DataFrame) -> DataFrame:
-    """DataFrame form of :func:`merge_state_rows` — next-batch state =
-    prior overlaid with this batch's dirty emissions, updated wins per
-    (device_id, rule_id). One shuffle; nothing touches the driver."""
-    from pyspark.sql.window import Window
-
-    allr = prior.select(*STATE_COLS).withColumn("_prio", F.lit(0)).unionByName(
-        updated.select(*STATE_COLS).withColumn("_prio", F.lit(1))
+def merge_states(prior: DataFrame | None, emitted: DataFrame) -> DataFrame:
+    """The next batch's state carry, ``(device_id, states)``: each
+    device's ``prior`` STATE_STRUCT array with this batch's emitted
+    'state' rows (STATE_COLS, as :func:`split_output` returns them)
+    laid over it per rule — an emitted (device, rule) state replaces the
+    prior one. One groupBy of the emitted rows and one full-outer join
+    on device_id; nothing touches the driver. ``prior`` None is the
+    first batch. A device with neither prior nor emitted states keeps a
+    null array."""
+    new = emitted.groupBy("device_id").agg(
+        F.collect_list(F.struct(*STATE_COLS[1:])).alias("_new")
     )
-    w = Window.partitionBy("device_id", "rule_id").orderBy(F.col("_prio").desc())
-    return (
-        allr.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_prio")
+    if prior is None:
+        return new.withColumnRenamed("_new", "states")
+    # concat and array_contains are null on a null input, so a device
+    # on one side only falls through to that side's array
+    kept = F.filter(
+        "states", lambda s: ~F.array_contains(F.col("_new.rule_id"), s["rule_id"])
     )
-
-
-def merge_state_rows(prior: list[dict], updated: list[dict]) -> list[dict]:
-    """Next-batch state = prior states overlaid with this batch's
-    dirty emissions (updated wins per (device_id, rule_id) key).
-    detect_batch_spark emits only the states its tasks touched, so
-    untouched prior states must be carried forward by the caller."""
-    merged = {(r["device_id"], r["rule_id"]): dict(r) for r in prior}
-    for r in updated:
-        merged[(r["device_id"], r["rule_id"])] = dict(r)
-    return list(merged.values())
+    return prior.select("device_id", "states").join(new, "device_id", "full_outer").select(
+        "device_id", F.coalesce(F.concat(kept, "_new"), "states", "_new").alias("states")
+    )
 
 
 def split_output(out: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -421,10 +421,9 @@ class StateStore:
     and the dwell ``visits`` map, both advanced by
     ``runtime.fold_state`` in one pass per row.
 
-    Tracks *dirty* keys — states created or handed out for mutation
-    since the last :meth:`clear_dirty` — so a distributed task that
-    seeded itself from a broadcast of ALL prior states can emit only
-    the states it actually owns/touched (one emission per key per
+    Tracks *dirty* keys — states created or handed out for mutation —
+    so a distributed task, seeded with the prior states of its devices'
+    rows, emits only the states it touched (one emission per key per
     batch; see spark_pipeline.detect_batch_spark)."""
 
     def __init__(self) -> None:
@@ -469,11 +468,8 @@ class StateStore:
         return [dict(v) for v in self._states.values()]
 
     def dirty_snapshot(self) -> list[dict]:
-        """Only the states touched since the last clear_dirty()."""
+        """Only the states touched since construction."""
         return [dict(self._states[k]) for k in self._dirty if k in self._states]
-
-    def clear_dirty(self) -> None:
-        self._dirty.clear()
 
     @staticmethod
     def _norm(r: dict) -> dict:

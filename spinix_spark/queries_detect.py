@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spinix_spark.engine.detect import Engine
-from spinix_spark.engine.spark_pipeline import detect_batch_spark, split_output
+from spinix_spark.engine.spark_pipeline import detect_batch_spark, merge_states, split_output
 from spinix_spark.engine.stores import zone_from_ring
 from spinix_spark.io.derive import derived_points
 from spinix_spark.queries_geo import PENTAGON, Q_RULE_COMPOSITE
@@ -111,9 +111,9 @@ def _run_two_batches(spark: SparkSession, sf_dir: str, rule: str) -> DataFrame:
     engine.add_rule(rule, rule_id="r" + "1" * 19)
     pts = _points_as_devices(spark, sf_dir)
     ev1, st1 = split_output(detect_batch_spark(pts, engine))
-    st1 = st1.cache()
+    st1 = merge_states(None, st1).cache()
     c1 = _event_counts(ev1, 1)
-    ev2, _ = split_output(detect_batch_spark(pts, engine, state_df=st1))
+    ev2, _ = split_output(detect_batch_spark(pts, engine, states=st1))
     c2 = _event_counts(ev2, 2)
     return c1.unionAll(c2).orderBy("batch", "device_slot")
 
@@ -313,8 +313,9 @@ def detect_devices_at_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STATEFUL fact-scale ``devices(@)``: the pair-join @ verdict,
     read by the kernel stage, gated by the sequential per-device
     ``:trigger every 600s`` fold, run over TWO batches of the same
-    points with the trigger state carried as a DataFrame (state_df) —
-    no broadcast snapshot, nothing fact-sized on the driver. Batch 1 fires each device's first row
+    points with the trigger state carried as per-device arrays
+    (merge_states) — no broadcast snapshot, nothing fact-sized on the
+    driver. Batch 1 fires each device's first row
     (last_seen == 0) plus rows > 600 s past the anchor; batch 2 (same
     rows, carried state) re-fires only the past-anchor rows. Events
     appear only where the fired row's 250 m 12-gon contains a snapshot
@@ -331,9 +332,9 @@ def detect_devices_at_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _points_as_devices(spark, sf_dir)
     snap = snapshot_df_from_points(pts)
     ev1, st1 = split_output(detect_batch_spark(pts, engine, devices_df=snap))
-    st1 = st1.cache()
+    st1 = merge_states(None, st1).cache()
     ev2, _ = split_output(
-        detect_batch_spark(pts, engine, devices_df=snap, state_df=st1)
+        detect_batch_spark(pts, engine, devices_df=snap, states=st1)
     )
 
     def fmt(ev: DataFrame, b: int) -> DataFrame:
@@ -651,9 +652,9 @@ def _detect_dwell(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
     )
     pts = _points_as_devices(spark, sf_dir)
     ev1, st1 = split_output(detect_batch_spark(pts, engine))
-    st1 = st1.cache()
+    st1 = merge_states(None, st1).cache()
     c1 = _event_counts(ev1, 1)
-    ev2, _ = split_output(detect_batch_spark(pts, engine, state_df=st1))
+    ev2, _ = split_output(detect_batch_spark(pts, engine, states=st1))
     c2 = _event_counts(ev2, 2)
     return c1.unionAll(c2).orderBy("batch", "device_slot")
 

@@ -9,9 +9,10 @@ engine.go:218-221), then merged into it. Both forms here run
 rule gate, trigger fold and state rows:
 
 - ``stream_detect``: the dimension-scale form — carries the snapshot
-  and trigger state across micro-batches on the driver (zones/rules
-  stay broadcast). The stream's checkpointLocation restores only the
-  source offsets; a restart resumes with empty trigger state.
+  on the driver and the trigger state as a local-checkpointed
+  DataFrame (zones/rules stay broadcast). The stream's
+  checkpointLocation restores only the source offsets; a restart
+  resumes with empty trigger state.
 - ``stream_detect_scalable``: the fact-scale form — each device's
   position and trigger state live in one bucketed, versioned parquet
   table; nothing fact-sized reaches the driver.
@@ -34,10 +35,8 @@ from spinix_spark.engine.detect import Engine
 from spinix_spark.engine.spark_pipeline import (
     STATE_STRUCT,
     detect_batch_spark,
-    merge_state_df,
-    merge_state_rows,
+    merge_states,
     split_output,
-    states_by_device,
 )
 
 
@@ -55,28 +54,31 @@ def stream_detect(
     trigger_available_now: bool = True,
 ):
     """Run detection over a streaming points DataFrame — the
-    DIMENSION-SCALE demo form: it maintains the device snapshot and
-    trigger state on the driver (collects each micro-batch), which is
-    only appropriate when the device universe is small. The fact-scale
-    forms are :func:`stream_detect_scalable` (positions and trigger
-    state in one parquet table, no fact-side collect) and
+    DIMENSION-SCALE demo form: it maintains the device snapshot on the
+    driver (collects each micro-batch), which is only appropriate when
+    the device universe is small. The fact-scale forms are
+    :func:`stream_detect_scalable` (positions and trigger state in one
+    parquet table, no fact-side collect) and
     keyed_detect.keyed_stream_detect (per-device trigger state in
     Spark's state store).
 
     ``sink(events_df, batch_id)`` receives each micro-batch's event
     rows. The engine's snapshot and trigger state advance between
-    micro-batches (batch N sees positions as of batch N-1).
+    micro-batches (batch N sees positions as of batch N-1). The trigger
+    state is carried as detect_batch_spark's ``(device_id, states)``
+    frame, merged each batch (merge_states) and local-checkpointed, so
+    no state row reaches the driver.
 
-    Both live only in memory (``state_rows`` and ``engine.devices``),
-    so ``checkpoint_dir`` restores just the source offsets: a
-    restarted query resumes after the last committed batch with an
-    EMPTY trigger state and whatever device snapshot the new engine
-    holds. Use :func:`stream_detect_scalable` when state must survive
-    a restart."""
-    state_rows: list[dict] = []
+    Both live only in memory (the carry and ``engine.devices``), so
+    ``checkpoint_dir`` restores just the source offsets: a restarted
+    query resumes after the last committed batch with an EMPTY trigger
+    state and whatever device snapshot the new engine holds. Use
+    :func:`stream_detect_scalable` when state must survive a
+    restart."""
+    carry: DataFrame | None = None
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal state_rows
+        nonlocal carry
         batch_df = batch_df.cache()
         # guard probe: limit(GUARD+1).count() short-circuits after
         # GUARD+1 rows instead of counting the whole batch — the probe
@@ -91,12 +93,15 @@ def stream_detect(
                 "(bucketed parquet snapshot, no driver collect) at this "
                 "scale"
             )
-        out = detect_batch_spark(batch_df, engine, state_rows=state_rows)
+        # one pipeline run feeds both the sink and the carry
+        out = detect_batch_spark(batch_df, engine, states=carry).cache()
         events, states = split_output(out)
         sink(events, batch_id)
-        state_rows = merge_state_rows(
-            state_rows, [r.asDict() for r in states.collect()]
-        )
+        merged = merge_states(carry, states).localCheckpoint()
+        if carry is not None:
+            _release_checkpoint(carry)
+        carry = merged
+        out.unpersist()
         engine.devices.merge_batch(
             [r.asDict() for r in batch_df.collect()]
         )
@@ -108,6 +113,12 @@ def stream_detect(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint()``ed frame now:
+    ``DataFrame.unpersist`` leaves them to the JVM garbage collector."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def stream_detect_scalable(
@@ -138,15 +149,15 @@ def stream_detect_scalable(
 
     Batch N reads the table once, as of N-1. Its positions are the
     device snapshot, from which the pair join (engine/devices_at.py)
-    gives every ``devices(@)`` node its verdict; its states, unnested,
-    join the rules' device_id shuffle as the prior trigger state
-    (detect_batch_spark(state_df=...)). Zones and rules stay broadcast
-    (dimension-sized). Evaluate-then-insert (engine.go:218-221): after
-    the sink, the prior rows of the buckets batch N touches (a
-    semi-join on the bucket id) are merged with the batch, as each
-    device's latest position plus its prior states overlaid with the
-    batch's emissions (merge_state_df), and written as version N of
-    only those buckets.
+    gives every ``devices(@)`` node its verdict; its ``states`` arrays,
+    as stored, join the rules' device_id shuffle as the prior trigger
+    state (detect_batch_spark(states=...)). Zones and rules stay
+    broadcast (dimension-sized). Evaluate-then-insert
+    (engine.go:218-221): after the sink, the prior rows of the buckets
+    batch N touches (a semi-join on the bucket id) are merged with the
+    batch, as each device's latest position plus its prior states
+    overlaid with the batch's emissions (merge_states), and written as
+    version N of only those buckets.
 
     ``retain_versions`` bounds the on-disk history PER BUCKET: each
     bucket keeps its newest ``retain_versions + 1`` versions. The
@@ -215,21 +226,22 @@ def stream_detect_scalable(
         out = detect_batch_spark(
             batch_df,
             engine,
+            states=prior.select("device_id", "states"),
             devices_df=prior.select(*pos_cols),
             at_salt=at_salt,
-            state_df=prior.select("device_id", F.inline("states")),
         ).cache()  # one pipeline run feeds both the sink and the table
         events, states = split_output(out)
         sink(events, batch_id)
         # every state row emitted is a batch device's, so the batch's
         # buckets hold all of them
         touched = table.in_buckets_of(prior, pts)
-        states = merge_state_df(
-            touched.select("device_id", F.inline("states")), states
-        )
         rows = snapshot_df_from_points(
             touched.select(*pos_cols).unionByName(pts)
-        ).join(states_by_device(states, "states"), "device_id", "left")
+        ).join(
+            merge_states(touched.select("device_id", "states"), states),
+            "device_id",
+            "left",
+        )
         table.write_version(rows, batch_id)
         out.unpersist()
         if retain_versions is not None:

@@ -19,7 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spinix_spark.engine.detect import Engine
-from spinix_spark.engine.spark_pipeline import detect_batch_spark, split_output
+from spinix_spark.engine.spark_pipeline import detect_batch_spark, merge_states, split_output
 
 LAYER = "0" * 20
 RID = "r" + "7" * 19
@@ -173,10 +173,9 @@ def test_at_stateful_parity_with_companion_node(spark):
 
 def test_at_stateful_two_batch_state_carry(spark):
     """Batch-2 events depend on batch-1 trigger state: the pair-join
-    path's state_df carry must equal the kernel path's state_rows
-    carry, including the merged final states."""
-    from spinix_spark.engine.spark_pipeline import merge_state_df, merge_state_rows
-
+    path (snapshot as a DataFrame) must equal the broadcast-snapshot
+    kernel path under the same states carry, including the merged
+    final states."""
     rule = (
         "device :radius 400m intersects devices(@)"
         " { :center 42.93 -72.27 :radius 50km :trigger 7 times interval 0s }"
@@ -193,29 +192,31 @@ def test_at_stateful_two_batch_state_carry(spark):
         eng_k.devices.insert_or_replace(row)
     eng_k.add_rule(rule, rule_id=RID)
     ev1k, st1k = split_output(detect_batch_spark(p1, eng_k))
-    prior = merge_state_rows([], [r.asDict() for r in st1k.collect()])
-    ev2k, st2k = split_output(detect_batch_spark(p2, eng_k, state_rows=prior))
-    merged_k = merge_state_rows(prior, [r.asDict() for r in st2k.collect()])
+    prior_k = merge_states(None, st1k).cache()
+    ev2k, st2k = split_output(detect_batch_spark(p2, eng_k, states=prior_k))
+    merged_k = merge_states(prior_k, st2k)
 
     eng_j = Engine()
     eng_j.add_rule(rule, rule_id=RID)
     ev1j, st1j = split_output(detect_batch_spark(p1, eng_j, devices_df=devices_df))
-    st1j = st1j.cache()
+    prior_j = merge_states(None, st1j).cache()
     ev2j, st2j = split_output(
-        detect_batch_spark(p2, eng_j, devices_df=devices_df, state_df=st1j)
+        detect_batch_spark(p2, eng_j, devices_df=devices_df, states=prior_j)
     )
-    merged_j = merge_state_df(st1j, st2j)
+    merged_j = merge_states(prior_j, st2j)
 
     assert _ev_canon(ev1k) == _ev_canon(ev1j)
     assert _ev_canon(ev2k) == _ev_canon(ev2j)
     assert len(_ev_canon(ev2k)) > 0  # leftover quota fires in batch 2
-    assert sorted(
-        (r["device_id"], r["rule_id"], r["last_seen"], r["last_reset"], r["hits"])
-        for r in merged_k
-    ) == sorted(
-        (r.device_id, r.rule_id, r.last_seen, r.last_reset, r.hits)
-        for r in merged_j.collect()
-    )
+
+    def canon(merged):
+        rows = merged.select("device_id", F.inline("states")).collect()
+        return sorted(
+            (r.device_id, r.rule_id, r.last_seen, r.last_reset, r.hits) for r in rows
+        )
+
+    assert canon(merged_k) == canon(merged_j)
+    assert len(canon(merged_k)) == 9
 
 
 def test_at_stateful_empty_snapshot_consumes_trigger(spark):
@@ -243,7 +244,7 @@ def test_at_stateful_empty_snapshot_consumes_trigger(spark):
 
     snap = spark.createDataFrame(pd.DataFrame(_mk_snapshot(m=20)))
     ev2, _ = split_output(
-        detect_batch_spark(points, eng, devices_df=snap, state_df=st1)
+        detect_batch_spark(points, eng, devices_df=snap, states=merge_states(None, st1))
     )
     assert ev2.count() == 0  # quota was consumed against the empty snapshot
 
@@ -684,17 +685,20 @@ def test_at_stateful_plan_shape(spark):
     assert "hashpartitioning(device_id" in plan, plan
 
 
-def test_stream_rules_plan_budget(spark):
+def test_stream_rules_plan_budget(spark, tmp_path):
     """Plan-shape budget of the benchmark stream's batch: its two
     stateful rules (a buffered zone verb and a devices(@) verb), with
     the snapshot and the prior states as DataFrames, fold in ONE kernel
-    stage — two MapInPandas (@ candidate refine + kernel), two
-    device_id exchanges (the rows and the state carry) and one state
-    aggregation. A second fold stage would add a MapInPandas, two
-    exchanges and an aggregation."""
+    stage — two MapInPandas (@ candidate refine + kernel) and two
+    device_id exchanges (the rows and the state carry). The prior
+    states join as the stored per-device arrays, so no state
+    aggregation runs. A second fold stage would add a MapInPandas and
+    two exchanges."""
     from perfbench.workloads import gen_params, new_engine, stream_rules, synth_positions
 
-    from spinix_spark.engine.spark_pipeline import STATE_COLS
+    from pyspark.sql.types import ArrayType
+
+    from spinix_spark.engine.spark_pipeline import STATE_STRUCT
 
     eng = new_engine()
     for k, spec in enumerate(stream_rules()):
@@ -702,21 +706,20 @@ def test_stream_rules_plan_budget(spark):
     pts = spark.createDataFrame(
         synth_positions(gen_params("stream_stateful", 1, 300), 0, 300)
     )
-    state_df = spark.createDataFrame(
-        [], ", ".join(
-            f"{c} {'string' if c in ('device_id', 'rule_id', 'visits') else 'bigint'}"
-            for c in STATE_COLS
-        )
-    )
+    # the prior states as the stream reads them: one parquet row per device
+    pts.select("device_id").distinct().select(
+        "device_id", F.lit(None).cast(ArrayType(STATE_STRUCT)).alias("states")
+    ).write.parquet(str(tmp_path / "states"))
+    states = spark.read.parquet(str(tmp_path / "states"))
     out = detect_batch_spark(
         pts, eng,
         devices_df=pts.select("device_id", "layer_id", "lat", "lon", "datetime"),
-        state_df=state_df,
+        states=states,
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 2, plan
-    assert plan.count("Exchange hashpartitioning(device_id") == 2, plan
-    assert plan.count("functions=[collect_list(") == 1, plan
+    assert plan.count("Exchange hashpartitioning(device_id") <= 2, plan
+    assert "collect_list" not in plan, plan
 
 
 def test_snapshot_from_points_breaks_datetime_ties(spark):

@@ -184,6 +184,57 @@ def test_compile_and_fold_shape():
     assert spec.nodes[1].begin == 30 and spec.nodes[1].end == 120
 
 
+@pytest.mark.parametrize(
+    "chain, grouped",
+    [
+        (
+            "speed gt 3 and speed gt 4 and speed gt 5",
+            ["(speed gt 3 and speed gt 4) and speed gt 5",
+             "speed gt 3 and (speed gt 4 and speed gt 5)"],
+        ),
+        (
+            "speed lt 2 or speed gt 7 or speed eq 5",
+            ["(speed lt 2 or speed gt 7) or speed eq 5",
+             "speed lt 2 or (speed gt 7 or speed eq 5)"],
+        ),
+        (
+            "speed gt 1 or speed gt 4 and speed lt 6",
+            ["speed gt 1 or (speed gt 4 and speed lt 6)"],
+        ),
+    ],
+)
+def test_compile_three_comparison_chain(chain, grouped):
+    """A chain of three comparisons compiles to three nodes whose
+    verdicts equal its parenthesised forms' (AND binds tighter than OR)."""
+    import pandas as pd
+
+    from spinix_spark.engine.runtime import Reference, eval_spec
+    from spinix_spark.engine.stores import DeviceSnapshot, StateStore, ZoneStore
+
+    batch = pd.DataFrame(
+        {
+            "device_id": [f"d{i}" for i in range(10)],
+            "layer_id": "0" * 20,
+            "lat": 0.0,
+            "lon": 0.0,
+            "datetime": 0,
+            "speed": [float(i) for i in range(10)],
+        }
+    )
+
+    def verdicts(spec_str):
+        spec = compile_spec(spec_str)
+        assert len(spec.nodes) == 3
+        ref = Reference(zones=ZoneStore(), devices=DeviceSnapshot(), states=StateStore())
+        ok, matches = eval_spec(spec, batch, ref, rule_id="r" + "0" * 19)
+        return ok.tolist(), matches
+
+    got = verdicts(chain)
+    assert any(got[0]) and not all(got[0])
+    for g in grouped:
+        assert verdicts(g) == got, g
+
+
 def test_compile_props_stateful():
     spec = compile_spec(
         "device intersects polygon(c5vj26evvhfjvfseaulg) { :center 42.9 -72.2 :radius 3km :trigger every 10s :reset after 24h }"

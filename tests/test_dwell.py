@@ -26,7 +26,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spinix_spark.engine.detect import Engine
-from spinix_spark.engine.spark_pipeline import detect_batch_spark, split_output
+from spinix_spark.engine.spark_pipeline import detect_batch_spark, merge_states, split_output
 from spinix_spark.engine.stores import zone_from_ring
 
 ZID = "c5vj26evvhfjvfseaumt"
@@ -121,7 +121,7 @@ def test_state_rows_carry_visits():
 
 @pytest.mark.parametrize("kind,expect2", [("duration", [1500, 1700]), ("after", [])])
 def test_spark_state_carry(spark, kind, expect2):
-    """Two detect_batch_spark batches with state_df carry: batch 1
+    """Two detect_batch_spark batches with the states carry: batch 1
     ends with an open, already-fired visit; batch 2 continues it
     without a miss — ``after`` must stay silent (fired mark carried
     through the visits JSON column), ``duration`` keeps matching."""
@@ -135,7 +135,9 @@ def test_spark_state_carry(spark, kind, expect2):
     visits = json.loads(srows[0]["visits"])
     fired = kind == "after"
     assert visits == {f"0:{ZID}": -1001 if fired else 1000}
-    ev2, st2 = split_output(detect_batch_spark(b2, engine, state_df=st1))
+    ev2, st2 = split_output(
+        detect_batch_spark(b2, engine, states=merge_states(None, st1))
+    )
     assert sorted(int(r["datetime"]) for r in ev2.collect()) == expect2
     # the carried-forward state keeps the (possibly fired) anchor
     visits2 = json.loads(st2.collect()[0]["visits"])

@@ -19,7 +19,7 @@ import pandas as pd
 import pytest
 
 from spinix_spark.engine.detect import Engine
-from spinix_spark.engine.spark_pipeline import detect_batch_spark, split_output
+from spinix_spark.engine.spark_pipeline import detect_batch_spark, merge_states, split_output
 from spinix_spark.engine.stores import zone_from_ring
 
 ZID = "c5vj26evvhfjvfseaumt"
@@ -111,7 +111,7 @@ def test_after_subset_of_duration():
 
 @pytest.mark.parametrize("kind", ["duration", "after"])
 def test_spark_matches_simulator(spark, kind):
-    """Distributed kernel path, tiny Arrow batches, state_df carry
+    """Distributed kernel path, tiny Arrow batches, states carry
     across two batches — must equal the independent simulator."""
     seed = 42
     dur_s = 25
@@ -120,16 +120,17 @@ def test_spark_matches_simulator(spark, kind):
     engine = _engine(kind, dur_s)
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "13")
     try:
-        state_df = None
+        carry = None
         got = []
         for bno, pdf in enumerate(batches):
             df = spark.createDataFrame(pdf.drop(columns=["_hit"]))
-            ev, st = split_output(detect_batch_spark(df, engine, state_df=state_df))
-            st = st.cache()
+            out = detect_batch_spark(df, engine, states=carry).cache()
+            ev, st = split_output(out)
             got += [
                 (bno, r["device_id"], int(r["datetime"])) for r in ev.collect()
             ]
-            state_df = st
+            carry = merge_states(carry, st).localCheckpoint()
+            out.unpersist()
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
     assert sorted(got) == want and len(want) > 0

@@ -11,10 +11,13 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from spinix_spark.engine.detect import Engine
 from spinix_spark.engine.spark_pipeline import (
+    STATE_COLS,
     detect_batch_spark,
+    merge_states,
     snapshot_from_points,
     split_output,
 )
@@ -189,7 +192,7 @@ def test_stateful_rule_state_rows(spark):
     assert len(ev) == 1
     assert len(st) == 1 and st[0].hits == 1
     # second batch with the carried state: trigger 'once' suppresses
-    out2 = detect_batch_spark(points, engine, state_rows=[r.asDict() for r in st])
+    out2 = detect_batch_spark(points, engine, states=merge_states(None, states))
     events2, _ = split_output(out2)
     assert events2.count() == 0
 
@@ -198,10 +201,8 @@ def test_stateful_state_rows_multipartition(spark):
     """Regression (round-1 verdict #1): with >1 shuffle partition, >1
     device, AND non-empty prior state, each touched (device_id,
     rule_id) key must be emitted exactly once — no duplicate or
-    conflicting state rows from tasks re-emitting broadcast-seeded
-    prior states they never owned."""
-    from spinix_spark.engine.spark_pipeline import merge_state_rows
-
+    conflicting state rows from tasks re-emitting seeded prior states
+    they never touched."""
     engine = Engine()
     rule_id = "r" + "3" * 19
     engine.add_rule(
@@ -235,35 +236,74 @@ def test_stateful_state_rows_multipartition(spark):
 
     # batch 2 with non-empty prior state across multiple Arrow batches:
     # the old bug re-emitted every seeded state from every task
-    state_rows = merge_state_rows([], rows1)
+    carry = merge_states(None, st1).cache()
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
     try:
-        ev2, st2 = split_output(
-            detect_batch_spark(points, engine, state_rows=state_rows)
-        )
+        ev2, st2 = split_output(detect_batch_spark(points, engine, states=carry))
         rows2 = [r.asDict() for r in st2.collect()]
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
     keys2 = [(r["device_id"], r["rule_id"]) for r in rows2]
     assert len(keys2) == len(set(keys2)) == 8, f"duplicate state rows: {keys2}"
     assert ev2.count() == 0  # trigger 'once' suppresses the whole batch
-    # carried-forward merge is stable: hits keep accumulating per key
-    merged = merge_state_rows(state_rows, rows2)
+    # carried-forward merge is stable: one state per device, the batch-2 one
+    merged = {r.device_id: r.states for r in merge_states(carry, st2).collect()}
     assert len(merged) == 8
-    by_key = {(r["device_id"], r["rule_id"]): r for r in merged}
     for r in rows2:
-        assert by_key[(r["device_id"], r["rule_id"])]["hits"] == r["hits"]
+        (st,) = merged[r["device_id"]]
+        assert (st.rule_id, st.hits) == (r["rule_id"], r["hits"])
 
 
-def test_state_df_path_equals_list_path(spark):
-    """The fact-scale DataFrame state carry (co-partitioned join, no
-    driver round-trip) must reproduce the broadcast-list path exactly:
-    same batch-2 events, same merged state values."""
-    from spinix_spark.engine.spark_pipeline import (
-        merge_state_df,
-        merge_state_rows,
+def test_merge_states_overlays_per_rule(spark):
+    """merge_states lays a batch's emitted states over the prior arrays
+    per (device, rule): an emitted rule replaces its prior state, other
+    prior rules stay, a device on one side only keeps that side's
+    states, and a device with none keeps a null array."""
+    from spinix_spark.engine.spark_pipeline import STATE_STRUCT
+
+    def st(rule, hits):
+        return (rule, 10 * hits, 1, hits, 100 + hits, "")
+
+    prior = spark.createDataFrame(
+        [
+            ("a", [st("r1", 1), st("r2", 1)]),
+            ("b", [st("r1", 1)]),
+            ("c", None),
+        ],
+        StructType(
+            [StructField("device_id", StringType()), StructField("states", ArrayType(STATE_STRUCT))]
+        ),
+    )
+    emitted = spark.createDataFrame(
+        [("a", *st("r2", 2)), ("d", *st("r1", 3)), ("d", *st("r3", 3))],
+        ", ".join(
+            f"{c} {'string' if c in ('device_id', 'rule_id', 'visits') else 'bigint'}"
+            for c in STATE_COLS
+        ),
     )
 
+    def canon(df):
+        return {
+            r.device_id: None if r.states is None else sorted(tuple(s) for s in r.states)
+            for r in df.collect()
+        }
+
+    assert canon(merge_states(prior, emitted)) == {
+        "a": [st("r1", 1), st("r2", 2)],
+        "b": [st("r1", 1)],
+        "c": None,
+        "d": [st("r1", 3), st("r3", 3)],
+    }
+    assert canon(merge_states(None, emitted)) == {
+        "a": [st("r2", 2)],
+        "d": [st("r1", 3), st("r3", 3)],
+    }
+
+
+def test_states_carry_exhausts_quota(spark):
+    """A ``3 times`` trigger carried through merge_states: batch 1 fires
+    three rows per device, batch 2 (same rows) fires none, and the
+    merged states hold the quota hits."""
     rule = (
         "status eq 1 { :center 42.92 -72.27 :radius 5km"
         " :trigger 3 times interval 0s }"
@@ -282,40 +322,27 @@ def test_state_df_path_equals_list_path(spark):
         }
     )
     points = spark.createDataFrame(pdf).repartition(5)
+    engine = Engine()
+    engine.add_rule(rule, rule_id="r" + "6" * 19)
+    ev1, st1 = split_output(detect_batch_spark(points, engine))
+    carry = merge_states(None, st1).cache()
+    ev2, st2 = split_output(detect_batch_spark(points, engine, states=carry))
+    merged = merge_states(carry, st2).collect()
 
-    def canon_ev(ev):
-        return sorted((r.url, r.device_id) for r in ev.collect())
-
-    def canon_st(rows):
-        return sorted(
-            (r["device_id"], r["rule_id"], r["last_seen"], r["last_reset"], r["hits"])
-            for r in rows
-        )
-
-    # list path
-    eng_a = Engine()
-    eng_a.add_rule(rule, rule_id="r" + "6" * 19)
-    ev1a, st1a = split_output(detect_batch_spark(points, eng_a))
-    rows1a = [r.asDict() for r in st1a.collect()]
-    prior_a = merge_state_rows([], rows1a)
-    ev2a, st2a = split_output(
-        detect_batch_spark(points, eng_a, state_rows=prior_a)
+    oracle = Engine()
+    oracle.add_rule(rule, rule_id="r" + "6" * 19)
+    oracle.detect_batch(pdf)
+    oracle.detect_batch(pdf)
+    assert ev1.count() == 6 * 3  # 3 fires per device, batch 1
+    assert ev2.count() == 0  # quota exhausted
+    assert sorted(
+        (r.device_id, s.rule_id, s.last_seen, s.last_reset, s.hits)
+        for r in merged
+        for s in r.states
+    ) == sorted(
+        (s["device_id"], s["rule_id"], s["last_seen"], s["last_reset"], s["hits"])
+        for s in oracle.states.snapshot()
     )
-    merged_a = merge_state_rows(prior_a, [r.asDict() for r in st2a.collect()])
-
-    # DataFrame path
-    eng_b = Engine()
-    eng_b.add_rule(rule, rule_id="r" + "6" * 19)
-    ev1b, st1b = split_output(detect_batch_spark(points, eng_b))
-    st1b = st1b.cache()
-    ev2b, st2b = split_output(detect_batch_spark(points, eng_b, state_df=st1b))
-    merged_b = merge_state_df(st1b, st2b)
-
-    assert canon_ev(ev1a) == canon_ev(ev1b)
-    assert canon_ev(ev2a) == canon_ev(ev2b)
-    assert len(canon_ev(ev1a)) == 6 * 3  # 3 fires per device, batch 1
-    assert len(canon_ev(ev2a)) == 0  # quota exhausted
-    assert canon_st(merged_a) == canon_st([r.asDict() for r in merged_b.collect()])
 
 
 def test_device_near_device_via_snapshot(spark, pages):

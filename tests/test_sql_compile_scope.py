@@ -130,6 +130,45 @@ def test_geo_pipeline_rules_plan_budget(spark):
     assert "Union" not in plan, plan
 
 
+def test_compiled_or_fold_at_rule_runs_pair_join_once(spark):
+    """A compiled OR-fold ``@`` rule emits every node's event rows from
+    one projection, so its plan runs the pair join once (one per-row
+    verdict aggregate, no Union of per-node branches) and emits the
+    kernel's rows."""
+    rng = np.random.default_rng(3)
+    n = 40
+    pdf = pd.DataFrame(
+        {
+            "url": [f"u{i:02d}" for i in range(n)],
+            "device_id": [f"d{i % 8:019d}" for i in range(n)],
+            "layer_id": LAYER,
+            "lat": 42.93 + rng.uniform(-0.01, 0.01, n),
+            "lon": -72.27 + rng.uniform(-0.01, 0.01, n),
+            "datetime": 1_700_000_000 + np.arange(n),
+            "speed": rng.uniform(0, 200, n),
+            "status": 0,
+        }
+    )
+    eng = _engine(f"device near devices(@) or speed gt 150 {PROPS}")
+    points = spark.createDataFrame(pdf)
+    snap = points.select("device_id", "layer_id", "lat", "lon", "datetime").limit(8)
+    out = detect_batch_spark(points, eng, devices_df=snap)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("functions=[collect_set(") == 1, plan
+    assert "Union" not in plan and "MapInPandas" not in plan, plan
+
+    def canon(df):
+        return sorted(
+            (r.url, r.left_kw, r.right_kw, r.op, tuple(sorted(r.right_refs)))
+            for r in df.where("row_type = 'event'").collect()
+        )
+
+    kernel = detect_batch_spark(points, eng, devices_df=snap, prefer_sql=False)
+    got = canon(out)
+    assert got == canon(kernel)
+    assert {r[3] for r in got} == {"NEAR", "gt"}, got
+
+
 DWELL_SPECS = [
     f"device intersects polygon({Z}) :time duration 60s"
     f" and speed range [30 .. 120] {PROPS}",

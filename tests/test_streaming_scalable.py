@@ -133,6 +133,32 @@ def test_stream_detect_scalable_trigger_state(spark, tmp_path):
     assert len(rows) == 4 and all(h == 1 for h in rows.values())
 
 
+def test_stream_state_write_plan_budget(spark, tmp_path, monkeypatch):
+    """Plan-shape budget of the state write: the carry the next batch
+    reads is the stored per-device arrays with this batch's emitted
+    states laid over them (merge_states) — one groupBy of the emitted
+    rows and one full-outer join on device_id, with no Window and no
+    unnesting of the stored arrays."""
+    import spinix_spark.streaming.detect_stream as ds
+
+    plans = []
+    merge_states = ds.merge_states
+
+    def traced(prior, emitted):
+        merged = merge_states(prior, emitted)
+        plans.append(merged._jdf.queryExecution().executedPlan().toString())
+        return merged
+
+    monkeypatch.setattr(ds, "merge_states", traced)
+    test_stream_detect_scalable_trigger_state(spark, tmp_path)
+    assert len(plans) == 2
+    for plan in plans:
+        assert plan.count("functions=[collect_list(") == 1, plan
+        assert "Window" not in plan and "Generate" not in plan, plan
+    # batch 0's prior is empty, so Catalyst drops its join
+    assert plans[1].count("FullOuter") == 1, plans[1]
+
+
 def test_stream_detect_scalable_version_retention(spark, tmp_path, monkeypatch):
     """retain_versions bounds the on-disk history of the one devices
     table while each batch still evaluates against its predecessor

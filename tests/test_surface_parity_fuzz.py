@@ -15,10 +15,11 @@ node, one with two dwell nodes). The same rows, split into random
 micro-batches, go to:
 
 - ``Engine.detect_batch`` (the oracle, one call per micro-batch);
-- ``detect_batch_spark`` with ``prefer_sql`` True and False, under the
-  ``state_df`` carry (the snapshot as a ``devices_df`` DataFrame) and
-  the ``state_rows`` carry (the snapshot broadcast from
-  ``engine.devices``);
+- ``detect_batch_spark`` with ``prefer_sql`` True and False, the
+  trigger and dwell state carried as ``merge_states``' per-device
+  arrays, with the snapshot as a ``devices_df`` DataFrame and broadcast
+  from ``engine.devices``;
+- ``stream_detect`` (snapshot on the driver, state carry checkpointed);
 - ``stream_detect_scalable``;
 - ``keyed_stream_detect``, without the device-vs-device rules (out of
   its scope).
@@ -44,8 +45,7 @@ from spinix_spark.engine.detect import Engine
 from spinix_spark.engine.devices_at import snapshot_df_from_points
 from spinix_spark.engine.spark_pipeline import (
     detect_batch_spark,
-    merge_state_df,
-    merge_state_rows,
+    merge_states,
     split_output,
 )
 from spinix_spark.engine.stores import zone_from_geojson, zone_from_ring
@@ -413,42 +413,76 @@ def tiny_arrow_batches(spark):
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-@pytest.mark.parametrize("carry", ["state_df", "state_rows"])
+@pytest.mark.parametrize("snapshot", ["devices_df", "broadcast"])
 @pytest.mark.parametrize("prefer_sql", [True, False])
 def test_detect_batch_spark_matches_engine(
-    spark, tiny_arrow_batches, seed, carry, prefer_sql
+    spark, tiny_arrow_batches, seed, snapshot, prefer_sql
 ):
     _, batches = _world(seed)
     eng = _engine(seed)
-    events, state_df, state_rows = [], None, []
+    events, carry = [], None
     for b, pdf in enumerate(batches):
         points = spark.createDataFrame(pdf.sample(frac=1.0, random_state=b)).repartition(3)
-        if carry == "state_df":
+        devices_df = None
+        if snapshot == "devices_df":
             prior = (
                 spark.createDataFrame(pd.concat(batches[:b])) if b else points.limit(0)
             )
-            out = detect_batch_spark(
-                points, eng, prefer_sql=prefer_sql,
-                devices_df=snapshot_df_from_points(prior), state_df=state_df,
-            )
-        else:
-            out = detect_batch_spark(points, eng, prefer_sql=prefer_sql, state_rows=state_rows)
-        out = out.cache()
+            devices_df = snapshot_df_from_points(prior)
+        out = detect_batch_spark(
+            points, eng, states=carry, prefer_sql=prefer_sql, devices_df=devices_df
+        ).cache()
         ev, st = split_output(out)
         events += _events_canon(b, ev)
-        if carry == "state_df":
-            merged = st if state_df is None else merge_state_df(state_df, st)
-            state_df = merged.localCheckpoint()
-        else:
-            state_rows = merge_state_rows(state_rows, [r.asDict() for r in st.collect()])
+        carry = merge_states(carry, st).localCheckpoint()
+        if snapshot == "broadcast":
             eng.devices.merge_batch(pdf.to_dict("records"))
         out.unpersist()
-    states = (
-        [r.asDict() for r in state_df.collect()] if carry == "state_df" else state_rows
-    )
+    states = carry.select("device_id", F.inline("states")).collect()
     want_events, want_states = _oracle(seed)
     assert sorted(events) == want_events
-    assert _states_canon(states) == want_states
+    assert _states_canon([r.asDict() for r in states]) == want_states
+
+
+def _stream_source(spark, tmp_path, batches):
+    """The micro-batches as parquet files, one per trigger."""
+    src = str(tmp_path / "src")
+    for pdf in batches:
+        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(src)
+    return (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_stream_detect_matches_engine(spark, tiny_arrow_batches, tmp_path, seed):
+    """The driver-snapshot stream: batch 2's events depend on batch 1's
+    positions in engine.devices and on its carried trigger and dwell
+    states."""
+    from spinix_spark.streaming.detect_stream import stream_detect
+
+    _, batches = _world(seed)
+    eng = _engine(seed)
+    events = []
+    source = _stream_source(spark, tmp_path, batches)
+    persisted = len(spark.sparkContext._jsc.getPersistentRDDs())
+    q = stream_detect(
+        source, eng,
+        lambda ev, batch_id: events.extend(_events_canon(batch_id, ev)),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+    # each batch frees its predecessor's carry and its own cached frames
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == persisted + 1
+    want_events, _ = _oracle(seed)
+    assert {e[0] for e in events} == set(range(N_BATCHES))
+    assert sorted(events) == want_events
+    # the snapshot advanced to every device's last fix
+    last = pd.concat(batches).groupby("device_id")["datetime"].max()
+    assert {d: eng.devices.lookup(d)["datetime"] for d in last.index} == last.to_dict()
 
 
 @pytest.mark.parametrize("seed", SEEDS)
@@ -457,17 +491,9 @@ def test_stream_detect_scalable_matches_engine(spark, tiny_arrow_batches, tmp_pa
     from spinix_spark.streaming.state_table import BucketedVersionTable
 
     _, batches = _world(seed)
-    src = str(tmp_path / "src")
-    for pdf in batches:
-        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     events = []
     q = stream_detect_scalable(
-        stream, _engine(seed),
+        _stream_source(spark, tmp_path, batches), _engine(seed),
         lambda ev, batch_id: events.extend(_events_canon(batch_id, ev)),
         work_dir=str(tmp_path / "work"), checkpoint_dir=str(tmp_path / "ckpt"),
         n_buckets=4,

@@ -18,7 +18,7 @@ import pytest
 from spinix_spark.engine.detect import Engine
 from spinix_spark.engine.spark_pipeline import (
     detect_batch_spark,
-    merge_state_df,
+    merge_states,
     split_output,
 )
 
@@ -128,16 +128,18 @@ def _assert_matches_simulator(spark, props: str, batches: list[pd.DataFrame]):
     engine.add_rule(rule, rule_id=RULE_ID)
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
     try:
-        got_fired, state_df = [], None
+        got_fired, carry = [], None
         for pdf in batches:
             p = spark.createDataFrame(pdf).repartition(6)
-            ev, st = split_output(detect_batch_spark(p, engine, state_df=state_df))
-            st = st.cache()
+            out = detect_batch_spark(p, engine, states=carry).cache()
+            ev, st = split_output(out)
             got_fired.append({r.url for r in ev.collect()})
-            state_df = st if state_df is None else merge_state_df(state_df, st)
+            carry = merge_states(carry, st).localCheckpoint()
+            out.unpersist()
         got_states = {
-            r.device_id: (r.last_seen, r.last_reset, r.hits)
-            for r in state_df.collect()
+            r.device_id: (s.last_seen, s.last_reset, s.hits)
+            for r in carry.collect()
+            for s in r.states
         }
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
